@@ -6,9 +6,10 @@ import java.util.UUID
 import java.security.MessageDigest
 
 import graft.functions.{HashEmbedder, VectorFunctions}
+import graft.functions.expressions.BoundParam
 import graft.retrieval.{ModeConfig, Modes, PostProcess, QuerySanitizer, RetrievalCache}
 import graft.storage._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The user-facing engine facade — the reference's `ALMA` core API
@@ -247,6 +248,8 @@ final class Alma(
     val agentCond = agent.map(a => col("agent") === a).getOrElse(lit(true))
     val pruned =
       store.deleteWhere(MemoryType.Outcomes,
+        // cutoff stays a literal, not a BoundParam: the Parquet scan
+        // pushes this filter down, and pushdown matches literals only.
         col("projectId") === projectId && agentCond && col("timestamp") < lit(cutoff)) +
         store.deleteWhere(MemoryType.Heuristics,
           col("projectId") === projectId && agentCond && col("confidence") < belowConfidence)
@@ -515,11 +518,30 @@ final class Alma(
       if (store.exists(MemoryType.Feedback)) Some(store.feedbackSummary(Some(projectId)))
       else None
 
-    def scoreAndTake(df: DataFrame, recencyCol: String,
-        succ: org.apache.spark.sql.Column, conf: org.apache.spark.sql.Column,
-        failureFlag: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+    // The fused retrieve is ONE Spark job with no typed stage in it
+    // (SURVEY §1.4 MemorySlice alternative). Every per-type branch
+    // projects the same envelope — memoryType, the whole source row as
+    // one struct named after its Alma.Fused slot, score, sim — the
+    // branches union by name (a slot a branch lacks is null), and the
+    // single collect of ≤ 5×3k bounded rows decodes Alma.Fused on the
+    // driver, which splits, re-sorts per type, and applies MMR where
+    // the mode asks for it. Decoding there, not per branch, keeps
+    // deserialize/map/serialize stages and their generated classes out
+    // of the plan.
+    def envelope(rows: DataFrame, payload: Array[String], memoryType: String,
+        slot: String, score: Column, sim: Column): DataFrame =
+      rows.select(lit(memoryType).as("memoryType"),
+        struct(payload.toIndexedSeq.map(col): _*).as(slot),
+        score.as("score"), sim.as("sim"))
+
+    def scoreAndTake(df: DataFrame, memoryType: String, slot: String,
+        recencyCol: String, succ: Column, conf: Column,
+        failureFlag: Option[Column] = None): DataFrame = {
       val sim = VectorFunctions.cosineConst(col("embedding"), q)
-      val days = (lit(asOfUs) - unix_micros(col(recencyCol))).cast("double") / lit(86400000000.0)
+      // asOf is bound by reference, not as a literal, so every call
+      // generates the same Java and reuses the compiled classes.
+      val days = (BoundParam.of(asOfUs) - unix_micros(col(recencyCol))).cast("double") /
+        lit(86400000000.0)
       val rec = pow(lit(0.5), days / lit(30.0))
       val base = lit(m.wSim) * sim + lit(m.wRecency) * rec +
         lit(m.wSuccess) * succ + lit(m.wConfidence) * conf
@@ -554,7 +576,7 @@ final class Alma(
         case None => raw.withColumn("_fb_score", col("_base_score"))
       }
       val boosted = blended.withColumn("_score", col("_fb_score") * failB * exactB)
-      boosted
+      val capped = boosted
         .drop("_base_score", "_fb_score")
         .filter(col("_score") >= m.minScore)
         .orderBy(col("_score").desc, col("id"))
@@ -563,6 +585,7 @@ final class Alma(
         // plain modes cap at k. Either way the per-type plan ends in a
         // TakeOrderedAndProject — bounded output at any corpus size.
         .limit(if (m.diversity <= 0.0) k else 3 * k)
+      envelope(capped, df.columns, memoryType, slot, col("_score"), col("_sim"))
     }
 
     // R13 provenance: memories read from an inherited agent are tagged
@@ -570,18 +593,6 @@ final class Alma(
     // every memory type.
     def tagShared(meta: Map[String, String], owner: String): Map[String, String] =
       if (owner != agent) meta + ("shared_from" -> owner) else meta
-
-    // The five per-type top-k plans union into ONE Spark job (SURVEY
-    // §1.4 MemorySlice alternative): each branch wraps its typed row in
-    // a discriminated envelope carrying (_score, _sim); a single
-    // collect brings back ≤ 5×3k bounded rows, and the driver splits,
-    // re-sorts per type, and applies MMR where the mode asks for it.
-    def fused[T](src: DataFrame, capped: DataFrame, wrap: (T, Double, Double) => Alma.Fused)(
-        implicit enc: org.apache.spark.sql.Encoder[(T, Double, Double)]): org.apache.spark.sql.Dataset[Alma.Fused] =
-      capped.select(struct(src.columns.toIndexedSeq.map(col): _*).as("_1"),
-          col("_score").as("_2"), col("_sim").as("_3"))
-        .as[(T, Double, Double)]
-        .map { case (t, s, si) => wrap(t, s, si) }
 
     // Workflow scope: each set coordinate must match when the row is
     // tagged with it; a missing metadata key passes (getItem → null →
@@ -594,30 +605,33 @@ final class Alma(
     val odf = scoped(store.outcomes(Some(projectId), agents).toDF())
     val kdf = scoped(store.knowledge(Some(projectId), agents).toDF())
     val adf = scoped(store.antiPatterns(Some(projectId), agents).toDF())
+    val pdf = store.preferences().toDF()
     val branches = Seq(
-      fused[Heuristic](hdf, scoreAndTake(hdf, "lastValidated",
-          succ = col("successCount").cast("double") /
-            when(col("occurrenceCount") === 0, 1L).otherwise(col("occurrenceCount")),
-          conf = col("confidence")),
-        (h, s, si) => Alma.Fused(MemoryType.Heuristics, h = Some(h), score = s, sim = si)),
-      fused[Outcome](odf, scoreAndTake(odf, "timestamp",
-          succ = when(col("success"), 1.0).otherwise(0.3),
-          conf = lit(1.0),
-          failureFlag = Some(!col("success"))),
-        (o, s, si) => Alma.Fused(MemoryType.Outcomes, o = Some(o), score = s, sim = si)),
-      fused[DomainKnowledge](kdf, scoreAndTake(kdf, "lastVerified",
-          succ = lit(1.0), conf = col("confidence")),
-        (dk, s, si) => Alma.Fused(MemoryType.Knowledge, dk = Some(dk), score = s, sim = si))) ++
+      scoreAndTake(hdf, MemoryType.Heuristics, "h", "lastValidated",
+        succ = col("successCount").cast("double") /
+          when(col("occurrenceCount") === 0, 1L).otherwise(col("occurrenceCount")),
+        conf = col("confidence")),
+      scoreAndTake(odf, MemoryType.Outcomes, "o", "timestamp",
+        succ = when(col("success"), 1.0).otherwise(0.3),
+        conf = lit(1.0),
+        failureFlag = Some(!col("success"))),
+      scoreAndTake(kdf, MemoryType.Knowledge, "dk", "lastVerified",
+        succ = lit(1.0), conf = col("confidence"))) ++
       (if (m.includeAntiPatterns)
-        Seq(fused[AntiPattern](adf, scoreAndTake(adf, "lastSeen",
-            succ = least(col("occurrenceCount").cast("double") / lit(10.0), lit(1.0)),
-            conf = lit(1.0)),
-          (ap, s, si) => Alma.Fused(MemoryType.AntiPatterns, ap = Some(ap), score = s, sim = si)))
+        Seq(scoreAndTake(adf, MemoryType.AntiPatterns, "ap", "lastSeen",
+          succ = least(col("occurrenceCount").cast("double") / lit(10.0), lit(1.0)),
+          conf = lit(1.0)))
       else Nil) :+
       // Preferences are unscored (engine.py:347-350).
-      store.preferences().orderBy(col("id")).limit(k)
-        .as[UserPreference].map(p => Alma.Fused(MemoryType.Preferences, up = Some(p)))
-    val collected = branches.reduce(_ union _).collect().toSeq
+      envelope(pdf.orderBy(col("id")).limit(k), pdf.columns,
+        MemoryType.Preferences, "up", lit(0.0), lit(0.0))
+    val unioned = branches.reduce(_.unionByName(_, allowMissingColumns = true))
+    // A slot no branch fills (ap, when the mode leaves anti-patterns
+    // out) is added as a typed null, so the Fused decoder resolves.
+    val collected = implicitly[Encoder[Alma.Fused]].schema
+      .filterNot(f => unioned.columns.contains(f.name))
+      .foldLeft(unioned)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
+      .as[Alma.Fused].collect().toSeq
 
     // Driver-side per-type finish over the bounded envelope rows:
     // deterministic (score desc, id) order, then greedy MMR (R7) when
@@ -699,7 +713,8 @@ final class Alma(
     ).reduce(_ unionByName _)
 
     val sim = VectorFunctions.cosine(col("embedding"), col("q_vec"))
-    val days = (lit(asOfUs) - unix_micros(col("_ts"))).cast("double") / lit(86400000000.0)
+    val days = (BoundParam.of(asOfUs) - unix_micros(col("_ts"))).cast("double") /
+      lit(86400000000.0)
     val rec = pow(lit(0.5), days / lit(30.0))
     val score = lit(m.wSim) * sim + lit(m.wRecency) * rec +
       lit(m.wSuccess) * col("_succ") + lit(m.wConfidence) * col("_conf")
@@ -770,9 +785,10 @@ object Alma {
   /** R10 blend weight (reference feedback.py default w=0.15). */
   val FeedbackWeight = 0.15
 
-  /** One row of the fused retrieve plan: exactly one payload slot is
-    * set, discriminated by memoryType, so the five per-type top-k
-    * plans union into a single job and a single bounded collect.
+  /** One row of the fused retrieve plan, decoded once at collect:
+    * exactly one payload slot is set, discriminated by memoryType. The
+    * plan's branches project a column per slot name, so renaming a
+    * field here means renaming its branch's slot in `retrieveImpl`.
     */
   private[graft] final case class Fused(
       memoryType: String,

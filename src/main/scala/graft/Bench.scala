@@ -130,10 +130,17 @@ object Bench {
     // parser that concatenates the `queries` maps of parts 1..N (matching
     // on "n" and the shared "total" stamp) recovers the full map without
     // ever needing the artifact file. Values carry 6 decimals — microsecond
-    // resolution, far below the ±25 % single-pass spread.
+    // resolution, far below the ±25 % single-pass spread — formatted in
+    // the root locale, so a comma-decimal JVM still prints valid JSON.
+    // The guarantee assumes no single entry exceeds the 1700-char part
+    // budget (query names are short identifiers); the chunker never splits
+    // an entry, so a longer one fails here instead of breaking the bound.
     val partEntries = warm.map { case (k, v) =>
-      "\"" + k + "\":" + (if (v < 0) "-1.0" else f"$v%.6f")
+      "\"" + k + "\":" +
+        (if (v < 0) "-1.0" else String.format(java.util.Locale.ROOT, "%.6f", Double.box(v)))
     }
+    require(partEntries.forall(_.length + 1 <= 1700),
+      "a queries_part entry exceeds the 1700-char part budget")
     val parts = {
       val buf = scala.collection.mutable.ArrayBuffer[List[String]]()
       var cur = List.empty[String]; var len = 0

@@ -7,7 +7,10 @@ package graft.retrieval
   * A mode is pure configuration: weight literals for the 4-factor score,
   * top-k, threshold, and post-processing toggles. Catalyst
   * constant-folds the weights once they're literals (SURVEY O13), so
-  * mode selection costs nothing at execution time.
+  * mode selection costs nothing at execution time. Per-call values (the
+  * injected `asOf`) are the opposite case: they are bound by reference
+  * (`BoundParam`), never folded, so a retrieve plan generates the same
+  * Java on every call and its compiled classes are reused.
   */
 final case class ModeConfig(
     name: String,

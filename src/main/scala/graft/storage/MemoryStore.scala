@@ -1,5 +1,6 @@
 package graft.storage
 
+import graft.functions.expressions.BoundParam
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -966,7 +967,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     val key = ids.select(col(ids.columns.head).as("id")).localCheckpoint(true)
     val toArchive = live.join(key, Seq("id"), "left_semi")
       .withColumn("reason", lit(reason))
-      .withColumn("archived_at_us", lit(asOfUs))
+      .withColumn("archived_at_us", BoundParam.of(asOfUs))
     if (!toArchive.isEmpty) {
       toArchive.write.mode(SaveMode.Append).parquet(s"$root/archive/$memoryType")
       overwrite(live.join(key, Seq("id"), "left_anti"), memoryType)

@@ -167,6 +167,79 @@ class AlmaSpec extends SparkSpec {
     assert(jobs.get() == 1, s"fused retrieve launched ${jobs.get()} jobs, expected 1")
   }
 
+  test("a second retrieve miss with a new query and asOf compiles no new code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val alma = freshAlma()
+    (1 to 3).foreach { i =>
+      alma.learn("helena", "deploy", s"deploy the payment service $i", success = true,
+        strategyUsed = "canary rollout", asOf = ts(s"2024-01-0$i 10:00:00"))
+    }
+    val first = alma.retrieve("deploy the payment service", "helena",
+      ts("2024-02-01 00:00:00"))
+    assert(first.heuristics.nonEmpty)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = alma.retrieve("how do we roll out billing", "helena",
+      ts("2024-02-02 13:45:00"))
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(second.outcomes.nonEmpty)
+    assert(compiles == 0, s"the second miss compiled $compiles classes")
+  }
+
+  test("a mode without anti-patterns decodes the envelope without its slot") {
+    val alma = freshAlma()
+    (1 to 2).foreach { i =>
+      alma.learn("victor", "migrate", s"migrate shard $i", success = false,
+        strategyUsed = "drop and recreate", asOf = ts(s"2024-01-0$i 09:00:00"),
+        errorMessage = Some("data loss"))
+    }
+    val at = ts("2024-02-01 00:00:00")
+    val mode = graft.retrieval.Modes.Benchmark
+    // The anti-pattern is embedded from its error text, the outcomes
+    // from their task: the query names both so every score is positive.
+    val query = "migrate shard data loss"
+    val withAps = alma.retrieve(query, "victor", at, mode = mode)
+    assert(withAps.antiPatterns.nonEmpty && withAps.outcomes.nonEmpty)
+    val without = alma.retrieve(query, "victor", at,
+      mode = mode.copy(includeAntiPatterns = false))
+    assert(without.antiPatterns.isEmpty)
+    assert(without.outcomes.map(_.id) == withAps.outcomes.map(_.id))
+  }
+
+  test("the executed retrieve plan has no typed object stages") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val alma = freshAlma()
+    (1 to 3).foreach { i =>
+      alma.learn("helena", "deploy", "deploy the payment service", success = true,
+        strategyUsed = "canary rollout", asOf = ts(s"2024-01-0$i 10:00:00"))
+    }
+    val captured = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == "memoryType")) { captured.add(qe); () }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      alma.retrieve("deploy the payment service", "helena", ts("2024-02-01 00:00:00"))
+      val deadline = System.currentTimeMillis() + 10000
+      while (captured.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    assert(captured.size == 1, s"captured ${captured.size} retrieve plans")
+    // AQE-aware walk: the final adaptive plan and every query stage.
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val names = nodes(captured.peek().executedPlan).map(_.nodeName).toSet
+    assert(names.contains("Union"), names.toString)
+    val typed = names & Set("DeserializeToObject", "MapElements", "SerializeFromObject")
+    assert(typed.isEmpty, s"typed stages in the retrieve plan: $typed")
+  }
+
   test("scope inheritance: agent reads inherited memories, strangers do not") {
     val dir = Files.createTempDirectory("alma-test").toString
     val scopes = Map(
