@@ -9,7 +9,8 @@ import graft.functions.{HashEmbedder, VectorFunctions}
 import graft.functions.expressions.BoundParam
 import graft.retrieval.{ModeConfig, Modes, PostProcess, QuerySanitizer, RetrievalCache}
 import graft.storage._
-import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 /** The user-facing engine facade — the reference's `ALMA` core API
@@ -70,9 +71,9 @@ final class Alma(
     context.foreach(_.validate())
     // F10 write guard: learning a strategy that matches a stored
     // anti-pattern is refused.
-    val guard = store.antiPatterns(Some(projectId), scope(agent).readableAgents)
-      .filter(col("pattern") === strategyUsed).count()
-    require(guard == 0, s"write guard: strategy '$strategyUsed' matches a stored anti-pattern")
+    val clear = store.antiPatterns(Some(projectId), scope(agent).readableAgents)
+      .filter(col("pattern") === strategyUsed).isEmpty
+    require(clear, s"write guard: strategy '$strategyUsed' matches a stored anti-pattern")
 
     val o = Outcome(
       id = UUID.randomUUID().toString,
@@ -116,65 +117,63 @@ final class Alma(
     * success ratio later collapses is demoted in place rather than
     * frozen at its last promoted confidence.
     *
-    * Fully distributed: the per-strategy stats aggregate maps straight
-    * into Heuristic rows on the executors and merges into storage as a
-    * full-outer join (MemoryStore.mergeHeuristics) — counts are
-    * recomputed from the full outcome history, so matched rows are
-    * REPLACED (deterministic ids make this idempotent); incrementing
-    * would double-count. The promotion threshold gates NEW rows only.
+    * Fully distributed: the per-strategy stats aggregate projects
+    * straight into Heuristic-shaped rows (Column expressions, no typed
+    * stage) and merges into storage by id (MemoryStore.mergeHeuristics)
+    * — counts are recomputed from the full outcome history, so matched
+    * rows are REPLACED (deterministic ids make this idempotent);
+    * incrementing would double-count. The promotion threshold gates NEW
+    * rows only. Per-call values reach the generated code by reference
+    * (strings are bound that way already; `asOf` through BoundParam),
+    * so every call reuses its classes.
     */
   private def promoteHeuristics(agent: String, taskType: String, asOf: Timestamp): Unit = {
-    val (pid, dim, ag, tt) = (projectId, embedDim, agent, taskType)
-    val incoming = store.outcomes(Some(projectId), Seq(agent))
+    val at = BoundParam.of(asOf)
+    val incoming = store.outcomes(Some(projectId), Seq(agent)).toDF()
       .filter(col("taskType") === taskType)
       .groupBy("strategyUsed")
       .agg(count(lit(1)).as("n"),
         sum(when(col("success"), 1L).otherwise(0L)).as("succ"))
-      .as[(String, Long, Long)]
-      .map { case (strategy, n, succ) =>
-        Heuristic(
-          id = s"h-$pid-$ag-$tt-${Alma.idHash(strategy)}",
-          agent = ag, projectId = pid,
-          condition = tt, strategy = strategy,
-          confidence = succ.toDouble / n,
-          occurrenceCount = n, successCount = succ,
-          lastValidated = asOf, createdAt = asOf,
-          embedding = HashEmbedder.embed(s"$tt $strategy", dim),
-          metadata = Map.empty)
-      }.toDF()
+      .select(
+        concat(lit(s"h-$projectId-$agent-$taskType-"), Alma.idHash(col("strategyUsed"))).as("id"),
+        lit(agent).as("agent"), lit(projectId).as("projectId"),
+        lit(taskType).as("condition"), col("strategyUsed").as("strategy"),
+        (col("succ").cast("double") / col("n")).as("confidence"),
+        col("n").as("occurrenceCount"), col("succ").as("successCount"),
+        at.as("lastValidated"), at.as("createdAt"),
+        Alma.embed(concat(lit(taskType + " "), col("strategyUsed")), embedDim).as("embedding"),
+        Alma.NoMetadata.as("metadata"))
     store.mergeHeuristics(incoming, addCounts = false,
       insertFilter = Some(col("occurrenceCount") >= scope(agent).minOccurrencesForHeuristic &&
         col("confidence") > 0.5))
   }
 
   /** A2 anti-pattern promotion: ≥2 failures with the same error class.
-    * Distributed like promoteHeuristics: aggregate → typed map → anti-
-    * join against stored ids → append (insert-only; promoted patterns
-    * are never weakened by later successes).
+    * Distributed like promoteHeuristics: aggregate → AntiPattern-shaped
+    * projection → anti-join against stored ids → append (insert-only;
+    * promoted patterns are never weakened by later successes). The
+    * append runs the plan once; an empty result writes nothing.
     */
   private def promoteAntiPatterns(agent: String, asOf: Timestamp): Unit = {
-    val (pid, dim, ag) = (projectId, embedDim, agent)
-    val candidates = store.outcomes(Some(projectId), Seq(agent))
+    val at = BoundParam.of(asOf)
+    val candidates = store.outcomes(Some(projectId), Seq(agent)).toDF()
       .filter(!col("success") && col("errorMessage").isNotNull)
       .groupBy(col("errorMessage"))
       .agg(count(lit(1)).as("n"),
         min_by(col("strategyUsed"), struct(col("timestamp"), col("id"))).as("strategy"))
       .filter(col("n") >= 2)
-      .as[(String, Long, String)]
-      .map { case (err, n, strategy) =>
-        AntiPattern(
-          id = s"ap-$pid-$ag-${Alma.idHash(err)}",
-          agent = ag, projectId = pid,
-          pattern = strategy, whyBad = err,
-          betterAlternative = "avoid: " + strategy,
-          occurrenceCount = n,
-          lastSeen = asOf, createdAt = asOf,
-          embedding = HashEmbedder.embed(err, dim),
-          metadata = Map.empty)
-      }.toDF()
+      .select(
+        concat(lit(s"ap-$projectId-$agent-"), Alma.idHash(col("errorMessage"))).as("id"),
+        lit(agent).as("agent"), lit(projectId).as("projectId"),
+        col("strategy").as("pattern"), col("errorMessage").as("whyBad"),
+        concat(lit("avoid: "), col("strategy")).as("betterAlternative"),
+        col("n").as("occurrenceCount"),
+        at.as("lastSeen"), at.as("createdAt"),
+        Alma.embed(col("errorMessage"), embedDim).as("embedding"),
+        Alma.NoMetadata.as("metadata"))
     val fresh = candidates.join(
       store.antiPatterns(Some(projectId), Seq(agent)).select("id"), Seq("id"), "left_anti")
-    if (!fresh.isEmpty) store.appendRows(fresh, MemoryType.AntiPatterns)
+    store.appendRows(fresh, MemoryType.AntiPatterns)
   }
 
   // ---- feedback loop (R10/R11 end-to-end) --------------------------------
@@ -248,9 +247,11 @@ final class Alma(
     val agentCond = agent.map(a => col("agent") === a).getOrElse(lit(true))
     val pruned =
       store.deleteWhere(MemoryType.Outcomes,
-        // cutoff stays a literal, not a BoundParam: the Parquet scan
-        // pushes this filter down, and pushdown matches literals only.
-        col("projectId") === projectId && agentCond && col("timestamp") < lit(cutoff)) +
+        // cutoff is bound by reference: as a literal it would reach the
+        // Parquet row-group filter, but it would also be written into
+        // the generated code, compiling new classes on every call. The
+        // projectId conjunct still prunes partitions either way.
+        col("projectId") === projectId && agentCond && col("timestamp") < BoundParam.of(cutoff)) +
         store.deleteWhere(MemoryType.Heuristics,
           col("projectId") === projectId && agentCond && col("confidence") < belowConfidence)
     if (pruned > 0) agent match {
@@ -394,7 +395,7 @@ final class Alma(
     val base = store.checkpoints(Some(runId))
     branchId.fold(base.toDF())(b => base.filter(col("branchId") === b).toDF())
       .orderBy(col("sequenceNumber").desc, col("id"))
-      .as[graft.workflow.Checkpoint]
+      .as(MemoryStore.CheckpointEncoder)
       .take(1).headOption
   }
 
@@ -628,10 +629,10 @@ final class Alma(
     val unioned = branches.reduce(_.unionByName(_, allowMissingColumns = true))
     // A slot no branch fills (ap, when the mode leaves anti-patterns
     // out) is added as a typed null, so the Fused decoder resolves.
-    val collected = implicitly[Encoder[Alma.Fused]].schema
+    val collected = Alma.FusedEncoder.schema
       .filterNot(f => unioned.columns.contains(f.name))
       .foldLeft(unioned)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
-      .as[Alma.Fused].collect().toSeq
+      .as(Alma.FusedEncoder).collect().toSeq
 
     // Driver-side per-type finish over the bounded envelope rows:
     // deterministic (score desc, id) order, then greedy MMR (R7) when
@@ -764,19 +765,23 @@ final class Alma(
     */
   def enforceQuota(maxOutcomesPerAgent: Int, asOf: Timestamp): Long = {
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("agent").orderBy(col("timestamp").desc, col("id"))
+    val outcomes = store.outcomes(Some(projectId)).toDF()
+    // Per-agent counts first: the common within-quota call ends on one
+    // small aggregate and runs no window (no sort) at all.
+    val within = outcomes.groupBy("agent").count()
+      .filter(col("count") > maxOutcomesPerAgent).isEmpty
+    if (within) return 0L
     // The overflow id set stays a DataFrame end-to-end — the archive is
-    // a broadcast semi/anti join, so quota enforcement never funnels
-    // the table through the driver.
-    val overflow = store.outcomes(Some(projectId)).toDF()
+    // a semi/anti join, so quota enforcement never funnels the table
+    // through the driver.
+    val w = Window.partitionBy("agent").orderBy(col("timestamp").desc, col("id"))
+    val overflow = outcomes
       .withColumn("_rn", row_number().over(w))
       .filter(col("_rn") > maxOutcomesPerAgent)
       .select("id")
     val n = overflow.count()
-    if (n > 0) {
-      store.archiveIds(MemoryType.Outcomes, overflow, "quota", asOf.getTime * 1000L)
-      cache.invalidateWhere(_ => true)
-    }
+    store.archiveIds(MemoryType.Outcomes, overflow, "quota", asOf.getTime * 1000L)
+    cache.invalidateWhere(_ => true)
     n
   }
 }
@@ -800,6 +805,8 @@ object Alma {
       score: Double = 0.0,
       sim: Double = 0.0)
 
+  private val FusedEncoder: Encoder[Fused] = Encoders.product[Fused]
+
   /** Deterministic collision-resistant id fragment (String.hashCode
     * collides trivially — e.g. "Aa"/"BB" — which would silently merge
     * distinct strategies or error classes). Lives on the companion so
@@ -808,6 +815,21 @@ object Alma {
   def idHash(text: String): String =
     MessageDigest.getInstance("SHA-256")
       .digest(text.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+
+  /** [[idHash]] as a Column: the same 16 hex digits (SHA-256 of the
+    * UTF-8 text), so rows promoted in a plan keep the ids promoted
+    * before, and re-promotion stays an idempotent replace.
+    */
+  def idHash(text: Column): Column = substring(sha2(text, 256), 1, 16)
+
+  private val embedUdf: UserDefinedFunction =
+    udf((text: String, dim: Int) => HashEmbedder.embed(text, dim))
+
+  /** `HashEmbedder.embed` as a Column, for rows built in a plan. */
+  private def embed(text: Column, dim: Int): Column = embedUdf(text, lit(dim))
+
+  /** The empty `metadata` map of a promoted row. */
+  private val NoMetadata: Column = typedLit(Map.empty[String, String])
 
   def apply(spark: SparkSession, root: String, projectId: String,
       scopes: Map[String, MemoryScope] = Map.empty): Alma =

@@ -298,8 +298,8 @@ object Lifecycle {
   // S4/A3 row-level upsert as a distributed merge: the "current"
   // snapshot FULL OUTER JOIN the "incoming" batch on the row key —
   // attributes take the incoming value, creation time survives from
-  // current, each row tagged with its merge action. This is the exact
-  // join shape MemoryStore.mergeHeuristics runs for the library's
+  // current, each row tagged with its merge action. These are the merge
+  // semantics MemoryStore.mergeHeuristics implements for the library's
   // upsert/replace path (reference semantics base.py:238-253), checked
   // here against the SQL oracle.
   private def upsertMerge(s: SparkSession, dir: String): DataFrame = {

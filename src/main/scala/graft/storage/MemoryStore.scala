@@ -2,7 +2,7 @@ package graft.storage
 
 import graft.functions.expressions.BoundParam
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * `_CURRENT` marker file naming the committed snapshot. Writes are
   * append-only batches into the current snapshot (S3/S4); upsert (A3)
   * and archive (S10) are DISTRIBUTED snapshot-rewrite jobs — a
-  * full-outer-join column-level merge written as a NEW snapshot
+  * join-based column-level merge written as a NEW snapshot
   * directory, committed by an atomic marker flip — the open-format
   * stand-in for Delta MERGE. Nothing in this class collects a table to
   * the driver: every merge/split is a join, so the same code runs when
@@ -57,7 +57,7 @@ import org.apache.spark.sql.functions._
   */
 final class MemoryStore(val spark: SparkSession, val root: String,
     val retainSnapshots: Int = 3) {
-  import spark.implicits._
+  import MemoryStore._
 
   // ---- snapshot resolution (cloud-portable commit protocol) -------------
   private val hadoopConf = spark.sparkContext.hadoopConfiguration
@@ -139,15 +139,32 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     * the `_CURRENT` marker to it. The base version is read at call time;
     * concurrent committers produce same-version siblings and the last
     * marker write wins (documented last-writer-wins).
+    *
+    * `df` executes exactly once, in the write. Whether it was empty is
+    * read back from what the write left: a partitioned write of no rows
+    * lands no data file (an unpartitioned one lands a single schema-only
+    * file, which commits and reads as the empty table). Such a snapshot
+    * is deleted, not committed, and the result is None — the table keeps
+    * its current state, and a caller never probes `df` before writing it.
     */
   private def commitSnapshot(df: DataFrame, memoryType: String, baseVersion: Long,
-      cleanup: Boolean = true): HPath = {
+      cleanup: Boolean = true): Option[HPath] = {
     val version = baseVersion + 1
     val name = f"snap_$version%06d_${java.util.UUID.randomUUID().toString.replace("-", "").take(8)}%s"
     val snap = new HPath(tableDir(memoryType), name)
     df.write.mode(SaveMode.Overwrite)
       .partitionBy(partitionColsOf(df): _*)
       .parquet(snap.toString)
+    // A listing failure propagates: the marker is untouched, so the
+    // table keeps its committed snapshot rather than being read as empty.
+    val landed =
+      try listDataFiles(snap).nonEmpty
+      catch { case _: java.io.FileNotFoundException => false }
+    if (!landed) {
+      try fsOf(snap).delete(snap, true): Unit
+      catch { case _: java.io.IOException => () }
+      return None
+    }
     commitMarker(memoryType, name)
     // `cleanup = false` defers retention to the caller — overwrite()
     // must rescue concurrent appends out of the superseded snapshot
@@ -156,7 +173,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     if (cleanup)
       cleanupSnapshots(memoryType, keepFromVersion = version - (retainSnapshots - 1),
         protect = Some(name))
-    snap
+    Some(snap)
   }
 
   /** Flip `_CURRENT` to `name`: write a temp marker, overwrite-rename it
@@ -249,15 +266,20 @@ final class MemoryStore(val spark: SparkSession, val root: String,
   }
 
   // ---- batch writes (S3) ------------------------------------------------
-  def saveHeuristics(rows: Seq[Heuristic]): Unit = append(rows.toDS().toDF(), MemoryType.Heuristics)
-  def saveOutcomes(rows: Seq[Outcome]): Unit = append(rows.toDS().toDF(), MemoryType.Outcomes)
-  def savePreferences(rows: Seq[UserPreference]): Unit = append(rows.toDS().toDF(), MemoryType.Preferences)
-  def saveKnowledge(rows: Seq[DomainKnowledge]): Unit = append(rows.toDS().toDF(), MemoryType.Knowledge)
-  def saveAntiPatterns(rows: Seq[AntiPattern]): Unit = append(rows.toDS().toDF(), MemoryType.AntiPatterns)
+  private def frame[T](rows: Seq[T], enc: Encoder[T]): DataFrame =
+    spark.createDataset(rows)(enc).toDF()
+
+  def saveHeuristics(rows: Seq[Heuristic]): Unit = append(frame(rows, HeuristicEncoder), MemoryType.Heuristics)
+  def saveOutcomes(rows: Seq[Outcome]): Unit = append(frame(rows, OutcomeEncoder), MemoryType.Outcomes)
+  def savePreferences(rows: Seq[UserPreference]): Unit = append(frame(rows, PreferenceEncoder), MemoryType.Preferences)
+  def saveKnowledge(rows: Seq[DomainKnowledge]): Unit = append(frame(rows, KnowledgeEncoder), MemoryType.Knowledge)
+  def saveAntiPatterns(rows: Seq[AntiPattern]): Unit = append(frame(rows, AntiPatternEncoder), MemoryType.AntiPatterns)
 
   /** Distributed batch append — the path promotions use so emitted rows
     * never round-trip through the driver. Checkpoint rows route into
-    * their per-run partitions.
+    * their per-run partitions. An empty `df` is not probed for: its
+    * write lands no file (and, on a table with no snapshot yet, commits
+    * none).
     */
   def appendRows(df: DataFrame, memoryType: String): Unit =
     if (memoryType == MemoryType.Checkpoints) {
@@ -280,7 +302,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
         df.write.mode(SaveMode.Append)
           .partitionBy(partitionColsOf(df): _*)
           .parquet(snap.toString)
-      case None => commitSnapshot(df, memoryType, baseVersion = 0L)
+      case None => commitSnapshot(df, memoryType, baseVersion = 0L): Unit
     }
 
   def exists(memoryType: String): Boolean = currentSnapshot(memoryType).isDefined
@@ -294,7 +316,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
   private def readTable(memoryType: String): DataFrame =
     currentSnapshot(memoryType) match {
       case Some((_, snap)) =>
-        spark.read.schema(emptyOf(memoryType).schema).parquet(snap.toString)
+        spark.read.schema(encoderOf(memoryType).schema).parquet(snap.toString)
       case None => emptyOf(memoryType)
     }
 
@@ -322,38 +344,24 @@ final class MemoryStore(val spark: SparkSession, val root: String,
 
   def heuristics(projectId: Option[String] = None, agents: Seq[String] = Nil,
       minConfidence: Option[Double] = None): Dataset[Heuristic] =
-    scan(MemoryType.Heuristics, projectId, agents, minConfidence).as[Heuristic]
+    scan(MemoryType.Heuristics, projectId, agents, minConfidence).as(HeuristicEncoder)
 
   def outcomes(projectId: Option[String] = None, agents: Seq[String] = Nil): Dataset[Outcome] =
-    scan(MemoryType.Outcomes, projectId, agents).as[Outcome]
+    scan(MemoryType.Outcomes, projectId, agents).as(OutcomeEncoder)
 
   def preferences(): Dataset[UserPreference] =
     (if (exists(MemoryType.Preferences)) readTable(MemoryType.Preferences)
-     else emptyOf(MemoryType.Preferences)).as[UserPreference]
+     else emptyOf(MemoryType.Preferences)).as(PreferenceEncoder)
 
   def knowledge(projectId: Option[String] = None, agents: Seq[String] = Nil,
       minConfidence: Option[Double] = None): Dataset[DomainKnowledge] =
-    scan(MemoryType.Knowledge, projectId, agents, minConfidence).as[DomainKnowledge]
+    scan(MemoryType.Knowledge, projectId, agents, minConfidence).as(KnowledgeEncoder)
 
   def antiPatterns(projectId: Option[String] = None, agents: Seq[String] = Nil): Dataset[AntiPattern] =
-    scan(MemoryType.AntiPatterns, projectId, agents).as[AntiPattern]
+    scan(MemoryType.AntiPatterns, projectId, agents).as(AntiPatternEncoder)
 
-  private def emptyOf(memoryType: String): DataFrame = memoryType match {
-    // any per-run partition path (`checkpoints/runId=<r>`) shares the
-    // checkpoint schema
-    case t if t != MemoryType.Checkpoints &&
-      t.startsWith(MemoryType.Checkpoints + "/") =>
-      spark.emptyDataset[graft.workflow.Checkpoint].toDF()
-    case MemoryType.Heuristics => spark.emptyDataset[Heuristic].toDF()
-    case MemoryType.Outcomes => spark.emptyDataset[Outcome].toDF()
-    case MemoryType.Preferences => spark.emptyDataset[UserPreference].toDF()
-    case MemoryType.Knowledge => spark.emptyDataset[DomainKnowledge].toDF()
-    case MemoryType.AntiPatterns => spark.emptyDataset[AntiPattern].toDF()
-    case MemoryType.Feedback => spark.emptyDataset[RetrievalFeedback].toDF()
-    case MemoryType.Artifacts => spark.emptyDataset[ArtifactRef].toDF()
-    case MemoryType.WorkflowOutcomes => spark.emptyDataset[WorkflowOutcome].toDF()
-    case MemoryType.Checkpoints => spark.emptyDataset[graft.workflow.Checkpoint].toDF()
-  }
+  private def emptyOf(memoryType: String): DataFrame =
+    spark.emptyDataset(encoderOf(memoryType)).toDF()
 
   // ---- workflow checkpoints (crash-recovery state, core.py:546-650) ------
   // Checkpoints are the one RUN-scoped table: every write belongs to one
@@ -488,7 +496,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
         val staged = stagedLegacyDirs()
         if (staged.nonEmpty) {
           val rows = staged.map(d => spark.read
-              .schema(emptyOf(MemoryType.Checkpoints).schema).parquet(d.toString))
+              .schema(CheckpointEncoder.schema).parquet(d.toString))
             .reduce(_.unionByName(_))
             // an object-store rename that crashed mid copy+delete can
             // leave the same snapshot in BOTH places briefly; staged
@@ -579,7 +587,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
       return None
     }
     Some(srcs.map(d => spark.read
-        .schema(emptyOf(MemoryType.Checkpoints).schema).parquet(d.toString))
+        .schema(CheckpointEncoder.schema).parquet(d.toString))
       .reduce(_.unionByName(_))
       .dropDuplicates("id"))
   }
@@ -638,7 +646,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
 
   def saveCheckpoints(rows: Seq[graft.workflow.Checkpoint]): Unit = {
     migrateLegacyCheckpoints()
-    appendCheckpoints(rows.toDS().toDF())
+    appendCheckpoints(frame(rows, CheckpointEncoder))
   }
 
   /** One run's checkpoints read its partition alone; the cross-run scan
@@ -682,7 +690,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
         }
         base.unionByName(pending.join(base.select("id"), Seq("id"), "left_anti"))
     }
-    df.as[graft.workflow.Checkpoint]
+    df.as(CheckpointEncoder)
   }
 
   /** Drop all but the latest `keepLatest` checkpoints per branch of a
@@ -725,19 +733,22 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     * the complement, both distributed (reference forget path,
     * learning/forgetting.py — prune stale / low-confidence memories).
     * Null predicate results keep the row (only a definite match dies).
+    * The count filters on `cond` itself — a filter drops null rows as
+    * it drops false ones — so its partition-column conjuncts (the
+    * `projectId` of a forget) prune the scan.
     */
   def deleteWhere(memoryType: String, cond: Column): Long = {
     if (!exists(memoryType)) return 0L
     val live = readTable(memoryType)
-    val matched = live.filter(coalesce(cond, lit(false))).count()
+    val matched = live.filter(cond).count()
     if (matched > 0)
       overwrite(live.filter(coalesce(cond, lit(false)) === false), memoryType)
     matched
   }
 
   // ---- upsert (S4/A3) ---------------------------------------------------
-  /** Distributed heuristic merge: current table FULL OUTER JOIN incoming
-    * on id, column-level merge, snapshot swap (reference increment
+  /** Distributed heuristic merge: current table merged with incoming on
+    * id, column-level merge, snapshot swap (reference increment
     * semantics base.py:238-253 re-expressed as the q_occurrence_upsert
     * join shape — never a driver read-modify-write).
     *
@@ -750,63 +761,74 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     *    given (promotion thresholds apply to NEW heuristics only;
     *    existing ones always refresh, including downward).
     *
+    * One existence probe of the incoming ids against the current ones
+    * (`id IN cur`) marks each incoming row as an update or an insert.
+    * The merge is then every current row LEFT OUTER JOIN the incoming
+    * rows, broadcast — they are few (a promotion's per-strategy rows,
+    * an upsert batch), and the table streams through the join with no
+    * shuffle — plus the incoming inserts that pass the gate.
+    *
     * Incoming must be unique by id (callers aggregate before merging).
+    * Each plan executes once: the probed input is materialized by the
+    * gate's check, and the merge by the snapshot write itself, unprobed.
     */
   def mergeHeuristics(
       incoming: DataFrame,
       addCounts: Boolean,
       insertFilter: Option[Column] = None): Unit = {
     val cur = heuristics().toDF()
-    val gated0 = insertFilter match {
-      case Some(f) =>
-        val curIds = cur.select("id")
-        incoming.join(curIds, Seq("id"), "left_semi")
-          .unionByName(incoming.join(curIds, Seq("id"), "left_anti").filter(f))
-      case None => incoming
-    }
-    // Materialize once: the incoming plan (an aggregate + per-row
-    // hash/embed work) would otherwise re-execute for every action of
-    // the overwrite. And when nothing survives the gate there are no
-    // inserts AND no updates — skip the snapshot rewrite entirely
-    // (every learn() call lands here, most with no promotable change).
-    val gated = gated0.localCheckpoint(true)
-    if (gated.isEmpty) return
-    val inc = gated.columns.foldLeft(gated)((d, n) => d.withColumnRenamed(n, "_i_" + n))
-    val joined = cur.join(inc, col("id") === col("_i_id"), "full_outer")
+    // Materialized by its first use (the gate below) and read from there
+    // on: the incoming plan (an aggregate + per-row hash/embed work)
+    // would otherwise re-execute for every action of the overwrite.
+    val probed = incoming.withColumn("_cur", col("id").isin(cur.select("id")))
+      .localCheckpoint(false)
+    val inserts = insertFilter.fold(!col("_cur"))(f => !col("_cur") && f)
+    // When nothing updates or inserts, skip the snapshot rewrite
+    // entirely (every learn() call lands here, most with no promotable
+    // change).
+    if (probed.filter(col("_cur") || inserts).isEmpty) return
+    // Incoming rows that are not updates match no current id: the
+    // join needs no filter on them.
+    val inc = probed.columns.foldLeft(probed)((d, n) => d.withColumnRenamed(n, "_i_" + n))
+    val joined = cur.join(broadcast(inc), col("id") === col("_i_id"), "left_outer")
     def take(n: String) = coalesce(col("_i_" + n), col(n)).as(n)
     val counts =
       if (addCounts) Seq(
         (coalesce(col("occurrenceCount"), lit(0L)) + coalesce(col("_i_occurrenceCount"), lit(0L))).as("occurrenceCount"),
         (coalesce(col("successCount"), lit(0L)) + coalesce(col("_i_successCount"), lit(0L))).as("successCount"))
       else Seq(take("occurrenceCount"), take("successCount"))
-    val merged = joined.select(
-      Seq(coalesce(col("id"), col("_i_id")).as("id"),
+    val updated = joined.select(
+      Seq(col("id"),
         take("agent"), take("projectId"), take("condition"),
         take("strategy"), take("confidence"))
         ++ counts ++
         Seq(take("lastValidated"),
           coalesce(col("createdAt"), col("_i_createdAt")).as("createdAt"),
           take("embedding"), take("metadata")): _*)
-    overwrite(merged, MemoryType.Heuristics)
+    val inserted = probed.filter(inserts).drop("_cur")
+    overwrite(updated.unionByName(inserted), MemoryType.Heuristics)
   }
 
   /** Upsert heuristics by id: counts add, attributes take the incoming
     * value, createdAt survives (A3).
     */
   def upsertHeuristics(incoming: Seq[Heuristic]): Unit =
-    mergeHeuristics(incoming.toDS().toDF(), addCounts = true)
+    mergeHeuristics(frame(incoming, HeuristicEncoder), addCounts = true)
 
   /** Replace heuristics by id wholesale (promotion re-emission: counts
     * are recomputed from outcomes); createdAt survives from the
     * original row.
     */
   def replaceHeuristics(incoming: Seq[Heuristic]): Unit =
-    mergeHeuristics(incoming.toDS().toDF(), addCounts = false)
+    mergeHeuristics(frame(incoming, HeuristicEncoder), addCounts = false)
 
   /** Snapshot rewrite: the merge plan reads the live snapshot while the
     * new one is written to a sibling directory, then the marker flips —
     * a failure at any step leaves the old snapshot live (the marker is
-    * only written after the new directory is complete).
+    * only written after the new directory is complete). `df` executes
+    * once, in that write: an empty result is recognized by the write
+    * landing no data file ([[commitSnapshot]]), never by running the
+    * plan a second time to probe it.
     *
     * Concurrent-append rescue: an append (the feedback log is the
     * hottest) that lands files in the OLD snapshot between the
@@ -833,6 +855,8 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     * silent loss into a no-op. A rewrite that empties the table takes
     * the same path: unread files are committed as the next snapshot
     * (they are the table now); only a truly-empty result drops it.
+    * (An unpartitioned table's empty result lands a schema-only file;
+    * it commits as an empty snapshot, rescued like any other.)
     */
   private[storage] def overwrite(df: DataFrame, memoryType: String): Unit = {
     val cur = currentSnapshot(memoryType)
@@ -853,7 +877,8 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     }
     def unreadIn(oldSnap: HPath): Map[String, HPath] =
       dataFilesIn(oldSnap).filter { case (rel, _) => !readSet.contains(rel) }
-    if (df.isEmpty) {
+    val written = commitSnapshot(df, memoryType, base, cleanup = false)
+    if (written.isEmpty) {
       val unread = cur.filter(_ => readSet.nonEmpty)
         .map { case (_, snap) => unreadIn(snap) }.getOrElse(Map.empty)
       if (unread.isEmpty) { dropTable(memoryType); return }
@@ -868,7 +893,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
         val rescued = spark.read
           .option("basePath", fsOf(cur.get._2).makeQualified(cur.get._2).toString)
           .parquet(unread.values.map(_.toString).toSeq: _*)
-        commitSnapshot(rescued, memoryType, base): Unit
+        if (commitSnapshot(rescued, memoryType, base).isEmpty) dropTable(memoryType)
       } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[graft.MemoryStore] empty-rewrite rescue for " +
           s"$memoryType failed ($e) — dropping; rows appended during this rewrite may be lost")
@@ -876,7 +901,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
       }
       return
     }
-    val newSnap = commitSnapshot(df, memoryType, base, cleanup = false)
+    val newSnap = written.get
     if (readSet.nonEmpty) cur.foreach { case (_, oldSnap) =>
       val unread = unreadIn(oldSnap)
       if (unread.nonEmpty) {
@@ -891,15 +916,10 @@ final class MemoryStore(val spark: SparkSession, val root: String,
             if (rescued.columns.contains("id") && committed.columns.contains("id"))
               rescued.join(committed.select("id"), Seq("id"), "left_anti")
             else rescued
-          // Materialize once: isEmpty would otherwise run the
-          // rescued-read + committed-snapshot anti-join a first time
-          // and the write a second (the localCheckpoint pattern used
-          // by the upsert and archive paths).
-          val pinned = survivors.localCheckpoint(true)
-          if (!pinned.isEmpty)
-            pinned.write.mode(SaveMode.Append)
-              .partitionBy(partitionColsOf(pinned): _*)
-              .parquet(newSnap.toString)
+          // Appended unprobed: no survivor, no file.
+          survivors.write.mode(SaveMode.Append)
+            .partitionBy(partitionColsOf(survivors): _*)
+            .parquet(newSnap.toString)
         } catch { case scala.util.control.NonFatal(e) =>
           // Spark read/write failures arrive as SparkException /
           // AnalysisException — a narrower IOException catch would let
@@ -917,28 +937,30 @@ final class MemoryStore(val spark: SparkSession, val root: String,
   /** Committed data files inside a snapshot dir, keyed by path relative
     * to it. In-flight write-job internals (`_temporary/...`, hidden
     * files) are excluded — only landed `part-*.parquet` files count.
+    * An unlistable snapshot reads as holding none.
     */
-  private def dataFilesIn(snap: HPath): Map[String, HPath] = {
-    val fs = fsOf(snap)
-    val qSnap = fs.makeQualified(snap)
-    val prefix = qSnap.toUri.getPath
-    val out = Map.newBuilder[String, HPath]
-    try {
-      val it = fs.listFiles(qSnap, true)
-      while (it.hasNext) {
-        val p = it.next().getPath
-        val rel = p.toUri.getPath.stripPrefix(prefix).stripPrefix("/")
-        val segs = rel.split('/')
-        if (p.getName.endsWith(".parquet") &&
-            !segs.exists(s => s.startsWith("_") || s.startsWith(".")))
-          out += rel -> p
-      }
-    } catch { case e: java.io.IOException =>
+  private def dataFilesIn(snap: HPath): Map[String, HPath] =
+    try listDataFiles(snap)
+    catch { case e: java.io.IOException =>
       // A vanished/unlistable snapshot here means a rescue pass cannot
       // see racing appends — say so rather than silently losing them.
       System.err.println(s"[graft.MemoryStore] could not list $snap ($e)")
+      Map.empty
     }
-    out.result()
+
+  /** [[dataFilesIn]], with listing failures thrown to the caller. */
+  private def listDataFiles(snap: HPath): Map[String, HPath] = {
+    val fs = fsOf(snap)
+    def walk(dir: HPath, rel: String): Seq[(String, HPath)] =
+      fs.listStatus(dir).toSeq.flatMap { st =>
+        val name = st.getPath.getName
+        val path = if (rel.isEmpty) name else s"$rel/$name"
+        if (name.startsWith("_") || name.startsWith(".")) Nil
+        else if (st.isDirectory) walk(st.getPath, path)
+        else if (name.endsWith(".parquet")) Seq(path -> st.getPath)
+        else Nil
+      }
+    walk(fs.makeQualified(snap), "").toMap
   }
 
   // ---- archive / restore (S10) -----------------------------------------
@@ -951,11 +973,12 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     * the live rewrite, re-running is safe: restore dedupes by id.
     */
   def archive(memoryType: String, ids: Set[String], reason: String, asOfUs: Long): Unit =
-    archiveIds(memoryType, ids.toSeq.toDF("id"), reason, asOfUs)
+    archiveIds(memoryType, frame(ids.toSeq, Encoders.STRING).toDF("id"), reason, asOfUs)
 
   /** Distributed form: `ids` is a single-column (`id`) DataFrame — at
     * scale the overflow set comes straight out of the quota window job
-    * without collecting.
+    * without collecting. The id set is materialized once; a non-empty
+    * set is archived and rewritten without probing either plan first.
     */
   def archiveIds(memoryType: String, ids: DataFrame, reason: String, asOfUs: Long): Unit = {
     if (!exists(memoryType)) return
@@ -965,11 +988,11 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     // strategy — a forced broadcast would build the whole id set on the
     // driver, which caps out exactly like a collect() at 100 TB.
     val key = ids.select(col(ids.columns.head).as("id")).localCheckpoint(true)
-    val toArchive = live.join(key, Seq("id"), "left_semi")
-      .withColumn("reason", lit(reason))
-      .withColumn("archived_at_us", BoundParam.of(asOfUs))
-    if (!toArchive.isEmpty) {
-      toArchive.write.mode(SaveMode.Append).parquet(s"$root/archive/$memoryType")
+    if (!key.isEmpty) {
+      live.join(key, Seq("id"), "left_semi")
+        .withColumn("reason", lit(reason))
+        .withColumn("archived_at_us", BoundParam.of(asOfUs))
+        .write.mode(SaveMode.Append).parquet(s"$root/archive/$memoryType")
       overwrite(live.join(key, Seq("id"), "left_anti"), memoryType)
     }
   }
@@ -1013,10 +1036,10 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     * (sqlite_local.py:448-466, types.py:352-379).
     */
   def saveFeedback(rows: Seq[RetrievalFeedback]): Unit =
-    append(rows.toDS().toDF(), MemoryType.Feedback)
+    append(frame(rows, FeedbackEncoder), MemoryType.Feedback)
 
   def feedback(projectId: Option[String] = None): Dataset[RetrievalFeedback] =
-    scan(MemoryType.Feedback, projectId).as[RetrievalFeedback]
+    scan(MemoryType.Feedback, projectId).as(FeedbackEncoder)
 
   /** Per-memory feedback score `(used+up-ignored-down)/total` ∈ [-1, 1]
     * (types.py:382-420) — one conditional-sum aggregate, broadcastable
@@ -1065,7 +1088,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
 
   // ---- artifacts (J6 write path) ----------------------------------------
   def saveArtifacts(rows: Seq[ArtifactRef]): Unit =
-    append(rows.toDS().toDF(), MemoryType.Artifacts)
+    append(frame(rows, ArtifactEncoder), MemoryType.Artifacts)
 
   /** Artifact registry, optionally filtered to one memory (the J6
     * lookup's point form — the id predicate pushes to the scan).
@@ -1074,19 +1097,51 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     val df = if (exists(MemoryType.Artifacts))
       readTable(MemoryType.Artifacts)
     else emptyOf(MemoryType.Artifacts)
-    memoryId.fold(df)(m => df.filter(col("memoryId") === m)).as[ArtifactRef]
+    memoryId.fold(df)(m => df.filter(col("memoryId") === m)).as(ArtifactEncoder)
   }
 
   // ---- workflow outcomes ------------------------------------------------
   def saveWorkflowOutcomes(rows: Seq[WorkflowOutcome]): Unit =
-    append(rows.toDS().toDF(), MemoryType.WorkflowOutcomes)
+    append(frame(rows, WorkflowOutcomeEncoder), MemoryType.WorkflowOutcomes)
 
   def workflowOutcomes(projectId: Option[String] = None): Dataset[WorkflowOutcome] =
-    scan(MemoryType.WorkflowOutcomes, projectId).as[WorkflowOutcome]
+    scan(MemoryType.WorkflowOutcomes, projectId).as(WorkflowOutcomeEncoder)
 
   // ---- stats (A4) -------------------------------------------------------
   def stats(projectId: Option[String] = None): Map[String, Long] =
     MemoryType.All.map { t =>
       t -> (if (exists(t)) scan(t, projectId).count() else 0L)
     }.toMap
+}
+
+object MemoryStore {
+  // Product encoders, derived once per JVM: `spark.implicits` derives a
+  // fresh one by Scala reflection at every `.as[T]`, `toDS()` and
+  // `emptyDataset[T]`, driver time paid again on every call.
+  private[graft] val HeuristicEncoder: Encoder[Heuristic] = Encoders.product[Heuristic]
+  private[graft] val OutcomeEncoder: Encoder[Outcome] = Encoders.product[Outcome]
+  private[graft] val PreferenceEncoder: Encoder[UserPreference] = Encoders.product[UserPreference]
+  private[graft] val KnowledgeEncoder: Encoder[DomainKnowledge] = Encoders.product[DomainKnowledge]
+  private[graft] val AntiPatternEncoder: Encoder[AntiPattern] = Encoders.product[AntiPattern]
+  private[graft] val FeedbackEncoder: Encoder[RetrievalFeedback] = Encoders.product[RetrievalFeedback]
+  private[graft] val ArtifactEncoder: Encoder[ArtifactRef] = Encoders.product[ArtifactRef]
+  private[graft] val WorkflowOutcomeEncoder: Encoder[WorkflowOutcome] = Encoders.product[WorkflowOutcome]
+  private[graft] val CheckpointEncoder: Encoder[graft.workflow.Checkpoint] =
+    Encoders.product[graft.workflow.Checkpoint]
+
+  /** The row encoder of a stored table; every per-run checkpoint
+    * partition (`checkpoints/runId=<r>`) shares the checkpoint one.
+    */
+  private def encoderOf(memoryType: String): Encoder[_ <: Product] = memoryType match {
+    case t if t.startsWith(MemoryType.Checkpoints + "/") => CheckpointEncoder
+    case MemoryType.Heuristics => HeuristicEncoder
+    case MemoryType.Outcomes => OutcomeEncoder
+    case MemoryType.Preferences => PreferenceEncoder
+    case MemoryType.Knowledge => KnowledgeEncoder
+    case MemoryType.AntiPatterns => AntiPatternEncoder
+    case MemoryType.Feedback => FeedbackEncoder
+    case MemoryType.Artifacts => ArtifactEncoder
+    case MemoryType.WorkflowOutcomes => WorkflowOutcomeEncoder
+    case MemoryType.Checkpoints => CheckpointEncoder
+  }
 }

@@ -594,4 +594,197 @@ class AlmaSpec extends SparkSpec {
         "bad status", asOf = ts("2024-01-01 00:00:00"))
     }
   }
+
+  // ---- plan-shape and codegen specs of the write path ------------------
+
+  /** The executions `body` ran, as (action name, QueryExecution). */
+  private def captureExecutions(body: => Unit)
+      : Seq[(String, org.apache.spark.sql.execution.QueryExecution)] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val captured = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        captured.add((funcName, qe)); ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // The listener bus is async — wait until the capture is stable.
+      var last = -1
+      var stable = 0
+      while (stable < 3) {
+        Thread.sleep(100)
+        val c = captured.size
+        if (c == last) stable += 1 else { stable = 0; last = c }
+      }
+    } finally spark.listenerManager.unregister(listener)
+    captured.toArray(Array.empty[(String, QueryExecution)]).toSeq
+  }
+
+  /** Every node of an executed plan: the final adaptive plan and every
+    * query stage, walked AQE-aware.
+    */
+  private def planNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    p match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+      case q: QueryStageExec => q +: planNodes(q.plan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(planNodes)
+    }
+  }
+
+  private def compiled(body: => Unit): Long = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+
+  test("Alma.idHash as a Column equals the string form (sha2, first 16 hex digits)") {
+    import org.apache.spark.sql.functions.{col, sha2, substring}
+    import spark.implicits._
+    // ASCII, the String.hashCode collision pair, non-ASCII, and empty.
+    val texts = Seq("canary rollout", "Aa", "BB", "déploiement canari — 金丝雀 🚀", "")
+    val rows = texts.toDF("s")
+      .select(col("s"), substring(sha2(col("s"), 256), 1, 16), Alma.idHash(col("s")))
+      .collect()
+    rows.foreach { r =>
+      val want = Alma.idHash(r.getString(0))
+      assert(r.getString(1) == want, s"sha2 prefix of '${r.getString(0)}'")
+      assert(r.getString(2) == want, s"Alma.idHash column of '${r.getString(0)}'")
+    }
+    assert(Alma.idHash("Aa") != Alma.idHash("BB"))
+    // A heuristic stored under the string-derived id is the one a later
+    // promotion replaces: re-promotion stays an idempotent replace.
+    val alma = freshAlma()
+    val t0 = ts("2024-01-01 00:00:00")
+    val strategy = "déploiement canari"
+    alma.store.saveHeuristics(Seq(Heuristic(
+      s"h-proj1-helena-deploy-${Alma.idHash(strategy)}", "helena", "proj1", "deploy",
+      strategy, 0.5, 1, 1, t0, t0, Array.fill(4)(0.5f), Map.empty)))
+    (1 to 3).foreach { i =>
+      alma.learn("helena", "deploy", s"deploy v$i", success = true,
+        strategyUsed = strategy, asOf = ts(s"2024-01-0${i + 1} 10:00:00"))
+    }
+    val hs = alma.store.heuristics(Some("proj1")).collect()
+    assert(hs.length == 1, s"re-promotion added a row: ${hs.map(_.id).toSeq}")
+    assert(hs.head.occurrenceCount == 3L && hs.head.confidence == 1.0)
+    assert(hs.head.createdAt == t0, "createdAt must survive the replace")
+  }
+
+  test("promoted heuristic and anti-pattern rows carry the values of every field") {
+    val alma = freshAlma()
+    (1 to 3).foreach { i =>
+      alma.learn("victor", "migrate", s"migrate shard $i", success = i != 2,
+        strategyUsed = "expand contract", asOf = ts(s"2024-01-0$i 09:00:00"),
+        errorMessage = if (i == 2) Some("lock timeout") else None)
+    }
+    (4 to 5).foreach { i =>
+      alma.learn("victor", "migrate", s"migrate shard $i", success = false,
+        strategyUsed = s"drop and recreate $i", asOf = ts(s"2024-01-0$i 09:00:00"),
+        errorMessage = Some("data loss"))
+    }
+    val at = ts("2024-01-05 09:00:00")
+    val h = alma.store.heuristics(Some("proj1"), Seq("victor")).collect()
+      .filter(_.strategy == "expand contract").head
+    assert(h.id == s"h-proj1-victor-migrate-${Alma.idHash("expand contract")}")
+    assert(h.condition == "migrate" && h.occurrenceCount == 3L && h.successCount == 2L)
+    assert(h.confidence == 2.0 / 3)
+    assert(h.lastValidated == at && h.createdAt == ts("2024-01-03 09:00:00"))
+    assert(h.embedding.sameElements(graft.functions.HashEmbedder.embed("migrate expand contract")))
+    assert(h.metadata.isEmpty)
+    val ap = alma.store.antiPatterns(Some("proj1"), Seq("victor")).collect()
+    assert(ap.length == 1, ap.map(_.id).toSeq)
+    val a = ap.head
+    assert(a.id == s"ap-proj1-victor-${Alma.idHash("data loss")}")
+    assert(a.pattern == "drop and recreate 4" && a.whyBad == "data loss")
+    assert(a.betterAlternative == "avoid: drop and recreate 4" && a.occurrenceCount == 2L)
+    assert(a.lastSeen == at && a.createdAt == at)
+    assert(a.embedding.sameElements(graft.functions.HashEmbedder.embed("data loss")))
+    assert(a.metadata.isEmpty)
+  }
+
+  test("learn runs no typed object stage, in a pinned number of Spark jobs") {
+    val alma = freshAlma()
+    (1 to 3).foreach { i =>
+      alma.learn("helena", "deploy", s"deploy v$i", success = true,
+        strategyUsed = "canary rollout", asOf = ts(s"2024-01-0$i 10:00:00"))
+    }
+    alma.learn("helena", "deploy", "deploy v4", success = false,
+      strategyUsed = "big bang", asOf = ts("2024-01-04 10:00:00"),
+      errorMessage = Some("health check failed"))
+    assert(alma.store.heuristics(Some("proj1")).count() == 1L)
+    // A failed learn runs both promotions; its plans must all be untyped.
+    val runs = captureExecutions {
+      alma.learn("helena", "deploy", "deploy v5", success = false,
+        strategyUsed = "big bang", asOf = ts("2024-01-05 10:00:00"),
+        errorMessage = Some("health check failed"))
+    }
+    assert(alma.store.antiPatterns(Some("proj1")).count() == 1L)
+    assert(runs.nonEmpty)
+    val names = runs.flatMap { case (_, qe) => planNodes(qe.executedPlan) }.map(_.nodeName).toSet
+    val typed = names & Set("DeserializeToObject", "MapElements", "SerializeFromObject")
+    assert(typed.isEmpty, s"typed stages in the learn plans: $typed")
+
+    // Job count of a successful learn on a store that holds a heuristic:
+    // the write guard's probe, the outcome append, the gate's check
+    // (which materializes the promotion input) and the broadcast of the
+    // current ids it probes, and the merge's snapshot write and the
+    // broadcast of the rows it merges. With AQE off one action is one
+    // job (plus its broadcasts), so the count does not depend on AQE's
+    // stage split.
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      alma.learn("helena", "deploy", "deploy v6", success = true,
+        strategyUsed = "canary rollout", asOf = ts("2024-01-06 10:00:00"))
+      var last = -1
+      var stable = 0
+      while (stable < 3) {
+        Thread.sleep(100)
+        val c = jobs.get()
+        if (c == last) stable += 1 else { stable = 0; last = c }
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
+    assert(jobs.get() == LearnJobs, s"a learn launched ${jobs.get()} jobs, expected $LearnJobs")
+    assert(alma.store.heuristics(Some("proj1")).collect().head.occurrenceCount == 4L)
+  }
+
+  test("forget's count prunes projectId partitions and compiles once across asOf values") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val alma = freshAlma()
+    alma.learn("helena", "t", "fresh task", success = true, strategyUsed = "s",
+      asOf = ts("2024-05-01 00:00:00"))
+    // Nothing is stale at either asOf: both forgets only count.
+    val runs = captureExecutions(assert(alma.forget(asOf = ts("2024-05-02 00:00:00")) == 0L))
+    val counts = runs.collect { case ("count", qe) => qe }
+    assert(counts.nonEmpty, s"no count plan among ${runs.map(_._1)}")
+    counts.foreach { qe =>
+      val scans = planNodes(qe.executedPlan).collect { case s: FileSourceScanExec => s }
+      assert(scans.nonEmpty, qe.executedPlan.toString)
+      scans.foreach { s =>
+        assert(s.partitionFilters.flatMap(_.references).exists(_.name == "projectId"),
+          s"count scan does not prune projectId: ${s.partitionFilters}")
+      }
+    }
+    val again = compiled(assert(alma.forget(asOf = ts("2024-05-03 12:34:56")) == 0L))
+    assert(again == 0, s"a forget with a new asOf compiled $again classes")
+    assert(alma.store.outcomes(Some("proj1")).count() == 1L)
+  }
+
+  /** Spark jobs of one successful learn with AQE off (see the spec). */
+  private val LearnJobs = 6
 }
