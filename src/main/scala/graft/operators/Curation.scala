@@ -546,37 +546,24 @@ object Curation {
     val batchSized =
       knownBatchSigRows.getOrElse(batchSigs.count()) <= maxBroadcastSigRows
     def hinted(df: DataFrame): DataFrame = if (batchSized) broadcast(df) else df
-    // band-ordered signature vector per doc: a ≤ nBands-row-per-doc
-    // aggregate over the (already materialized) sig frame — doc-sized,
-    // not pair-sized.
-    def vecs(df: DataFrame): DataFrame = df.groupBy("doc_id")
-      .agg(transform(array_sort(collect_list(struct(col("band"), col("sig")))),
-        x => x.getField("sig")).as("sv"))
-    val probe = vecs(indexSigs)
+    import TextAnalysisShared.{firstMatchBand, matchedBands, sigVectors}
+    val probe = sigVectors(indexSigs)
       .select(col("doc_id").as("doc_other"), col("sv").as("svo"),
         lit(false).as("is_batch"))
-      .unionByName(vecs(batchSigs)
+      .unionByName(sigVectors(batchSigs)
         .select(col("doc_id").as("doc_other"), col("sv").as("svo"),
           lit(true).as("is_batch")))
       .select(col("doc_other"), col("svo"), col("is_batch"),
         posexplode(col("svo")).as(Seq("band", "sig")))
-    val build = vecs(batchSigs)
+    val build = sigVectors(batchSigs)
       .select(col("doc_id").as("doc_new"), col("sv").as("svn"),
         posexplode(col("sv")).as(Seq("band", "sig")))
-    def eq(i: Int): Column =
-      element_at(col("svn"), i + 1) === element_at(col("svo"), i + 1)
-    // position of the pair's first colliding band; the join guarantees
-    // at least one, so the last otherwise is never a misattribution
-    val firstMatch = (0 until nBands - 1).foldRight(
-      lit(nBands - 1): Column)((i, rest) => when(eq(i), lit(i)).otherwise(rest))
-    val bandsMatched = (0 until nBands)
-      .map(i => eq(i).cast("long")).reduce(_ + _)
     probe.join(hinted(build), Seq("band", "sig"))
       .filter(!col("is_batch") || col("doc_other") < col("doc_new"))
-      .filter(col("band") === firstMatch)
+      .filter(col("band") === firstMatchBand(col("svn"), col("svo"), nBands))
       .select(col("doc_new"), col("doc_other"),
         when(col("is_batch"), lit("batch")).otherwise(lit("index")).as("origin"),
-        bandsMatched.as("bands_matched"))
+        matchedBands(col("svn"), col("svo"), nBands).as("bands_matched"))
   }
 
   private def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
@@ -586,7 +573,7 @@ object Curation {
     // the joins then re-read 4 small rows per doc instead of replaying
     // the text scan + md5 kernel per consumer (session-memoized:
     // [[TextAnalysisShared.cachedDocSigs]]).
-    val sigs = TextAnalysisShared.cachedDocSigs(s, dir)
+    val sigs = TextAnalysisShared.cachedDocSigs(s, dir).frame
     // The candidate OUTPUT is one row per (batch doc, bucket partner) —
     // quadratic in duplicate-family size like every LSH pair contract
     // (measured: the join, not the sig build, was 50 of the 57 s at

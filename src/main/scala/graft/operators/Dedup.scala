@@ -33,37 +33,6 @@ object Dedup {
     """SELECT md5(text) AS fp, count(*)::BIGINT AS cnt, min(doc_id) AS first_doc
       |FROM documents GROUP BY 1 ORDER BY fp""".stripMargin
 
-  /** Candidate-pair volume of the (band, sig) bucket self-join —
-    * Σ_bucket c·(c−1)/2 — the number [[PairGuard]] prices before any
-    * LSH pair contract may run exact. One group-count + one sum over an
-    * already-materialized signature frame; runs as a driver-blocking
-    * job labeled `pair_guard_census` in the metrics sink.
-    */
-  private def lshPairCensus(sigs: DataFrame): Long =
-    sigs.groupBy("band", "sig").count()
-      .agg(coalesce(sum(expr("count * (count - 1) DIV 2")), lit(0L)))
-      .head().getLong(0)
-
-  /** Per-(session, dir) memo of [[lshPairCensus]] over the memoized
-    * raw-table signature frame. Three queries (q_dedup_minhash_lsh,
-    * q_contrastive_pairs, q_hard_negatives) price the IDENTICAL
-    * bucket census before their pair stage, and each re-ran the
-    * aggregate per invocation; the value is a pure function of the
-    * table state the fingerprint keys on, so within a session the
-    * first guard pays the job and the rest read a Long. Same
-    * discipline as the sig cache ([[graft.internal.SessionMemo]]);
-    * `spark.graft.pair.censusCache=false` opts out (every guard then
-    * re-prices, as before).
-    */
-  private val pairCensusCache =
-    new graft.internal.SessionMemo[java.lang.Long](
-      "spark.graft.pair.censusCache", "pair_guard_census")
-
-  private def cachedLshPairCensus(s: SparkSession, dir: String,
-      sigs: DataFrame): Long =
-    pairCensusCache.getOrBuild(s, s"$dir/documents.parquet")(
-      java.lang.Long.valueOf(lshPairCensus(sigs))).longValue()
-
   /** MinHash-LSH candidate pairs: 4 bands, signature = min md5 over
     * salted 3-token shingles. Docs collide only within a (band, sig)
     * bucket, so the self-join is bucket-local — the scale-safe shape of
@@ -87,29 +56,18 @@ object Dedup {
     // The round-10 shape recomputed the chain for the census and again
     // for the exact join — doubling the floor precisely in the common
     // small-corpus case the cap waves through (measured: sf0.1 best-of
-    // 0.86 → 1.44 s). Session-memoized: five queries sign the same raw
-    // table ([[TextAnalysisShared.cachedDocSigs]]).
+    // 0.86 → 1.44 s). Session-memoized: the LSH pair and cluster
+    // queries share one signature state per table
+    // ([[TextAnalysisShared.cachedDocSigs]]), census included.
     val sigs = TextAnalysisShared.cachedDocSigs(s, dir)
-    val exact = PairGuard.allowExact(s, "q_dedup_minhash_lsh")(
-      cachedLshPairCensus(s, dir, sigs))
-    val src = if (exact) sigs else sigs.join(familyReps(sigs), Seq("doc_id"))
-    // First-match emission ([[TextAnalysisShared.firstMatchBand]]):
-    // both join sides carry the doc's signature vector, bands_matched
-    // is computed inline, and each pair exists once — the pair-keyed
-    // aggregation (all-unique keys: no combine, all spill) is gone;
-    // the only pair-sized exchange left is the output sort.
-    val vecs = TextAnalysisShared.sigVectors(src)
-    val a = vecs.select(col("doc_id").as("doc_a"), col("sv").as("sva"),
-      posexplode(col("sv")).as(Seq("band", "sig")))
-    val b = vecs.select(col("doc_id").as("doc_b"), col("sv").as("svb"),
-      posexplode(col("sv")).as(Seq("band", "sig")))
-    a.join(b, Seq("band", "sig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .filter(col("band") ===
-        TextAnalysisShared.firstMatchBand(col("sva"), col("svb"), 4))
-      .select(col("doc_a"), col("doc_b"),
-        TextAnalysisShared.matchedBands(col("sva"), col("svb"), 4)
-          .as("bands_matched"))
+    val exact = PairGuard.allowExact(s, "q_dedup_minhash_lsh")(sigs.census)
+    val src = if (exact) sigs.frame
+      else sigs.frame.join(familyReps(sigs.frame, MinhashFamilyCap, mhfRankKey), Seq("doc_id"))
+    // First-match emission ([[TextAnalysisShared.firstMatchPairs]]): one
+    // row per pair with bands_matched inline — the pair-keyed
+    // aggregation (all-unique keys: no combine, all spill) is gone; the
+    // only pair-sized exchange left is the output sort.
+    TextAnalysisShared.firstMatchPairs(TextAnalysisShared.sigVectors(src), 4)
       .orderBy("doc_a", "doc_b")
   }
 
@@ -153,20 +111,43 @@ object Dedup {
       |FROM t a JOIN t b ON b.doc_id = a.doc_id + 1
       |ORDER BY doc_a""".stripMargin
 
+  /** Within-block cosine pairs ≥ 0.3, the one pair join behind both
+    * embedding near-dup legs: `blocks` are the equi-join block columns
+    * of `e`, and the first one is the output's block column.
+    *
+    * Block domains are small (~10 labels, or 256 sign buckets), so
+    * joining on the blocks alone hashes the corpus onto few shuffle
+    * keys, and a hot block's quadratic scan serializes into ONE task.
+    * Salt the `a` side by hash(vec_a) and replicate `b` once per salt:
+    * every (a, b) pair still meets in exactly one (block, salt)
+    * partition — identical pair set at any salt count ([[Salting]],
+    * shared with Selection.semanticDedup; the count tracks session
+    * parallelism). Norms are per-ROW work before the join, so the
+    * per-pair cosine is one dot + a divide, bit-identical by the
+    * [[VectorFunctions.cosinePrenorm]] parity contract — the pair
+    * stream is where all the flops live.
+    */
+  private def saltedCosinePairs(s: SparkSession, e: DataFrame,
+      blocks: Seq[String]): DataFrame = {
+    val e2 = e.withColumn("nrm", VectorFunctions.rowNorm(col("embedding")))
+    val salts = Salting.pairSalts(s)
+    def side(id: String, v: String, n: String) = e2.select(
+      blocks.map(col) ++ Seq(col("vec_id").as(id), col("embedding").as(v), col("nrm").as(n)): _*)
+    val a = side("vec_a", "va", "na").withColumn("salt", pmod(hash(col("vec_a")), lit(salts)))
+    val b = side("vec_b", "vb", "nb").withColumn("salt", explode(sequence(lit(0), lit(salts - 1))))
+    a.join(b, blocks :+ "salt")
+      .filter(col("vec_a") < col("vec_b"))
+      .withColumn("sim", round(VectorFunctions.cosinePrenorm(
+        VectorFunctions.dotD(col("va"), col("vb")), col("na"), col("nb")), 4))
+      .filter(col("sim") >= 0.3)
+      .select(blocks.head, "vec_a", "vec_b", "sim")
+      .orderBy("vec_a", "vec_b")
+  }
+
   // Embedding-cosine near-dup inside a coarse block (label): the
   // blocked similarity self-join. Block-local pairs only.
   private def dedupEmbedding(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
-    // The label domain is ~10 values, so joining on label alone hashes
-    // the whole corpus onto ~10 shuffle keys and each label's quadratic
-    // pair scan serializes into one task. Salt the `a` side by
-    // hash(vec_a) and replicate `b` once per salt: every (a, b) pair
-    // still meets in exactly one (label, salt) partition — identical
-    // pair set, label-count × salts tasks. (Shared [[Salting]] pattern
-    // with Selection.semanticDedup; the count tracks session
-    // parallelism so a small session doesn't pay 16× replication it
-    // can't use.)
-    //
     // The OUTPUT contract is every within-label pair ≥ 0.3 — quadratic
     // in label population by definition, so [[PairGuard]] estimates
     // Σ_label count² first; past the cap it sub-blocks each label by
@@ -178,28 +159,9 @@ object Dedup {
         .agg(coalesce(sum(col("count") * col("count")), lit(0L)))
         .head().getLong(0)
     }
-    // Norms are per-ROW (linear) work computed before the pair join;
-    // the per-pair cosine is then one dot + a divide instead of the
-    // fused 3-accumulator loop — bit-identical by the
-    // [[VectorFunctions.cosinePrenorm]] parity contract, and the pair
-    // stream is where all the flops live (Σ_blk n² pairs × dim).
-    val e2 = e.withColumn("blk",
-      if (exact) lit(0L) else VectorFunctions.signBucket(col("embedding"), 8))
-      .withColumn("nrm", VectorFunctions.rowNorm(col("embedding")))
-    val salts = Salting.pairSalts(s)
-    val a = e2.select(col("label"), col("blk"), col("vec_id").as("vec_a"),
-        col("embedding").as("va"), col("nrm").as("na"))
-      .withColumn("salt", pmod(hash(col("vec_a")), lit(salts)))
-    val b = e2.select(col("label"), col("blk"), col("vec_id").as("vec_b"),
-        col("embedding").as("vb"), col("nrm").as("nb"))
-      .withColumn("salt", explode(sequence(lit(0), lit(salts - 1))))
-    a.join(b, Seq("label", "blk", "salt"))
-      .filter(col("vec_a") < col("vec_b"))
-      .withColumn("sim", round(VectorFunctions.cosinePrenorm(
-        VectorFunctions.dotD(col("va"), col("vb")), col("na"), col("nb")), 4))
-      .filter(col("sim") >= 0.3)
-      .select("label", "vec_a", "vec_b", "sim")
-      .orderBy("vec_a", "vec_b")
+    saltedCosinePairs(s, e.withColumn("blk",
+      if (exact) lit(0L) else VectorFunctions.signBucket(col("embedding"), 8)),
+      Seq("label", "blk"))
   }
 
   private val dedupEmbeddingSql =
@@ -212,35 +174,13 @@ object Dedup {
 
   // Embedding near-dup WITHOUT labels: self-derived sign-bucket LSH
   // (8 hyperplane-sign bits) blocks the corpus, pairs form only inside
-  // a bucket — the fully unsupervised scale path for vector dedup.
-  private def dedupEmbeddingLsh(s: SparkSession, dir: String): DataFrame = {
-    // Per-row norms before the bucket self-join; the per-pair work is
-    // one dot + divide (see [[VectorFunctions.cosinePrenorm]] — the
-    // within-bucket pair volume is the query's whole cost). The join
-    // key is salted like the labeled leg's: 8 sign bits = 256 join
-    // keys, so unsalted the plan caps at 256 tasks and a hot bucket (a
-    // popular vector's copies all share one bucket by construction)
-    // serializes its quadratic scan into ONE task; with the shared
-    // [[Salting]] pattern every (a, b) pair still meets in exactly one
-    // (bucket, salt) partition — identical pair set at any salt count.
-    val e = Tables.embeddings(s, dir)
-      .withColumn("bucket", VectorFunctions.signBucket(col("embedding"), 8))
-      .withColumn("nrm", VectorFunctions.rowNorm(col("embedding")))
-    val salts = Salting.pairSalts(s)
-    val a = e.select(col("bucket"), col("vec_id").as("vec_a"),
-      col("embedding").as("va"), col("nrm").as("na"))
-      .withColumn("salt", pmod(hash(col("vec_a")), lit(salts)))
-    val b = e.select(col("bucket"), col("vec_id").as("vec_b"),
-      col("embedding").as("vb"), col("nrm").as("nb"))
-      .withColumn("salt", explode(sequence(lit(0), lit(salts - 1))))
-    a.join(b, Seq("bucket", "salt"))
-      .filter(col("vec_a") < col("vec_b"))
-      .withColumn("sim", round(VectorFunctions.cosinePrenorm(
-        VectorFunctions.dotD(col("va"), col("vb")), col("na"), col("nb")), 4))
-      .filter(col("sim") >= 0.3)
-      .select("bucket", "vec_a", "vec_b", "sim")
-      .orderBy("vec_a", "vec_b")
-  }
+  // a bucket — the fully unsupervised scale path for vector dedup. A
+  // popular vector's copies all share one bucket by construction, so
+  // the salted join matters most here.
+  private def dedupEmbeddingLsh(s: SparkSession, dir: String): DataFrame =
+    saltedCosinePairs(s, Tables.embeddings(s, dir)
+      .withColumn("bucket", VectorFunctions.signBucket(col("embedding"), 8)),
+      Seq("bucket"))
 
   private val dedupEmbeddingLshSql = {
     val bucketExpr = TextAnalysisShared.bucketExprSql(8)
@@ -297,11 +237,11 @@ object Dedup {
       graft.functions.expressions.SpanHashesExpr(
         ColumnBridge.expression(col("text")), 3, distinct = true))
     Tables.spread(docs)
-      .select(col("doc_id"), sigsCol.as("sigs"), shCol.as("sh"))
-      .filter(col("sigs").isNotNull)
+      .select(col("doc_id"), sigsCol.as("sv"), shCol.as("sh"))
+      .filter(col("sv").isNotNull)
   }
 
-  /** Per-(session, dir) memo of the CHECKPOINTED per-doc (sigs, sh)
+  /** Per-(session, dir) memo of the CHECKPOINTED per-doc (sv, sh)
     * frame over the raw table — both calibration legs
     * (q_minhash_estimate, q_minhash_estimate_sampled) consume it, and
     * each used to replay the text-scan + two-kernel projection per
@@ -316,12 +256,10 @@ object Dedup {
     sigSetCache.getOrBuild(s, s"$dir/documents.parquet")(
       sigSetPerDoc(Tables.documents(s, dir)).localCheckpoint(true))
 
-  /** (doc_id, sh, band, sig) rows off a [[sigSetPerDoc]] frame. */
+  /** (doc_id, band, sig) rows off a [[sigSetPerDoc]] frame. */
   private def explodeSigSet(perDoc: DataFrame): DataFrame =
-    perDoc
-      .select(col("doc_id"), col("sh"), posexplode(col("sigs")))
-      .select(col("doc_id"), col("sh"),
-        col("pos").cast("long").as("band"), col("col").as("sig"))
+    perDoc.select(col("doc_id"), posexplode(col("sv")))
+      .select(col("doc_id"), col("pos").cast("long").as("band"), col("col").as("sig"))
 
   /** Shared estimate-vs-true audit body: bucket-local pair formation
     * with TRUE Jaccard computed AT THE JOIN, where both docs' sets are
@@ -333,11 +271,12 @@ object Dedup {
     * exhaustion ("no space left on device"). Here the set arrays ride
     * only the per-doc join sides (linear in the corpus), and the pair
     * is emitted ONCE, from its first matching band
-    * ([[TextAnalysisShared.firstMatchBand]]): bands_matched and the
-    * Jaccard are computed inline on that single row, so the old
+    * ([[TextAnalysisShared.firstMatchPairs]], `sh` riding both sides):
+    * bands_matched and the Jaccard are computed inline on that single
+    * row, so the old
     * pair-keyed groupBy — a hash aggregate over ~all-unique pair keys,
     * pure spill — no longer exists and nothing pair-sized reaches an
-    * exchange but the output sort. `perDoc` is the (doc_id, sigs, sh)
+    * exchange but the output sort. `perDoc` is the (doc_id, sv, sh)
     * frame ([[sigSetPerDoc]]).
     * True Jaccard is over the distinct 60-bit shingle-hash sets (the
     * dedup family's identity notion, same as q_span_dedup's spans) —
@@ -345,41 +284,42 @@ object Dedup {
     * collide in 60 bits (p ≈ 10⁻¹⁴); the oracle defines it the same
     * way, so the contract is identical by construction.
     */
-  private def calibratePairs(perDoc: DataFrame): DataFrame = {
-    val a = perDoc.select(col("doc_id").as("doc_a"), col("sigs").as("sva"),
-      col("sh").as("sa"), posexplode(col("sigs")).as(Seq("band", "sig")))
-    val b = perDoc.select(col("doc_id").as("doc_b"), col("sigs").as("svb"),
-      col("sh").as("sb"), posexplode(col("sigs")).as(Seq("band", "sig")))
-    a.join(b, Seq("band", "sig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .filter(col("band") ===
-        TextAnalysisShared.firstMatchBand(col("sva"), col("svb"), 4))
-      .select(col("doc_a"), col("doc_b"),
-        TextAnalysisShared.matchedBands(col("sva"), col("svb"), 4)
-          .as("bands_matched"),
-        round(TextAnalysisShared.jaccardSets(col("sa"), col("sb")), 6)
-          .as("true_jaccard"))
+  private def calibratePairs(perDoc: DataFrame): DataFrame =
+    TextAnalysisShared.firstMatchPairs(perDoc, 4, carry = Seq("sh"), perPair = Seq(
+        round(TextAnalysisShared.jaccardSets(col("sh_a"), col("sh_b")), 6).as("true_jaccard")))
       .select(col("doc_a"), col("doc_b"), col("bands_matched"),
         round(col("bands_matched") / 4.0, 6).as("est_jaccard"), col("true_jaccard"))
       .withColumn("abs_err", round(abs(col("est_jaccard") - col("true_jaccard")), 6))
       .orderBy("doc_a", "doc_b")
-  }
 
-  /** Hash-ranked representatives (≤ [[MinhashFamilyCap]] per complete-
-    * signature family) — the sampled leg's selection, shared with the
-    * guard-routed full leg. `sigs` is the (doc_id, band, sig) frame.
+  /** Per-doc complete-signature family key: the doc's sorted
+    * `band:sig` list. `sigs` is a (doc_id, band, sig) frame.
     */
-  private[operators] def familyReps(sigs: DataFrame): DataFrame = {
-    val fam = sigs.groupBy("doc_id")
-      .agg(concat_ws("_", array_sort(collect_list(
-        concat(col("band"), lit(":"), col("sig"))))).as("fam"))
-    fam.withColumn("rn", row_number().over(
-        Window.partitionBy("fam").orderBy(
-          md5(concat(lit("mhf"), col("doc_id").cast("string")).cast("binary")),
-          col("doc_id"))))
-      .filter(col("rn") <= MinhashFamilyCap)
+  private def familyKeys(sigs: DataFrame): DataFrame = sigs.groupBy("doc_id")
+    .agg(concat_ws("_", array_sort(collect_list(
+      concat(col("band"), lit(":"), col("sig"))))).as("fam"))
+
+  /** The calibration legs' representative rank key — `md5('mhf' || id)`
+    * in the oracles.
+    */
+  private def mhfRankKey(id: Column): Column =
+    md5(concat(lit("mhf"), id.cast("string")).cast("binary"))
+
+  /** The one representative rule of the family-capped LSH legs: keep
+    * the top `cap` members of each complete-signature family by
+    * (`rankKey(doc_id)`, doc_id). The calibration legs and the routed
+    * q_dedup_minhash_lsh rank by [[mhfRankKey]] with cap
+    * [[MinhashFamilyCap]]; the training-pair queries rank by
+    * [[posRankKey]] with cap [[CtrFamilyCap]], because their
+    * preservation argument needs the positive window's own key.
+    */
+  private[operators] def familyReps(sigs: DataFrame, cap: Int,
+      rankKey: Column => Column): DataFrame =
+    familyKeys(sigs)
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("fam").orderBy(rankKey(col("doc_id")), col("doc_id"))))
+      .filter(col("rn") <= cap)
       .select("doc_id")
-  }
 
   /** Side-stratified representative selection for contracts whose
     * detection promise is PER SIDE of a partition of the corpus (the
@@ -397,15 +337,11 @@ object Dedup {
     * complete-signature family, like [[familyReps]].
     */
   private[operators] def familyRepsStratified(sigs: DataFrame, side: Column): DataFrame = {
-    val fam = sigs.groupBy("doc_id")
-      .agg(concat_ws("_", array_sort(collect_list(
-        concat(col("band"), lit(":"), col("sig"))))).as("fam"))
-      .withColumn("s", side.cast("int"))
-    val bySide = Window.partitionBy("fam", "s").orderBy(
-      md5(concat(lit("mhf"), col("doc_id").cast("string")).cast("binary")),
-      col("doc_id"))
+    val bySide = Window.partitionBy("fam", "s")
+      .orderBy(mhfRankKey(col("doc_id")), col("doc_id"))
     val byFam = Window.partitionBy("fam")
-    fam.withColumn("rn", row_number().over(bySide))
+    familyKeys(sigs).withColumn("s", side.cast("int"))
+      .withColumn("rn", row_number().over(bySide))
       .withColumn("one_sided", min(col("s")).over(byFam) === max(col("s")).over(byFam))
       .filter(col("rn") === 1 || (col("rn") === 2 && col("one_sided")))
       .select("doc_id")
@@ -425,14 +361,12 @@ object Dedup {
     // checkpoint (see [[sigSetPerDoc]]; session-memoized with the
     // sampled leg).
     val perDoc = cachedSigSetPerDoc(s, dir)
-    val sigSets = explodeSigSet(perDoc)
+    val sigs = explodeSigSet(perDoc)
     val exact = PairGuard.allowExact(s, "q_minhash_estimate")(
-      lshPairCensus(sigSets.select("doc_id", "band", "sig")))
+      TextAnalysisShared.lshPairCensus(sigs))
     if (exact) calibratePairs(perDoc)
-    else {
-      val reps = familyReps(sigSets.select("doc_id", "band", "sig"))
-      calibratePairs(perDoc.join(reps, Seq("doc_id")))
-    }
+    else calibratePairs(
+      perDoc.join(familyReps(sigs, MinhashFamilyCap, mhfRankKey), Seq("doc_id")))
   }
 
   // Sampled calibration. The full audit is the suite's heaviest decade
@@ -466,8 +400,9 @@ object Dedup {
     // kernel chain to rebuild the reps' shingle sets). Session-memoized
     // with the full leg.
     val perDoc = cachedSigSetPerDoc(s, dir)
-    val sigs = explodeSigSet(perDoc).select("doc_id", "band", "sig")
-    calibratePairs(perDoc.join(familyReps(sigs), Seq("doc_id")))
+    val sigs = explodeSigSet(perDoc)
+    calibratePairs(
+      perDoc.join(familyReps(sigs, MinhashFamilyCap, mhfRankKey), Seq("doc_id")))
   }
 
   /** Calibration oracle, parameterized by the CTE that defines the
@@ -536,7 +471,7 @@ object Dedup {
   // two bounded aggregates.
   private def dedupClusterHist(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val labeled = Lifecycle.cachedCcLabels(s, dir)
+    val labeled = TextAnalysisShared.cachedDocSigs(s, dir).ccLabels
     val sizes = docs.select(col("doc_id"))
       .join(labeled, col("doc_id") === col("node"), "left")
       .select(coalesce(col("comp"), col("doc_id")).as("comp"))
@@ -687,55 +622,13 @@ object Dedup {
     * routed output = exact output restricted to surviving anchors,
     * row-for-row (`PairGuardSpec` pins it).
     */
-  /** Per-(session, dir) memo of the CHECKPOINTED capped anchor-pair
-    * frame — q_contrastive_pairs and q_hard_negatives derive their
-    * positives from the IDENTICAL `pos` chain (same census, same pair
-    * join, same per-anchor window; the query name only labels the
-    * guard), and each paid the full formation + checkpoint per
-    * invocation. The frame is bounded (≤ [[CtrPosPerAnchor]] rows per
-    * anchor, two id columns). The guard decision (exact vs routed) is
-    * conf-dependent, so it is stored WITH the frame and a hit whose
-    * decision no longer matches the session's current guard verdict is
-    * rebuilt un-memoized — a mid-session mode/cap flip can never be
-    * served a stale shape. `spark.graft.pair.anchorCache=false` opts
-    * out (both queries then rebuild per invocation, as before).
-    */
-  private val anchorPairsCache =
-    new graft.internal.SessionMemo[(java.lang.Boolean, DataFrame)](
-      "spark.graft.pair.anchorCache", "anchor_pairs_build")
-
-  private def cachedAnchorPairs(s: SparkSession, dir: String,
-      query: String): DataFrame = {
-    val sigs = TextAnalysisShared.cachedDocSigs(s, dir)
-    val exact = PairGuard.allowExact(s, query)(cachedLshPairCensus(s, dir, sigs))
-    if (!s.conf.get("spark.graft.pair.anchorCache", "true").toBoolean)
-      return cappedAnchorPairs(sigs, exact).localCheckpoint(true)
-    val (cachedExact, df) = anchorPairsCache.getOrBuild(s, s"$dir/documents.parquet")(
-      (java.lang.Boolean.valueOf(exact),
-        cappedAnchorPairs(sigs, exact).localCheckpoint(true)))
-    if (cachedExact.booleanValue() == exact) df
-    else cappedAnchorPairs(sigs, exact).localCheckpoint(true)
-  }
-
-  private def cappedAnchorPairs(sigs: DataFrame, exact: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val src = if (exact) sigs else sigs.join(pairFamilyReps(sigs), Seq("doc_id"))
-    // First-match emission ([[TextAnalysisShared.firstMatchBand]]): one
-    // row per colliding pair with its matched-band count inline — no
-    // pair-keyed aggregation (the countDistinct form hashed ~all-unique
-    // pair keys: no combine, all spill).
-    val vecs = TextAnalysisShared.sigVectors(src)
-    val pairs = vecs.select(col("doc_id").as("doc_a"), col("sv").as("sva"),
-        posexplode(col("sv")).as(Seq("band", "sig")))
-      .join(vecs.select(col("doc_id").as("doc_b"), col("sv").as("svb"),
-        posexplode(col("sv")).as(Seq("band", "sig"))),
-        Seq("band", "sig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .filter(col("band") ===
-        TextAnalysisShared.firstMatchBand(col("sva"), col("svb"), 4))
-      .select(col("doc_a"), col("doc_b"),
-        TextAnalysisShared.matchedBands(col("sva"), col("svb"), 4).as("bands"))
-      .filter(col("bands") >= 2)
+  private[operators] def cappedAnchorPairs(sigs: DataFrame, exact: Boolean): DataFrame = {
+    // Routed formation ranks family members by the positive window's
+    // own key — any other key collapses the preservation argument.
+    val src = if (exact) sigs
+      else sigs.join(familyReps(sigs, CtrFamilyCap, posRankKey), Seq("doc_id"))
+    val pairs = TextAnalysisShared.firstMatchPairs(TextAnalysisShared.sigVectors(src), 4)
+      .filter(col("bands_matched") >= 2)
     pairs.select(col("doc_a").as("anchor"), col("doc_b").as("positive"))
       .union(pairs.select(col("doc_b").as("anchor"), col("doc_a").as("positive")))
       .withColumn("prn", row_number().over(Window.partitionBy("anchor")
@@ -744,20 +637,17 @@ object Dedup {
       .select("anchor", "positive")
   }
 
-  /** Top-[[CtrFamilyCap]] members of each complete-signature family by
-    * ([[posRankKey]], doc_id) — the routed-mode formation set for the
-    * training-pair queries. Same family key as [[familyReps]], but the
-    * rank key MUST match the positive window's or the preservation
-    * argument above collapses.
+  /** The session's checkpointed capped anchor-pair frame for the
+    * current guard verdict. q_contrastive_pairs and q_hard_negatives
+    * derive their positives from the IDENTICAL `pos` chain (same
+    * census, same pair join, same per-anchor window; the query name
+    * only labels the guard), so it lives in the table's signature
+    * state ([[TextAnalysisShared.DocSigs]]) and is built once per
+    * verdict.
     */
-  private def pairFamilyReps(sigs: DataFrame): DataFrame = {
-    val fam = sigs.groupBy("doc_id")
-      .agg(concat_ws("_", array_sort(collect_list(
-        concat(col("band"), lit(":"), col("sig"))))).as("fam"))
-    fam.withColumn("rn", row_number().over(
-        Window.partitionBy("fam").orderBy(posRankKey(col("doc_id")), col("doc_id"))))
-      .filter(col("rn") <= CtrFamilyCap)
-      .select("doc_id")
+  private def anchorPairs(s: SparkSession, dir: String, query: String): DataFrame = {
+    val sigs = TextAnalysisShared.cachedDocSigs(s, dir)
+    sigs.anchorPairs(PairGuard.allowExact(s, query)(sigs.census))
   }
 
   /** The capped-pair CTE chain (through `pos`), shared by both pair
@@ -798,8 +688,8 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(s, dir)
     // Already checkpointed (read 2x here: cand + anti) and
-    // session-shared with q_hard_negatives via [[anchorPairsCache]].
-    val pos = cachedAnchorPairs(s, dir, "q_contrastive_pairs")
+    // session-shared with q_hard_negatives ([[anchorPairs]]).
+    val pos = anchorPairs(s, dir, "q_contrastive_pairs")
     val nd = docs.agg(count(lit(1)).as("n"))
     val cand = pos
       .select(col("anchor"), col("positive"),
@@ -858,8 +748,8 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(s, dir)
     // Already checkpointed (read 2x here: cand + anti) and
-    // session-shared with q_contrastive_pairs via [[anchorPairsCache]].
-    val pos = cachedAnchorPairs(s, dir, "q_hard_negatives")
+    // session-shared with q_contrastive_pairs ([[anchorPairs]]).
+    val pos = anchorPairs(s, dir, "q_hard_negatives")
     val buckets = Tables.embeddings(s, dir)
       .select(col("vec_id"),
         graft.functions.VectorFunctions.signBucket(col("embedding"), 8).as("bucket"))
@@ -1024,6 +914,38 @@ private[graft] object TextAnalysisShared {
     .agg(transform(array_sort(collect_list(struct(col("band"), col("sig")))),
       x => x.getField("sig")).as("sv"))
 
+  /** The one first-match LSH pair join: `vecs` holds one row per doc
+    * with its band-ordered signature vector `sv` ([[sigVectors]]).
+    * Each `carry` column rides both join sides as `<c>_a` / `<c>_b`,
+    * and the `perPair` columns over them are computed AT the join,
+    * where both docs' values are co-located (the calibration's true
+    * Jaccard) — per-doc arrays never reach a pair-sized exchange.
+    * Emits (doc_a, doc_b, bands_matched, perPair…), one row per
+    * colliding pair with doc_a < doc_b.
+    */
+  def firstMatchPairs(vecs: DataFrame, nBands: Int, carry: Seq[String] = Nil,
+      perPair: Seq[Column] = Nil): DataFrame = {
+    def side(x: String) = vecs.select(
+      Seq(col("doc_id").as(s"doc_$x"), col("sv").as(s"sv$x")) ++
+        carry.map(c => col(c).as(s"${c}_$x")) :+
+        posexplode(col("sv")).as(Seq("band", "sig")): _*)
+    side("a").join(side("b"), Seq("band", "sig"))
+      .filter(col("doc_a") < col("doc_b"))
+      .filter(col("band") === firstMatchBand(col("sva"), col("svb"), nBands))
+      .select(Seq(col("doc_a"), col("doc_b"),
+        matchedBands(col("sva"), col("svb"), nBands).as("bands_matched")) ++ perPair: _*)
+  }
+
+  /** Candidate-pair volume of the (band, sig) bucket self-join —
+    * Σ_bucket c·(c−1)/2 — the number [[PairGuard]] prices before any
+    * LSH pair contract may run exact. One group-count + one sum over an
+    * already-materialized (doc_id, band, sig) frame.
+    */
+  def lshPairCensus(sigs: DataFrame): Long =
+    sigs.groupBy("band", "sig").count()
+      .agg(coalesce(sum(expr("count * (count - 1) DIV 2")), lit(0L)))
+      .head().getLong(0)
+
   /** Distinct whitespace tokens — the set under token-set Jaccard. */
   def tokenSet(textCol: Column): Column = array_distinct(split(textCol, " "))
 
@@ -1090,28 +1012,64 @@ private[graft] object TextAnalysisShared {
       .select(col("doc_id"), col("pos").cast("long").as("band"), col("col").as("sig"))
   }
 
-  /** Per-(session, dir) memo of the CHECKPOINTED 4-band signature
-    * frame over the raw documents table — the same discipline as
-    * `Curation.lmScored`'s score cache: seven named queries
-    * (dedup_minhash_lsh, dedup_incremental, contrastive_pairs,
-    * hard_negatives, and the three CC cluster-family queries via
-    * `Lifecycle.minhashCcLabelsFromSigs`) each rebuilt the identical
-    * text-scan + md5 kernel chain per construction; within one session
-    * the first consumer pays and the rest re-read 4 small rows per
-    * doc. Keyed on the table's file-listing fingerprint (a rewritten
-    * `documents.parquet` misses naturally — see
-    * [[graft.internal.SessionMemo]]); builds surface in op-metrics as
-    * `sig_cache_build`; `spark.graft.sig.cache=false` opts out. Only
-    * the raw-table chain is memoized — callers signing a DERIVED frame
-    * (pipeline stages, streaming batches) still call
-    * [[bandedMinhashSigs]] directly.
+  /** The signature state of one raw documents table: the CHECKPOINTED
+    * 4-band (doc_id, band, sig) `frame`, and the three values the LSH
+    * pair and cluster queries derive from it, each computed lazily,
+    * once per state. The sig memo keys the whole state on the table's
+    * fingerprint, so a derived value can never be keyed apart from —
+    * or outlive — the frame it summarizes, and a warm consumer pays
+    * one fingerprint pass for all of them.
+    *
+    *  - `census`: the bucket pair volume ([[lshPairCensus]]) shared by
+    *    the three guarded LSH pair queries; forced only by
+    *    [[PairGuard.allowExact]], which labels the job
+    *    `pair_guard_census` (mode=exact never runs it).
+    *  - `anchorPairs(exact)`: the checkpointed capped anchor-pair frame
+    *    ([[Dedup.cappedAnchorPairs]]) with ONE SLOT PER GUARD VERDICT —
+    *    a mid-session mode/cap flip builds the other slot once, and a
+    *    flip back is served the first slot again; neither verdict is
+    *    ever served the other's shape. Builds labeled
+    *    `anchor_pairs_build`.
+    *  - `ccLabels`: the MinHash-LSH connected-component labels
+    *    ([[Lifecycle.minhashCcLabelsFromSigs]], a diameter-many
+    *    sequence of driver-blocking rounds) shared by the three
+    *    cluster-family queries. Builds labeled `cc_labels_build`.
+    */
+  final class DocSigs private[TextAnalysisShared] (val frame: DataFrame) {
+    lazy val census: Long = lshPairCensus(frame)
+
+    private def built(op: String)(df: => DataFrame): DataFrame =
+      graft.observability.Metrics.withOp(frame.sparkSession, op)(df)
+    private lazy val anchorsExact =
+      built("anchor_pairs_build")(Dedup.cappedAnchorPairs(frame, exact = true).localCheckpoint(true))
+    private lazy val anchorsRouted =
+      built("anchor_pairs_build")(Dedup.cappedAnchorPairs(frame, exact = false).localCheckpoint(true))
+    def anchorPairs(exact: Boolean): DataFrame = if (exact) anchorsExact else anchorsRouted
+
+    lazy val ccLabels: DataFrame =
+      built("cc_labels_build")(Lifecycle.minhashCcLabelsFromSigs(frame))
+  }
+
+  /** Per-(session, dir) memo of the raw documents table's [[DocSigs]]:
+    * the LSH pair queries (dedup_minhash_lsh, dedup_incremental,
+    * contrastive_pairs, hard_negatives) and the three CC cluster-family
+    * queries each rebuilt the identical text-scan + md5 kernel chain
+    * per construction; within one session the first consumer pays and
+    * the rest re-read 4 small rows per doc. Keyed on the table's
+    * file-listing fingerprint (a rewritten `documents.parquet` misses
+    * naturally — see [[graft.internal.SessionMemo]]); builds surface in
+    * op-metrics as `sig_cache_build`. `spark.graft.sig.cache=false`
+    * opts out: every call gets a fresh state, so the frame AND every
+    * derived value rebuild per call. Only the raw-table chain is
+    * memoized — callers signing a DERIVED frame (pipeline stages,
+    * streaming batches) still call [[bandedMinhashSigs]] directly.
     */
   private val sigCache =
-    new graft.internal.SessionMemo[DataFrame]("spark.graft.sig.cache", "sig_cache_build")
+    new graft.internal.SessionMemo[DocSigs]("spark.graft.sig.cache", "sig_cache_build")
 
-  def cachedDocSigs(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    sigCache.getOrBuild(s, s"$dir/documents.parquet")(
-      bandedMinhashSigs(Tables.documents(s, dir), 4).localCheckpoint(true))
+  def cachedDocSigs(s: org.apache.spark.sql.SparkSession, dir: String): DocSigs =
+    sigCache.getOrBuild(s, s"$dir/documents.parquet")(new DocSigs(
+      bandedMinhashSigs(Tables.documents(s, dir), 4).localCheckpoint(true)))
 
   /** The pre-kernel explode + multi-min-groupBy formulation, kept as
     * the parity twin the spec checks the kernel against.

@@ -130,9 +130,10 @@ object Lifecycle {
     minhashCcLabelsFromSigs(TextAnalysisShared.bandedMinhashSigs(docs, 4))
 
   /** Same, over a pre-built (doc_id, band, sig) frame — the three
-    * cluster-family queries pass the session-memoized
-    * [[TextAnalysisShared.cachedDocSigs]] so the signature chain runs
-    * once per session instead of once per query.
+    * cluster-family queries read the labels of the raw table's
+    * session signature state ([[TextAnalysisShared.DocSigs]]), so the
+    * signature chain AND the label loop run once per table state
+    * instead of once per query.
     */
   private[operators] def minhashCcLabelsFromSigs(sigs: DataFrame): DataFrame = {
     val memberships = sigs
@@ -167,29 +168,9 @@ object Lifecycle {
     labels
   }
 
-  /** Per-(session, dir) memo of the CC LABELS frame over the raw
-    * table: the three cluster-family queries (consolidate_merge here,
-    * Selection's canonical pick, Dedup's cluster histogram) already
-    * shared the signature chain through the sig memo, but each still
-    * re-ran the iterative min-label-propagation LOOP — a
-    * diameter-many sequence of driver-blocking rounds, ~9-14 s each at
-    * the ×100 decade, over the identical input. The labels are a pure
-    * function of the sigs, so they follow the same memo discipline
-    * (shares the sig memo's conf — `spark.graft.sig.cache=false`
-    * disables the whole signature-derived family; builds labeled
-    * `cc_labels_build`). Callers labeling a DERIVED frame still call
-    * [[minhashCcLabelsFromSigs]] directly.
-    */
-  private val ccCache =
-    new graft.internal.SessionMemo[DataFrame]("spark.graft.sig.cache", "cc_labels_build")
-
-  private[operators] def cachedCcLabels(s: SparkSession, dir: String): DataFrame =
-    ccCache.getOrBuild(s, s"$dir/documents.parquet")(
-      minhashCcLabelsFromSigs(TextAnalysisShared.cachedDocSigs(s, dir)))
-
   private def consolidateMerge(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    cachedCcLabels(s, dir)
+    TextAnalysisShared.cachedDocSigs(s, dir).ccLabels
       .join(docs, col("node") === col("doc_id"))
       .groupBy("comp")
       .agg(count(lit(1)).as("group_size"),

@@ -38,7 +38,12 @@ import org.apache.spark.sql.SparkSession
   * honest cost. The census job is labeled `pair_guard_census` in the
   * metrics sink ([[graft.observability.Metrics.withOp]]) so an
   * op-metrics roll-up attributes guard overhead to the guard, not to
-  * the query body it protects.
+  * the query body it protects. The three LSH pair legs over the raw
+  * documents table (`q_dedup_minhash_lsh`, `q_contrastive_pairs`,
+  * `q_hard_negatives`) price the same bucket census, so it is computed
+  * once per table state, inside the session's signature state
+  * ([[TextAnalysisShared.DocSigs]]), which also keeps one anchor-pair
+  * frame per guard verdict.
   */
 object PairGuard {
 
@@ -51,14 +56,25 @@ object PairGuard {
     */
   val DefaultMaxPairs: Long = 200000000L
 
+  private val Modes = Seq("route", "exact", "fail")
+
   /** True ⇒ the caller may run its exact quadratic leg; false ⇒ route
     * to the bounded sibling. `estimate` is only forced when the mode
     * actually needs the number (mode=exact skips the job entirely).
+    * Both confs are validated on every call: an unknown mode or a
+    * cap that is not a non-negative whole number throws
+    * IllegalArgumentException naming the conf and its allowed values.
     */
   def allowExact(s: SparkSession, query: String)(estimate: => Long): Boolean = {
     val mode = s.conf.get(ModeConf, "route")
+    if (!Modes.contains(mode))
+      throw new IllegalArgumentException(
+        s"$ModeConf=$mode: expected one of ${Modes.mkString(", ")}")
+    val rawCap = s.conf.get(MaxPairsConf, DefaultMaxPairs.toString)
+    val cap = rawCap.toLongOption.filter(_ >= 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"$MaxPairsConf=$rawCap: expected a non-negative whole number of candidate pairs"))
     if (mode == "exact") return true
-    val cap = s.conf.get(MaxPairsConf, DefaultMaxPairs.toString).toLong
     val est = graft.observability.Metrics.withOp(s, "pair_guard_census")(estimate)
     if (est <= cap) true
     else if (mode == "fail") {

@@ -373,15 +373,6 @@ object Selection {
       .select(col("vec_id"), (-col("m.ncl")).as("cluster"),
         col("m.csim").as("csim"), col("m.embedding").as("embedding"))
 
-  /** Measurement toggle: `false` disables the exact-vector family
-    * collapse so the members² pair join the collapse replaces can be
-    * timed head-to-head on an exact-copy upsample (ScaleData `exact`
-    * mode). Output is oracle-identical either way — the collapse is a
-    * pure work-reduction, this conf only exists so the claim stays
-    * measurable.
-    */
-  private val FamilyCollapseConf = "spark.graft.semdedup.familyCollapse"
-
   private def semanticDedup(s: SparkSession, dir: String): DataFrame = {
     val asg = assigned(Tables.embeddings(s, dir))
     // A member is dropped when a same-cluster near-identical member
@@ -409,12 +400,8 @@ object Selection {
     // Pairs stay cluster-local and salted ([[Salting.pairSalts]]) —
     // family count is corpus-sized when nothing repeats, so the join
     // must still spread across tasks.
-    val collapse = s.conf.get(FamilyCollapseConf, "true").toBoolean
-    val fam = (if (collapse)
-        asg.groupBy("cluster", "embedding")
-          .agg(first("csim").as("csim"), min("vec_id").as("fmin"))
-      else asg.select(col("cluster"), col("embedding"), col("csim"),
-        col("vec_id").as("fmin")))
+    val fam = asg.groupBy("cluster", "embedding")
+      .agg(first("csim").as("csim"), min("vec_id").as("fmin"))
       // family-level norms, materialized with the frame — the pair scan
       // below then pays one dot + divide per candidate
       // ([[VectorFunctions.cosinePrenorm]] bit-parity contract)
@@ -450,9 +437,7 @@ object Selection {
       .agg(
         max(when(col("a_csim") < col("csim"), lit(1)).otherwise(lit(0))).as("drop_all"),
         min(when(col("a_csim") === col("csim"), col("a_fmin"))).as("thr"))
-    (if (collapse)
-        asg.join(fam.select("cluster", "embedding", "fmin"), Seq("cluster", "embedding"))
-      else asg.withColumn("fmin", col("vec_id")))
+    asg.join(fam.select("cluster", "embedding", "fmin"), Seq("cluster", "embedding"))
       .join(verdicts, Seq("cluster", "fmin"), "left")
       .select(col("vec_id"), col("cluster"), col("csim"),
         when(col("drop_all") === 1 ||
@@ -611,7 +596,7 @@ object Selection {
 
   private def dedupCanonical(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val labeled = Lifecycle.cachedCcLabels(s, dir)
+    val labeled = TextAnalysisShared.cachedDocSigs(s, dir).ccLabels
       .join(docs, col("node") === col("doc_id"))
     // Per-cluster argmax by (n_chars desc, doc_id): the canonical copy
     // is the longest member, deterministically tie-broken. One

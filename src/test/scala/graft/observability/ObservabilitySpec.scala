@@ -83,11 +83,12 @@ class ObservabilitySpec extends SparkSpec {
     // separate guard overhead from query cost.
     val sink = new MetricsSink
     spark.listenerManager.register(sink)
-    // The census memo ([[graft.operators.Dedup]]) may already hold this
-    // (session, dir)'s estimate from an earlier spec — a hit runs no
-    // job, so nothing would surface. Attribution is a property of the
-    // census JOB; force it to run by opting out of the memo here.
-    spark.conf.set("spark.graft.pair.censusCache", "false")
+    // The session's signature state ([[graft.operators.TextAnalysisShared.DocSigs]])
+    // may already hold this (session, dir)'s census from an earlier
+    // spec — a hit runs no job, so nothing would surface. Attribution
+    // is a property of the census JOB; force it to run by opting out of
+    // the sig memo here.
+    spark.conf.set("spark.graft.sig.cache", "false")
     try {
       graft.SparkEntry.queries("q_dedup_minhash_lsh")(spark, Sf).collect()
       awaitRecords(sink, "pair_guard_census", 1)
@@ -95,7 +96,7 @@ class ObservabilitySpec extends SparkSpec {
       assert(rec.nonEmpty, "guard census must appear under its own op label")
       assert(rec.get.status == "ok")
     } finally {
-      spark.conf.unset("spark.graft.pair.censusCache")
+      spark.conf.unset("spark.graft.sig.cache")
       spark.listenerManager.unregister(sink)
     }
   }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{SparkEntry, SparkSpec}
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pins the pair-volume guard contracts ([[PairGuard]]): the three
@@ -289,13 +288,20 @@ class PairGuardSpec extends SparkSpec {
     }
   }
 
-  test("family collapse toggle is output-invariant (work reduction, not a semantics change)") {
-    def canon(df: DataFrame): DataFrame = df.orderBy("vec_id")
-    val on = canon(run("q_semantic_dedup"))
-    withConf("spark.graft.semdedup.familyCollapse" -> "false") {
-      val off = canon(run("q_semantic_dedup"))
-      assert(on.exceptAll(off).count() == 0 && off.exceptAll(on).count() == 0,
-        "familyCollapse=false must be bit-identical — it exists only to measure the win")
+  test("an unknown guard mode is rejected, naming the conf and the allowed modes") {
+    withConf(PairGuard.ModeConf -> "rout") {
+      val e = intercept[IllegalArgumentException](run("q_dedup_embedding"))
+      assert(e.getMessage.contains(s"${PairGuard.ModeConf}=rout"), e.getMessage)
+      assert(e.getMessage.contains("route, exact, fail"), e.getMessage)
+    }
+  }
+
+  test("a malformed maxPairs is rejected, naming the conf and the allowed values") {
+    for (bad <- Seq("lots", "2e8", "-1")) withConf(PairGuard.MaxPairsConf -> bad) {
+      val e = intercept[IllegalArgumentException](run("q_dedup_embedding"))
+      assert(!e.isInstanceOf[NumberFormatException], s"$bad: bare ${e.getClass.getName}")
+      assert(e.getMessage.contains(s"${PairGuard.MaxPairsConf}=$bad"), e.getMessage)
+      assert(e.getMessage.contains("non-negative whole number"), e.getMessage)
     }
   }
 }

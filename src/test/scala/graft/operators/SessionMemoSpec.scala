@@ -22,15 +22,11 @@ class SessionMemoSpec extends SparkSpec {
     spark.conf.set("spark.graft.lm.scoreCache", "false")
     spark.conf.set("spark.graft.bpe.mergeCache", "false")
     spark.conf.set("spark.graft.ivf.codebookCache", "false")
-    spark.conf.set("spark.graft.pair.censusCache", "false")
-    spark.conf.set("spark.graft.pair.anchorCache", "false")
     try body finally {
       spark.conf.unset("spark.graft.sig.cache")
       spark.conf.unset("spark.graft.lm.scoreCache")
       spark.conf.unset("spark.graft.bpe.mergeCache")
       spark.conf.unset("spark.graft.ivf.codebookCache")
-      spark.conf.unset("spark.graft.pair.censusCache")
-      spark.conf.unset("spark.graft.pair.anchorCache")
     }
   }
 
@@ -84,6 +80,58 @@ class SessionMemoSpec extends SparkSpec {
           "post-flip cached-on output must equal the uncached routed output")
       }
     } finally spark.conf.unset("spark.graft.pair.guard.maxPairs")
+  }
+
+  test("a guard flip recovers: each verdict's anchor frame is built once, then served") {
+    // One anchor-pair slot per guard verdict in the signature state: a
+    // flip to routed builds the routed frame once, a second routed call
+    // reuses it, and a flip back is served the exact frame built before
+    // the flip. Jobs are counted while the query is CONSTRUCTED (no
+    // action runs); every construction also pays the Parquet schema
+    // inference of its two tables, so that is measured separately and
+    // subtracted. A fresh table copy keeps earlier specs from having
+    // filled either slot.
+    val dir = java.nio.file.Files.createTempDirectory("memoflip").toString
+    graft.io.Tables.documents(spark, Sf).write.parquet(s"$dir/documents.parquet")
+    graft.io.Tables.embeddings(spark, Sf).write.parquet(s"$dir/embeddings.parquet")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(): Unit
+      }
+    }
+    // The listener bus is async — wait until the count is stable.
+    def jobsDuring(body: => Unit): Int = {
+      jobs.set(0)
+      body
+      var last = -1
+      var stable = 0
+      while (stable < 3) {
+        Thread.sleep(100)
+        val c = jobs.get()
+        if (c == last) stable += 1 else { stable = 0; last = c }
+      }
+      jobs.get()
+    }
+    def construct(): Unit = SparkEntry.queries("q_hard_negatives")(spark, dir): Unit
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      construct() // exact verdict: signature state, census, exact slot
+      val reads = jobsDuring {
+        graft.io.Tables.documents(spark, dir); graft.io.Tables.embeddings(spark, dir): Unit
+      }
+      spark.conf.set(PairGuard.MaxPairsConf, "0") // force route
+      try {
+        val firstRouted = jobsDuring(construct())
+        assert(firstRouted > reads, s"the first routed call must build its slot ($firstRouted jobs, reads $reads)")
+        val secondRouted = jobsDuring(construct())
+        assert(secondRouted == reads,
+          s"a second routed call must reuse the routed slot: ${secondRouted - reads} jobs beyond the schema reads")
+      } finally spark.conf.unset(PairGuard.MaxPairsConf)
+      val exactAgain = jobsDuring(construct())
+      assert(exactAgain == reads,
+        s"a flip back must be served the exact slot: ${exactAgain - reads} jobs beyond the schema reads")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("rewriting the table under a fixed path invalidates the memos (cache stays ON)") {
