@@ -453,6 +453,92 @@ final class Alma(
   }
 
   // ---- §3.1 the read path ----------------------------------------------
+  /** One scored memory type of the read path: its table, envelope slot,
+    * recency column and success/confidence factors (scoring.py:77-269);
+    * outcomes also carry the failure flag the mode's failureBoost keys
+    * on. The single per-type definition `retrieve` and `retrieveBatch`
+    * both score with ([[scored]]).
+    */
+  private case class ScoredType(memoryType: String, slot: String, rows: DataFrame,
+      recencyCol: String, succ: Column, conf: Column, failureFlag: Option[Column] = None)
+
+  private def scoredTypes(agents: Seq[String], m: ModeConfig): Seq[ScoredType] = {
+    val p = Some(projectId)
+    Seq(
+      ScoredType(MemoryType.Heuristics, "h", store.heuristics(p, agents).toDF(), "lastValidated",
+        succ = col("successCount").cast("double") /
+          when(col("occurrenceCount") === 0, 1L).otherwise(col("occurrenceCount")),
+        conf = col("confidence")),
+      ScoredType(MemoryType.Outcomes, "o", store.outcomes(p, agents).toDF(), "timestamp",
+        succ = when(col("success"), 1.0).otherwise(0.3),
+        conf = lit(1.0),
+        failureFlag = Some(!col("success"))),
+      ScoredType(MemoryType.Knowledge, "dk", store.knowledge(p, agents).toDF(), "lastVerified",
+        succ = lit(1.0), conf = col("confidence"))) ++
+      (if (m.includeAntiPatterns)
+        Seq(ScoredType(MemoryType.AntiPatterns, "ap", store.antiPatterns(p, agents).toDF(), "lastSeen",
+          succ = least(col("occurrenceCount").cast("double") / lit(10.0), lit(1.0)),
+          conf = lit(1.0)))
+      else Nil)
+  }
+
+  /** R10/J4: the (small) per-memory feedback summary, broadcast-joined
+    * into every type's scoring plan when signals exist. Feedback-less
+    * rows keep their raw score (feedback.py:190-230).
+    */
+  private def feedbackSummary(): Option[DataFrame] =
+    if (store.exists(MemoryType.Feedback)) Some(store.feedbackSummary(Some(projectId)))
+    else None
+
+  /** Score `df`, rows of type `t`, against the query-vector similarity
+    * `sim`: the mode's 4-factor base score, the feedback blend, the
+    * mode's failure and exact-match boosts, then the `minScore`
+    * threshold. Adds `_sim` and `_score`.
+    */
+  private def scored(df: DataFrame, t: ScoredType, sim: Column, asOfUs: Long,
+      m: ModeConfig, fbSummary: Option[DataFrame]): DataFrame = {
+    // asOf is bound by reference, not as a literal, so every call
+    // generates the same Java and reuses the compiled classes.
+    val days = (BoundParam.of(asOfUs) - unix_micros(col(t.recencyCol))).cast("double") /
+      lit(86400000000.0)
+    val rec = pow(lit(0.5), days / lit(30.0))
+    val base = lit(m.wSim) * sim + lit(m.wRecency) * rec +
+      lit(m.wSuccess) * t.succ + lit(m.wConfidence) * t.conf
+    // R8 diagnostic failure boost / R9 exact-match boost ladder.
+    val failB = t.failureFlag match {
+      case Some(f) if m.failureBoost != 1.0 =>
+        when(f, lit(m.failureBoost)).otherwise(lit(1.0))
+      case _ => lit(1.0)
+    }
+    val exactB =
+      if (m.exactMatchBoost == 1.0) lit(1.0)
+      else when(sim > 0.9, lit(m.exactMatchBoost))
+        .when(sim > 0.8, lit(1.0 + (m.exactMatchBoost - 1.0) / 2.0))
+        .otherwise(lit(1.0))
+    val raw = df
+      .withColumn("_sim", sim)
+      .withColumn("_base_score", base)
+    // Feedback blends into the BASE score (reference order:
+    // engine.py:328 applies feedback to scorer output; the boost path
+    // :561-571 multiplies afterwards). Blending after boosts would
+    // let a boosted raw > 1 row LOSE score to perfect feedback, since
+    // the feedback term is capped at 1.
+    val blended = fbSummary match {
+      case Some(fb) =>
+        raw.join(broadcast(fb), col("id") === col("memoryId"), "left")
+          .withColumn("_fb_score",
+            when(col("feedback_score").isNotNull,
+              lit(1.0 - Alma.FeedbackWeight) * col("_base_score") +
+                lit(Alma.FeedbackWeight) * (col("feedback_score") + lit(1.0)) / lit(2.0))
+              .otherwise(col("_base_score")))
+          .drop("memoryId", "feedback_score")
+      case None => raw.withColumn("_fb_score", col("_base_score"))
+    }
+    blended.withColumn("_score", col("_fb_score") * failB * exactB)
+      .drop("_base_score", "_fb_score")
+      .filter(col("_score") >= m.minScore)
+  }
+
   /** filter → similarity → 4-factor score → (mode boosts) → threshold →
     * top-k (→ MMR when the mode asks for diversity) per memory type →
     * MemorySlice. One declarative plan per type; per-type score rules
@@ -512,12 +598,7 @@ final class Alma(
     val q = HashEmbedder.embed(QuerySanitizer.sanitize(query), embedDim)
     val agents = scope(agent).readableAgents
     val asOfUs = asOf.getTime * 1000L
-    // R10/J4: the (small) per-memory feedback summary, broadcast-joined
-    // into every type's scoring plan when signals exist. Feedback-less
-    // rows keep their raw score (feedback.py:190-230).
-    val fbSummary: Option[DataFrame] =
-      if (store.exists(MemoryType.Feedback)) Some(store.feedbackSummary(Some(projectId)))
-      else None
+    val fbSummary = feedbackSummary()
 
     // The fused retrieve is ONE Spark job with no typed stage in it
     // (SURVEY §1.4 MemorySlice alternative). Every per-type branch
@@ -535,60 +616,6 @@ final class Alma(
         struct(payload.toIndexedSeq.map(col): _*).as(slot),
         score.as("score"), sim.as("sim"))
 
-    def scoreAndTake(df: DataFrame, memoryType: String, slot: String,
-        recencyCol: String, succ: Column, conf: Column,
-        failureFlag: Option[Column] = None): DataFrame = {
-      val sim = VectorFunctions.cosineConst(col("embedding"), q)
-      // asOf is bound by reference, not as a literal, so every call
-      // generates the same Java and reuses the compiled classes.
-      val days = (BoundParam.of(asOfUs) - unix_micros(col(recencyCol))).cast("double") /
-        lit(86400000000.0)
-      val rec = pow(lit(0.5), days / lit(30.0))
-      val base = lit(m.wSim) * sim + lit(m.wRecency) * rec +
-        lit(m.wSuccess) * succ + lit(m.wConfidence) * conf
-      // R8 diagnostic failure boost / R9 exact-match boost ladder.
-      val failB = failureFlag match {
-        case Some(f) if m.failureBoost != 1.0 =>
-          when(f, lit(m.failureBoost)).otherwise(lit(1.0))
-        case _ => lit(1.0)
-      }
-      val exactB =
-        if (m.exactMatchBoost == 1.0) lit(1.0)
-        else when(sim > 0.9, lit(m.exactMatchBoost))
-          .when(sim > 0.8, lit(1.0 + (m.exactMatchBoost - 1.0) / 2.0))
-          .otherwise(lit(1.0))
-      val raw = df
-        .withColumn("_sim", sim)
-        .withColumn("_base_score", base)
-      // Feedback blends into the BASE score (reference order:
-      // engine.py:328 applies feedback to scorer output; the boost path
-      // :561-571 multiplies afterwards). Blending after boosts would
-      // let a boosted raw > 1 row LOSE score to perfect feedback, since
-      // the feedback term is capped at 1.
-      val blended = fbSummary match {
-        case Some(fb) =>
-          raw.join(broadcast(fb), col("id") === col("memoryId"), "left")
-            .withColumn("_fb_score",
-              when(col("feedback_score").isNotNull,
-                lit(1.0 - Alma.FeedbackWeight) * col("_base_score") +
-                  lit(Alma.FeedbackWeight) * (col("feedback_score") + lit(1.0)) / lit(2.0))
-                .otherwise(col("_base_score")))
-            .drop("memoryId", "feedback_score")
-        case None => raw.withColumn("_fb_score", col("_base_score"))
-      }
-      val boosted = blended.withColumn("_score", col("_fb_score") * failB * exactB)
-      val capped = boosted
-        .drop("_base_score", "_fb_score")
-        .filter(col("_score") >= m.minScore)
-        .orderBy(col("_score").desc, col("id"))
-        // Diversity modes over-fetch 3×k candidates for the driver-side
-        // greedy MMR (R7, applied after the single collect below);
-        // plain modes cap at k. Either way the per-type plan ends in a
-        // TakeOrderedAndProject — bounded output at any corpus size.
-        .limit(if (m.diversity <= 0.0) k else 3 * k)
-      envelope(capped, df.columns, memoryType, slot, col("_score"), col("_sim"))
-    }
-
     // R13 provenance: memories read from an inherited agent are tagged
     // with their origin (engine.py:804-827 metadata.shared_from) — on
     // every memory type.
@@ -602,27 +629,19 @@ final class Alma(
       wfFilter.foldLeft(df) { case (d, (key, value)) =>
         d.filter(coalesce(col("metadata").getItem(key) === lit(value), lit(true)))
       }
-    val hdf = scoped(store.heuristics(Some(projectId), agents).toDF())
-    val odf = scoped(store.outcomes(Some(projectId), agents).toDF())
-    val kdf = scoped(store.knowledge(Some(projectId), agents).toDF())
-    val adf = scoped(store.antiPatterns(Some(projectId), agents).toDF())
+    val sim = VectorFunctions.cosineConst(col("embedding"), q)
     val pdf = store.preferences().toDF()
-    val branches = Seq(
-      scoreAndTake(hdf, MemoryType.Heuristics, "h", "lastValidated",
-        succ = col("successCount").cast("double") /
-          when(col("occurrenceCount") === 0, 1L).otherwise(col("occurrenceCount")),
-        conf = col("confidence")),
-      scoreAndTake(odf, MemoryType.Outcomes, "o", "timestamp",
-        succ = when(col("success"), 1.0).otherwise(0.3),
-        conf = lit(1.0),
-        failureFlag = Some(!col("success"))),
-      scoreAndTake(kdf, MemoryType.Knowledge, "dk", "lastVerified",
-        succ = lit(1.0), conf = col("confidence"))) ++
-      (if (m.includeAntiPatterns)
-        Seq(scoreAndTake(adf, MemoryType.AntiPatterns, "ap", "lastSeen",
-          succ = least(col("occurrenceCount").cast("double") / lit(10.0), lit(1.0)),
-          conf = lit(1.0)))
-      else Nil) :+
+    val branches = scoredTypes(agents, m).map { t =>
+      val df = scoped(t.rows)
+      val capped = scored(df, t, sim, asOfUs, m, fbSummary)
+        .orderBy(col("_score").desc, col("id"))
+        // Diversity modes over-fetch 3×k candidates for the driver-side
+        // greedy MMR (R7, applied after the single collect below);
+        // plain modes cap at k. Either way the per-type plan ends in a
+        // TakeOrderedAndProject — bounded output at any corpus size.
+        .limit(if (m.diversity <= 0.0) k else 3 * k)
+      envelope(capped, df.columns, t.memoryType, t.slot, col("_score"), col("_sim"))
+    } :+
       // Preferences are unscored (engine.py:347-350).
       envelope(pdf.orderBy(col("id")).limit(k), pdf.columns,
         MemoryType.Preferences, "up", lit(0.0), lit(0.0))
@@ -675,6 +694,11 @@ final class Alma(
     * query vectors, scan each memory table once, Window top-k per
     * (query, type)). Returns (query_id, query, memory_type, rank, id,
     * score); N queries cost one job per type, not N.
+    *
+    * Scores are `retrieve`'s: the same per-type definition, feedback
+    * blend, mode boosts and threshold ([[scored]]). MMR diversity,
+    * workflow scopes and preferences stay retrieve-only — the batch
+    * ranks every mode by score alone and returns no preferences.
     */
   def retrieveBatch(
       queries: Seq[String],
@@ -687,43 +711,19 @@ final class Alma(
     val k = if (topK > 0) topK else m.topK
     val agents = scope(agent).readableAgents
     val asOfUs = asOf.getTime * 1000L
-    val qdf = queries.zipWithIndex.map { case (q, i) =>
+    val qdf = broadcast(queries.zipWithIndex.map { case (q, i) =>
       (i.toLong, q, HashEmbedder.embed(QuerySanitizer.sanitize(q), embedDim))
-    }.toDF("query_id", "query", "q_vec")
-
-    def normalized(df: DataFrame, memoryType: String, recencyCol: String,
-        succ: org.apache.spark.sql.Column, conf: org.apache.spark.sql.Column): DataFrame =
-      df.select(col("id"), lit(memoryType).as("memory_type"),
-        col("embedding"), col(recencyCol).as("_ts"),
-        succ.as("_succ"), conf.as("_conf"))
-
-    val candidates = Seq(
-      normalized(store.heuristics(Some(projectId), agents).toDF(),
-        MemoryType.Heuristics, "lastValidated",
-        col("successCount").cast("double") /
-          when(col("occurrenceCount") === 0, 1L).otherwise(col("occurrenceCount")),
-        col("confidence")),
-      normalized(store.outcomes(Some(projectId), agents).toDF(),
-        MemoryType.Outcomes, "timestamp",
-        when(col("success"), 1.0).otherwise(0.3), lit(1.0)),
-      normalized(store.knowledge(Some(projectId), agents).toDF(),
-        MemoryType.Knowledge, "lastVerified", lit(1.0), col("confidence")),
-      normalized(store.antiPatterns(Some(projectId), agents).toDF(),
-        MemoryType.AntiPatterns, "lastSeen",
-        least(col("occurrenceCount").cast("double") / lit(10.0), lit(1.0)), lit(1.0))
-    ).reduce(_ unionByName _)
-
+    }.toDF("query_id", "query", "q_vec"))
     val sim = VectorFunctions.cosine(col("embedding"), col("q_vec"))
-    val days = (BoundParam.of(asOfUs) - unix_micros(col("_ts"))).cast("double") /
-      lit(86400000000.0)
-    val rec = pow(lit(0.5), days / lit(30.0))
-    val score = lit(m.wSim) * sim + lit(m.wRecency) * rec +
-      lit(m.wSuccess) * col("_succ") + lit(m.wConfidence) * col("_conf")
+    val fbSummary = feedbackSummary()
+    val candidates = scoredTypes(agents, m).map { t =>
+      scored(t.rows.crossJoin(qdf), t, sim, asOfUs, m, fbSummary)
+        .select(col("query_id"), col("query"), lit(t.memoryType).as("memory_type"),
+          col("id"), col("_score"))
+    }.reduce(_ unionByName _)
     val w = Window.partitionBy("query_id", "memory_type")
       .orderBy(col("_score").desc, col("id"))
-    candidates.crossJoin(broadcast(qdf))
-      .withColumn("_score", score)
-      .filter(col("_score") >= m.minScore)
+    candidates
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("query"), col("memory_type"),

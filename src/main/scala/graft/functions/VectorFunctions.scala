@@ -80,54 +80,19 @@ object VectorFunctions {
   /** Cosine against a constant query vector. */
   def cosineConst(a: Column, q: Array[Float]): Column = cosine(a, lit(q))
 
-  /** Top-`probes` coarse-quantizer cells (IVF assign/probe) against a
-    * driver-materialized codebook, ordered by (cosine rounded to 4
-    * decimals desc, cell id asc) — one primitive-loop kernel per row;
-    * see [[graft.functions.expressions.TopCellsF32]] for the scale
-    * rationale.
-    */
-  /** One broadcast per (SparkContext, codebook INSTANCE), memoized:
-    * repeated topCells calls over the same driver arrays
-    * (multi-iteration Bench passes, long-lived sessions rebuilding the
-    * same plan) share one handle — so Catalyst canonicalizes the
-    * expressions AND the driver stops accumulating a fresh ~MB
-    * broadcast per call. Scoped per SparkContext: a broadcast belongs
-    * to the context that created it, so after a context restart the
-    * same codebook arrays must get a FRESH broadcast (the old handle
-    * would fail at runtime); stopped contexts' entries are purged on
-    * access — the driver BlockManager pins broadcast values for the
-    * context's lifetime, so weak keys alone would never free anything
-    * while the context runs.
-    */
-  private val codebookBroadcasts =
-    new java.util.WeakHashMap[org.apache.spark.SparkContext,
-      java.util.WeakHashMap[Array[Long],
-        (Array[Array[Double]],
-         org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Array[Double]])])]]()
+  /** A driver codebook `(cell ids, centroids)` as one broadcast. */
+  type Codebook = org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Array[Double]])]
 
-  def topCells(a: Column, cellIds: Array[Long], cells: Array[Array[Double]],
-      probes: Int): Column = {
-    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-    val bc = codebookBroadcasts.synchronized {
-      val it = codebookBroadcasts.entrySet().iterator()
-      while (it.hasNext) if (it.next().getKey.isStopped) it.remove()
-      var perCtx = codebookBroadcasts.get(sc)
-      if (perCtx == null) {
-        perCtx = new java.util.WeakHashMap[Array[Long],
-          (Array[Array[Double]],
-           org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Array[Double]])])]()
-        codebookBroadcasts.put(sc, perCtx)
-      }
-      val hit = perCtx.get(cellIds)
-      if (hit != null && (hit._1 eq cells)) hit._2
-      else {
-        val b = sc.broadcast((cellIds, cells))
-        perCtx.put(cellIds, (cells, b))
-        b
-      }
-    }
-    ExpressionUtils.column(TopCellsF32(ExpressionUtils.expression(a), bc, probes))
-  }
+  /** Top-`probes` coarse-quantizer cells (IVF assign/probe) against a
+    * broadcast codebook ([[bcCodebook]]), ordered by (cosine rounded to
+    * 4 decimals desc, cell id asc) — one primitive-loop kernel per row;
+    * see [[graft.functions.expressions.TopCellsF32]] for the scale
+    * rationale. A codebook reused across plans (the memoized IVF
+    * codebook) keeps one handle, so Catalyst canonicalizes the
+    * expressions and the driver holds one copy.
+    */
+  def topCells(a: Column, codebook: Codebook, probes: Int): Column =
+    ExpressionUtils.column(TopCellsF32(ExpressionUtils.expression(a), codebook, probes))
 
   /** Squared L2 distance between two float/double vector columns
     * (codegen kernel; see [[graft.functions.expressions.SqDistVec]]).
@@ -136,16 +101,14 @@ object VectorFunctions {
     ExpressionUtils.column(graft.functions.expressions.SqDistVec(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
 
-  private def bcCodebook(cellIds: Array[Long], cells: Array[Array[Double]])
-      : org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Array[Double]])] =
+  /** Broadcast a driver codebook on the active session's context;
+    * dropped handles are reclaimed by ContextCleaner with the plan.
+    */
+  def bcCodebook(cellIds: Array[Long], cells: Array[Array[Double]]): Codebook =
     org.apache.spark.sql.SparkSession.active.sparkContext.broadcast((cellIds, cells))
 
   /** Lloyd assign step as one kernel call per row: nearest centroid by
     * (round6 squared L2 ASC, cid ASC), output `struct(cid, dist2)`.
-    * Codebooks here are fresh small arrays per training iteration
-    * (k·dim doubles), so they broadcast directly — no identity memo
-    * like [[topCells]]'s (those codebooks are ⌈√n⌉-sized and recur);
-    * dropped handles are reclaimed by ContextCleaner with the plan.
     */
   def nearestCellSq(a: Column, cellIds: Array[Long],
       cells: Array[Array[Double]]): Column =

@@ -4,12 +4,15 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.SparkSession
 
-/** Per-(session, table-state) memo of an expensive derived frame —
-  * the one discipline behind the sig/LM session caches
-  * ([[graft.operators.Dedup]], [[graft.operators.Curation]]): within a
-  * session the first consumer of a shared chain pays the build
-  * (typically a `localCheckpoint(true)`) and later consumers re-read
-  * the materialized blocks.
+/** Per-(session, table-state) memo of an expensive derived value —
+  * the one cache discipline in the engine. Five instances use it: the
+  * signature state ([[graft.operators.TextAnalysisShared.DocSigs]]),
+  * the LM scores and bigram counts ([[graft.operators.Curation]]), the
+  * BPE merge list ([[graft.operators.Lifecycle]]) and the IVF codebook
+  * broadcast ([[graft.operators.QualityFilters]]). Within a session the
+  * first consumer of a shared chain pays the build (typically a
+  * `localCheckpoint(true)`) and later consumers re-read the
+  * materialized blocks.
   *
   * Three properties the ad-hoc per-file WeakHashMaps did NOT have:
   *
@@ -32,11 +35,12 @@ import org.apache.spark.sql.SparkSession
   *    as `pair_guard_census`) instead of silently folding it into
   *    whichever query happened to run first.
   *
-  * The opt-out conf (`confKey=false`) bypasses the memo entirely —
-  * every call rebuilds, unlabeled, inside the consuming query — which
-  * is what per-query standalone-cost benchmarking wants.
+  * One switch turns every memo off: with [[SessionMemo.EnabledConf]]
+  * `=false` a call bypasses the memo entirely — it rebuilds, unlabeled,
+  * inside the consuming query — which is what per-query
+  * standalone-cost benchmarking and the caches-off oracle run want.
   */
-private[graft] final class SessionMemo[V](confKey: String, opLabel: String) {
+private[graft] final class SessionMemo[V](opLabel: String) {
 
   private val cache =
     new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, V]]()
@@ -163,7 +167,7 @@ private[graft] final class SessionMemo[V](confKey: String, opLabel: String) {
   }
 
   def getOrBuild(s: SparkSession, tablePath: String)(build: => V): V = {
-    if (!s.conf.get(confKey, "true").toBoolean) return build
+    if (!SessionMemo.enabled(s)) return build
     val perSession = cache.synchronized {
       val it = cache.entrySet().iterator()
       while (it.hasNext) if (it.next().getKey.sparkContext.isStopped) it.remove()
@@ -188,6 +192,11 @@ private[graft] final class SessionMemo[V](confKey: String, opLabel: String) {
 }
 
 private[graft] object SessionMemo {
+  /** The one opt-out conf of every memo (default `true`). */
+  val EnabledConf = "spark.graft.memo.enabled"
+
+  def enabled(s: SparkSession): Boolean = s.conf.get(EnabledConf, "true").toBoolean
+
   /** Content-sample at most this many files from each end of the
     * path-sorted listing per fingerprint — the structural cap on the
     * fingerprint's I/O (≤ 2·SampleFiles opens regardless of part

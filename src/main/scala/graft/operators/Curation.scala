@@ -88,21 +88,16 @@ object Curation {
     * linear rows — and the rest reuse it. Keyed on the table's
     * file-listing fingerprint so a rewritten table misses naturally
     * ([[graft.internal.SessionMemo]]); builds surface in op-metrics as
-    * `lm_score_cache_build`; spark.graft.lm.scoreCache=false opts out.
+    * `lm_score_cache_build`; `spark.graft.memo.enabled=false` opts out.
     */
-  private val lmScoreCache =
-    new graft.internal.SessionMemo[DataFrame](
-      "spark.graft.lm.scoreCache", "lm_score_cache_build")
+  private val lmScoreCache = new graft.internal.SessionMemo[DataFrame]("lm_score_cache_build")
 
   /** Per-(session, dir) memo of the top-64k bigram count table over the
     * raw table's en slice — the ONE model table both the add-one chain
     * and q_lm_kneser_ney derive every statistic from (identical cap and
-    * (count desc, bigram) order in both, and in both oracles). Shares
-    * the score cache's opt-out conf.
+    * (count desc, bigram) order in both, and in both oracles).
     */
-  private val bigcCache =
-    new graft.internal.SessionMemo[DataFrame](
-      "spark.graft.lm.scoreCache", "lm_bigram_cache_build")
+  private val bigcCache = new graft.internal.SessionMemo[DataFrame]("lm_bigram_cache_build")
 
   private def rawBigramCounts(docs: DataFrame): DataFrame =
     docs.filter(col("lang") === "en")
@@ -116,7 +111,7 @@ object Curation {
       rawBigramCounts(Tables.documents(s, dir)).localCheckpoint(true))
 
   private def lmScored(s: SparkSession, dir: String): DataFrame = {
-    if (!s.conf.get("spark.graft.lm.scoreCache", "true").toBoolean)
+    if (!graft.internal.SessionMemo.enabled(s))
       return lmScoredOn(Tables.documents(s, dir))
     lmScoreCache.getOrBuild(s, s"$dir/documents.parquet")(
       lmScoredOn(Tables.documents(s, dir),
@@ -573,7 +568,8 @@ object Curation {
     // the joins then re-read 4 small rows per doc instead of replaying
     // the text scan + md5 kernel per consumer (session-memoized:
     // [[TextAnalysisShared.cachedDocSigs]]).
-    val sigs = TextAnalysisShared.cachedDocSigs(s, dir).frame
+    val docSigs = TextAnalysisShared.cachedDocSigs(s, dir)
+    val sigs = docSigs.frame
     // The candidate OUTPUT is one row per (batch doc, bucket partner) —
     // quadratic in duplicate-family size like every LSH pair contract
     // (measured: the join, not the sig build, was 50 of the 57 s at
@@ -609,8 +605,8 @@ object Curation {
       row.getLong(0)
     }
     val src = if (exact) sigs
-      else sigs.join(
-        Dedup.familyRepsStratified(sigs, col("doc_id") % 5 === 0), Seq("doc_id"))
+      else TextAnalysisShared.explodeVectors(
+        Dedup.familyRepsStratified(docSigs.vectors, col("doc_id") % 5 === 0))
     val batch = src.filter(col("doc_id") % 5 === 0)
     val index = src.filter(col("doc_id") % 5 =!= 0)
     // [[incrementalCandidates]] emits ONE row per pair with its

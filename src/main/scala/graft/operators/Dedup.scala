@@ -52,23 +52,22 @@ object Dedup {
     //
     // The signature chain (shingle scan + per-band min) is the dominant
     // linear cost, so it is materialized ONCE and the census, the pair
-    // join, and (routed) the family key all derive from the same frame.
-    // The round-10 shape recomputed the chain for the census and again
-    // for the exact join — doubling the floor precisely in the common
-    // small-corpus case the cap waves through (measured: sf0.1 best-of
-    // 0.86 → 1.44 s). Session-memoized: the LSH pair and cluster
-    // queries share one signature state per table
+    // join, and (routed) the family key all derive from the same
+    // per-doc vectors. The round-10 shape recomputed the chain for the
+    // census and again for the exact join — doubling the floor
+    // precisely in the common small-corpus case the cap waves through
+    // (measured: sf0.1 best-of 0.86 → 1.44 s). Session-memoized: the
+    // LSH pair and cluster queries share one signature state per table
     // ([[TextAnalysisShared.cachedDocSigs]]), census included.
     val sigs = TextAnalysisShared.cachedDocSigs(s, dir)
     val exact = PairGuard.allowExact(s, "q_dedup_minhash_lsh")(sigs.census)
-    val src = if (exact) sigs.frame
-      else sigs.frame.join(familyReps(sigs.frame, MinhashFamilyCap, mhfRankKey), Seq("doc_id"))
+    val vecs = if (exact) sigs.vectors
+      else familyReps(sigs.vectors, MinhashFamilyCap, mhfRankKey)
     // First-match emission ([[TextAnalysisShared.firstMatchPairs]]): one
     // row per pair with bands_matched inline — the pair-keyed
     // aggregation (all-unique keys: no combine, all spill) is gone; the
     // only pair-sized exchange left is the output sort.
-    TextAnalysisShared.firstMatchPairs(TextAnalysisShared.sigVectors(src), 4)
-      .orderBy("doc_a", "doc_b")
+    TextAnalysisShared.firstMatchPairs(vecs, 4).orderBy("doc_a", "doc_b")
   }
 
   private val dedupMinhashLshSql =
@@ -210,56 +209,6 @@ object Dedup {
   // signature shuffle, and true-Jaccard COMPUTE is per CANDIDATE
   // pair — the estimator exists precisely so that stays a sliver of
   // the corpus.
-  /** Per-doc (band, sig, shingle-hash set) frame for the calibration
-    * audits: ONE kernel projection per document computes every band's
-    * min signature ([[graft.functions.expressions.MinhashSigsExpr]])
-    * AND the distinct 60-bit shingle-hash set
-    * ([[graft.functions.expressions.SpanHashesExpr]], n=3, distinct —
-    * a 3-token shingle IS a 3-token span, and the kernel's
-    * `parseLong(md5hex[0,15), 16)` is exactly the oracles'
-    * `('0x' || substr(md5(shingle), 1, 15))::BIGINT`), then a narrow
-    * posexplode emits the 4 band rows with the set alongside.
-    *
-    * Split per-doc / explode so the ONE-row-per-doc stage (sh stored
-    * once, not 4×) is what gets localCheckpoint'ed: the census, the
-    * exact pair join, the family key, and the routed rep join all
-    * re-read the checkpoint instead of replaying the text scan + md5
-    * kernel chain (the round-10 shape ran that chain twice on the
-    * exact path and twice again in sampled mode).
-    */
-  private def sigSetPerDoc(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val sigsCol = ColumnBridge.column(
-      graft.functions.expressions.MinhashSigsExpr(
-        ColumnBridge.expression(col("text")),
-        TextAnalysisShared.MinhashA.take(4).toArray, TextAnalysisShared.MinhashP))
-    val shCol = ColumnBridge.column(
-      graft.functions.expressions.SpanHashesExpr(
-        ColumnBridge.expression(col("text")), 3, distinct = true))
-    Tables.spread(docs)
-      .select(col("doc_id"), sigsCol.as("sv"), shCol.as("sh"))
-      .filter(col("sv").isNotNull)
-  }
-
-  /** Per-(session, dir) memo of the CHECKPOINTED per-doc (sv, sh)
-    * frame over the raw table — both calibration legs
-    * (q_minhash_estimate, q_minhash_estimate_sampled) consume it, and
-    * each used to replay the text-scan + two-kernel projection per
-    * construction. Same discipline and opt-out conf as
-    * [[TextAnalysisShared.cachedDocSigs]].
-    */
-  private val sigSetCache =
-    new graft.internal.SessionMemo[DataFrame](
-      "spark.graft.sig.cache", "sigset_cache_build")
-
-  private def cachedSigSetPerDoc(s: SparkSession, dir: String): DataFrame =
-    sigSetCache.getOrBuild(s, s"$dir/documents.parquet")(
-      sigSetPerDoc(Tables.documents(s, dir)).localCheckpoint(true))
-
-  /** (doc_id, band, sig) rows off a [[sigSetPerDoc]] frame. */
-  private def explodeSigSet(perDoc: DataFrame): DataFrame =
-    perDoc.select(col("doc_id"), posexplode(col("sv")))
-      .select(col("doc_id"), col("pos").cast("long").as("band"), col("col").as("sig"))
 
   /** Shared estimate-vs-true audit body: bucket-local pair formation
     * with TRUE Jaccard computed AT THE JOIN, where both docs' sets are
@@ -277,7 +226,7 @@ object Dedup {
     * pair-keyed groupBy — a hash aggregate over ~all-unique pair keys,
     * pure spill — no longer exists and nothing pair-sized reaches an
     * exchange but the output sort. `perDoc` is the (doc_id, sv, sh)
-    * frame ([[sigSetPerDoc]]).
+    * frame ([[TextAnalysisShared.DocSigs.shingleSets]]).
     * True Jaccard is over the distinct 60-bit shingle-hash sets (the
     * dedup family's identity notion, same as q_span_dedup's spans) —
     * equal to string-set Jaccard unless two of a pair's ~10² shingles
@@ -292,13 +241,6 @@ object Dedup {
       .withColumn("abs_err", round(abs(col("est_jaccard") - col("true_jaccard")), 6))
       .orderBy("doc_a", "doc_b")
 
-  /** Per-doc complete-signature family key: the doc's sorted
-    * `band:sig` list. `sigs` is a (doc_id, band, sig) frame.
-    */
-  private def familyKeys(sigs: DataFrame): DataFrame = sigs.groupBy("doc_id")
-    .agg(concat_ws("_", array_sort(collect_list(
-      concat(col("band"), lit(":"), col("sig"))))).as("fam"))
-
   /** The calibration legs' representative rank key — `md5('mhf' || id)`
     * in the oracles.
     */
@@ -306,20 +248,23 @@ object Dedup {
     md5(concat(lit("mhf"), id.cast("string")).cast("binary"))
 
   /** The one representative rule of the family-capped LSH legs: keep
-    * the top `cap` members of each complete-signature family by
-    * (`rankKey(doc_id)`, doc_id). The calibration legs and the routed
+    * the rows of the top `cap` members of each complete-signature
+    * family by (`rankKey(doc_id)`, doc_id). `vecs` holds one row per
+    * doc with its band-ordered signature vector `sv`, and `sv` IS the
+    * family key: two docs share every (band, sig) bucket exactly when
+    * their vectors are equal. The calibration legs and the routed
     * q_dedup_minhash_lsh rank by [[mhfRankKey]] with cap
     * [[MinhashFamilyCap]]; the training-pair queries rank by
     * [[posRankKey]] with cap [[CtrFamilyCap]], because their
     * preservation argument needs the positive window's own key.
     */
-  private[operators] def familyReps(sigs: DataFrame, cap: Int,
+  private[operators] def familyReps(vecs: DataFrame, cap: Int,
       rankKey: Column => Column): DataFrame =
-    familyKeys(sigs)
+    vecs
       .withColumn("rn", row_number().over(
-        Window.partitionBy("fam").orderBy(rankKey(col("doc_id")), col("doc_id"))))
+        Window.partitionBy("sv").orderBy(rankKey(col("doc_id")), col("doc_id"))))
       .filter(col("rn") <= cap)
-      .select("doc_id")
+      .drop("rn")
 
   /** Side-stratified representative selection for contracts whose
     * detection promise is PER SIDE of a partition of the corpus (the
@@ -333,22 +278,22 @@ object Dedup {
     * families — so every family holding a batch doc and any partner
     * still yields at least one surviving candidate pair, and routed
     * rows remain a verbatim subset of the exact output (survivor
-    * pairs carry exact bands_matched/origin). Output ≤ 2 doc_ids per
-    * complete-signature family, like [[familyReps]].
+    * pairs carry exact bands_matched/origin). Keeps ≤ 2 rows of the
+    * per-doc `vecs` frame per complete-signature family, like
+    * [[familyReps]].
     */
-  private[operators] def familyRepsStratified(sigs: DataFrame, side: Column): DataFrame = {
-    val bySide = Window.partitionBy("fam", "s")
+  private[operators] def familyRepsStratified(vecs: DataFrame, side: Column): DataFrame = {
+    val bySide = Window.partitionBy("sv", "s")
       .orderBy(mhfRankKey(col("doc_id")), col("doc_id"))
-    val byFam = Window.partitionBy("fam")
-    familyKeys(sigs).withColumn("s", side.cast("int"))
+    val byFam = Window.partitionBy("sv")
+    vecs.withColumn("s", side.cast("int"))
       .withColumn("rn", row_number().over(bySide))
       .withColumn("one_sided", min(col("s")).over(byFam) === max(col("s")).over(byFam))
       .filter(col("rn") === 1 || (col("rn") === 2 && col("one_sided")))
-      .select("doc_id")
+      .drop("s", "rn", "one_sided")
   }
 
   private def minhashEstimate(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
     // The full calibration contract is one row per LSH CANDIDATE pair —
     // Σ_bucket c·(c−1)/2 rows, quadratic in duplicate-family size (the
     // round-9 ×100 disk death was exactly this volume). [[PairGuard]]
@@ -356,17 +301,15 @@ object Dedup {
     // group count); past the cap it routes to the family-capped
     // representative selection the sampled leg pins — routed output ⊆
     // full output row-for-row, each family still measured through one
-    // surviving within-family pair. One kernel pass total: census,
-    // family key, and both branches' pair joins read the per-doc
-    // checkpoint (see [[sigSetPerDoc]]; session-memoized with the
-    // sampled leg).
-    val perDoc = cachedSigSetPerDoc(s, dir)
-    val sigs = explodeSigSet(perDoc)
-    val exact = PairGuard.allowExact(s, "q_minhash_estimate")(
-      TextAnalysisShared.lshPairCensus(sigs))
-    if (exact) calibratePairs(perDoc)
-    else calibratePairs(
-      perDoc.join(familyReps(sigs, MinhashFamilyCap, mhfRankKey), Seq("doc_id")))
+    // surviving within-family pair. The census is the signature
+    // state's memoized one (the same kernel, docs and null filter as
+    // the calibration frame), and both branches' pair joins read the
+    // per-doc (sv, sh) checkpoint ([[TextAnalysisShared.DocSigs]],
+    // shared with the sampled leg).
+    val sigs = TextAnalysisShared.cachedDocSigs(s, dir)
+    val exact = PairGuard.allowExact(s, "q_minhash_estimate")(sigs.census)
+    calibratePairs(if (exact) sigs.shingleSets
+      else familyReps(sigs.shingleSets, MinhashFamilyCap, mhfRankKey))
   }
 
   // Sampled calibration. The full audit is the suite's heaviest decade
@@ -399,10 +342,8 @@ object Dedup {
     // shape checkpointed sigs for the family key but re-ran the whole
     // kernel chain to rebuild the reps' shingle sets). Session-memoized
     // with the full leg.
-    val perDoc = cachedSigSetPerDoc(s, dir)
-    val sigs = explodeSigSet(perDoc)
-    calibratePairs(
-      perDoc.join(familyReps(sigs, MinhashFamilyCap, mhfRankKey), Seq("doc_id")))
+    calibratePairs(familyReps(TextAnalysisShared.cachedDocSigs(s, dir).shingleSets,
+      MinhashFamilyCap, mhfRankKey))
   }
 
   /** Calibration oracle, parameterized by the CTE that defines the
@@ -622,12 +563,11 @@ object Dedup {
     * routed output = exact output restricted to surviving anchors,
     * row-for-row (`PairGuardSpec` pins it).
     */
-  private[operators] def cappedAnchorPairs(sigs: DataFrame, exact: Boolean): DataFrame = {
+  private[operators] def cappedAnchorPairs(vecs: DataFrame, exact: Boolean): DataFrame = {
     // Routed formation ranks family members by the positive window's
     // own key — any other key collapses the preservation argument.
-    val src = if (exact) sigs
-      else sigs.join(familyReps(sigs, CtrFamilyCap, posRankKey), Seq("doc_id"))
-    val pairs = TextAnalysisShared.firstMatchPairs(TextAnalysisShared.sigVectors(src), 4)
+    val src = if (exact) vecs else familyReps(vecs, CtrFamilyCap, posRankKey)
+    val pairs = TextAnalysisShared.firstMatchPairs(src, 4)
       .filter(col("bands_matched") >= 2)
     pairs.select(col("doc_a").as("anchor"), col("doc_b").as("positive"))
       .union(pairs.select(col("doc_b").as("anchor"), col("doc_a").as("positive")))
@@ -908,14 +848,16 @@ private[graft] object TextAnalysisShared {
 
   /** Band-ordered signature vector per doc from an exploded
     * (doc_id, band, sig) frame — a doc-sized aggregate (≤ nBands rows
-    * per doc in, one out).
+    * per doc in, one out). Only for exploded frames built outside the
+    * signature state (the incremental leg's batch/index split and its
+    * specs); [[DocSigs.vectors]] already holds the vectors.
     */
   def sigVectors(sigs: DataFrame): DataFrame = sigs.groupBy("doc_id")
     .agg(transform(array_sort(collect_list(struct(col("band"), col("sig")))),
       x => x.getField("sig")).as("sv"))
 
   /** The one first-match LSH pair join: `vecs` holds one row per doc
-    * with its band-ordered signature vector `sv` ([[sigVectors]]).
+    * with its band-ordered signature vector `sv` ([[DocSigs.vectors]]).
     * Each `carry` column rides both join sides as `<c>_a` / `<c>_b`,
     * and the `perPair` columns over them are computed AT the join,
     * where both docs' values are co-located (the calibration's true
@@ -986,44 +928,67 @@ private[graft] object TextAnalysisShared {
   val MinhashA: Seq[Long] =
     Seq(1299721L, 7919L, 104729L, 15485863L, 32452843L, 49979687L, 67867967L, 86028121L)
 
-  /** Per-(doc, band) MinHash signatures via the compiled
+  /** Per-doc band-ordered MinHash signature vectors `(doc_id, sv,
+    * extra…)` via the compiled
     * [[graft.functions.expressions.MinhashSigsExpr]] kernel: ONE
     * projection computes every band's min in a single pass over the
-    * doc's shingles, then a narrow posexplode emits the (band, sig)
-    * rows — no shingle row ever exists and NO exchange at all (the
-    * prior explode + groupBy form shuffled one row per (doc, band);
-    * this shuffles nothing). Values are bit-identical to the explode
-    * formulation (same md5-prefix hash, same (x·A+b) mod P mixes,
-    * `DedupSemanticsSpec` pins kernel == explode on the real corpus),
-    * so every oracle downstream is unchanged. Docs with < 3 tokens
-    * yield a null vector and are filtered — the explode form's
-    * absent-row semantics.
+    * doc's shingles — no shingle row ever exists and NO exchange at
+    * all (the prior explode + groupBy form shuffled one row per
+    * (doc, band); this shuffles nothing). Values are bit-identical to
+    * the explode formulation (same md5-prefix hash, same (x·A+b) mod P
+    * mixes, `DedupSemanticsSpec` pins kernel == explode on the real
+    * corpus), so every oracle downstream is unchanged. Docs with < 3
+    * tokens yield a null vector and are filtered — the explode form's
+    * absent-row semantics. `extra` columns over `docs` ride the same
+    * projection.
     */
-  def bandedMinhashSigs(docs: DataFrame, nBands: Int): DataFrame = {
+  def minhashVectors(docs: DataFrame, nBands: Int, extra: Column*): DataFrame = {
     require(nBands <= MinhashA.size, s"at most ${MinhashA.size} bands")
-    val sigsCol = org.apache.spark.sql.graft.ColumnBridge.column(
+    val sv = org.apache.spark.sql.graft.ColumnBridge.column(
       graft.functions.expressions.MinhashSigsExpr(
         org.apache.spark.sql.graft.ColumnBridge.expression(col("text")),
         MinhashA.take(nBands).toArray, MinhashP))
     Tables.spread(docs)
-      .select(col("doc_id"), sigsCol.as("sigs"))
-      .filter(col("sigs").isNotNull)
-      .select(col("doc_id"), posexplode(col("sigs")))
-      .select(col("doc_id"), col("pos").cast("long").as("band"), col("col").as("sig"))
+      .select(col("doc_id") +: sv.as("sv") +: extra: _*)
+      .filter(col("sv").isNotNull)
   }
 
-  /** The signature state of one raw documents table: the CHECKPOINTED
-    * 4-band (doc_id, band, sig) `frame`, and the three values the LSH
-    * pair and cluster queries derive from it, each computed lazily,
-    * once per state. The sig memo keys the whole state on the table's
-    * fingerprint, so a derived value can never be keyed apart from —
-    * or outlive — the frame it summarizes, and a warm consumer pays
-    * one fingerprint pass for all of them.
+  /** (doc_id, band, sig) rows off a per-doc vector frame — a narrow
+    * posexplode, no exchange.
+    */
+  def explodeVectors(vecs: DataFrame): DataFrame =
+    vecs.select(col("doc_id"), posexplode(col("sv")))
+      .select(col("doc_id"), col("pos").cast("long").as("band"), col("col").as("sig"))
+
+  /** Per-(doc, band) MinHash signatures: [[minhashVectors]], exploded. */
+  def bandedMinhashSigs(docs: DataFrame, nBands: Int): DataFrame =
+    explodeVectors(minhashVectors(docs, nBands))
+
+  /** The signature state of one raw documents table. Its base is the
+    * CHECKPOINTED 4-band per-doc vector frame `vectors` (doc_id, sv);
+    * everything else derives from it, lazily, once per state. The sig
+    * memo keys the whole state on the table's fingerprint, so a derived
+    * value can never be keyed apart from — or outlive — the frame it
+    * summarizes, and a warm consumer pays one fingerprint pass for all
+    * of them.
     *
+    *  - `frame`: the exploded (doc_id, band, sig) view, a narrow
+    *    posexplode of `vectors` ([[explodeVectors]]), not a second
+    *    checkpoint.
     *  - `census`: the bucket pair volume ([[lshPairCensus]]) shared by
-    *    the three guarded LSH pair queries; forced only by
+    *    the four guarded LSH legs (q_dedup_minhash_lsh, both training
+    *    pair queries, and the full calibration leg); forced only by
     *    [[PairGuard.allowExact]], which labels the job
     *    `pair_guard_census` (mode=exact never runs it).
+    *  - `shingleSets`: the checkpointed (doc_id, sv, sh) frame of the
+    *    two calibration legs — ONE kernel projection per doc computes
+    *    the vector AND the distinct 60-bit shingle-hash set
+    *    ([[graft.functions.expressions.SpanHashesExpr]], n=3, distinct
+    *    — a 3-token shingle IS a 3-token span, and the kernel's
+    *    `parseLong(md5hex[0,15), 16)` is exactly the oracles'
+    *    `('0x' || substr(md5(shingle), 1, 15))::BIGINT`). Built only
+    *    when a calibration leg asks; builds labeled
+    *    `sigset_cache_build`.
     *  - `anchorPairs(exact)`: the checkpointed capped anchor-pair frame
     *    ([[Dedup.cappedAnchorPairs]]) with ONE SLOT PER GUARD VERDICT —
     *    a mid-session mode/cap flip builds the other slot once, and a
@@ -1035,15 +1000,21 @@ private[graft] object TextAnalysisShared {
     *    sequence of driver-blocking rounds) shared by the three
     *    cluster-family queries. Builds labeled `cc_labels_build`.
     */
-  final class DocSigs private[TextAnalysisShared] (val frame: DataFrame) {
+  final class DocSigs private[TextAnalysisShared] (val vectors: DataFrame, docs: DataFrame) {
+    val frame: DataFrame = explodeVectors(vectors)
     lazy val census: Long = lshPairCensus(frame)
 
     private def built(op: String)(df: => DataFrame): DataFrame =
-      graft.observability.Metrics.withOp(frame.sparkSession, op)(df)
+      graft.observability.Metrics.withOp(vectors.sparkSession, op)(df)
+    lazy val shingleSets: DataFrame = built("sigset_cache_build")(
+      minhashVectors(docs, 4, org.apache.spark.sql.graft.ColumnBridge.column(
+        graft.functions.expressions.SpanHashesExpr(
+          org.apache.spark.sql.graft.ColumnBridge.expression(col("text")), 3, distinct = true))
+        .as("sh")).localCheckpoint(true))
     private lazy val anchorsExact =
-      built("anchor_pairs_build")(Dedup.cappedAnchorPairs(frame, exact = true).localCheckpoint(true))
+      built("anchor_pairs_build")(Dedup.cappedAnchorPairs(vectors, exact = true).localCheckpoint(true))
     private lazy val anchorsRouted =
-      built("anchor_pairs_build")(Dedup.cappedAnchorPairs(frame, exact = false).localCheckpoint(true))
+      built("anchor_pairs_build")(Dedup.cappedAnchorPairs(vectors, exact = false).localCheckpoint(true))
     def anchorPairs(exact: Boolean): DataFrame = if (exact) anchorsExact else anchorsRouted
 
     lazy val ccLabels: DataFrame =
@@ -1052,24 +1023,26 @@ private[graft] object TextAnalysisShared {
 
   /** Per-(session, dir) memo of the raw documents table's [[DocSigs]]:
     * the LSH pair queries (dedup_minhash_lsh, dedup_incremental,
-    * contrastive_pairs, hard_negatives) and the three CC cluster-family
-    * queries each rebuilt the identical text-scan + md5 kernel chain
-    * per construction; within one session the first consumer pays and
-    * the rest re-read 4 small rows per doc. Keyed on the table's
-    * file-listing fingerprint (a rewritten `documents.parquet` misses
-    * naturally — see [[graft.internal.SessionMemo]]); builds surface in
-    * op-metrics as `sig_cache_build`. `spark.graft.sig.cache=false`
-    * opts out: every call gets a fresh state, so the frame AND every
-    * derived value rebuild per call. Only the raw-table chain is
-    * memoized — callers signing a DERIVED frame (pipeline stages,
-    * streaming batches) still call [[bandedMinhashSigs]] directly.
+    * contrastive_pairs, hard_negatives), the two calibration legs and
+    * the three CC cluster-family queries each rebuilt the identical
+    * text-scan + md5 kernel chain per construction; within one session
+    * the first consumer pays and the rest re-read one small vector per
+    * doc. Keyed on the table's file-listing fingerprint (a rewritten
+    * `documents.parquet` misses naturally — see
+    * [[graft.internal.SessionMemo]]); builds surface in op-metrics as
+    * `sig_cache_build`. With `spark.graft.memo.enabled=false` every
+    * call gets a fresh state, so the vectors AND every derived value
+    * rebuild per call. Only the raw-table chain is memoized — callers
+    * signing a DERIVED frame (pipeline stages, streaming batches) still
+    * call [[bandedMinhashSigs]] directly.
     */
-  private val sigCache =
-    new graft.internal.SessionMemo[DocSigs]("spark.graft.sig.cache", "sig_cache_build")
+  private val sigCache = new graft.internal.SessionMemo[DocSigs]("sig_cache_build")
 
   def cachedDocSigs(s: org.apache.spark.sql.SparkSession, dir: String): DocSigs =
-    sigCache.getOrBuild(s, s"$dir/documents.parquet")(new DocSigs(
-      bandedMinhashSigs(Tables.documents(s, dir), 4).localCheckpoint(true)))
+    sigCache.getOrBuild(s, s"$dir/documents.parquet") {
+      val docs = Tables.documents(s, dir)
+      new DocSigs(minhashVectors(docs, 4).localCheckpoint(true), docs)
+    }
 
   /** The pre-kernel explode + multi-min-groupBy formulation, kept as
     * the parity twin the spec checks the kernel against.

@@ -517,13 +517,11 @@ object Lifecycle {
     * corpus scan. Same discipline as the sig/LM memos
     * ([[graft.internal.SessionMemo]]): file-listing fingerprint in the
     * key, build labeled `bpe_merges_build` in op-metrics, opt-out
-    * `spark.graft.bpe.mergeCache=false`. Only raw-table training is
+    * `spark.graft.memo.enabled=false`. Only raw-table training is
     * memoized — callers training on a DERIVED frame still call
     * [[graft.functions.Bpe.trainMergesFrom]] directly.
     */
-  private val mergeCache =
-    new graft.internal.SessionMemo[Seq[(String, String)]](
-      "spark.graft.bpe.mergeCache", "bpe_merges_build")
+  private val mergeCache = new graft.internal.SessionMemo[Seq[(String, String)]]("bpe_merges_build")
 
   private[operators] def cachedRawMerges(s: SparkSession, dir: String): Seq[(String, String)] =
     mergeCache.getOrBuild(s, s"$dir/documents.parquet")(

@@ -38,12 +38,12 @@ import org.apache.spark.sql.SparkSession
   * honest cost. The census job is labeled `pair_guard_census` in the
   * metrics sink ([[graft.observability.Metrics.withOp]]) so an
   * op-metrics roll-up attributes guard overhead to the guard, not to
-  * the query body it protects. The three LSH pair legs over the raw
-  * documents table (`q_dedup_minhash_lsh`, `q_contrastive_pairs`,
-  * `q_hard_negatives`) price the same bucket census, so it is computed
-  * once per table state, inside the session's signature state
-  * ([[TextAnalysisShared.DocSigs]]), which also keeps one anchor-pair
-  * frame per guard verdict.
+  * the query body it protects. The four LSH legs over the raw
+  * documents table (`q_dedup_minhash_lsh`, `q_minhash_estimate`,
+  * `q_contrastive_pairs`, `q_hard_negatives`) price the same bucket
+  * census, so it is computed once per table state, inside the
+  * session's signature state ([[TextAnalysisShared.DocSigs]]), which
+  * also keeps one anchor-pair frame per guard verdict.
   */
 object PairGuard {
 

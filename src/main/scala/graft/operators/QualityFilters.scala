@@ -354,35 +354,34 @@ object QualityFilters {
     * ≤ k·dim rows regardless of corpus size. Cells that attract no
     * vectors simply drop out — both engines agree by construction.
     */
-  /** Materialize a (cl, cvec) codebook frame as driver-side sorted
-    * arrays for the [[VectorFunctions.topCells]] kernel. Bounded by
-    * construction (k = ⌈√n⌉), the same size class as a broadcast —
-    * the only mid-plan actions in the semantic pass are this and the
-    * corpus count, both k/1-row sized.
+  /** Materialize a (cl, cvec) codebook frame as a broadcast of
+    * driver-side sorted arrays for the [[VectorFunctions.topCells]]
+    * kernel. Bounded by construction (k = ⌈√n⌉), the same size class
+    * as a broadcast — the only mid-plan actions in the semantic pass
+    * are this and the corpus count, both k/1-row sized.
     */
-  private def collectCodebook(cb: DataFrame): (Array[Long], Array[Array[Double]]) = {
+  private def collectCodebook(cb: DataFrame): VectorFunctions.Codebook = {
     val rows = cb.select(col("cl"), col("cvec")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
-    (rows.map(_._1), rows.map(_._2))
+    VectorFunctions.bcCodebook(rows.map(_._1), rows.map(_._2))
   }
 
-  /** Session memo for the semantic-decontamination IVF codebook — the
-    * [[graft.internal.SessionMemo]] discipline (mutation-fingerprinted
-    * on the embeddings table, evicted with the session, build labeled
-    * `ivf_codebook_build`, `spark.graft.ivf.codebookCache=false` opts
-    * out): training the coarse quantizer is a FULL-CORPUS assignment
-    * pass (n·k kernel compares + the corpus count behind k), and a
-    * pipeline probing the same corpus repeatedly must not retrain per
-    * query. Only the raw-table chain is memoized — spec callers
-    * probing DERIVED frames still train on what they pass.
+  /** Session memo for the semantic-decontamination IVF codebook
+    * broadcast — the [[graft.internal.SessionMemo]] discipline
+    * (mutation-fingerprinted on the embeddings table, evicted with the
+    * session, build labeled `ivf_codebook_build`,
+    * `spark.graft.memo.enabled=false` opts out): training the coarse
+    * quantizer is a FULL-CORPUS assignment pass (n·k kernel compares +
+    * the corpus count behind k), and a pipeline probing the same
+    * corpus repeatedly must not retrain — or re-broadcast — per query.
+    * Only the raw-table chain is memoized — spec callers probing
+    * DERIVED frames still train on what they pass.
     */
   private val ivfCodebookCache =
-    new graft.internal.SessionMemo[(Array[Long], Array[Array[Double]])](
-      "spark.graft.ivf.codebookCache", "ivf_codebook_build")
+    new graft.internal.SessionMemo[VectorFunctions.Codebook]("ivf_codebook_build")
 
-  private def cachedDecontCodebook(s: SparkSession, dir: String)
-      : (Array[Long], Array[Array[Double]]) =
+  private def cachedDecontCodebook(s: SparkSession, dir: String): VectorFunctions.Codebook =
     ivfCodebookCache.getOrBuild(s, s"$dir/embeddings.parquet") {
       val e = Tables.embeddings(s, dir)
       collectCodebook(semanticDecontCodebook(e, semanticDecontK(e)))
@@ -398,7 +397,7 @@ object QualityFilters {
     // whole training step is the mean-update's ≤ k·dim rows.
     val a0 = e.select(
       element_at(VectorFunctions.topCells(col("embedding"),
-        seedRows.map(_._1), seedRows.map(_._2), 1), 1).as("cl"),
+        VectorFunctions.bcCodebook(seedRows.map(_._1), seedRows.map(_._2)), 1), 1).as("cl"),
       col("embedding"))
     ScalePatterns.meanCentroids(a0, col("cl"), col("embedding"), "cl")
   }
@@ -409,8 +408,8 @@ object QualityFilters {
     * the probe count at k, so every cell is probed).
     */
   private[operators] def semanticDecontHits(e: DataFrame, probes: Int,
-      codebook: Option[(Array[Long], Array[Array[Double]])] = None): DataFrame = {
-    val (cellIds, cells) = codebook.getOrElse(collectCodebook(
+      codebook: Option[VectorFunctions.Codebook] = None): DataFrame = {
+    val cb = codebook.getOrElse(collectCodebook(
       semanticDecontCodebook(e, semanticDecontK(e))))
     // Norms ride the row-sized sides; the (train × bench-in-cell)
     // candidate stream then pays one dot + divide per pair instead of
@@ -418,7 +417,7 @@ object QualityFilters {
     // [[VectorFunctions.cosinePrenorm]]).
     val ranked = e.select(col("vec_id"), col("embedding"),
       VectorFunctions.rowNorm(col("embedding")).as("nrm"),
-      VectorFunctions.topCells(col("embedding"), cellIds, cells, probes).as("cls"))
+      VectorFunctions.topCells(col("embedding"), cb, probes).as("cls"))
     val bench = ranked.filter(col("vec_id") % 13 === 0)
       .select(element_at(col("cls"), 1).as("cl"),
         col("vec_id").as("bench_id"), col("embedding").as("bv"), col("nrm").as("bn"))

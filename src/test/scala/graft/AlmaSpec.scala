@@ -437,6 +437,31 @@ class AlmaSpec extends SparkSpec {
       s"feedback did not flip the ranking: ${after.heuristics.map(_.id)}")
   }
 
+  test("batch retrieval ranks like retrieve once feedback flips the top heuristic") {
+    val alma = freshAlma()
+    for (v <- Seq("alpha", "beta"); i <- 1 to 3) {
+      alma.learn("helena", "deploy", s"deploy service $v", success = true,
+        strategyUsed = s"$v strategy", asOf = ts(s"2024-01-0$i 10:00:00"))
+    }
+    val Seq(top, bottom) = alma.retrieve("deploy service", "helena",
+      ts("2024-02-01 00:00:00"), topK = 2).heuristics.map(_.id)
+    (1 to 4).foreach { _ =>
+      alma.recordFeedback(bottom, MemoryType.Heuristics, "helena",
+        FeedbackSignal.ThumbsUp, ts("2024-02-01 01:00:00"))
+      alma.recordFeedback(top, MemoryType.Heuristics, "helena",
+        FeedbackSignal.ThumbsDown, ts("2024-02-01 01:00:00"))
+    }
+    val at = ts("2024-02-01 02:00:00")
+    val single = alma.retrieve("deploy service", "helena", at, topK = 2).heuristics
+    assert(single.map(_.id) == Seq(bottom, top), "premise: feedback flips retrieve's ranking")
+    val batchTop = alma.retrieveBatch(Seq("deploy service"), "helena", at, topK = 2)
+      .collect()
+      .filter(r => r.getAs[String]("memory_type") == MemoryType.Heuristics && r.getAs[Int]("rank") == 1)
+      .map(_.getAs[String]("id")).toSeq
+    assert(batchTop == Seq(single.head.id),
+      s"retrieveBatch rank-1 heuristic $batchTop, retrieve's ${single.head.id}")
+  }
+
   test("archive and restore round-trip every memory type") {
     val dir = Files.createTempDirectory("alma-test").toString
     val store = new MemoryStore(spark, dir)

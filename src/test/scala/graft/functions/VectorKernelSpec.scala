@@ -214,7 +214,7 @@ class VectorKernelSpec extends SparkSpec {
     for (p <- Seq(1, 3, 7, 99)) {
       val kernel = e.select(col("vec_id"),
           posexplode(VectorFunctions.topCells(col("embedding"),
-            cb.map(_._1), cb.map(_._2), p)))
+            VectorFunctions.bcCodebook(cb.map(_._1), cb.map(_._2)), p)))
         .select(col("vec_id"), (col("pos") + 1).as("rn"), col("col").as("cl"))
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
       val want = declared.filter(col("rn") <= math.min(p, 7))

@@ -87,8 +87,8 @@ class ObservabilitySpec extends SparkSpec {
     // may already hold this (session, dir)'s census from an earlier
     // spec — a hit runs no job, so nothing would surface. Attribution
     // is a property of the census JOB; force it to run by opting out of
-    // the sig memo here.
-    spark.conf.set("spark.graft.sig.cache", "false")
+    // the memos here.
+    spark.conf.set("spark.graft.memo.enabled", "false")
     try {
       graft.SparkEntry.queries("q_dedup_minhash_lsh")(spark, Sf).collect()
       awaitRecords(sink, "pair_guard_census", 1)
@@ -96,7 +96,7 @@ class ObservabilitySpec extends SparkSpec {
       assert(rec.nonEmpty, "guard census must appear under its own op label")
       assert(rec.get.status == "ok")
     } finally {
-      spark.conf.unset("spark.graft.sig.cache")
+      spark.conf.unset("spark.graft.memo.enabled")
       spark.listenerManager.unregister(sink)
     }
   }

@@ -403,23 +403,23 @@ class CurationSpec extends SparkSpec {
     // checkpoint scan on reuse; the shape under audit is the UNCACHED
     // scoring plan (what the first consumer — and any cache-off
     // pipeline — executes).
-    spark.conf.set("spark.graft.lm.scoreCache", "false")
+    spark.conf.set("spark.graft.memo.enabled", "false")
     try {
       val p = plan("q_lm_quality")
       val caps = "TakeOrderedAndProject".r.findAllIn(p).length
       assert(caps >= 2, s"both model tables must be top-k capped, found $caps:\n$p")
       assert(p.contains("BroadcastHashJoin"), s"model not broadcast:\n$p")
       assert(!p.contains("SortMergeJoin"), s"corpus shuffle-joined against the model:\n$p")
-    } finally spark.conf.unset("spark.graft.lm.scoreCache")
+    } finally spark.conf.unset("spark.graft.memo.enabled")
   }
 
   test("lm score cache: cached consumers reproduce the uncached scores") {
     val cached = run("q_lm_quality").collect()
-    spark.conf.set("spark.graft.lm.scoreCache", "false")
+    spark.conf.set("spark.graft.memo.enabled", "false")
     try {
       val fresh = run("q_lm_quality").collect()
       assert(cached.sameElements(fresh),
         "session score cache must be invisible to results")
-    } finally spark.conf.unset("spark.graft.lm.scoreCache")
+    } finally spark.conf.unset("spark.graft.memo.enabled")
   }
 }

@@ -316,4 +316,20 @@ class PlanShapeSpec extends SparkSpec {
     val shuffles = exec.collect { case s: ShuffleExchangeExec => s }
     assert(shuffles.length <= 5, s"ledger shuffles exceed the two-agg + sort budget:\n$exec")
   }
+
+  test("warm LSH legs pair the per-doc vectors: no signature regroup in the plan") {
+    // The signature state holds one checkpointed vector per doc, and
+    // the family key is the vector itself — so with the memo warm
+    // neither the pair join nor the family-capped representative pick
+    // may group exploded (band, sig) rows back into vectors.
+    def check(): Unit = Seq("q_dedup_minhash_lsh", "q_minhash_estimate").foreach { name =>
+      SparkEntry.queries(name)(spark, Sf): Unit // warm the memo
+      val p = plan(name)
+      assert(!p.contains("ObjectHashAggregate") && !p.contains("collect_list"),
+        s"$name regroups exploded signatures:\n$p")
+    }
+    check() // exact verdict
+    spark.conf.set(PairGuard.MaxPairsConf, "0") // routed: family representatives
+    try check() finally spark.conf.unset(PairGuard.MaxPairsConf)
+  }
 }

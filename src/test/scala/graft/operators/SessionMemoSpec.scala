@@ -18,15 +18,28 @@ class SessionMemoSpec extends SparkSpec {
     a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
   private def withCachesOff(body: => Unit): Unit = {
-    spark.conf.set("spark.graft.sig.cache", "false")
-    spark.conf.set("spark.graft.lm.scoreCache", "false")
-    spark.conf.set("spark.graft.bpe.mergeCache", "false")
-    spark.conf.set("spark.graft.ivf.codebookCache", "false")
-    try body finally {
-      spark.conf.unset("spark.graft.sig.cache")
-      spark.conf.unset("spark.graft.lm.scoreCache")
-      spark.conf.unset("spark.graft.bpe.mergeCache")
-      spark.conf.unset("spark.graft.ivf.codebookCache")
+    spark.conf.set("spark.graft.memo.enabled", "false")
+    try body finally spark.conf.unset("spark.graft.memo.enabled")
+  }
+
+  /** Counts Spark jobs started while a block runs. */
+  private final class JobCounter extends org.apache.spark.scheduler.SparkListener {
+    private val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+      jobs.incrementAndGet(): Unit
+    }
+    // The listener bus is async — wait until the count is stable.
+    def during(body: => Unit): Int = {
+      jobs.set(0)
+      body
+      var last = -1
+      var stable = 0
+      while (stable < 3) {
+        Thread.sleep(100)
+        val c = jobs.get()
+        if (c == last) stable += 1 else { stable = 0; last = c }
+      }
+      jobs.get()
     }
   }
 
@@ -94,44 +107,60 @@ class SessionMemoSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("memoflip").toString
     graft.io.Tables.documents(spark, Sf).write.parquet(s"$dir/documents.parquet")
     graft.io.Tables.embeddings(spark, Sf).write.parquet(s"$dir/embeddings.parquet")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(): Unit
-      }
-    }
-    // The listener bus is async — wait until the count is stable.
-    def jobsDuring(body: => Unit): Int = {
-      jobs.set(0)
-      body
-      var last = -1
-      var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val c = jobs.get()
-        if (c == last) stable += 1 else { stable = 0; last = c }
-      }
-      jobs.get()
-    }
+    val jobs = new JobCounter
     def construct(): Unit = SparkEntry.queries("q_hard_negatives")(spark, dir): Unit
-    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.addSparkListener(jobs)
     try {
       construct() // exact verdict: signature state, census, exact slot
-      val reads = jobsDuring {
+      val reads = jobs.during {
         graft.io.Tables.documents(spark, dir); graft.io.Tables.embeddings(spark, dir): Unit
       }
       spark.conf.set(PairGuard.MaxPairsConf, "0") // force route
       try {
-        val firstRouted = jobsDuring(construct())
+        val firstRouted = jobs.during(construct())
         assert(firstRouted > reads, s"the first routed call must build its slot ($firstRouted jobs, reads $reads)")
-        val secondRouted = jobsDuring(construct())
+        val secondRouted = jobs.during(construct())
         assert(secondRouted == reads,
           s"a second routed call must reuse the routed slot: ${secondRouted - reads} jobs beyond the schema reads")
       } finally spark.conf.unset(PairGuard.MaxPairsConf)
-      val exactAgain = jobsDuring(construct())
+      val exactAgain = jobs.during(construct())
       assert(exactAgain == reads,
         s"a flip back must be served the exact slot: ${exactAgain - reads} jobs beyond the schema reads")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally spark.sparkContext.removeSparkListener(jobs)
+  }
+
+  test("a calibration leg built after the LSH leg reuses its census: no pair_guard_census job") {
+    // q_dedup_minhash_lsh prices the bucket census inside the table's
+    // signature state; q_minhash_estimate prices the same number (same
+    // kernel, docs and null filter), so it must read that census rather
+    // than launch its own. Jobs are counted while the query is
+    // CONSTRUCTED (no action runs); the Parquet schema inference of the
+    // documents table is measured separately. A fresh table copy keeps
+    // earlier specs from having filled the state.
+    val dir = java.nio.file.Files.createTempDirectory("memocensus").toString
+    graft.io.Tables.documents(spark, Sf).write.parquet(s"$dir/documents.parquet")
+    val jobs = new JobCounter
+    def construct(name: String): Unit = SparkEntry.queries(name)(spark, dir): Unit
+    val sink = new MetricsSink
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      construct("q_dedup_minhash_lsh") // signature state + its census
+      val reads = jobs.during(graft.io.Tables.documents(spark, dir): Unit)
+      spark.listenerManager.register(sink)
+      jobs.during(construct("q_minhash_estimate")): Unit // builds the (sv, sh) frame
+      assert(sink.snapshot().exists(_.op == "sigset_cache_build"),
+        "the calibration frame build must surface under its own label")
+      assert(!sink.snapshot().exists(_.op == "pair_guard_census"),
+        "q_minhash_estimate re-ran the bucket census the signature state already holds")
+      // Warm, the leg launches nothing but (at most) its schema read.
+      val again = jobs.during(construct("q_minhash_estimate"))
+      assert(again <= reads,
+        s"a warm q_minhash_estimate construction launched $again jobs (schema reads: $reads)")
+      assert(!sink.snapshot().exists(_.op == "pair_guard_census"))
+    } finally {
+      spark.listenerManager.unregister(sink)
+      spark.sparkContext.removeSparkListener(jobs)
+    }
   }
 
   test("rewriting the table under a fixed path invalidates the memos (cache stays ON)") {
@@ -176,7 +205,7 @@ class SessionMemoSpec extends SparkSpec {
     val v1 = Array.tabulate[Byte](256)(_.toByte)
     val v2 = v1.clone(); v2(250) = (v2(250) ^ 0x7f).toByte // tail sample range
     val v3 = v1.clone(); v3(3) = (v3(3) ^ 0x7f).toByte     // head sample range
-    val memo = new graft.internal.SessionMemo[String]("spark.graft.test.swapMemo", "swap_memo_build")
+    val memo = new graft.internal.SessionMemo[String]("swap_memo_build")
     var builds = 0
     def get(): String = memo.getOrBuild(spark, dir.toString) { builds += 1; s"build$builds" }
     write(v1)
@@ -205,8 +234,7 @@ class SessionMemoSpec extends SparkSpec {
       assert(f.setLastModified(mtime))
     }
     (0 until n).foreach(i => write(i, Array.tabulate[Byte](128)(b => (b + i).toByte)))
-    val memo = new graft.internal.SessionMemo[String](
-      "spark.graft.test.boundMemo", "bound_memo_build")
+    val memo = new graft.internal.SessionMemo[String]("bound_memo_build")
     var builds = 0
     def get(): String = memo.getOrBuild(spark, dir.toString) { builds += 1; s"build$builds" }
     assert(get() == "build1" && get() == "build1", "unchanged table must hit")
@@ -256,8 +284,7 @@ class SessionMemoSpec extends SparkSpec {
       assert(f.setLastModified(1700000000000L))
     }
     (0 until n).foreach(i => write(i, 100 + i))
-    val memo = new graft.internal.SessionMemo[String](
-      "spark.graft.test.swapDirsMemo", "swap_dirs_memo_build")
+    val memo = new graft.internal.SessionMemo[String]("swap_dirs_memo_build")
     var builds = 0
     def get(): String = memo.getOrBuild(spark, dir.toString) { builds += 1; s"build$builds" }
     assert(get() == "build1" && get() == "build1", "unchanged table must hit")
@@ -301,8 +328,7 @@ class SessionMemoSpec extends SparkSpec {
     val bPath = dir.resolve("BB").resolve("part-00000.bin").toString
     assert(aPath.hashCode == bPath.hashCode,
       "test premise: the two full paths must hashCode-collide")
-    val memo = new graft.internal.SessionMemo[String](
-      "spark.graft.test.hashCollMemo", "hash_coll_memo_build")
+    val memo = new graft.internal.SessionMemo[String]("hash_coll_memo_build")
     var builds = 0
     def get(): String = memo.getOrBuild(spark, dir.toString) { builds += 1; s"build$builds" }
     assert(get() == "build1" && get() == "build1", "unchanged table must hit")
@@ -329,8 +355,7 @@ class SessionMemoSpec extends SparkSpec {
       assert(f.setLastModified(1700000000000L))
     }
     (0 until n).foreach(write)
-    val memo = new graft.internal.SessionMemo[String](
-      "spark.graft.test.renameOnlyMemo", "rename_only_memo_build")
+    val memo = new graft.internal.SessionMemo[String]("rename_only_memo_build")
     var builds = 0
     def get(): String = memo.getOrBuild(spark, dir.toString) { builds += 1; s"build$builds" }
     assert(get() == "build1" && get() == "build1", "unchanged table must hit")
