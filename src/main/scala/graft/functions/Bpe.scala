@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Byte-pair-encoding subword tokenizer — the tokenizer-primary half of
   * the reference's token accounting (alma/utils/tokenizer.py:21-520
@@ -11,11 +12,15 @@ import org.apache.spark.sql.functions._
   * distinct pretokens — O(100k) for natural text regardless of corpus
   * size, the same reason real BPE trainers work on word-frequency
   * dicts), then the merge loop runs on the driver over that bounded
-  * table. Encoding is a pure per-row column expression (codegen'd
-  * built-ins, ANSI-expressible so the oracle can replicate it).
+  * table. [[trainRounds]] is the engine's one merge loop: it trains the
+  * merge lists of the budget/fertility queries and the Alma prompt
+  * gate, and it IS the `q_bpe_train` / `q_bpe_compression` trainer
+  * ([[graft.operators.TokenizerTrain]]). Encoding is a pure per-row
+  * column expression (codegen'd built-ins, ANSI-expressible so the
+  * oracle can replicate it).
   *
   * Representation trick shared by the Scala, Column, and oracle-SQL
-  * implementations: a word is its characters wrapped as `|c|` symbols
+  * encoders: a word is its characters wrapped as `|c|` symbols
   * concatenated (`"abc"` → `"|a||b||c|"`), so applying merge (a, b) is
   * the literal replace `|a||b|` → `|ab|`. Left-to-right non-overlapping
   * replacement — the semantics of Java's `String.replace`, Spark's
@@ -86,29 +91,63 @@ object Bpe {
     sb.toString
   }
 
-  private def symbols(wrapped: String): Array[String] =
-    if (wrapped.isEmpty) Array.empty // wrap("") — an empty word has no symbols
-    else wrapped.substring(1, wrapped.length - 1)
-      .split(java.util.regex.Pattern.quote("||"), -1)
-
-  /** Learn `numMerges` merges from a word-frequency table: each round
-    * counts adjacent symbol pairs weighted by word frequency (every
-    * index position counts, matching the oracle SQL), picks the most
-    * frequent pair (ties break lexicographically), and applies it
-    * everywhere. Deterministic for a given vocabulary.
+  /** One training round: the merged pair, its weighted pair count, and
+    * the corpus token count (symbols × word frequency) after the merge
+    * is applied.
     */
-  def trainMerges(wordFreqs: Seq[(String, Long)], numMerges: Int): Seq[(String, String)] = {
-    // An empty word has no symbols and no pairs — drop it rather than
-    // let it poison the pair scan (the distributed vocabulary pass never
-    // produces one, but this is a public seam).
-    var words = wordFreqs.collect { case (w, f) if w.nonEmpty => (wrap(w), f) }
-    val merges = Seq.newBuilder[(String, String)]
+  final case class Round(lhs: String, rhs: String, pairCnt: Long, tokensAfter: Long)
+
+  /** A word's code points as symbols — a supplementary character is
+    * one symbol, like [[wrap]] and Spark's/DuckDB's per-character
+    * `substr`.
+    */
+  private def codePoints(word: String): Array[String] = {
+    val out = Array.newBuilder[String]
+    var i = 0
+    while (i < word.length) {
+      val n = Character.charCount(word.codePointAt(i))
+      out += word.substring(i, i + n)
+      i += n
+    }
+    out.result()
+  }
+
+  /** Pair order for argmax ties: UTF-8 byte order of (lhs, rhs), the
+    * order Spark's `orderBy` and DuckDB's `ORDER BY` give strings.
+    * Scala's `String` order is UTF-16 code-unit order, which disagrees
+    * with it once a supplementary character meets a BMP character at or
+    * above U+E000.
+    */
+  private def pairBefore(a: (String, String), b: (String, String)): Boolean = {
+    def utf8(x: String) = UTF8String.fromString(x)
+    val c = utf8(a._1).compareTo(utf8(b._1))
+    if (c != 0) c < 0 else utf8(a._2).compareTo(utf8(b._2)) < 0
+  }
+
+  /** The BPE merge loop as a round trace — the one trainer behind the
+    * merge list ([[trainMerges]]) and the `q_bpe_train` /
+    * `q_bpe_compression` queries. Each round counts adjacent symbol
+    * pairs weighted by word frequency (every position counts, so "aaa"
+    * holds (a, a) twice), picks the most frequent pair (ties by
+    * (lhs, rhs) in UTF-8 byte order), and applies it greedily left to
+    * right in every word ("aaa" under (a, a) becomes [aa, a]). Symbols
+    * are code points, kept as arrays, so any character — the pipe
+    * included — can be a symbol. Training stops early once no word has
+    * two symbols left: the trace then holds fewer than `numMerges`
+    * rounds. Deterministic for a given vocabulary, in any order.
+    *
+    * The vocabulary lives on the driver, as the word table of MLlib's
+    * Word2Vec and CountVectorizer does: distinct words, not the corpus,
+    * bound its memory. Empty words carry no symbols and are dropped.
+    */
+  def trainRounds(wordFreqs: Seq[(String, Long)], numMerges: Int): Seq[Round] = {
+    var words = wordFreqs.collect { case (w, f) if w.nonEmpty => (codePoints(w), f) }
+    val rounds = Seq.newBuilder[Round]
     var i = 0
     var exhausted = false
     while (i < numMerges && !exhausted) {
       val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
-      words.foreach { case (s, f) =>
-        val syms = symbols(s)
+      words.foreach { case (syms, f) =>
         var k = 0
         while (k < syms.length - 1) {
           val p = (syms(k), syms(k + 1))
@@ -118,15 +157,32 @@ object Bpe {
       }
       if (counts.isEmpty) exhausted = true
       else {
-        val (a, b) = counts.minBy { case ((a, b), c) => (-c, a, b) }._1
-        merges += ((a, b))
-        val (pat, rep) = (s"|$a||$b|", s"|$a$b|")
-        words = words.map { case (s, f) => (s.replace(pat, rep), f) }
+        val ((a, b), c) = counts.reduce { (x, y) =>
+          if (y._2 > x._2 || (y._2 == x._2 && pairBefore(y._1, x._1))) y else x
+        }
+        val ab = a + b
+        words = words.map { case (syms, f) =>
+          val out = Array.newBuilder[String]
+          var k = 0
+          while (k < syms.length) {
+            if (k < syms.length - 1 && syms(k) == a && syms(k + 1) == b) {
+              out += ab; k += 2
+            } else { out += syms(k); k += 1 }
+          }
+          (out.result(), f)
+        }
+        rounds += Round(a, b, c, words.map { case (syms, f) => syms.length * f }.sum)
         i += 1
       }
     }
-    merges.result()
+    rounds.result()
   }
+
+  /** Learn up to `numMerges` merges from a word-frequency table: the
+    * merge pairs of [[trainRounds]].
+    */
+  def trainMerges(wordFreqs: Seq[(String, Long)], numMerges: Int): Seq[(String, String)] =
+    trainRounds(wordFreqs, numMerges).map(r => (r.lhs, r.rhs))
 
   /** Natural text has a bounded vocabulary, but adversarial corpora
     * (random strings, base64 blobs) do not — the trainer keeps only the

@@ -2,44 +2,57 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Readers for the benchmark tables (TPC-H-ish star schema + events +
   * documents + embeddings), mirroring the reference's storage scans
   * (reference: alma/storage/sqlite_local.py:934-983) as plain Parquet
   * scans so Catalyst gets native predicate/column pushdown.
   *
+  * Each table's schema is inferred once per table state: a
+  * [[graft.internal.SessionMemo]] keyed by the table path (its
+  * file-listing fingerprint makes a rewritten file re-infer) holds the
+  * schema, and every read declares it, so a warm load launches no Spark
+  * job. With `spark.graft.memo.enabled=false` every load infers.
+  * Loading never writes the caller's session conf.
+  *
   * Scale note: at 100 TB these reads become partitioned-directory scans;
   * nothing here materializes data on the driver.
   */
 object Tables {
 
-  /** Read one table. `events.ts` is written as parquet TIMESTAMP(NANOS),
-    * which Spark's vectorized reader rejects; we read it as raw long
-    * nanos (legacy conf) and convert to a microsecond TimestampType
-    * column so downstream operators see a normal timestamp.
+  private val schemaMemo = new graft.internal.SessionMemo[StructType]("schema_build")
+
+  /** Parquet schema inference, run on a child session that reads
+    * TIMESTAMP(NANOS) as raw long nanos: Spark rejects that type
+    * otherwise. The conf stays on the child; the declared schema then
+    * reads the column as LongType without it.
     */
+  private def inferSchema(spark: SparkSession, path: String): StructType = {
+    val scoped = spark.newSession()
+    scoped.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    scoped.read.parquet(path).schema
+  }
+
+  /** Read one table with its memoized schema. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/events.parquet")
-      // The generator has shipped three physical encodings of `ts` across
-      // rounds; normalize all of them to TimestampType (micros) so every
-      // downstream unix_micros()/window sees one type:
-      //  - TIMESTAMP(NANOS): surfaces as a raw long under the legacy conf
-      //  - TIMESTAMP_NTZ (isAdjustedToUTC=false): cast via the session
-      //    time zone — every entrypoint pins spark.sql.session.timeZone
-      //    to UTC, so the wall clock maps 1:1 onto epoch micros exactly
-      //    as DuckDB reads the same naive values
-      //  - TIMESTAMP(MICROS): already what we want
-      raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          raw.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
-        case _ => raw
-      }
-    } else {
-      spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val raw = spark.read.schema(schemaMemo.getOrBuild(spark, path)(inferSchema(spark, path)))
+      .parquet(path)
+    // The generator has shipped three physical encodings of `events.ts`
+    // across rounds; normalize all of them to TimestampType (micros) so
+    // every downstream unix_micros()/window sees one type:
+    //  - TIMESTAMP(NANOS): inferred (and declared) as raw long nanos
+    //  - TIMESTAMP_NTZ (isAdjustedToUTC=false): cast via the session
+    //    time zone — every entrypoint pins spark.sql.session.timeZone
+    //    to UTC, so the wall clock maps 1:1 onto epoch micros exactly
+    //    as DuckDB reads the same naive values
+    //  - TIMESTAMP(MICROS): already what we want
+    if (name != "events") raw
+    else raw.schema("ts").dataType match {
+      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
+      case _ => raw
     }
   }
 

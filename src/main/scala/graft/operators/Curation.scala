@@ -509,8 +509,11 @@ object Curation {
     * stats allow) — a 20 %-of-corpus backfill at 100 TB must not be
     * forced into executor memory by a hint that was only ever true
     * for micro-batches.
-    */
-  /** Candidate near-dup pairs with their matched-band counts, ONE ROW
+    *
+    * Both inputs are per-doc `(doc_id, sv)` vector frames
+    * ([[TextAnalysisShared.DocSigs.vectors]] or family representatives
+    * of it), so no side regroups exploded signatures. The output is
+    * the candidate pairs with their matched-band counts, ONE ROW
     * PER PAIR: both sides of the (band, sig) bucket join carry their
     * doc's band-ordered signature VECTOR, so a matched row computes
     * `bands_matched` inline (count of equal positions — exactly the
@@ -528,29 +531,29 @@ object Curation {
     * the sig-sized probe side and derives `origin` post-join.
     */
   private[operators] def incrementalCandidates(
-      batchSigs: DataFrame, indexSigs: DataFrame,
+      batchVecs: DataFrame, indexVecs: DataFrame,
       maxBroadcastSigRows: Long = MaxBroadcastSigRows,
       nBands: Int = 4,
       knownBatchSigRows: Option[Long] = None): DataFrame = {
-    // The broadcast decision needs the batch sig row count; when the
-    // caller's PairGuard census already aggregated it (one sum rides
-    // along with the pair pricing), thread it through instead of
-    // launching a second job over a frame the census just scanned. An
-    // UPPER BOUND is sound here: over-counting can only withhold the
-    // hint, and AQE's runtime broadcast still applies.
+    // The broadcast decision needs the batch sig row count (nBands per
+    // vector); when the caller's PairGuard census already aggregated it
+    // (one sum rides along with the pair pricing), thread it through
+    // instead of launching a second job over a frame the census just
+    // scanned. An UPPER BOUND is sound here: over-counting can only
+    // withhold the hint, and AQE's runtime broadcast still applies.
     val batchSized =
-      knownBatchSigRows.getOrElse(batchSigs.count()) <= maxBroadcastSigRows
+      knownBatchSigRows.getOrElse(batchVecs.count() * nBands) <= maxBroadcastSigRows
     def hinted(df: DataFrame): DataFrame = if (batchSized) broadcast(df) else df
-    import TextAnalysisShared.{firstMatchBand, matchedBands, sigVectors}
-    val probe = sigVectors(indexSigs)
+    import TextAnalysisShared.{firstMatchBand, matchedBands}
+    val probe = indexVecs
       .select(col("doc_id").as("doc_other"), col("sv").as("svo"),
         lit(false).as("is_batch"))
-      .unionByName(sigVectors(batchSigs)
+      .unionByName(batchVecs
         .select(col("doc_id").as("doc_other"), col("sv").as("svo"),
           lit(true).as("is_batch")))
       .select(col("doc_other"), col("svo"), col("is_batch"),
         posexplode(col("svo")).as(Seq("band", "sig")))
-    val build = sigVectors(batchSigs)
+    val build = batchVecs
       .select(col("doc_id").as("doc_new"), col("sv").as("svn"),
         posexplode(col("sv")).as(Seq("band", "sig")))
     probe.join(hinted(build), Seq("band", "sig"))
@@ -565,11 +568,10 @@ object Curation {
     // The signature chain is the query's linear floor and is read FOUR
     // times downstream (the broadcast-decision count, the batch side of
     // both candidate joins, and the index side) — materialize it once;
-    // the joins then re-read 4 small rows per doc instead of replaying
+    // the joins then re-read one small vector per doc instead of replaying
     // the text scan + md5 kernel per consumer (session-memoized:
     // [[TextAnalysisShared.cachedDocSigs]]).
     val docSigs = TextAnalysisShared.cachedDocSigs(s, dir)
-    val sigs = docSigs.frame
     // The candidate OUTPUT is one row per (batch doc, bucket partner) —
     // quadratic in duplicate-family size like every LSH pair contract
     // (measured: the join, not the sig build, was 50 of the 57 s at
@@ -594,7 +596,7 @@ object Curation {
     // itself, as before.
     var censusBatchSigRows: Option[Long] = None
     val exact = PairGuard.allowExact(s, "q_dedup_incremental") {
-      val row = sigs.withColumn("isb", (col("doc_id") % 5 === 0).cast("long"))
+      val row = docSigs.frame.withColumn("isb", (col("doc_id") % 5 === 0).cast("long"))
         .groupBy("band", "sig")
         .agg(sum(col("isb")).as("b"), sum(lit(1L) - col("isb")).as("i"))
         .agg(coalesce(sum(col("b") * col("i") +
@@ -604,9 +606,8 @@ object Curation {
       censusBatchSigRows = Some(row.getLong(1))
       row.getLong(0)
     }
-    val src = if (exact) sigs
-      else TextAnalysisShared.explodeVectors(
-        Dedup.familyRepsStratified(docSigs.vectors, col("doc_id") % 5 === 0))
+    val src = if (exact) docSigs.vectors
+      else Dedup.familyRepsStratified(docSigs.vectors, col("doc_id") % 5 === 0)
     val batch = src.filter(col("doc_id") % 5 === 0)
     val index = src.filter(col("doc_id") % 5 =!= 0)
     // [[incrementalCandidates]] emits ONE row per pair with its

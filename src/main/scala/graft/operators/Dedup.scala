@@ -846,16 +846,6 @@ private[graft] object TextAnalysisShared {
       .map(i => (element_at(svA, i + 1) === element_at(svB, i + 1)).cast("long"))
       .reduce(_ + _)
 
-  /** Band-ordered signature vector per doc from an exploded
-    * (doc_id, band, sig) frame — a doc-sized aggregate (≤ nBands rows
-    * per doc in, one out). Only for exploded frames built outside the
-    * signature state (the incremental leg's batch/index split and its
-    * specs); [[DocSigs.vectors]] already holds the vectors.
-    */
-  def sigVectors(sigs: DataFrame): DataFrame = sigs.groupBy("doc_id")
-    .agg(transform(array_sort(collect_list(struct(col("band"), col("sig")))),
-      x => x.getField("sig")).as("sv"))
-
   /** The one first-match LSH pair join: `vecs` holds one row per doc
     * with its band-ordered signature vector `sv` ([[DocSigs.vectors]]).
     * Each `carry` column rides both join sides as `<c>_a` / `<c>_b`,

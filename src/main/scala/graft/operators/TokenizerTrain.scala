@@ -1,129 +1,86 @@
 package graft.operators
 
 import graft.Q
+import graft.functions.Bpe
 import graft.io.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-/** Distributed BPE merge training (Sennrich et al. 2016) — the step
-  * that PRODUCES the merge tables `q_bpe_tokens`/`q_bpe_fertility`
-  * consume. The classic trainer trick makes this cheap at any corpus
-  * size: one map-side-combined aggregate collapses the corpus to its
-  * (word, count) vocabulary, and every training round after that runs
-  * on the bounded vocab frame — pair counting is a explode over
-  * per-word symbol arrays weighted by word count, the argmax merge is a
-  * 1-row frame, and applying it is a greedy left fold over each word's
-  * symbols (the same left-to-right scan reference BPE implementations
-  * use, here as a codegen'd `aggregate` HOF — no UDF). The chosen merge
-  * stays a DataFrame end-to-end (crossJoin of a broadcast 1-row frame),
-  * so no round ever collects to the driver.
+import scala.jdk.CollectionConverters._
+
+/** BPE merge training (Sennrich et al. 2016) — the step that PRODUCES
+  * the merge tables `q_bpe_tokens`/`q_bpe_fertility` consume. The
+  * classic trainer split: one distributed, map-side-combined aggregate
+  * collapses the corpus to its (word, count) vocabulary, and every
+  * training round after that runs on the collected vocabulary in the
+  * driver, through the engine's one merge loop
+  * ([[graft.functions.Bpe.trainRounds]]): pair counts weighted by word
+  * count, the argmax merge with ties by (lhs, rhs) in UTF-8 byte order,
+  * and a greedy left-to-right apply over each word's code-point
+  * symbols.
   *
-  * Scale shape: corpus → vocab is the only corpus-sized exchange
-  * (map-side combine leaves vocab-sized partials); each round's pair
-  * aggregate is bounded by distinct symbol pairs, and the merge apply
-  * is a pure projection of the vocab frame. A 100 TB corpus trains in
-  * R vocab-sized rounds after one corpus scan.
+  * Scale shape: corpus → vocab is the only corpus-sized pass, and the
+  * only Spark work. The driver holds the vocabulary — distinct words,
+  * not the corpus — the way MLlib's Word2Vec and CountVectorizer hold
+  * theirs; there is no cap, because the query and its oracle define
+  * none. The outputs are small local frames, so the query plan is a
+  * local scan.
   *
-  * Output: the first R learned merges as (round, lhs, rhs, pair_cnt) —
-  * argmax ties broken by (lhs, rhs) so both engines learn the
-  * identical table.
+  * Output: the first R learned merges as (round, lhs, rhs, pair_cnt).
+  * Once no pair remains, training stops: `q_bpe_train` emits no further
+  * rounds and every later `q_bpe_compression` total is NULL — what the
+  * oracle's empty argmax CTE gives too.
   */
 object TokenizerTrain {
 
   private val BpeRounds = 3
 
-  /** (w, cnt, syms): the corpus vocabulary with per-character symbol
-    * arrays. Empty tokens (doubled separators) carry no pair signal and
-    * would make `sequence(1, 0)` run DESCENDING — filtered on both
+  /** The corpus vocabulary (word, count) on the driver. Empty tokens
+    * (doubled separators) carry no pair signal — filtered on both
     * engines.
     */
-  private def vocab(s: SparkSession, dir: String): DataFrame =
+  private def vocab(s: SparkSession, dir: String): Seq[(String, Long)] =
     Tables.spread(Tables.documents(s, dir))
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .select(col("w"), col("cnt"),
-        transform(sequence(lit(1), length(col("w"))),
-          i => col("w").substr(i, lit(1))).as("syms"))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
 
-  /** Adjacent-symbol pair counts over the vocab, weighted by word
-    * count.
-    */
-  private def pairCounts(words: DataFrame): DataFrame =
-    words
-      .select(col("cnt"), explode(
-        when(size(col("syms")) >= 2,
-          transform(sequence(lit(1), size(col("syms")) - 1),
-            i => struct(element_at(col("syms"), i).as("l"),
-              element_at(col("syms"), i + 1).as("r"))))
-          .otherwise(array().cast("array<struct<l:string,r:string>>"))).as("p"))
-      .groupBy(col("p.l").as("lhs"), col("p.r").as("rhs"))
-      .agg(sum(col("cnt")).as("pair_cnt"))
+  private def local(s: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
+    s.createDataFrame(rows.asJava, schema)
 
-  /** The round's merge: highest pair count, ties by (lhs, rhs). */
-  private def top1(pairs: DataFrame): DataFrame =
-    pairs.orderBy(col("pair_cnt").desc, col("lhs"), col("rhs")).limit(1)
-
-  /** Greedy left-to-right merge application: fold each word's symbols,
-    * joining the last accumulated symbol with the current one whenever
-    * they equal the merge pair — the same scan order reference BPE
-    * uses, so "aaa" under (a,a) becomes [aa, a]. `try_element_at`
-    * (not `element_at`): ANSI mode errors on the empty-accumulator
-    * probe, and AND does not guarantee short-circuit order.
-    */
-  private def applyMerge(words: DataFrame, merge: DataFrame): DataFrame =
-    words
-      .crossJoin(broadcast(merge.select(col("lhs").as("ml"), col("rhs").as("mr"))))
-      .select(col("w"), col("cnt"),
-        aggregate(col("syms"), array().cast("array<string>"),
-          (acc, x) => when(
-            try_element_at(acc, lit(-1)) === col("ml") && x === col("mr"),
-            concat(slice(acc, lit(1), size(acc) - 1),
-              array(concat(col("ml"), col("mr")))))
-            .otherwise(concat(acc, array(x)))).as("syms"))
-
-  /** The training loop's full trace: (merge frame, words-after-merge)
-    * per round, over the materialized vocab. The vocab is bounded and
-    * every round re-reads it — localCheckpoint instead of re-running
-    * the corpus aggregate per round. Each round's merge row and
-    * post-merge vocab are ALSO checkpointed (r16): both have ≥ 2
-    * downstream consumers (the merge feeds applyMerge and the output
-    * union; round r's words feed round r+1's pair counts, its apply,
-    * and the compression-curve aggregate), and without materialization
-    * the lazy trees replicate every earlier round's explode + argmax +
-    * fold per consumer — q_bpe_compression's initial plan carried 52
-    * Exchanges for a 3-round trainer. All frames are vocab-sized or
-    * 1-row, never corpus-sized.
-    */
-  private def trainRounds(s: SparkSession, dir: String)
-      : (DataFrame, Seq[(DataFrame, DataFrame)]) = {
-    val w0 = vocab(s, dir).localCheckpoint(true)
-    var words = w0
-    (w0, (1 to BpeRounds).map { r =>
-      val m = top1(pairCounts(words)).localCheckpoint(true)
-      words = applyMerge(words, m).localCheckpoint(true)
-      (m.select(lit(r).as("round"), col("lhs"), col("rhs"), col("pair_cnt")),
-        words)
-    })
-  }
+  private val TrainSchema = StructType(Seq(
+    StructField("round", IntegerType, nullable = false),
+    StructField("lhs", StringType), StructField("rhs", StringType),
+    StructField("pair_cnt", LongType)))
 
   private def bpeTrain(s: SparkSession, dir: String): DataFrame =
-    trainRounds(s, dir)._2.map(_._1).reduce(_ unionByName _).orderBy("round")
+    local(s, TrainSchema, Bpe.trainRounds(vocab(s, dir), BpeRounds).zipWithIndex.map {
+      case (r, i) => Row(i + 1, r.lhs, r.rhs, r.pairCnt)
+    })
+
+  private val CompressionSchema = StructType(Seq(
+    StructField("round", IntegerType, nullable = false),
+    StructField("total_tokens", LongType)))
 
   /** The trainer→tokenizer handoff audited as a compression curve:
     * corpus token count after 0..R merges (round 0 = raw characters of
-    * the non-empty words). Each round with a positive pair count must
-    * strictly shrink the corpus — spec-pinned; at full vocab size this
-    * curve is the fertility trajectory a tokenizer team actually tracks
-    * while training.
+    * the non-empty words; NULL over an empty vocabulary, like a SQL sum
+    * over no rows). Each round with a positive pair count must strictly
+    * shrink the corpus — spec-pinned; at full vocab size this curve is
+    * the fertility trajectory a tokenizer team actually tracks while
+    * training.
     */
   private def bpeCompression(s: SparkSession, dir: String): DataFrame = {
-    val (w0, rounds) = trainRounds(s, dir)
-    def sizeOf(words: DataFrame, r: Int): DataFrame =
-      words.agg(sum(size(col("syms")) * col("cnt")).as("total_tokens"))
-        .select(lit(r).as("round"), col("total_tokens"))
-    (sizeOf(w0, 0) +: rounds.zipWithIndex.map { case ((_, w), i) => sizeOf(w, i + 1) })
-      .reduce(_ unionByName _).orderBy("round")
+    val words = vocab(s, dir)
+    val raw: Option[Long] =
+      if (words.isEmpty) None
+      else Some(words.map { case (w, c) => w.codePointCount(0, w.length) * c }.sum)
+    val after = Bpe.trainRounds(words, BpeRounds).map(r => Some(r.tokensAfter))
+    local(s, CompressionSchema, (raw +: after.padTo(BpeRounds, None)).zipWithIndex.map {
+      case (t, r) => Row(r, t.map(Long.box).orNull)
+    })
   }
 
   // One round as oracle CTEs: pair counts from the given words CTE,

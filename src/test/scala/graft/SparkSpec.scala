@@ -32,3 +32,26 @@ object SparkSpec {
     s
   }
 }
+
+/** Counts Spark jobs started while a block runs; register it with
+  * `sparkContext.addSparkListener` around the measured blocks.
+  */
+final class JobCounter extends org.apache.spark.scheduler.SparkListener {
+  private val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+  override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+    jobs.incrementAndGet(): Unit
+  }
+  // The listener bus is async — wait until the count is stable.
+  def during(body: => Unit): Int = {
+    jobs.set(0)
+    body
+    var last = -1
+    var stable = 0
+    while (stable < 3) {
+      Thread.sleep(100)
+      val c = jobs.get()
+      if (c == last) stable += 1 else { stable = 0; last = c }
+    }
+    jobs.get()
+  }
+}

@@ -20,6 +20,26 @@ class BpeSpec extends SparkSpec {
     assert(merges == Seq(("e", "s"), ("es", "t"), ("l", "o")), s"got $merges")
   }
 
+  test("trainer ties break in UTF-8 byte order, as Spark and DuckDB sort strings") {
+    // U+FFFD sorts BEFORE U+1F600 as UTF-8 bytes (EF.. < F0..) but AFTER
+    // it as UTF-16 code units (FFFD > D83D), so Scala's String order
+    // would pick the emoji pair.
+    val (bmp, emoji) = ("\uFFFD", new String(Character.toChars(0x1F600)))
+    val merges = Bpe.trainMerges(Seq((s"${emoji}a", 1L), (s"${bmp}a", 1L)), 1)
+    assert(merges == Seq((bmp, "a")), s"got $merges")
+    val sparkFirst = spark.createDataFrame(Seq((emoji, "a"), (bmp, "a")))
+      .toDF("lhs", "rhs").orderBy("lhs", "rhs").head().getString(0)
+    assert(sparkFirst == bmp, "Spark's string order is the trainer's tie order")
+  }
+
+  test("the round trace carries each merge's pair count and the corpus size after it") {
+    // "aaa":2 "ab":1 — round 1: (a,a)=4 beats (a,b)=1 → [aa, a]×2 + [a, b]
+    // = 6 tokens; round 2: (a,b)=1 and (aa,a)=2 → (aa,a) → [aaa]×2 + [a, b]
+    // = 4 tokens.
+    val rounds = Bpe.trainRounds(Seq(("aaa", 2L), ("ab", 1L)), 2)
+    assert(rounds == Seq(Bpe.Round("a", "a", 4L, 6L), Bpe.Round("aa", "a", 2L, 4L)), s"got $rounds")
+  }
+
   test("trainer stops when no pairs remain") {
     val merges = Bpe.trainMerges(Seq(("ab", 1L)), 10)
     assert(merges == Seq(("a", "b")))

@@ -123,7 +123,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("incremental broadcast is gated: hinted for a micro-batch, withheld when oversized") {
-    val sigs = TextAnalysisShared.bandedMinhashSigs(Tables.documents(spark, Sf), 4)
+    val sigs = TextAnalysisShared.minhashVectors(Tables.documents(spark, Sf), 4)
     val batch = sigs.filter(col("doc_id") % 5 === 0)
     val index = sigs.filter(col("doc_id") % 5 =!= 0)
     // Disable size-based auto-broadcast (planner AND adaptive) so the
@@ -157,11 +157,11 @@ class CurationSpec extends SparkSpec {
   }
 
   test("a threaded census count makes candidate construction job-free (and changes nothing)") {
-    val sigs = TextAnalysisShared.bandedMinhashSigs(Tables.documents(spark, Sf), 4)
+    val sigs = TextAnalysisShared.minhashVectors(Tables.documents(spark, Sf), 4)
       .localCheckpoint(true)
     val batch = sigs.filter(col("doc_id") % 5 === 0)
     val index = sigs.filter(col("doc_id") % 5 =!= 0)
-    val n = batch.count()
+    val n = batch.count() * 4
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {

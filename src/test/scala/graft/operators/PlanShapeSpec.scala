@@ -320,9 +320,11 @@ class PlanShapeSpec extends SparkSpec {
   test("warm LSH legs pair the per-doc vectors: no signature regroup in the plan") {
     // The signature state holds one checkpointed vector per doc, and
     // the family key is the vector itself — so with the memo warm
-    // neither the pair join nor the family-capped representative pick
-    // may group exploded (band, sig) rows back into vectors.
-    def check(): Unit = Seq("q_dedup_minhash_lsh", "q_minhash_estimate").foreach { name =>
+    // neither the pair join (the incremental batch-vs-index join
+    // included) nor the family-capped representative pick may group
+    // exploded (band, sig) rows back into vectors.
+    def check(): Unit = Seq("q_dedup_minhash_lsh", "q_minhash_estimate",
+        "q_dedup_incremental").foreach { name =>
       SparkEntry.queries(name)(spark, Sf): Unit // warm the memo
       val p = plan(name)
       assert(!p.contains("ObjectHashAggregate") && !p.contains("collect_list"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{JobCounter, SparkEntry, SparkSpec}
 import graft.observability.MetricsSink
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -20,27 +20,6 @@ class SessionMemoSpec extends SparkSpec {
   private def withCachesOff(body: => Unit): Unit = {
     spark.conf.set("spark.graft.memo.enabled", "false")
     try body finally spark.conf.unset("spark.graft.memo.enabled")
-  }
-
-  /** Counts Spark jobs started while a block runs. */
-  private final class JobCounter extends org.apache.spark.scheduler.SparkListener {
-    private val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      jobs.incrementAndGet(): Unit
-    }
-    // The listener bus is async — wait until the count is stable.
-    def during(body: => Unit): Int = {
-      jobs.set(0)
-      body
-      var last = -1
-      var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val c = jobs.get()
-        if (c == last) stable += 1 else { stable = 0; last = c }
-      }
-      jobs.get()
-    }
   }
 
   test("the CC-labels memo is output-invariant (q_dedup_canonical cached == uncached)") {
@@ -100,10 +79,9 @@ class SessionMemoSpec extends SparkSpec {
     // flip to routed builds the routed frame once, a second routed call
     // reuses it, and a flip back is served the exact frame built before
     // the flip. Jobs are counted while the query is CONSTRUCTED (no
-    // action runs); every construction also pays the Parquet schema
-    // inference of its two tables, so that is measured separately and
-    // subtracted. A fresh table copy keeps earlier specs from having
-    // filled either slot.
+    // action runs); every construction also loads its two tables, so
+    // their reads are measured separately and subtracted. A fresh table
+    // copy keeps earlier specs from having filled either slot.
     val dir = java.nio.file.Files.createTempDirectory("memoflip").toString
     graft.io.Tables.documents(spark, Sf).write.parquet(s"$dir/documents.parquet")
     graft.io.Tables.embeddings(spark, Sf).write.parquet(s"$dir/embeddings.parquet")
@@ -134,8 +112,8 @@ class SessionMemoSpec extends SparkSpec {
     // signature state; q_minhash_estimate prices the same number (same
     // kernel, docs and null filter), so it must read that census rather
     // than launch its own. Jobs are counted while the query is
-    // CONSTRUCTED (no action runs); the Parquet schema inference of the
-    // documents table is measured separately. A fresh table copy keeps
+    // CONSTRUCTED (no action runs); the read of the documents table is
+    // measured separately. A fresh table copy keeps
     // earlier specs from having filled the state.
     val dir = java.nio.file.Files.createTempDirectory("memocensus").toString
     graft.io.Tables.documents(spark, Sf).write.parquet(s"$dir/documents.parquet")
