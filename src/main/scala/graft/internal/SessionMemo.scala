@@ -5,15 +5,17 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.SparkSession
 
 /** Per-(session, table-state) memo of an expensive derived value —
-  * the one cache discipline in the engine. Six instances use it: the
+  * the one cache discipline in the engine. Eight instances use it: the
   * signature state ([[graft.operators.TextAnalysisShared.DocSigs]]),
   * the LM scores and bigram counts ([[graft.operators.Curation]]), the
-  * BPE merge list ([[graft.operators.Lifecycle]]), the IVF codebook
-  * broadcast ([[graft.operators.QualityFilters]]) and each table's
-  * Parquet schema ([[graft.io.Tables]]). Within a session the first
-  * consumer of a shared chain pays the build (typically a
-  * `localCheckpoint(true)`, or the schema-inference job) and later
-  * consumers re-read the result.
+  * BPE merge list ([[graft.operators.Lifecycle]]), the BPE training
+  * vocabulary ([[graft.operators.TokenizerTrain]]), the IVF codebook
+  * broadcast ([[graft.operators.QualityFilters]]), the sign-bucket cell
+  * layout of `q_ann_pruned` ([[graft.operators.VectorSearch]]) and
+  * each table's Parquet schema ([[graft.io.Tables]]). Within a session
+  * the first consumer of a shared chain pays the build (typically a
+  * `localCheckpoint(true)`, a collect, a [[Scratch]] write, or the
+  * schema-inference job) and later consumers re-read the result.
   *
   * Three properties the ad-hoc per-file WeakHashMaps did NOT have:
   *

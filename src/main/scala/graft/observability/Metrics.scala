@@ -27,13 +27,16 @@ import scala.jdk.CollectionConverters._
   * }}}
   *
   * One record per completed query: (op, status, wall_ms, rows,
-  * shuffle_bytes, error). `op` comes from the `graft.op` local property
-  * when [[Metrics.withOp]] labeled the call, else the DataFrame action
+  * shuffle_bytes, error). `op` is the label of the newest still-active
+  * [[Metrics.withOp]] when the record is made, else the DataFrame action
   * name the listener receives — the analog of the reference's metric
-  * label sets. Listener callbacks are driver-side and O(plan size), so
-  * the sink adds nothing to executor work at any corpus size; the
-  * buffer holds one small record per QUERY (not per row) and `flush`
-  * drains it.
+  * label sets. That label is process-wide (`Metrics.currentOp`), and
+  * `withOp` drains the listener bus before it leaves, so attribution is
+  * exact for sequential pipelines only: a query that completes while
+  * another thread's `withOp` is active carries that thread's label.
+  * Listener callbacks are driver-side and O(plan size), so the sink
+  * adds nothing to executor work at any corpus size; the buffer holds
+  * one small record per QUERY (not per row) and `flush` drains it.
   */
 final class MetricsSink extends QueryExecutionListener {
 
@@ -113,7 +116,7 @@ object MetricsSink {
 
   private[observability] def record(funcName: String, qe: QueryExecution,
       durationNs: Long, ok: Boolean, error: String): OpMetric = {
-    val op = Option(Metrics.currentOp.get).getOrElse(funcName)
+    val op = Option(Metrics.currentOp).getOrElse(funcName)
     val nodes = allNodes(qe.executedPlan)
     val rows = nodes.iterator
       .flatMap(_.metrics.get("numOutputRows").map(_.value))
@@ -127,30 +130,35 @@ object MetricsSink {
 
 object Metrics {
 
-  /** The active op label. QueryExecutionListener callbacks arrive on
-    * the listener-bus thread, where the submitting thread's local
-    * properties are invisible — so the label lives in a process-wide
-    * register and [[withOp]] drains the bus before restoring it, which
-    * makes attribution exact for the sequential-pipeline case the
-    * reference instruments. Concurrent pipelines wanting independent
-    * labels should run separate sessions/sinks.
+  /** The active [[withOp]] frames, oldest first. QueryExecutionListener
+    * callbacks arrive on the listener-bus thread, where the submitting
+    * thread's local properties are invisible — so the label lives in
+    * this process-wide register and [[withOp]] drains the bus before
+    * leaving it, which makes attribution exact for the
+    * sequential-pipeline case the reference instruments. Concurrent
+    * pipelines wanting independent labels need separate processes.
     */
-  private[observability] val currentOp =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
+  private val frames = scala.collection.mutable.ArrayBuffer.empty[(AnyRef, String)]
+
+  /** The newest active frame's label, or null outside any [[withOp]]. */
+  private[observability] def currentOp: String =
+    frames.synchronized(frames.lastOption.map(_._2).orNull)
 
   /** Label every query completing inside `body` with `op` — the analog
     * of the reference's `Timer(name, labels)` context manager
-    * (metrics.py:291-321).
+    * (metrics.py:291-321). Each call removes exactly its own frame, so
+    * threads may leave in any order and no label outlives its call.
     */
   def withOp[A](spark: SparkSession, op: String)(body: => A): A = {
-    val prior = currentOp.getAndSet(op)
+    val frame = (new AnyRef, op)
+    frames.synchronized(frames += frame)
     try body finally {
       // The SQLExecutionEnd events for everything `body` ran are posted
       // by now; wait for delivery so the label can't leak onto a later
       // unlabeled query (or vice versa).
       org.apache.spark.graft.ListenerBridge
         .waitUntilListenerBusEmpty(spark.sparkContext)
-      currentOp.set(prior)
+      frames.synchronized(frames -= frame)
     }
   }
 

@@ -468,10 +468,7 @@ object Contracts {
   // same aggregate directly from events — any write/read infidelity
   // (schema drift, partition loss, double mangling) breaks the hash.
   private def storeRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_q_store_roundtrip"
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true) // idempotent across runs
+    val root = graft.internal.Scratch.dir(s, "q_store_roundtrip")
     val store = new graft.storage.MemoryStore(s, root)
     val rows = Tables.events(s, dir).select(
       concat(lit("h"), col("event_id").cast("string")).as("id"),
@@ -516,10 +513,7 @@ object Contracts {
   // aggregated; the oracle derives the same aggregate straight from
   // events, so a lossy explode or schema-probe bug breaks the hash.
   private def benchmarkSource(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_q_benchmark_source"
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true) // idempotent across runs
+    val root = graft.internal.Scratch.dir(s, "q_benchmark_source")
     val bucket = col("user_id") % 20
     Tables.events(s, dir)
       .select(
@@ -607,10 +601,7 @@ object Contracts {
   // committed snapshot is never read or rewritten (spec-pinned at the
   // filesystem level in CheckpointPartitionSpec).
   private def checkpointCleanup(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_q_checkpoint_cleanup"
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true) // idempotent across runs
+    val root = graft.internal.Scratch.dir(s, "q_checkpoint_cleanup")
     val store = new graft.storage.MemoryStore(s, root)
     val cks = Tables.events(s, dir).select(
       concat(lit("ck"), col("event_id").cast("string")).as("id"),

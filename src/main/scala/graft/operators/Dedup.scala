@@ -153,11 +153,7 @@ object Dedup {
     // the 8-bit sign bucket (routed pairs ⊆ exact pairs, identical
     // schema and sim values — the unsupervised q_dedup_embedding_lsh
     // leg is the same idea without labels).
-    val exact = PairGuard.allowExact(s, "q_dedup_embedding") {
-      e.groupBy("label").count()
-        .agg(coalesce(sum(col("count") * col("count")), lit(0L)))
-        .head().getLong(0)
-    }
+    val exact = PairGuard.allowExact(s, "q_dedup_embedding")(PairGuard.squaredBlockCensus(e, "label"))
     saltedCosinePairs(s, e.withColumn("blk",
       if (exact) lit(0L) else VectorFunctions.signBucket(col("embedding"), 8)),
       Seq("label", "blk"))

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
 
 /** Guard rails for the exact all-pairs query contracts.
   *
@@ -90,6 +91,16 @@ object PairGuard {
       false
     }
   }
+
+  /** Σ_key count² — the blocked self-join's candidate-pair volume,
+    * ordered pairs and self-pairs included, for the two cosine legs
+    * (`q_dedup_embedding` blocks by label, `q_semantic_dedup` by
+    * cluster). One group-count and one sum over `frame`.
+    */
+  def squaredBlockCensus(frame: DataFrame, key: String): Long =
+    frame.groupBy(key).count()
+      .agg(coalesce(sum(col("count") * col("count")), lit(0L)))
+      .head().getLong(0)
 }
 
 /** One shared salt count for the low-cardinality-key pair joins.

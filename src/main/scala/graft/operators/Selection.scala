@@ -415,11 +415,7 @@ object Selection {
     // drops within the SAME output schema (the standard LSH recall
     // trade; q_semantic_dedup_blocked is the member-level contract of
     // the same idea).
-    val exact = PairGuard.allowExact(s, "q_semantic_dedup") {
-      fam.groupBy("cluster").count()
-        .agg(coalesce(sum(col("count") * col("count")), lit(0L)))
-        .head().getLong(0)
-    }
+    val exact = PairGuard.allowExact(s, "q_semantic_dedup")(PairGuard.squaredBlockCensus(fam, "cluster"))
     val famB = fam.withColumn("blk",
       if (exact) lit(0L) else VectorFunctions.signBucket(col("embedding"), 8))
     val salts = Salting.pairSalts(s)

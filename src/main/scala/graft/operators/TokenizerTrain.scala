@@ -21,10 +21,10 @@ import scala.jdk.CollectionConverters._
   * symbols.
   *
   * Scale shape: corpus → vocab is the only corpus-sized pass, and the
-  * only Spark work. The driver holds the vocabulary — distinct words,
-  * not the corpus — the way MLlib's Word2Vec and CountVectorizer hold
-  * theirs; there is no cap, because the query and its oracle define
-  * none. The outputs are small local frames, so the query plan is a
+  * only Spark work; a session runs it once per `documents` state. The
+  * driver holds the vocabulary — distinct words, not the corpus — the
+  * way MLlib's Word2Vec and CountVectorizer hold theirs; there is no
+  * cap, because the query and its oracle define none. The outputs are small local frames, so the query plan is a
   * local scan.
   *
   * Output: the first R learned merges as (round, lhs, rhs, pair_cnt).
@@ -36,16 +36,21 @@ object TokenizerTrain {
 
   private val BpeRounds = 3
 
-  /** The corpus vocabulary (word, count) on the driver. Empty tokens
-    * (doubled separators) carry no pair signal — filtered on both
-    * engines.
+  /** The corpus vocabulary (word, count) on the driver, collected once
+    * per `documents` table state ([[graft.internal.SessionMemo]]) and
+    * shared by both queries. Empty tokens (doubled separators) carry no
+    * pair signal — filtered on both engines.
     */
+  private val vocabMemo = new graft.internal.SessionMemo[Seq[(String, Long)]]("bpe_vocab_build")
+
   private def vocab(s: SparkSession, dir: String): Seq[(String, Long)] =
-    Tables.spread(Tables.documents(s, dir))
-      .select(explode(split(col("text"), " ")).as("w"))
-      .filter(length(col("w")) > 0)
-      .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    vocabMemo.getOrBuild(s, s"$dir/documents.parquet") {
+      Tables.spread(Tables.documents(s, dir))
+        .select(explode(split(col("text"), " ")).as("w"))
+        .filter(length(col("w")) > 0)
+        .groupBy("w").agg(count(lit(1)).as("cnt"))
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    }
 
   private def local(s: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
     s.createDataFrame(rows.asJava, schema)

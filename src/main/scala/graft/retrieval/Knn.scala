@@ -1,7 +1,7 @@
 package graft.retrieval
 
 import graft.functions.VectorFunctions
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,17 +34,5 @@ object Knn {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .drop(queryVecCol)
-  }
-
-  /** ANN probe: restrict the scan to the query's sign-bucket before the
-    * exact top-k (bucket pruning; at scale the bucket is a partition
-    * key).
-    */
-  def topKBucketed(corpus: DataFrame, vecCol: String, query: Array[Float], k: Int,
-      idCol: String, bits: Int = 8): DataFrame = {
-    val qb = (1 to bits).map(i => if (query(i - 1) >= 0) 1L << (i - 1) else 0L).sum
-    topK(
-      corpus.filter(VectorFunctions.signBucket(col(vecCol), bits) === qb),
-      vecCol, query, k, idCol)
   }
 }

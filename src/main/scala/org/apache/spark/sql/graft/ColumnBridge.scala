@@ -29,3 +29,11 @@ object ExtensionsBridge {
         .sessionState.functionRegistry): Unit
   }
 }
+
+/** A session's unique id (`sessionUUID` is `private[sql]`) — what keeps
+  * two sessions' scratch directories apart.
+  */
+object SessionBridge {
+  def id(spark: org.apache.spark.sql.SparkSession): String =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
+}

@@ -18,6 +18,27 @@ class ObservabilitySpec extends SparkSpec {
       Thread.sleep(50)
   }
 
+  test("a withOp label never outlives its call, even when threads leave out of order") {
+    // Thread a enters, b enters, a leaves, b leaves: restoring each
+    // call's prior label would leave a's label set after both returned.
+    val aIn = new java.util.concurrent.CountDownLatch(1)
+    val bIn = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val sink = new MetricsSink
+    spark.listenerManager.register(sink)
+    try {
+      val a = pool.submit(() => Metrics.withOp(spark, "spec_thread_a") { aIn.countDown(); bIn.await(); "a" })
+      aIn.await()
+      pool.submit(() => Metrics.withOp(spark, "spec_thread_b") { bIn.countDown(); a.get() }).get()
+      spark.range(10).collect()
+      awaitRecords(sink, "collect", 1)
+      assert(sink.snapshot().exists(_.op == "collect"), s"the unlabeled query was labeled: ${sink.snapshot()}")
+    } finally {
+      spark.listenerManager.unregister(sink)
+      pool.shutdownNow(): Unit
+    }
+  }
+
   test("listener captures labeled ops with wall time and shuffle bytes; rollup reports them") {
     val sink = new MetricsSink
     spark.listenerManager.register(sink)

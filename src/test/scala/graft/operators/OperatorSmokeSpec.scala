@@ -3,6 +3,8 @@ package graft.operators
 import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** Every declared query runs at sf0.001 and returns a sane result; the
   * DuckDB value-level check runs in the driver's gate (and locally via
   * tools/compare.py) — this spec guards execution + determinism.
@@ -26,6 +28,19 @@ class OperatorSmokeSpec extends SparkSpec {
     // golden-tested in MultimodalSpec, since ImageIO is not SQL).
     val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(noOracle.isEmpty, s"queries without oracle: $noOracle")
+  }
+
+  test("no operator names java.io.tmpdir — writing queries take their paths from Scratch") {
+    // A fixed path under the JVM temp dir is shared by every process and
+    // session on the host; graft.internal.Scratch scopes each writing
+    // query's directory to its session and application.
+    val root = java.nio.file.Paths.get("src/main/scala/graft/operators")
+    assert(java.nio.file.Files.isDirectory(root), s"$root not found from ${new java.io.File(".").getAbsolutePath}")
+    val walk = java.nio.file.Files.walk(root)
+    val offenders = try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .filter(java.nio.file.Files.readString(_).contains("java.io.tmpdir")).toList
+    finally walk.close()
+    assert(offenders.isEmpty, s"fixed temp paths in: ${offenders.mkString(", ")}")
   }
 
   test("flagship entry returns ranked rows") {

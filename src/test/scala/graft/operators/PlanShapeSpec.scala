@@ -126,7 +126,7 @@ class PlanShapeSpec extends SparkSpec {
     // global funnel over the checkpoint table.
     SparkEntry.queries("q_checkpoint_cleanup")(spark, Sf).collect()
     val store = new graft.storage.MemoryStore(spark,
-      s"${System.getProperty("java.io.tmpdir")}/graft_q_checkpoint_cleanup")
+      graft.internal.Scratch.path(spark, "q_checkpoint_cleanup"))
     val doomed = store.doomedCheckpoints(store.checkpoints().toDF(), "run0", 2)
     val exec = doomed.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.inputPlan

@@ -166,6 +166,41 @@ class SessionMemoSpec extends SparkSpec {
     }
   }
 
+  test("q_ann_pruned's cell layout: written once per table state into the session's scratch") {
+    val dir = java.nio.file.Files.createTempDirectory("memoann").toString
+    val emb = graft.io.Tables.embeddings(spark, Sf)
+    emb.write.parquet(s"$dir/embeddings.parquet")
+    def pruned() = SparkEntry.queries("q_ann_pruned")(spark, dir)
+    def bucket() = SparkEntry.queries("q_ann_bucket")(spark, dir).collect().toSeq
+    val scratch = new org.apache.hadoop.fs.Path(graft.internal.Scratch.path(spark, "q_ann_pruned"))
+    val fs = scratch.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def layouts() = if (fs.exists(scratch)) fs.listStatus(scratch).length else 0
+    val jobs = new JobCounter
+    spark.sparkContext.addSparkListener(jobs)
+    val v1 = try {
+      val v1 = pruned().collect().toSeq
+      assert(v1 == bucket())
+      // Warm: the query-vector lookup is the only job left.
+      val warm = jobs.during(pruned(): Unit)
+      assert(warm <= 1, s"a warm q_ann_pruned build launched $warm jobs")
+      v1
+    } finally spark.sparkContext.removeSparkListener(jobs)
+    assert(pruned().inputFiles.forall(_.contains(scratch.toUri.getPath)),
+      "the layout must live under the session's scratch directory")
+    // A rewrite without v1's neighbours misses the memo and follows the data.
+    val before = layouts()
+    emb.filter(col("vec_id") === 0 || !col("vec_id").isin(v1.map(_.getLong(0)): _*))
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val v2 = pruned().collect().toSeq
+    assert(v2 != v1 && v2 == bucket(), s"stale layout served after a rewrite: $v2")
+    assert(layouts() == before + 1)
+    // Memos off: a fresh layout on every call.
+    withCachesOff {
+      assert(pruned().collect().toSeq == v2 && pruned().collect().toSeq == v2)
+    }
+    assert(layouts() == before + 3)
+  }
+
   test("a same-length same-mtime byte rewrite still misses (content-sample fingerprint)") {
     // The (name, length, mtime) listing alone aliases an in-place
     // rewrite that keeps file sizes and lands within the filesystem's

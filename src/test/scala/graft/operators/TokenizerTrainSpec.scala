@@ -6,9 +6,10 @@ import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** `q_bpe_train` / `q_bpe_compression`: one distributed vocabulary pass,
-  * then the driver trainer — no build-time checkpoints, and the
-  * exhaustion semantics of the distributed plan they replaced.
+/** `q_bpe_train` / `q_bpe_compression`: one distributed vocabulary pass
+  * per session and table state, then the driver trainer — no build-time
+  * checkpoints, and the exhaustion semantics of the distributed plan
+  * they replaced.
   */
 class TokenizerTrainSpec extends SparkSpec {
 
@@ -39,15 +40,35 @@ class TokenizerTrainSpec extends SparkSpec {
 
   test("a warm build runs only the vocabulary pass, and neither plan holds a checkpointed RDD") {
     Seq("q_bpe_train", "q_bpe_compression").foreach { q =>
-      run(q, Sf): Unit // warms the schema memo
+      // A fresh session: its vocabulary memo is cold, its schema memo is
+      // warmed by the load below, so the vocabulary pass is all it runs.
+      val fresh = spark.newSession()
+      graft.io.Tables.documents(fresh, Sf): Unit
       var df: DataFrame = null
-      val jobs = jobExecutions { df = run(q, Sf) }
+      val jobs = jobExecutions { df = SparkEntry.queries(q)(fresh, Sf) }
       assert(jobs.size <= 3, s"$q: a warm build launched ${jobs.size} jobs")
       assert(jobs.distinct.size == 1 && jobs.head != "null",
         s"$q: build jobs must all be the one vocabulary query, saw executions $jobs")
       val rdds = df.queryExecution.logical.collect { case r: LogicalRDD => r }
       assert(rdds.isEmpty, s"$q: checkpointed RDDs in the plan:\n${df.queryExecution.logical}")
     }
+  }
+
+  test("both queries share one vocabulary pass per table state; with memos off each still builds") {
+    val dir = documents("ab ab c", "abc bc")
+    val jobs = new graft.JobCounter
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      val train = run("q_bpe_train", dir).collect().toSeq
+      val built = jobs.during(run("q_bpe_compression", dir): Unit)
+      assert(built == 0, s"q_bpe_compression re-ran the vocabulary pass: $built jobs")
+      spark.conf.set("spark.graft.memo.enabled", "false")
+      try {
+        assert(jobs.during(run("q_bpe_compression", dir): Unit) > 0,
+          "with memos off the vocabulary pass must run again")
+        assert(run("q_bpe_train", dir).collect().toSeq == train)
+      } finally spark.conf.unset("spark.graft.memo.enabled")
+    } finally spark.sparkContext.removeSparkListener(jobs)
   }
 
   // Expected rows recorded from the distributed trainer (seven
