@@ -65,36 +65,15 @@ final class MemoryStore(val spark: SparkSession, val root: String,
   private def tableDir(memoryType: String) = new HPath(s"$root/$memoryType")
   private def markerOf(memoryType: String) = new HPath(tableDir(memoryType), "_CURRENT")
 
-  private val SnapName = "snap_([0-9]+)_[0-9a-f]+".r
-  private def versionOf(name: String): Long = name match {
-    case SnapName(v) => v.toLong
-    case _ => -1L
-  }
-
   /** The committed `(version, snapshotDir)` of a table: the `_CURRENT`
     * marker when readable, else the highest `_SUCCESS`-complete snapshot
     * directory (covers the marker-swap window on filesystems where the
-    * overwrite-rename is delete+rename, and a corrupted marker).
+    * overwrite-rename is delete+rename, and a corrupted marker). An I/O
+    * error on either probe reads as "not found there".
     */
-  private def currentSnapshot(memoryType: String): Option[(Long, HPath)] =
-    probedSnapshot(memoryType)._1
-
-  /** [[currentSnapshot]] plus a trust flag for the EMPTY answer: the
-    * flag is true iff every filesystem probe behind a `None` completed
-    * without an I/O error. A missing directory or marker is a real
-    * observation (`FileNotFoundException` = known empty); any other
-    * `IOException` means UNKNOWN — the caller must not treat the
-    * emptiness as fact. The legacy-migration settled latch feeds on
-    * this: a transient listing failure read as "no legacy snapshot"
-    * would hide undrained rows for the instance lifetime
-    * ([[legacyPendingRows]]). When the Option is `Some` the flag is
-    * vacuously true (the snapshot was found; nothing was inferred
-    * from an error-masked empty).
-    */
-  private def probedSnapshot(memoryType: String): (Option[(Long, HPath)], Boolean) = {
+  private def currentSnapshot(memoryType: String): Option[(Long, HPath)] = {
     val marker = markerOf(memoryType)
     val fs = fsOf(marker)
-    var clean = true
     val fromMarker =
       try {
         if (!fs.exists(marker)) None
@@ -111,15 +90,8 @@ final class MemoryStore(val spark: SparkSession, val root: String,
           if (versionOf(name) < 0 || !fs.exists(snap)) None
           else Some((versionOf(name), snap))
         }
-      } catch {
-        // A marker that vanishes between exists() and open() (raced
-        // delete — e.g. a concurrent migration finishing its claim) is
-        // a real "no marker" observation, same as exists()=false: fall
-        // to the listing with the probe still clean.
-        case _: java.io.FileNotFoundException => None
-        case _: java.io.IOException => clean = false; None
-      }
-    val resolved = fromMarker.orElse {
+      } catch { case _: java.io.IOException => None }
+    fromMarker.orElse {
       try {
         fsOf(tableDir(memoryType)).listStatus(tableDir(memoryType)).toSeq
           .filter(st => st.isDirectory && versionOf(st.getPath.getName) >= 0)
@@ -127,12 +99,8 @@ final class MemoryStore(val spark: SparkSession, val root: String,
           .map(st => (versionOf(st.getPath.getName), st.getPath))
           .sortBy { case (v, p) => (v, p.getName) }
           .lastOption
-      } catch {
-        case _: java.io.FileNotFoundException => None
-        case _: java.io.IOException => clean = false; None
-      }
+      } catch { case _: java.io.IOException => None }
     }
-    (resolved, resolved.isDefined || clean)
   }
 
   /** Write `df` as a brand-new snapshot directory, then atomically flip
@@ -150,7 +118,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
   private def commitSnapshot(df: DataFrame, memoryType: String, baseVersion: Long,
       cleanup: Boolean = true): Option[HPath] = {
     val version = baseVersion + 1
-    val name = f"snap_$version%06d_${java.util.UUID.randomUUID().toString.replace("-", "").take(8)}%s"
+    val name = snapshotName(version)
     val snap = new HPath(tableDir(memoryType), name)
     df.write.mode(SaveMode.Overwrite)
       .partitionBy(partitionColsOf(df): _*)
@@ -165,7 +133,15 @@ final class MemoryStore(val spark: SparkSession, val root: String,
       catch { case _: java.io.IOException => () }
       return None
     }
-    commitMarker(memoryType, name)
+    // A flip that fails for good leaves this snapshot uncommitted; it is
+    // deleted so the listing fallback (which a delete-then-rename
+    // overwrite can leave readers on) resolves the previous snapshot.
+    try commitMarker(memoryType, name)
+    catch { case e: java.io.IOException =>
+      try fsOf(snap).delete(snap, true): Unit
+      catch { case _: java.io.IOException => () }
+      throw e
+    }
     // `cleanup = false` defers retention to the caller — overwrite()
     // must rescue concurrent appends out of the superseded snapshot
     // BEFORE it can be reclaimed (at retainSnapshots = 1 the floor is
@@ -181,9 +157,10 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     * filesystem's delete-then-rename implementation of OVERWRITE (the
     * loser throws FileAlreadyExists when the winner re-creates the
     * destination between its delete and rename) — that race is
-    * retryable, and the temp marker is always cleaned up, so a flip
-    * either lands or leaves no trace (the table then still shows the
-    * previous committed snapshot).
+    * retryable, and the temp marker is always cleaned up. A flip that
+    * still fails throws; [[commitSnapshot]] then deletes the snapshot it
+    * named, so the table still shows the previous committed snapshot
+    * (spec-pinned in CommitFaultSpec).
     */
   private def commitMarker(memoryType: String, name: String): Unit = {
     val dir = tableDir(memoryType)
@@ -238,15 +215,13 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     * maintenance, when no reader is pinned to an old snapshot.
     */
   def vacuum(memoryType: String): Unit =
-    // the checkpoints root holds per-run partition tables, each with
-    // its own marker — vacuum every partition (legacy single-table
-    // stores are migrated first so their root snapshots are reclaimed
-    // through the migration, not orphaned)
-    if (memoryType == MemoryType.Checkpoints) {
-      migrateLegacyCheckpoints()
-      ckPartTypes().foreach(vacuum)
-    }
-    else currentSnapshot(memoryType) match {
+    // checkpoints: every checkpoint table — each run partition (its own
+    // marker and snapshots) and the root table
+    if (memoryType == MemoryType.Checkpoints) ckTables(None).foreach(vacuumTable)
+    else vacuumTable(memoryType)
+
+  private def vacuumTable(memoryType: String): Unit =
+    currentSnapshot(memoryType) match {
       case Some((v, snap)) =>
         cleanupSnapshots(memoryType, keepFromVersion = v + 1, protect = Some(snap.getName))
       case None =>
@@ -282,9 +257,8 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     * none).
     */
   def appendRows(df: DataFrame, memoryType: String): Unit =
-    if (memoryType == MemoryType.Checkpoints) {
-      migrateLegacyCheckpoints(); appendCheckpoints(df)
-    } else append(df, memoryType)
+    if (memoryType == MemoryType.Checkpoints) appendCheckpoints(df)
+    else append(df, memoryType)
 
   // Preferences (and the feedback log) are user-keyed, not project-keyed;
   // partition only when the layout column exists.
@@ -369,260 +343,44 @@ final class MemoryStore(val spark: SparkSession, val root: String,
   // run, so the table is stored as one versioned sub-table PER RUN
   // (`checkpoints/runId=<enc>/snap_.../` + per-run `_CURRENT`). A
   // cleanup then reads and snapshot-rewrites the completed run's
-  // partition ONLY — at 100 TB the rewrite touches that run's files,
-  // never the whole checkpoint history (the scale gap the old
-  // whole-table deleteWhere shape carried). The runId column stays IN
-  // the data (the path key is addressing, not Hive layout inference),
-  // so every partition read yields the exact Checkpoint schema, and
-  // cross-run reads are a union of partition scans.
+  // partition — at 100 TB the rewrite touches that run's files, never
+  // the whole checkpoint history. The runId column stays IN the data
+  // (the path key is addressing, not Hive layout inference), so every
+  // partition read yields the exact Checkpoint schema, and cross-run
+  // reads are a union of partition scans.
+  //
+  // Stores written before the per-run layout hold one versioned table
+  // directly under the checkpoints root (`checkpoints/snap_*` + root
+  // `_CURRENT`) — the standard single-table layout, so it is served as
+  // one more checkpoint table, the ROOT TABLE (table name `checkpoints`),
+  // through the same snapshot protocol as every other table. Reads union
+  // it in (filtered to the run when run-scoped; null-runId rows surface
+  // only in cross-run scans) and never write. New rows go only to run
+  // partitions; cleanupCheckpoints rewrites the root table's complement
+  // like a partition's and retires the root table once it empties, after
+  // which the store is purely per-run.
 
   private def ckPartType(runId: String): String =
     s"${MemoryType.Checkpoints}/runId=" +
       java.net.URLEncoder.encode(runId, "UTF-8")
 
-  /** Quarantine partition key for legacy rows whose runId is null: a
-    * null key has no partition to live in, but bricking every read over
-    * one bad legacy row is worse — the rows stay READABLE (the runId
-    * column is stored in the data, so they surface with their null
-    * runId in cross-run scans) while new writes still reject nulls
-    * loudly in [[appendCheckpoints]]. A NUL byte cannot appear in a
-    * sane caller-supplied runId, so the partition (dir `runId=%00`)
-    * never collides with a real run's.
+  /** The checkpoint tables a read of `runId` (every run when None)
+    * covers, from ONE listing of the checkpoints root: the root table
+    * when a root `_CURRENT` or `snap_*` entry exists, then the run's
+    * partition (or every `runId=` partition). Candidates only — callers
+    * keep the ones that `exists`. An absent or unlistable root lists
+    * nothing.
     */
-  private val NullRunIdSentinel = "\u0000"
-
-  /** In-flight migration staging area: the legacy snapshot is RENAMED
-    * here (atomic claim) before its rows are drained into the per-run
-    * partitions. Not a `snap_*` name, so snapshot resolution, retention
-    * and `ckPartTypes` all ignore it.
-    */
-  private def ckStagingDir: HPath =
-    new HPath(tableDir(MemoryType.Checkpoints), "_migrating")
-
-  // The migration check is a guaranteed no-op after the first pass that
-  // finds a fully-partitioned store — cache that verdict per instance so
-  // steady-state entry points stop paying the root listing(s). A store
-  // never regresses from partitioned to legacy layout (only this class
-  // writes the layout), so the flag can only go false→true.
-  @volatile private var ckMigrationSettled = false
-  // Spec hook: how many times the real (non-short-circuited) layout
-  // check ran — CheckpointPartitionSpec pins it at one per store
-  // lifetime on a settled store.
-  private[storage] val ckMigrationChecks = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Stores written before the per-run layout hold one versioned table
-    * directly under the checkpoints root (`checkpoints/snap_*` + root
-    * `_CURRENT`). Readers of that vintage must not silently see an
-    * empty table — this is the crash-recovery path, where "empty"
-    * means a resume point LOST. Write/maintenance entry points call
-    * this to migrate the legacy snapshot into the per-run partitions;
-    * pure reads ([[checkpoints]]) never write — they union the pending
-    * legacy rows on the fly via [[legacyPendingRows]], so a consumer
-    * with read-only filesystem access still sees its data.
-    *
-    * Crash-safe and idempotent, in two phases:
-    *
-    *  1. '''Claim.''' Superseded root `snap_*` dirs are deleted FIRST
-    *     (so a crash can never re-detect an OLDER snapshot as the
-    *     legacy table and resurrect stale rows), then the current
-    *     legacy snapshot is atomically RENAMED into `_migrating/` and
-    *     the root marker removed. Two concurrent migrators race on the
-    *     rename — exactly one wins; the loser finds no legacy snapshot
-    *     and proceeds to drain whatever staging holds. A dangling
-    *     marker (failed delete) names a vanished dir, which snapshot
-    *     resolution already treats as corrupt, and the listing fallback
-    *     finds no root `snap_*` — detection is NOT re-armed.
-    *  2. '''Drain.''' Staged rows are appended into their per-run
-    *     partitions ANTI-JOINED by checkpoint id against what the
-    *     partition already holds, so a crash between append and staging
-    *     cleanup re-enters and appends nothing twice. Null-runId rows
-    *     are quarantined under [[NullRunIdSentinel]] instead of
-    *     throwing. Staging is deleted only after every run drained; a
-    *     failed delete re-drains (id-deduped) on the next entry point.
-    *
-    * If the claim failed because staging already held a SAME-NAMED
-    * sibling (a crashed object-store copy+delete), the drain removes
-    * the blocker — so after Phase 2 the claim is retried once, letting
-    * a single entry point fully settle the store rather than deferring
-    * the claim to the next one.
-    *
-    * A legacy store that cannot be READ (corrupt snapshot) fails loudly
-    * here rather than masquerading as empty.
-    *
-    * Cross-PROCESS drain race (accepted, inherited): two store
-    * instances in different JVMs can both enter Phase 2 — the
-    * per-instance lock does not reach across processes, and the drain's
-    * id anti-join is read-then-append — so two simultaneous drains of
-    * the same staged snapshot could both append its rows. The damage
-    * collapses to the store's documented last-writer-wins commit
-    * contract (same-version snapshot siblings, last marker wins — see
-    * [[commitSnapshot]]), not a migration-specific duplicate; not worth
-    * a lock file.
-    */
-  private def migrateLegacyCheckpoints(): Unit = {
-    if (ckMigrationSettled) return
-    synchronized {
-      if (ckMigrationSettled) return
-      ckMigrationChecks.incrementAndGet(): Unit
-      // Phase 1 — claim: currentSnapshot() on the checkpoints ROOT
-      // resolves exactly the legacy layout (root marker, else highest
-      // complete root snap_*).
-      def claimRoot(): Unit =
-        currentSnapshot(MemoryType.Checkpoints).foreach { case (_, snap) =>
-          cleanupSnapshots(MemoryType.Checkpoints,
-            keepFromVersion = Long.MaxValue, protect = Some(snap.getName))
-          val fs = fsOf(snap)
-          val claimed =
-            try {
-              if (!fs.exists(ckStagingDir)) fs.mkdirs(ckStagingDir): Unit
-              // rename=false with the source GONE means a concurrent
-              // claimant won the race — the snapshot is claimed, just
-              // not by us.
-              fs.rename(snap, new HPath(ckStagingDir, snap.getName)) || !fs.exists(snap)
-            } catch { case _: java.io.IOException => false }
-          // The marker goes only once the snapshot is KNOWN claimed. A
-          // failed rename must leave the marker in place: re-detection
-          // through the listing fallback requires a _SUCCESS file, but
-          // the marker does not — deleting it unconditionally would make
-          // a _SUCCESS-less legacy snapshot invisible forever.
-          if (claimed) {
-            val marker = markerOf(MemoryType.Checkpoints)
-            try { if (fs.exists(marker)) fs.delete(marker, false): Unit }
-            catch { case _: java.io.IOException => () }
-          }
-        }
-      // Phase 2 — drain staging (possibly left by a crashed migration).
-      def drainStaging(): Unit = {
-        val staged = stagedLegacyDirs()
-        if (staged.nonEmpty) {
-          val rows = staged.map(d => spark.read
-              .schema(CheckpointEncoder.schema).parquet(d.toString))
-            .reduce(_.unionByName(_))
-            // an object-store rename that crashed mid copy+delete can
-            // leave the same snapshot in BOTH places briefly; staged
-            // sibling copies carry identical rows — dedupe by id
-            .dropDuplicates("id")
-          appendMigrated(rows)
-          try fsOf(ckStagingDir).delete(ckStagingDir, true): Unit
-          catch { case e: java.io.IOException =>
-            System.err.println(s"[graft.MemoryStore] could not remove checkpoint " +
-              s"migration staging $ckStagingDir ($e) — the next entry point re-drains (id-deduped)")
-          }
-        }
-      }
-      claimRoot()
-      drainStaging()
-      // A claim can fail because the staging DESTINATION already held
-      // a same-named sibling (a crashed object-store copy+delete) —
-      // the drain above just removed it, so loop back to Phase 1 ONCE
-      // and a single entry point settles the store instead of
-      // deferring the claim to the next one. Bounded: one extra pass,
-      // and only when the first claim left the root snapshot in place
-      // (probedSnapshot's trust flag is vacuously true for non-empty
-      // answers, so the snapshot's presence alone arms the retry). The
-      // second drain runs only if the retry claim actually MOVED the
-      // snapshot into staging — a claim that failed again changed
-      // nothing, and re-draining would only repeat no-op Spark jobs.
-      // The post-retry probe doubles as the settled check below, so
-      // the common no-retry path pays exactly one probe, as before.
-      val mid = probedSnapshot(MemoryType.Checkpoints)
-      val (snapAfter, snapClean) =
-        if (mid._1.nonEmpty) {
-          claimRoot()
-          val after = probedSnapshot(MemoryType.Checkpoints)
-          if (after._1.isEmpty) drainStaging()
-          after
-        } else mid
-      // Settled only when nothing legacy remains anywhere AND every
-      // probe behind that emptiness completed error-free — a rename
-      // that kept failing leaves the root snapshot in place (retry on
-      // the next entry point), and an IOException-masked listing must
-      // not be read as "drained".
-      val (stagedAfter, stagedClean) = probedStagedLegacyDirs()
-      if (snapAfter.isEmpty && snapClean && stagedAfter.isEmpty && stagedClean)
-        ckMigrationSettled = true
-    }
-  }
-
-  /** The staged legacy snapshot dirs awaiting drain (empty when no
-    * migration is in flight).
-    */
-  private def stagedLegacyDirs(): Seq[HPath] = probedStagedLegacyDirs()._1
-
-  /** Staged dirs plus the same emptiness-trust flag as
-    * [[probedSnapshot]]: false means an I/O error masked the answer
-    * and `Nil` must not be read as "nothing staged".
-    */
-  private def probedStagedLegacyDirs(): (Seq[HPath], Boolean) = {
-    val dir = ckStagingDir
-    try {
-      val fs = fsOf(dir)
-      if (!fs.exists(dir)) (Nil, true)
-      else (fs.listStatus(dir).toSeq.filter(_.isDirectory).map(_.getPath), true)
-    } catch {
-      case _: java.io.FileNotFoundException => (Nil, true)
-      case _: java.io.IOException => (Nil, false)
-    }
-  }
-
-  /** Legacy checkpoint rows not yet drained into per-run partitions —
-    * the read-side view of a pre-migration (or mid-migration) store.
-    * Pure read: nothing is written. None once the store is settled
-    * (cached per instance, so steady-state reads pay no listing).
-    */
-  private def legacyPendingRows(): Option[DataFrame] = {
-    if (ckMigrationSettled) return None
-    val (snap, snapClean) = probedSnapshot(MemoryType.Checkpoints)
-    val (staged, stagedClean) = probedStagedLegacyDirs()
-    val srcs = snap.map(_._2).toSeq ++ staged
-    if (srcs.isEmpty) {
-      // Latch only on TRUSTWORTHY emptiness (every probe error-free) —
-      // a transient listing failure must not hide undrained legacy
-      // rows for the instance lifetime. The flag write is deliberately
-      // OUTSIDE migrateLegacyCheckpoints' lock: volatile, monotone
-      // false→true, and re-derived from the filesystem, so racing
-      // writers can only agree — do not "fix" this into taking the
-      // migration lock on the read path.
-      if (snapClean && stagedClean) ckMigrationSettled = true
-      return None
-    }
-    Some(srcs.map(d => spark.read
-        .schema(CheckpointEncoder.schema).parquet(d.toString))
-      .reduce(_.unionByName(_))
-      .dropDuplicates("id"))
-  }
-
-  /** Drain migrated rows into per-run partitions, id-deduped against
-    * each partition's existing rows (idempotent under re-entry after a
-    * crash). Null runIds quarantine under [[NullRunIdSentinel]]. All
-    * bounded one-time work: the legacy table's runs.
-    */
-  private def appendMigrated(df: DataFrame): Unit = {
-    val pinned = df.localCheckpoint(true)
-    val runs = pinned.select("runId").distinct().collect().map(_.getString(0))
-    runs.foreach { r =>
-      val part = ckPartType(if (r == null) NullRunIdSentinel else r)
-      val rows =
-        if (r == null) pinned.filter(col("runId").isNull)
-        else pinned.filter(col("runId") === r)
-      val fresh =
-        if (exists(part)) rows.join(readTable(part).select("id"), Seq("id"), "left_anti")
-        else rows
-      if (!fresh.isEmpty) append(fresh, part)
-    }
-  }
-
-  /** The existing per-run partition table names, from one listing of
-    * the checkpoints root (absent root → no partitions).
-    */
-  private def ckPartTypes(): Seq[String] = {
+  private def ckTables(runId: Option[String]): Seq[String] = {
     val dir = tableDir(MemoryType.Checkpoints)
-    try {
-      fsOf(dir).listStatus(dir).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("runId="))
-        .map(st => s"${MemoryType.Checkpoints}/${st.getPath.getName}")
-        .sorted
-    } catch { case _: java.io.IOException => Nil }
+    val names =
+      try fsOf(dir).listStatus(dir).toSeq.map(_.getPath.getName)
+      catch { case _: java.io.IOException => Nil }
+    val rootTable =
+      if (names.exists(n => n == "_CURRENT" || versionOf(n) >= 0)) Seq(MemoryType.Checkpoints)
+      else Nil
+    rootTable ++ runId.fold(names.filter(_.startsWith("runId=")).sorted
+      .map(n => s"${MemoryType.Checkpoints}/$n"))(r => Seq(ckPartType(r)))
   }
 
   /** Append checkpoint rows into their runs' partitions: one filtered
@@ -644,77 +402,58 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     runs.foreach(r => append(pinned.filter(col("runId") === r), ckPartType(r)))
   }
 
-  def saveCheckpoints(rows: Seq[graft.workflow.Checkpoint]): Unit = {
-    migrateLegacyCheckpoints()
+  def saveCheckpoints(rows: Seq[graft.workflow.Checkpoint]): Unit =
     appendCheckpoints(frame(rows, CheckpointEncoder))
-  }
 
-  /** One run's checkpoints read its partition alone; the cross-run scan
-    * unions every partition (schema declared per partition — no
-    * corpus-wide listing beyond the one directory list).
-    *
-    * PURE READ: a legacy (pre-partitioning) or mid-migration store is
-    * served by unioning the pending legacy rows on the fly, id-deduped
-    * against what the partitions already hold — never by writing. A
-    * consumer with read-only filesystem access to a legacy store sees
-    * its data; the physical migration belongs to the write/maintenance
-    * entry points (appendRows, saveCheckpoints, cleanupCheckpoints,
-    * vacuum, compact).
+  /** One run's checkpoints read its partition plus the root table's rows
+    * of that run; the cross-run scan unions every checkpoint table
+    * (schema declared per table — no corpus-wide listing beyond the one
+    * directory list). A pure read: nothing is written.
     */
   def checkpoints(runId: Option[String] = None): Dataset[graft.workflow.Checkpoint] = {
-    // Legacy sources are resolved BEFORE the partition listing: a
-    // migration completing between the two probes (another thread or
-    // JVM draining staging) then only ADDS partitions — visible to
-    // the later listing — and the id anti-join below drops the
-    // now-duplicated pending rows. The reverse order could observe
-    // pre-drain partitions and then post-drain (empty) legacy
-    // sources, reading a legacy store as empty — the exact
-    // resume-point-lost case the migration doc forbids. (Executing
-    // the pending scan still races a concurrent drain's staging
-    // delete the same way any read races a vacuum — the store-wide
-    // read-vs-reclaim contract, not a migration-specific case.)
-    val pending1 = legacyPendingRows()
-    val parts = runId match {
-      case Some(r) => Seq(ckPartType(r)).filter(exists)
-      case None => ckPartTypes().filter(exists)
-    }
-    val base =
-      if (parts.isEmpty) emptyOf(MemoryType.Checkpoints)
-      else parts.map(readTable).reduce(_.unionByName(_))
-    val df = pending1 match {
-      case None => base
-      case Some(pending0) =>
-        val pending = runId match {
-          case Some(r) => pending0.filter(col("runId") === r)
-          case None => pending0
-        }
-        base.unionByName(pending.join(base.select("id"), Seq("id"), "left_anti"))
-    }
+    val tables = ckTables(runId).filter(exists)
+    val df =
+      if (tables.isEmpty) emptyOf(MemoryType.Checkpoints)
+      else tables.map { t =>
+        val rows = readTable(t)
+        if (t == MemoryType.Checkpoints) runId.fold(rows)(r => rows.filter(col("runId") === r))
+        else rows
+      }.reduce(_.unionByName(_))
     df.as(CheckpointEncoder)
   }
 
   /** Drop all but the latest `keepLatest` checkpoints per branch of a
-    * completed run (reference checkpoint.py cleanup): rank within the
-    * run's PARTITION, snapshot-rewrite that partition's complement —
-    * the deleteWhere shape scoped to the one sub-table the run owns.
-    * Every other run's partition keeps its committed snapshot
-    * untouched (spec-pinned at the filesystem level). The doomed set
-    * is materialized once (bounded: a completed run's over-quota rows)
-    * so the count and the anti-join don't run the ranking twice.
+    * completed run (reference checkpoint.py cleanup): rank the run's
+    * rows — its partition plus its root-table rows — together, then
+    * snapshot-rewrite the complement of each table that held a doomed
+    * row. Every other run's partition keeps its committed snapshot
+    * untouched (spec-pinned at the filesystem level). The doomed set is
+    * materialized once (bounded: a completed run's over-quota rows) so
+    * the per-table counts and the anti-joins don't run the ranking
+    * twice. Re-running after a crash between two rewrites is
+    * idempotent: the doomed set is recomputed from what is live.
     * Returns the number of checkpoints deleted.
     */
   def cleanupCheckpoints(runId: String, keepLatest: Int): Long = {
-    migrateLegacyCheckpoints()
-    val part = ckPartType(runId)
-    if (!exists(part)) return 0L
-    val live = readTable(part)
-    val doomed = doomedCheckpoints(live, runId, keepLatest).localCheckpoint(true)
-    val n = doomed.count()
-    if (n > 0) overwrite(live.join(doomed, Seq("id"), "left_anti"), part)
-    n
+    val reads = ckTables(Some(runId)).filter(exists).map(t => t -> readTable(t))
+    if (reads.isEmpty) return 0L
+    val live = reads.map { case (t, df) => df.withColumn("_table", lit(t)) }.reduce(_.unionByName(_))
+    val doomed = doomedCheckpoints(live, runId, keepLatest).select("id", "_table")
+      .localCheckpoint(true)
+    val hit = doomed.groupBy("_table").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    reads.foreach { case (t, df) =>
+      if (hit.contains(t))
+        overwrite(df.join(doomed.filter(col("_table") === t).select("id"), Seq("id"), "left_anti"), t)
+    }
+    // An unpartitioned rewrite that keeps no row commits a schema-only
+    // snapshot; an emptied root table is retired instead.
+    if (hit.contains(MemoryType.Checkpoints) && readTable(MemoryType.Checkpoints).isEmpty)
+      dropTable(MemoryType.Checkpoints)
+    hit.values.sum
   }
 
-  /** The over-quota checkpoint ids of one run: branch-partitioned rank
+  /** The over-quota checkpoint rows of one run: branch-partitioned rank
     * over the run-filtered side, so window state is bounded by run
     * length (PlanShapeSpec asserts the partitioning).
     */
@@ -725,7 +464,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     live.filter(col("runId") === runId)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") > keepLatest)
-      .select("id")
+      .drop("rn")
   }
 
   // ---- delete (forget maintenance) --------------------------------------
@@ -1066,15 +805,16 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     * here, so readers never see a half state.
     */
   def compact(memoryType: String, minFiles: Int = 16, targetPartitions: Int = 4): Long =
-    // The checkpoints root is per-run partition tables (each with its
-    // own snapshots) — compact every partition; checkpoints are the
-    // append-heaviest table (one file per saved step), so a root-level
-    // no-op here would silently exempt exactly the table that
-    // fragments fastest. Legacy single-table stores migrate first.
-    if (memoryType == MemoryType.Checkpoints) {
-      migrateLegacyCheckpoints()
-      ckPartTypes().map(compact(_, minFiles, targetPartitions)).sum
-    } else currentSnapshot(memoryType) match {
+    // checkpoints: compact every checkpoint table (each run partition and
+    // the root table) — checkpoints are the append-heaviest table (one
+    // file per saved step), so a root-only pass would exempt exactly the
+    // tables that fragment fastest.
+    if (memoryType == MemoryType.Checkpoints)
+      ckTables(None).map(compactTable(_, minFiles, targetPartitions)).sum
+    else compactTable(memoryType, minFiles, targetPartitions)
+
+  private def compactTable(memoryType: String, minFiles: Int, targetPartitions: Int): Long =
+    currentSnapshot(memoryType) match {
       case None => 0L
       case Some((_, snap)) =>
         var files = 0L
@@ -1115,6 +855,21 @@ final class MemoryStore(val spark: SparkSession, val root: String,
 }
 
 object MemoryStore {
+  private val SnapName = "snap_([0-9]+)_[0-9a-f]+".r
+  private[storage] def versionOf(name: String): Long = name match {
+    case SnapName(v) => v.toLong
+    case _ => -1L
+  }
+
+  /** A fresh snapshot directory name for `version`, formatted in
+    * Locale.ROOT: a default locale with native digits (th-TH-u-nu-thai,
+    * ar-EG, ...) would print a version [[versionOf]] cannot parse, and
+    * every table would read as empty after its next write.
+    */
+  private[storage] def snapshotName(version: Long): String =
+    String.format(java.util.Locale.ROOT, "snap_%06d_%s", Long.box(version),
+      java.util.UUID.randomUUID().toString.replace("-", "").take(8))
+
   // Product encoders, derived once per JVM: `spark.implicits` derives a
   // fresh one by Scala reflection at every `.as[T]`, `toDS()` and
   // `emptyDataset[T]`, driver time paid again on every call.

@@ -10,6 +10,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   val Sf = "/root/testdata/sf0.001"
+
+  private var tempDir: java.nio.file.Path = _
+
+  /** This suite's own temporary directory, made on first use and deleted
+    * after the suite: no two suites or suite runs share a path.
+    */
+  protected def suiteTempDir: String = synchronized {
+    if (tempDir == null)
+      // A neutral prefix: plan-text assertions must not match the path.
+      tempDir = java.nio.file.Files.createTempDirectory("graft-spec-")
+    tempDir.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try synchronized {
+      if (tempDir != null) org.apache.commons.io.FileUtils.deleteDirectory(tempDir.toFile)
+    } finally super.afterAll()
 }
 
 object SparkSpec {

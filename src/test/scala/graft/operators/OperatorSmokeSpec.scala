@@ -30,16 +30,34 @@ class OperatorSmokeSpec extends SparkSpec {
     assert(noOracle.isEmpty, s"queries without oracle: $noOracle")
   }
 
+  /** Files under `root` that name the JVM temp dir property, `except`
+    * excluded.
+    */
+  private def tmpdirOffenders(root: String, except: Set[String] = Set.empty): List[String] = {
+    val dir = java.nio.file.Paths.get(root)
+    assert(java.nio.file.Files.isDirectory(dir), s"$dir not found from ${new java.io.File(".").getAbsolutePath}")
+    val walk = java.nio.file.Files.walk(dir)
+    try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(_.toString).filterNot(except)
+      .filter(p => java.nio.file.Files.readString(java.nio.file.Paths.get(p)).contains("java.io.tmpdir")).toList
+    finally walk.close()
+  }
+
   test("no operator names java.io.tmpdir — writing queries take their paths from Scratch") {
     // A fixed path under the JVM temp dir is shared by every process and
     // session on the host; graft.internal.Scratch scopes each writing
     // query's directory to its session and application.
-    val root = java.nio.file.Paths.get("src/main/scala/graft/operators")
-    assert(java.nio.file.Files.isDirectory(root), s"$root not found from ${new java.io.File(".").getAbsolutePath}")
-    val walk = java.nio.file.Files.walk(root)
-    val offenders = try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-      .filter(java.nio.file.Files.readString(_).contains("java.io.tmpdir")).toList
-    finally walk.close()
+    val offenders = tmpdirOffenders("src/main/scala/graft/operators")
+    assert(offenders.isEmpty, s"fixed temp paths in: ${offenders.mkString(", ")}")
+  }
+
+  test("no spec names java.io.tmpdir — suites write under their own suiteTempDir") {
+    // Same hazard for specs: two suite runs on one host (or a suite and
+    // any other user of a fixed name) would delete each other's tables.
+    // This file names the property only to search for it.
+    val self = "src/test/scala/graft/operators/OperatorSmokeSpec.scala"
+    assert(java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(self)), s"$self not found")
+    val offenders = tmpdirOffenders("src/test", except = Set(self))
     assert(offenders.isEmpty, s"fixed temp paths in: ${offenders.mkString(", ")}")
   }
 

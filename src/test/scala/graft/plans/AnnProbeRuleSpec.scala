@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 class AnnProbeRuleSpec extends SparkSpec {
 
   private lazy val layout: String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_annrule_spec"
+    val dir = s"$suiteTempDir/layout8"
     Tables.embeddings(spark, Sf)
       .withColumn("bucket", VectorFunctions.signBucket(col("embedding"), 8))
       .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(dir)
@@ -125,7 +125,7 @@ class AnnProbeRuleSpec extends SparkSpec {
     // cell (which sets bits 6-7 for this corpus's query) names a
     // directory this layout never wrote — probing it would silently
     // return a wrong (often empty) candidate set.
-    val dir6 = s"${System.getProperty("java.io.tmpdir")}/graft_annrule_spec6"
+    val dir6 = s"$suiteTempDir/layout6"
     Tables.embeddings(spark, Sf)
       .withColumn("bucket", VectorFunctions.signBucket(col("embedding"), 6))
       .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(dir6)

@@ -7,9 +7,10 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.SparkSession
 
 /** Shared builders for the checkpoint-storage specs — ONE definition
-  * of the row shape and of the legacy (pre-per-run) on-disk layout, so
-  * a change to either contract cannot update one spec and silently
-  * leave another testing the old layout.
+  * of the row shape and of the on-disk layout of a store written before
+  * per-run partitions (the root table), so a change to either contract
+  * cannot update one spec and silently leave another testing the old
+  * layout.
   */
 object CheckpointFixtures {
 
@@ -17,10 +18,11 @@ object CheckpointFixtures {
     Checkpoint(id, run, "node", branch, seq, None, s"""{"v":$seq}""",
       new Timestamp(1700000000000L + seq))
 
-  /** Write a legacy (pre-per-run-layout) store: one versioned snapshot
-    * directly under the checkpoints root plus a root `_CURRENT` marker —
-    * exactly what commitSnapshot produced then. Returns the checkpoints
-    * root path.
+  /** Write a store from before the per-run layout: one versioned
+    * snapshot directly under the checkpoints root plus a root `_CURRENT`
+    * marker — exactly what commitSnapshot produced then, and what the
+    * store now serves as the checkpoint root table. Returns the
+    * checkpoints root path.
     */
   def writeLegacy(spark: SparkSession, root: String, rows: Seq[Checkpoint],
       snapName: String = "snap_000001_deadbeef"): String = {

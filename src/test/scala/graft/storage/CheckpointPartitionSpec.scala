@@ -9,17 +9,17 @@ import org.apache.hadoop.fs.{Path => HPath}
 /** Per-run partitioned checkpoint storage: a run's state lives in its
   * own versioned sub-table, so run-scoped reads touch one partition and
   * cleanupCheckpoints rewrites one partition — pinned here at the
-  * FILESYSTEM level, not just through result equality.
+  * FILESYSTEM level, not just through result equality. A store written
+  * before the per-run layout (`CheckpointFixtures.writeLegacy`) keeps
+  * its rows in the root table, which reads, cleanups and maintenance
+  * serve alongside the partitions.
   */
 class CheckpointPartitionSpec extends SparkSpec {
 
   import CheckpointFixtures.ck
 
   private def freshStore(tag: String): (MemoryStore, String) = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_ckpart_$tag"
-    val p = new HPath(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val root = s"$suiteTempDir/$tag"
     (new MemoryStore(spark, root), root)
   }
 
@@ -69,126 +69,138 @@ class CheckpointPartitionSpec extends SparkSpec {
       snapName: String = "snap_000001_deadbeef"): String =
     CheckpointFixtures.writeLegacy(spark, root, rows, snapName)
 
-  test("a legacy store: reads are pure (union, no writes); a write entry point migrates") {
+  /** Every file and directory under `root`, with its modification time. */
+  private def tree(root: String): Set[String] = {
+    val fs = new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(p: HPath): Seq[String] = fs.listStatus(p).toSeq.flatMap { st =>
+      s"${st.getPath}:${st.getModificationTime}" +:
+        (if (st.isDirectory) walk(st.getPath) else Nil)
+    }
+    walk(new HPath(root)).toSet
+  }
+
+  private def ids(ds: org.apache.spark.sql.Dataset[Checkpoint]): Seq[String] =
+    ds.collect().map(_.id).sorted.toSeq
+
+  test("a root-table store: reads see every row and write nothing; new saves land in the run's partition") {
     val (store, root) = freshStore("legacy")
     val ckRoot = writeLegacy(root, Seq(
       ck("a1", "runA", "b0", 1), ck("a2", "runA", "b0", 2),
       ck("b1", "runB", "b0", 1)))
-    val fs = new HPath(ckRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snapName = "snap_000001_deadbeef"
-    // First read sees every legacy row — not a silently-empty table
-    // (this IS the crash-recovery path) — and run-scoped reads work too.
-    val got = store.checkpoints().collect().map(_.id).sorted
-    assert(got.toSeq == Seq("a1", "a2", "b1"),
-      s"legacy checkpoints invisible to a reader: ${got.mkString(",")}")
-    assert(store.checkpoints(Some("runA")).count() == 2L)
-    // ... WITHOUT writing anything: the legacy snapshot and marker are
-    // untouched and no partition dirs appeared (a consumer with
-    // read-only filesystem access must not fail).
-    assert(fs.exists(new HPath(s"$ckRoot/$snapName")),
-      "a pure read physically migrated the store")
-    assert(fs.exists(new HPath(s"$ckRoot/_CURRENT")),
-      "a pure read removed the legacy marker")
-    assert(!fs.listStatus(new HPath(ckRoot)).exists(_.getPath.getName.startsWith("runId=")),
-      "a pure read created partition dirs")
-    // A write/maintenance entry point performs the physical migration:
-    // rows land in per-run partitions, legacy snapshot + marker gone.
+    store.saveCheckpoints(Seq(ck("c1", "runC", "b0", 1)))
+    // Cross-run and run-scoped reads see the root table's rows — not a
+    // silently-empty table (this IS the crash-recovery path) ...
+    val before = tree(root)
+    assert(ids(store.checkpoints()) == Seq("a1", "a2", "b1", "c1"))
+    assert(ids(store.checkpoints(Some("runA"))) == Seq("a1", "a2"))
+    assert(ids(store.checkpoints(Some("runC"))) == Seq("c1"))
+    // ... WITHOUT writing anything: no file or directory was created,
+    // renamed or deleted (a consumer with read-only access must not fail).
+    assert(tree(root) == before, "a pure read changed the store on disk")
+    // A later save lands in the run's partition; the root table keeps its
+    // snapshot, and every id reads exactly once.
+    val rootSnap = tree(s"$ckRoot/snap_000001_deadbeef")
     store.saveCheckpoints(Seq(ck("a3", "runA", "b0", 3)))
-    assert(store.checkpoints(Some("runA")).count() == 3L)
-    assert(store.checkpoints(Some("runB")).count() == 1L)
-    assert(store.checkpoints().count() == 4L)
-    assert(!fs.exists(new HPath(s"$ckRoot/$snapName")), "legacy snapshot not reclaimed")
-    assert(!fs.exists(new HPath(s"$ckRoot/_CURRENT")), "legacy marker not removed")
-    assert(!fs.exists(new HPath(s"$ckRoot/_migrating")), "migration staging not cleaned up")
-    // And the per-run maintenance paths work on the migrated rows.
-    assert(store.cleanupCheckpoints("runA", keepLatest = 1) == 2L)
-    assert(store.checkpoints().count() == 2L)
+    assert(ids(store.checkpoints(Some("runA"))) == Seq("a1", "a2", "a3"))
+    assert(ids(store.checkpoints()) == Seq("a1", "a2", "a3", "b1", "c1"))
+    assert(tree(s"$ckRoot/snap_000001_deadbeef") == rootSnap, "a save rewrote the root table")
+    val part = new HPath(s"$ckRoot/runId=runA")
+    val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val in = fs.open(new HPath(part, "_CURRENT"))
+    val partSnap = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
+    assert(spark.read.parquet(s"$part/$partSnap").select("id").collect().map(_.getString(0)).toSeq
+      == Seq("a3"), "the new row is not (only) in its run's partition")
   }
 
-  test("migration is idempotent under crash re-entry: staged rows partially appended never duplicate") {
-    val (store, root) = freshStore("crashmig")
-    val ckRoot = s"$root/${MemoryType.Checkpoints}"
-    val fs = new HPath(ckRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    import spark.implicits._
-    // Simulate a migration that crashed between the per-run append and
-    // the staging cleanup: the legacy snapshot already RENAMED into
-    // _migrating/, and runA's rows ALREADY appended to their partition.
-    val legacyRows = Seq(
+  test("cleanupCheckpoints ranks root-table and partition rows together and retires an emptied root table") {
+    val (store, root) = freshStore("rootclean")
+    val ckRoot = writeLegacy(root, Seq(
       ck("a1", "runA", "b0", 1), ck("a2", "runA", "b0", 2),
-      ck("b1", "runB", "b0", 1))
-    legacyRows.toDS().toDF().write
-      .parquet(s"$ckRoot/_migrating/snap_000001_deadbeef")
-    // pre-populate runA's partition with the same rows (the crashed
-    // migration's partial progress)
-    Seq(ck("a1", "runA", "b0", 1), ck("a2", "runA", "b0", 2)).toDS().toDF()
-      .write.parquet(s"$ckRoot/runId=runA/snap_000001_cafe0001")
-    val ok = fs.create(new HPath(s"$ckRoot/runId=runA/_CURRENT"), true)
-    try ok.write("snap_000001_cafe0001".getBytes("UTF-8")) finally ok.close()
-    // A read mid-migration already sees everything exactly once.
-    assert(store.checkpoints().collect().map(_.id).sorted.toSeq == Seq("a1", "a2", "b1"),
-      "mid-migration read lost or duplicated rows")
-    // The write entry point resumes the drain — id-deduped, so the
-    // already-appended runA rows do NOT double.
-    store.saveCheckpoints(Seq(ck("c1", "runC", "b0", 1)))
-    val ids = store.checkpoints().collect().map(_.id).sorted
-    assert(ids.toSeq == Seq("a1", "a2", "b1", "c1"),
-      s"crash re-entry duplicated or lost rows: ${ids.mkString(",")}")
-    assert(!fs.exists(new HPath(s"$ckRoot/_migrating")), "staging not cleaned up after drain")
-    // Re-running the whole migration path again stays a no-op.
-    store.saveCheckpoints(Seq(ck("c2", "runC", "b0", 2)))
-    assert(store.checkpoints().count() == 5L)
+      ck("b1", "runB", "b0", 1)))
+    store.saveCheckpoints(Seq(
+      ck("a3", "runA", "b0", 3), ck("a4", "runA", "b0", 4),
+      ck("b2", "runB", "b0", 2)))
+    val beforeB = listing(root, "runId=runB")
+    // runA's over-quota rows live in both tables: a1, a2 (root), a3.
+    assert(store.cleanupCheckpoints("runA", keepLatest = 1) == 3L)
+    assert(ids(store.checkpoints(Some("runA"))) == Seq("a4"))
+    assert(ids(store.checkpoints()) == Seq("a4", "b1", "b2"))
+    assert(listing(root, "runId=runB") == beforeB, "cleanup touched an unrelated run's partition")
+    // Re-running is a no-op: the doomed set is recomputed from what is live.
+    assert(store.cleanupCheckpoints("runA", keepLatest = 1) == 0L)
+    // runB's cleanup deletes the root table's last row: the root table
+    // is retired and the store is purely per-run.
+    val beforeA = listing(root, "runId=runA")
+    assert(store.cleanupCheckpoints("runB", keepLatest = 1) == 1L)
+    val fs = new HPath(ckRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val left = fs.listStatus(new HPath(ckRoot)).map(_.getPath.getName).toSet
+    assert(left == Set("runId=runA", "runId=runB"), s"root table not retired: $left")
+    assert(listing(root, "runId=runA") == beforeA, "cleanup touched an unrelated run's partition")
+    assert(ids(store.checkpoints()) == Seq("a4", "b2"))
   }
 
   test("legacy null-runId rows are quarantined readable, not a permanent brick") {
     val (store, root) = freshStore("nulllegacy")
-    // Schema built WITHOUT touching the store: a checkpoints() call on
-    // the still-empty root would settle the per-instance layout check
-    // before the test plants the legacy snapshot behind the store's
-    // back (real stores never regress layouts; tests do).
-    val sch = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.Encoders.product[Checkpoint].schema.map(_.copy(nullable = true)))
-    val legacy = spark.createDataFrame(
-      java.util.Arrays.asList(
-        org.apache.spark.sql.Row("x1", null, "node", "b0", 1L, null, "{}",
-          new Timestamp(1700000000000L)),
-        org.apache.spark.sql.Row("a1", "runA", "node", "b0", 1L, null, "{}",
-          new Timestamp(1700000000001L))),
-      sch)
-    val ckRoot = s"$root/${MemoryType.Checkpoints}"
-    legacy.write.parquet(s"$ckRoot/snap_000001_deadbeef")
-    val fs = new HPath(ckRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new HPath(s"$ckRoot/_CURRENT"), true)
-    try out.write("snap_000001_deadbeef".getBytes("UTF-8")) finally out.close()
-    // The bad row must not brick the store: migration quarantines it
-    // (runId stays null IN the data) and every entry point keeps working.
+    writeLegacy(root, Seq(ck("x1", null, "b0", 1), ck("a1", "runA", "b0", 1)))
     store.saveCheckpoints(Seq(ck("a2", "runA", "b0", 2)))
+    // The bad row bricks nothing: cross-run scans surface it with its
+    // null runId, run-scoped reads never see it.
     val all = store.checkpoints().collect()
-    assert(all.map(_.id).sorted.toSeq == Seq("a1", "a2", "x1"),
-      "null-runId legacy row lost (or others dropped) in migration")
-    assert(all.find(_.id == "x1").get.runId == null, "quarantined row's runId must stay null")
-    // Run-scoped reads never see the quarantined row.
-    assert(store.checkpoints(Some("runA")).count() == 2L)
+    assert(all.map(_.id).sorted.toSeq == Seq("a1", "a2", "x1"))
+    assert(all.find(_.id == "x1").get.runId == null, "the root row's runId must stay null")
+    assert(ids(store.checkpoints(Some("runA"))) == Seq("a1", "a2"))
+    // A cleanup rewriting the root table keeps it.
+    assert(store.cleanupCheckpoints("runA", keepLatest = 1) == 1L)
+    assert(ids(store.checkpoints()) == Seq("a2", "x1"))
     // New writes still reject null runIds loudly.
     val e = intercept[IllegalArgumentException] {
-      store.appendRows(legacy.filter(org.apache.spark.sql.functions.col("runId").isNull),
+      store.appendRows(spark.createDataset(Seq(ck("x2", null, "b0", 2)))(MemoryStore.CheckpointEncoder).toDF(),
         MemoryType.Checkpoints)
     }
     assert(e.getMessage.contains("runId"))
   }
 
-  test("the migration layout check runs once per store instance (then short-circuits)") {
-    val (store, _) = freshStore("migonce")
-    store.saveCheckpoints(Seq(ck("a1", "runA", "b0", 1)))
-    val after = store.ckMigrationChecks.get()
-    assert(after >= 1L, "the first entry point must run the layout check")
-    // Steady state: further entry points (writes, reads, maintenance)
-    // must not re-pay the root listing — the check count stays frozen.
-    store.saveCheckpoints(Seq(ck("a2", "runA", "b0", 2)))
-    store.checkpoints().count()
-    store.cleanupCheckpoints("runA", keepLatest = 10)
-    store.compact(MemoryType.Checkpoints)
-    assert(store.ckMigrationChecks.get() == after,
-      s"migration check re-ran on a settled store: $after -> ${store.ckMigrationChecks.get()}")
+  test("a transient root listing failure misses the root rows for that read only") {
+    FlakyFs.register(spark.sparkContext.hadoopConfiguration)
+    val base = s"$suiteTempDir/flakylist"
+    val root = s"flaky://$base"
+    writeLegacy(root, Seq(
+      ck("a1", "runA", "b0", 1), ck("a2", "runA", "b0", 2),
+      ck("b1", "runB", "b0", 1)))
+    val store = new MemoryStore(spark, root)
+    FlakyFs.locked {
+      // One listing of the checkpoints root answers which tables exist;
+      // while it fails, the read finds none.
+      FlakyFs.failListOf = s"$base/${MemoryType.Checkpoints}"
+      assert(ids(store.checkpoints()).isEmpty)
+      // Nothing about the failure is remembered: the next fault-free
+      // read on the same store sees every root row.
+      FlakyFs.clear()
+      assert(ids(store.checkpoints()) == Seq("a1", "a2", "b1"))
+    }
+  }
+
+  test("vacuum and compact on checkpoints cover the root table and every partition") {
+    import spark.implicits._
+    val (store, root) = freshStore("rootmaint")
+    val ckRoot = writeLegacy(root, Seq(
+      ck("a1", "runA", "b0", 1), ck("a2", "runA", "b0", 2),
+      ck("b1", "runB", "b0", 1)).toList, "snap_000002_deadbeef")
+    (1 to 3).foreach(i => store.saveCheckpoints(Seq(ck(s"c$i", "runC", "b0", i.toLong))))
+    // Unreferenced snapshots below each table's current version: a
+    // superseded root snapshot and an aborted partition write.
+    val stale = Seq(s"$ckRoot/snap_000001_cafe0000", s"$ckRoot/runId=runC/snap_000000_cafe0000")
+    stale.foreach(d => Seq(ck("z1", "runZ", "b0", 1)).toDS().toDF().write.parquet(d))
+    val fs = new HPath(ckRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    store.vacuum(MemoryType.Checkpoints)
+    stale.foreach(d => assert(!fs.exists(new HPath(d)), s"vacuum left $d"))
+    assert(fs.exists(new HPath(s"$ckRoot/snap_000002_deadbeef")), "vacuum removed the live root snapshot")
+    assert(ids(store.checkpoints()) == Seq("a1", "a2", "b1", "c1", "c2", "c3"))
+    // Both tables hold several files; one compaction pass leaves one each.
+    val before = store.compact(MemoryType.Checkpoints, minFiles = 2, targetPartitions = 1)
+    assert(before >= 6L, s"expected both tables' files counted, got $before")
+    assert(store.compact(MemoryType.Checkpoints, minFiles = 2, targetPartitions = 1) == 2L)
+    assert(ids(store.checkpoints()) == Seq("a1", "a2", "b1", "c1", "c2", "c3"))
   }
 
   test("checkpoint rows with a null runId are rejected loudly, not NPE'd") {

@@ -1,0 +1,73 @@
+package graft.storage
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path => HPath, RawLocalFileSystem}
+
+/** Test-only fault-injecting local filesystem, registered under the
+  * `flaky://` scheme ([[FlakyFs.register]]). Faults are driven by
+  * process-global substring toggles (Hadoop instantiates and caches the
+  * filesystem reflectively, so instance state can't be handed in):
+  *
+  *  - [[FlakyFs.failListOf]]: `listStatus` on a matching path throws a
+  *    plain (non-FileNotFound) IOException — a transient listing
+  *    failure.
+  *  - [[FlakyFs.renameFailOf]]: `rename` FROM a matching source
+  *    returns false without moving anything — the legal "rename
+  *    failed" signal many object-store adapters use instead of
+  *    throwing.
+  *
+  * Scoping contract: the toggles are process-global (and Hadoop caches
+  * the FileSystem instance process-wide), so every match string MUST
+  * embed a path unique to the test (its suite's temporary directory) —
+  * a bare substring would bleed faults into unrelated suites if
+  * ScalaTest ever ran them in parallel in one JVM. Fault-injecting test
+  * bodies additionally run under [[FlakyFs.locked]], which serializes
+  * them on the companion: the build currently runs suites serially, but
+  * the lock makes the assumption enforced rather than ambient.
+  */
+class FlakyFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("flaky:///")
+
+  private def matches(toggle: String, p: HPath): Boolean =
+    toggle != null && p.toString.contains(toggle)
+
+  override def listStatus(f: HPath): Array[FileStatus] = {
+    if (matches(FlakyFs.failListOf, f))
+      throw new java.io.IOException(s"injected transient listing failure: $f")
+    super.listStatus(f)
+  }
+
+  override def rename(src: HPath, dst: HPath): Boolean =
+    if (matches(FlakyFs.renameFailOf, src)) false
+    else super.rename(src, dst)
+}
+
+object FlakyFs {
+  @volatile var failListOf: String = null
+  @volatile var renameFailOf: String = null
+  def clear(): Unit = {
+    failListOf = null; renameFailOf = null
+  }
+
+  /** Bind the `flaky://` scheme on `conf`, for both the FileSystem and
+    * the FileContext (marker commit) APIs.
+    */
+  def register(conf: Configuration): Unit = {
+    conf.set("fs.flaky.impl", classOf[FlakyFs].getName)
+    conf.set("fs.AbstractFileSystem.flaky.impl", classOf[FlakyAbstractFs].getName)
+  }
+
+  /** Serializes fault-injecting test bodies on this companion — the
+    * toggles are process-global, so two suites injecting faults in
+    * parallel (one JVM) would bleed into each other. Always clears on
+    * the way out, even when the body already cleared.
+    */
+  def locked[A](body: => A): A = synchronized { try body finally clear() }
+}
+
+/** FileContext-side binding for `flaky://` (the store's marker commits
+  * go through FileContext, which resolves AbstractFileSystem, not
+  * FileSystem). Pure delegation — the faults live in [[FlakyFs]].
+  */
+class FlakyAbstractFs(uri: java.net.URI, conf: Configuration)
+  extends org.apache.hadoop.fs.DelegateToFileSystem(uri, new FlakyFs, conf, "flaky", false)

@@ -287,4 +287,33 @@ class MemoryStoreConcurrencySpec extends SparkSpec {
     assert(snapDirs(dir) == Seq(cur), s"vacuum left garbage: ${snapDirs(dir)}")
     assert(store.heuristics().toDF().select("id").as[String](Encoders.STRING).collect().toSet == ids)
   }
+
+  test("snapshot names stay ASCII under a default locale with native digits") {
+    // String formatting follows the default locale: under these locales
+    // `%06d` prints native digits, a name the snapshot resolver cannot
+    // parse — every table would then read as empty after each write.
+    // (A local-mode save cannot run under them: Spark's own part-file
+    // names break the same way, so only the snapshot name is formed under them.)
+    val saved = Seq(java.util.Locale.Category.DISPLAY, java.util.Locale.Category.FORMAT)
+      .map(c => c -> java.util.Locale.getDefault(c))
+    val savedDefault = java.util.Locale.getDefault
+    val names =
+      try Seq("th-TH-u-nu-thai", "ar-EG", "fa-IR", "hi-IN-u-nu-deva").map { tag =>
+        java.util.Locale.setDefault(java.util.Locale.forLanguageTag(tag))
+        tag -> MemoryStore.snapshotName(12L)
+      } finally {
+        java.util.Locale.setDefault(savedDefault)
+        saved.foreach { case (c, l) => java.util.Locale.setDefault(c, l) }
+      }
+    names.foreach { case (tag, name) =>
+      assert(MemoryStore.versionOf(name) == 12L, s"$tag: unparseable snapshot name $name")
+    }
+    // And the store round-trips through those names.
+    val dir = Files.createTempDirectory("store-locale").toString
+    val store = new MemoryStore(spark, dir)
+    store.saveHeuristics(Seq(h("a")))
+    store.upsertHeuristics(Seq(h("b")))
+    assert(snapDirs(dir).forall(MemoryStore.versionOf(_) > 0), s"unparseable: ${snapDirs(dir)}")
+    assert(store.heuristics().toDF().select("id").as[String](Encoders.STRING).collect().toSet == Set("a", "b"))
+  }
 }
