@@ -35,13 +35,12 @@ final class Alma(
   private def scope(agent: String): MemoryScope =
     scopes.getOrElse(agent, MemoryScope(agent))
 
-  // O5: retrieval-result cache, invalidated per (agent, project) on
-  // every learn (reference: cache.py:363-737 + core.py:358-359). The
-  // cache clock is the injected asOf — deterministic like everything
-  // else here.
+  // O5: retrieval-result cache (reference: cache.py:363-737 +
+  // core.py:358-359). Entries key on the store's write generation, so
+  // any write to the store — through this facade or `store` directly —
+  // makes every earlier entry unreachable. The cache clock is the
+  // injected asOf — deterministic like everything else here.
   private val cache = new RetrievalCache[MemorySlice]()
-
-  private def cacheNamespace(agent: String): String = s"$agent|$projectId"
 
   /** Driver-side event pub/sub (reference alma/events/emitter.py):
     * facade writes emit bounded control-plane notifications here;
@@ -50,8 +49,6 @@ final class Alma(
     * no work).
     */
   val events = new graft.events.EventEmitter
-
-  private def now(asOf: Timestamp) = asOf
 
   // ---- §3.2 the write path ---------------------------------------------
   /** Record a task outcome; promote heuristics / anti-patterns when the
@@ -81,7 +78,7 @@ final class Alma(
       taskType = taskType, taskDescription = taskDescription,
       success = success, strategyUsed = strategyUsed,
       durationMs = durationMs, errorMessage = errorMessage,
-      timestamp = now(asOf),
+      timestamp = asOf,
       embedding = HashEmbedder.embed(s"$taskDescription $strategyUsed", embedDim),
       // Workflow-scoped learns stamp their coordinates so that
       // retrieveWithScope can filter on them (context.py pairing).
@@ -93,22 +90,7 @@ final class Alma(
       Map("task_type" -> taskType, "success" -> success.toString)))
     promoteHeuristics(agent, taskType, asOf)
     if (!success) promoteAntiPatterns(agent, asOf)
-    invalidateCacheFor(agent)
     o
-  }
-
-  /** Write-triggered invalidation: the writing agent's cached
-    * retrievals are stale, as are those of any agent whose scope
-    * inherits from it (their scans include the writer's rows via
-    * `readableAgents`) — every agent-scoped write path must use this,
-    * not a single-namespace invalidation.
-    */
-  private def invalidateCacheFor(agent: String): Unit = {
-    val affected = agent +: scopes.collect {
-      case (reader, sc) if sc.inheritFrom.contains(agent) => reader
-    }.toSeq
-    affected.foreach(a =>
-      cache.invalidateWhere(_.startsWith(cache.nsPrefix(cacheNamespace(a)))))
   }
 
   /** A1 heuristic promotion over recent outcomes of this task type.
@@ -196,7 +178,6 @@ final class Alma(
     events.emit(graft.events.MemoryEvent(
       graft.events.MemoryEventType.RagFeedback, agent, projectId,
       memoryType, memoryId, asOf.getTime * 1000L, Map("signal" -> signal)))
-    cache.invalidateWhere(_ => true)
   }
 
   /** Store a user preference (core.py:382-411). */
@@ -205,14 +186,13 @@ final class Alma(
     val p = UserPreference(
       id = UUID.randomUUID().toString,
       userId = userId, category = category, preference = preference,
-      source = source, confidence = confidence, timestamp = now(asOf),
+      source = source, confidence = confidence, timestamp = asOf,
       metadata = Map.empty)
     store.savePreferences(Seq(p))
     events.emit(graft.events.MemoryEvent(
       graft.events.MemoryEventType.PreferenceAdded, userId, projectId,
       MemoryType.Preferences, p.id, asOf.getTime * 1000L,
       Map("category" -> category)))
-    cache.invalidateWhere(_ => true)
     p
   }
 
@@ -223,7 +203,7 @@ final class Alma(
       id = UUID.randomUUID().toString,
       agent = agent, projectId = projectId,
       domain = domain, fact = fact, source = source,
-      confidence = confidence, lastVerified = now(asOf),
+      confidence = confidence, lastVerified = asOf,
       embedding = HashEmbedder.embed(s"$domain $fact", embedDim),
       metadata = Map.empty)
     store.saveKnowledge(Seq(k))
@@ -231,7 +211,6 @@ final class Alma(
       graft.events.MemoryEventType.KnowledgeAdded, agent, projectId,
       MemoryType.Knowledge, k.id, asOf.getTime * 1000L,
       Map("domain" -> domain)))
-    invalidateCacheFor(agent)
     k
   }
 
@@ -245,20 +224,14 @@ final class Alma(
       olderThanDays: Int = 90, belowConfidence: Double = 0.3): Long = {
     val cutoff = new Timestamp(asOf.getTime - olderThanDays * 86400000L)
     val agentCond = agent.map(a => col("agent") === a).getOrElse(lit(true))
-    val pruned =
-      store.deleteWhere(MemoryType.Outcomes,
-        // cutoff is bound by reference: as a literal it would reach the
-        // Parquet row-group filter, but it would also be written into
-        // the generated code, compiling new classes on every call. The
-        // projectId conjunct still prunes partitions either way.
-        col("projectId") === projectId && agentCond && col("timestamp") < BoundParam.of(cutoff)) +
-        store.deleteWhere(MemoryType.Heuristics,
-          col("projectId") === projectId && agentCond && col("confidence") < belowConfidence)
-    if (pruned > 0) agent match {
-      case Some(a) => invalidateCacheFor(a)
-      case None => cache.invalidateWhere(_ => true)
-    }
-    pruned
+    store.deleteWhere(MemoryType.Outcomes,
+      // cutoff is bound by reference: as a literal it would reach the
+      // Parquet row-group filter, but it would also be written into
+      // the generated code, compiling new classes on every call. The
+      // projectId conjunct still prunes partitions either way.
+      col("projectId") === projectId && agentCond && col("timestamp") < BoundParam.of(cutoff)) +
+      store.deleteWhere(MemoryType.Heuristics,
+        col("projectId") === projectId && agentCond && col("confidence") < belowConfidence)
   }
 
   /** Per-type memory counts for this project, optionally narrowed to
@@ -287,7 +260,7 @@ final class Alma(
       memoryId = memoryId, artifactType = artifactType,
       storageUrl = storageUrl, filename = filename, mimeType = mimeType,
       sizeBytes = sizeBytes, checksum = checksum,
-      createdAt = now(asOf), metadata = Map.empty)
+      createdAt = asOf, metadata = Map.empty)
     store.saveArtifacts(Seq(a))
     a
   }
@@ -349,9 +322,8 @@ final class Alma(
       successfulPatterns = successfulPatterns,
       failedPatterns = failedPatterns,
       durationSeconds = durationSeconds, nodeCount = nodeCount,
-      errorMessage = errorMessage, createdAt = now(asOf), metadata = Map.empty)
+      errorMessage = errorMessage, createdAt = asOf, metadata = Map.empty)
     store.saveWorkflowOutcomes(Seq(w))
-    invalidateCacheFor(agent)
     w
   }
 
@@ -381,7 +353,7 @@ final class Alma(
         runId = runId, nodeId = nodeId, branchId = branchId,
         sequenceNumber = tip.map(_.sequenceNumber + 1).getOrElse(0L),
         parentCheckpointId = parentCheckpointId.orElse(tip.map(_.id)),
-        stateJson = stateJson, createdAt = now(asOf))
+        stateJson = stateJson, createdAt = asOf)
       store.saveCheckpoints(Seq(ck))
       Some(ck)
     }
@@ -443,12 +415,9 @@ final class Alma(
         memoryId = mid, memoryType = memoryType,
         agent = agent, projectId = projectId,
         signal = if (usedIds(mid)) FeedbackSignal.Used else FeedbackSignal.Ignored,
-        timestamp = now(asOf))
+        timestamp = asOf)
     }
     store.saveFeedback(rows)
-    // Usage signals feed feedbackSummary, which blends into EVERY
-    // agent's scores — same full invalidation as recordFeedback.
-    cache.invalidateWhere(_ => true)
     rows.map(_.id)
   }
 
@@ -587,8 +556,10 @@ final class Alma(
     val wfFilter = wf.toMap
     // The FULL normalized mode config keys the entry (case-class
     // toString carries every field): two configs sharing a preset name
-    // but differing in weights/threshold/boosts must not collide.
-    val cacheKey = cache.nsKey(cacheNamespace(agent),
+    // but differing in weights/threshold/boosts must not collide. The
+    // write generation is read before the reads below, so a write that
+    // lands while this miss computes leaves its slice unreachable.
+    val cacheKey = cache.key(store.writeGeneration.toString, agent,
       query, k.toString, asOf.toString, m.toString,
       wfFilter.toSeq.sorted.map { case (a, b) => s"$a=$b" }.mkString(","))
     cache.get(cacheKey, asOf.getTime) match {
@@ -781,7 +752,6 @@ final class Alma(
       .select("id")
     val n = overflow.count()
     store.archiveIds(MemoryType.Outcomes, overflow, "quota", asOf.getTime * 1000L)
-    cache.invalidateWhere(_ => true)
     n
   }
 }

@@ -2,7 +2,7 @@ package graft.graph
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -72,7 +72,17 @@ final class GraphStore(
     * never visits the driver, so a predicate that matches millions of
     * entities seeds the traversal as data, not as a collected list.
     */
-  def bfsFrom(seeds: DataFrame, maxHops: Int, relationType: Option[String]): DataFrame = {
+  def bfsFrom(seeds: DataFrame, maxHops: Int, relationType: Option[String]): DataFrame =
+    traverse(seeds, maxHops, relationType)(_.select(col("dst").as("entity_id")).distinct())
+
+  /** The BFS loop both traversals share. The hop-0 visited set is the
+    * distinct seeds with `carried` columns; `step` projects the
+    * frontier ⋈ edges rows (`src`, `dst` and the frontier's columns) to
+    * ONE row per reached entity, carried columns included. Each hop
+    * drops the already-visited entities and is materialized once.
+    */
+  private def traverse(seeds: DataFrame, maxHops: Int, relationType: Option[String],
+      carried: Column*)(step: DataFrame => DataFrame): DataFrame = {
     val edges0 = relationType
       .map(t => relationships.filter(col("relationType") === t))
       .getOrElse(relationships)
@@ -81,19 +91,19 @@ final class GraphStore(
     val edges = edges0.union(edges0.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint(true)
 
-    var visited = seeds.select(col("entity_id")).distinct()
-      .withColumn("hop", lit(0)).localCheckpoint(true)
+    val seed = seeds.select(col("entity_id")).distinct()
+      .select(Seq(col("entity_id"), lit(0).as("hop")) ++ carried: _*)
+    val cols = seed.columns.toSeq.map(col)
+    var visited = seed.localCheckpoint(true)
     var frontier = visited
     var hop = 0
     while (hop < maxHops && !frontier.isEmpty) {
       hop += 1
-      val next = frontier
-        .join(edges, col("entity_id") === col("src"))
-        .select(col("dst").as("entity_id"))
-        .distinct()
+      val next = step(frontier.join(edges, col("entity_id") === col("src")))
         .join(visited.select(col("entity_id").as("seen")),
           col("entity_id") === col("seen"), "left_anti")
         .withColumn("hop", lit(hop))
+        .select(cols: _*)
         .localCheckpoint(true)
       // The union's children are BOTH already materialized (seed
       // checkpoint + per-hop frontier checkpoints), so re-checkpointing
@@ -123,41 +133,12 @@ final class GraphStore(
     * [[bfsFrom]]).
     */
   def bfsPathsFrom(seeds: DataFrame, maxHops: Int, relationType: Option[String]): DataFrame = {
-    val edges0 = relationType
-      .map(t => relationships.filter(col("relationType") === t))
-      .getOrElse(relationships)
-      .select(col("sourceId").as("src"), col("targetId").as("dst"))
-    val edges = edges0.union(edges0.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
-
-    var visited = seeds.select(col("entity_id")).distinct()
-      .withColumn("hop", lit(0))
-      .withColumn("path", array(col("entity_id")))
-      .localCheckpoint(true)
-    var frontier = visited
-    var hop = 0
-    while (hop < maxHops && !frontier.isEmpty) {
-      hop += 1
-      val w = Window.partitionBy("entity_id").orderBy("path")
-      val next = frontier
-        .join(edges, col("entity_id") === col("src"))
-        .select(col("dst").as("entity_id"),
-          concat(col("path"), array(col("dst"))).as("path"))
+    val w = Window.partitionBy("entity_id").orderBy("path")
+    traverse(seeds, maxHops, relationType, array(col("entity_id")).as("path"))(
+      _.select(col("dst").as("entity_id"), concat(col("path"), array(col("dst"))).as("path"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
-        .drop("rn")
-        .join(visited.select(col("entity_id").as("seen")),
-          col("entity_id") === col("seen"), "left_anti")
-        .withColumn("hop", lit(hop))
-        .select("entity_id", "hop", "path")
-        .localCheckpoint(true)
-      // Same as [[bfsFrom]]: both union legs are already materialized,
-      // so the union stays lazy — re-checkpointing it would copy every
-      // (entity, path) row again each hop for nothing.
-      visited = visited.union(next)
-      frontier = next
-    }
-    visited.orderBy("hop", "entity_id")
+        .drop("rn"))
   }
 
   /** Neighborhood query: find entities by name/type, traverse, return

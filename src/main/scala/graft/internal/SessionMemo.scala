@@ -148,7 +148,6 @@ private[graft] final class SessionMemo[V](opLabel: String) {
     // On a table with ≤ 2·SampleFiles files the two windows overlap —
     // dedup so each file is sampled once (and counted once).
     val toSample = (headK.toSeq ++ tailK.toSeq).distinct.sortBy(_._1)
-    SessionMemo.lastSampledFiles = toSample.length
     toSample.foreach { case (pathStr, len) =>
       try {
         val in = fs.open(new org.apache.hadoop.fs.Path(pathStr))
@@ -208,12 +207,4 @@ private[graft] object SessionMemo {
     * worst case.
     */
   val SampleFiles = 16
-
-  /** TEST-ONLY observability hook: how many files the LAST fingerprint
-    * pass content-sampled (SessionMemoSpec pins the ≤ 2·SampleFiles
-    * bound on a many-file table). Process-global and racy across
-    * concurrent fingerprints by design — it is never an input to the
-    * fingerprint itself, and no production path reads it.
-    */
-  @volatile private[graft] var lastSampledFiles: Int = 0
 }

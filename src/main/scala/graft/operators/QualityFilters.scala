@@ -161,22 +161,8 @@ object QualityFilters {
   // training-gram stream is never shuffled for the join, regardless of
   // what statistics estimate), per-doc hit aggregate. Linear in corpus
   // size, never an all-pairs compare.
-  /** Word 5-grams of a text column (empty below 5 tokens) — compiled
-    * single-scan kernel ([[graft.functions.expressions.WordGramsExpr]]);
-    * the HOF chain below is the parity twin `GramsKernelSpec` pins it
-    * against on the real corpus.
-    */
-  private def grams5(c: Column): Column =
-    ExpressionUtils.column(graft.functions.expressions.WordGramsExpr(
-      ExpressionUtils.expression(c), 5))
-
-  /** The pre-kernel higher-order-function formulation of [[grams5]]. */
-  private[operators] def grams5Hof(c: Column): Column = {
-    val toks = split(c, " ")
-    val idx = when(size(toks) >= 5, sequence(lit(1), size(toks) - 4))
-      .otherwise(array().cast("array<int>"))
-    transform(idx, i => concat_ws(" ", slice(toks, i, lit(5))))
-  }
+  /** Word 5-grams of a text column (empty below 5 tokens). */
+  private def grams5(c: Column): Column = TextAnalysisShared.ngrams(c, 5)
 
   private def decontaminate(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
@@ -605,17 +591,7 @@ object QualityFilters {
   private val GopherCuts = Map(2 -> 0.20, 3 -> 0.18, 4 -> 0.16,
     5 -> 0.15, 6 -> 0.14, 7 -> 0.13)
 
-  /** n-grams from a pre-split token array — one tokenize per document,
-    * shared across all n values (TextAnalysisShared.ngrams re-splits
-    * the text per call).
-    */
-  private def ngramsFromToks(toks: Column, n: Int): Column = {
-    val idx = when(size(toks) >= n, sequence(lit(1), size(toks) - (n - 1)))
-      .otherwise(array().cast("array<int>"))
-    transform(idx, i => concat_ws(" ", slice(toks, i, lit(n))))
-  }
-
-  /** Fold the sorted n-gram array's run lengths into
+  /** Fold the run lengths of the sorted word n-grams of `text` into
     * struct(topchars, dupchars): chars of the single most frequent
     * gram's occurrences (ties by larger gram string, matching the
     * oracle's ORDER BY c DESC, g DESC) and chars of all grams occurring
@@ -628,8 +604,8 @@ object QualityFilters {
     * interpreted per-element lambda cost dominated the ×100 decade);
     * `Wave5Spec` pins the two to identical values on the real corpus.
     */
-  private[operators] def gramRunStats(toks: Column, n: Int): Column = {
-    val sorted = array_sort(ngramsFromToks(toks, n))
+  private[operators] def gramRunStats(text: Column, n: Int): Column = {
+    val sorted = array_sort(TextAnalysisShared.ngramsHof(text, n))
     val init = struct(lit("").as("prev"), lit(0L).as("run"),
       lit(0L).as("topc"), lit("").as("topg"), lit(0L).as("dup"))
     // (topc, topg, dup) with the pending (prev, run) run folded in.

@@ -13,14 +13,26 @@ import org.apache.spark.sql.functions._
   * fetch-on-demand stage is a pushed-down point filter on the memory
   * table — at scale the id predicate prunes row groups via parquet
   * min/max stats — with a driver-side item cache like the reference's,
-  * bounded because only explicitly-requested full items enter it.
-  * Batch fetches are ONE `isin` scan, not a per-id loop.
+  * bounded because only explicitly-requested full items enter it, and
+  * emptied whenever the store's write generation has moved since it was
+  * filled. Batch fetches are ONE `isin` scan, not a per-id loop.
   */
 final class Progressive(store: MemoryStore, maxSummaryLength: Int = 100) {
 
   import Progressive._
 
   private val cache = scala.collection.mutable.Map.empty[(String, String), Row]
+  private var cacheGeneration = -1L
+
+  /** The item cache, emptied first when the store was written since the
+    * last fetch. The generation is read before the fetch's scan, so a
+    * write racing the scan empties the cache on the next fetch.
+    */
+  private def freshItems(): scala.collection.mutable.Map[(String, String), Row] = {
+    val g = store.writeGeneration
+    if (g != cacheGeneration) { cache.clear(); cacheGeneration = g }
+    cache
+  }
 
   private def tableOf(memoryType: String): DataFrame = memoryType match {
     case MemoryType.Heuristics => store.heuristics().toDF()
@@ -38,23 +50,26 @@ final class Progressive(store: MemoryStore, maxSummaryLength: Int = 100) {
     summarize(tableOf(memoryType), memoryType, level, maxSummaryLength)
 
   /** Fetch one full item on demand, point-filtered, cached. */
-  def fullItem(memoryType: String, id: String): Option[Row] =
-    cache.get((memoryType, id)).orElse {
+  def fullItem(memoryType: String, id: String): Option[Row] = {
+    val items = freshItems()
+    items.get((memoryType, id)).orElse {
       val hit = tableOf(memoryType).filter(col("id") === id).take(1).headOption
-      hit.foreach(r => cache((memoryType, id)) = r)
+      hit.foreach(r => items((memoryType, id)) = r)
       hit
     }
+  }
 
   /** Batch fetch-on-demand: one isin-pruned scan for all uncached ids;
     * results come back in request order.
     */
   def fullItems(memoryType: String, ids: Seq[String]): Seq[Row] = {
-    val missing = ids.filterNot(id => cache.contains((memoryType, id)))
+    val items = freshItems()
+    val missing = ids.filterNot(id => items.contains((memoryType, id)))
     if (missing.nonEmpty) {
       tableOf(memoryType).filter(col("id").isin(missing: _*)).collect()
-        .foreach(r => cache((memoryType, r.getAs[String]("id"))) = r)
+        .foreach(r => items((memoryType, r.getAs[String]("id"))) = r)
     }
-    ids.flatMap(id => cache.get((memoryType, id)))
+    ids.flatMap(id => items.get((memoryType, id)))
   }
 
   def clearCache(): Unit = cache.clear()

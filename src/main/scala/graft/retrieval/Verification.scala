@@ -81,9 +81,12 @@ object Verification {
 
 /** O5: TTL + LRU retrieval-result cache (reference:
   * alma/retrieval/cache.py:363-737 — SHA-256 keys, 300 s TTL, 1000
-  * entries, LRU eviction, hit/miss stats; write-triggered invalidation
-  * alma/core.py:358-359). Driver-side — Spark has no cross-job result
-  * cache, and the candidate sets cached here are tiny.
+  * entries, LRU eviction, hit/miss stats). Driver-side — Spark has no
+  * cross-job result cache, and the candidate sets cached here are tiny.
+  * It never invalidates: the reference's write-triggered invalidation
+  * (alma/core.py:358-359) is a key part instead — `Alma` puts the
+  * store's write generation into every key, so a write leaves the
+  * entries before it unreachable, and LRU eviction reclaims them.
   */
 final class RetrievalCache[V](ttlMillis: Long = 300000L, maxEntries: Int = 1000) {
 
@@ -94,20 +97,6 @@ final class RetrievalCache[V](ttlMillis: Long = 300000L, maxEntries: Int = 1000)
   }
   private var hits = 0L
   private var misses = 0L
-
-  /** Namespaced key `<len>:<namespace>:<sha256(parts)>` — the form to
-    * use when write-triggered invalidation targets an (agent, project)
-    * namespace. The length prefix makes the namespace boundary
-    * unambiguous (namespace "a" can never prefix-match "a:b"); the
-    * matching invalidation predicate is
-    * `_.startsWith(nsPrefix(namespace))`.
-    */
-  def nsKey(namespace: String, parts: String*): String =
-    nsPrefix(namespace) + key(parts: _*)
-
-  /** The invalidation prefix for a namespace. */
-  def nsPrefix(namespace: String): String =
-    s"${namespace.length}:$namespace:"
 
   /** Collision-resistant cache key (length-prefixed SHA-256,
     * cache.py:101-150).
@@ -134,18 +123,6 @@ final class RetrievalCache[V](ttlMillis: Long = 300000L, maxEntries: Int = 1000)
 
   def put(k: String, v: V, nowMillis: Long): Unit = synchronized {
     map.put(k, Entry(v, nowMillis)): Unit
-  }
-
-  /** Write-triggered invalidation by key predicate. Digest keys carry
-    * no recoverable prefix, so namespaced invalidation must use
-    * `nsKey(namespace, ...)` keys and
-    * `invalidateWhere(_.startsWith(nsPrefix(namespace)))`.
-    */
-  def invalidateWhere(pred: String => Boolean): Int = synchronized {
-    val it = map.keySet().iterator()
-    var n = 0
-    while (it.hasNext) { if (pred(it.next())) { it.remove(); n += 1 } }
-    n
   }
 
   def stats: (Long, Long, Int) = synchronized { (hits, misses, map.size()) }

@@ -65,11 +65,33 @@ final class MemoryStore(val spark: SparkSession, val root: String,
   private def tableDir(memoryType: String) = new HPath(s"$root/$memoryType")
   private def markerOf(memoryType: String) = new HPath(tableDir(memoryType), "_CURRENT")
 
+  // ---- write generation: the one staleness signal for caches over reads --
+  private val generation = new java.util.concurrent.atomic.AtomicLong
+
+  /** Moves after every data-changing primitive (append, overwrite,
+    * dropTable) of this store, whatever the table or the caller — a
+    * write through `store` directly as much as one through `Alma`. A
+    * cache over this store's reads reads it BEFORE computing an entry
+    * and keys the entry on it: a write that lands during the compute
+    * moves it past the entry, which is then never served.
+    */
+  def writeGeneration: Long = generation.get
+
+  /** Run a data-changing primitive, then move the generation — on
+    * failure too: a failed write may still have landed files.
+    */
+  private def writing[A](body: => A): A =
+    try body finally generation.incrementAndGet(): Unit
+
   /** The committed `(version, snapshotDir)` of a table: the `_CURRENT`
     * marker when readable, else the highest `_SUCCESS`-complete snapshot
     * directory (covers the marker-swap window on filesystems where the
-    * overwrite-rename is delete+rename, and a corrupted marker). An I/O
-    * error on either probe reads as "not found there".
+    * overwrite-rename is delete+rename, and a corrupted marker — such as
+    * a read racing the flip on the local checksummed filesystem, which
+    * renames data and `.crc` apart and fails the checksum). A missing
+    * file reads as "not there"; any other I/O error propagates, because
+    * callers act on an absent table (vacuum deletes every snapshot,
+    * append commits a fresh table, reads return no rows).
     */
   private def currentSnapshot(memoryType: String): Option[(Long, HPath)] = {
     val marker = markerOf(memoryType)
@@ -90,7 +112,9 @@ final class MemoryStore(val spark: SparkSession, val root: String,
           if (versionOf(name) < 0 || !fs.exists(snap)) None
           else Some((versionOf(name), snap))
         }
-      } catch { case _: java.io.IOException => None }
+      } catch {
+        case _: java.io.FileNotFoundException | _: org.apache.hadoop.fs.ChecksumException => None
+      }
     fromMarker.orElse {
       try {
         fsOf(tableDir(memoryType)).listStatus(tableDir(memoryType)).toSeq
@@ -99,7 +123,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
           .map(st => (versionOf(st.getPath.getName), st.getPath))
           .sortBy { case (v, p) => (v, p.getName) }
           .lastOption
-      } catch { case _: java.io.IOException => None }
+      } catch { case _: java.io.FileNotFoundException => None }
     }
   }
 
@@ -230,9 +254,9 @@ final class MemoryStore(val spark: SparkSession, val root: String,
 
   /** An empty table is represented by no marker and no snapshots at all
     * (an empty partitioned parquet dir has no schema files and poisons
-    * later reads — exists() → typed empty instead).
+    * later reads — an absent table reads as the typed empty frame).
     */
-  private def dropTable(memoryType: String): Unit = {
+  private def dropTable(memoryType: String): Unit = writing {
     val marker = markerOf(memoryType)
     val fs = fsOf(marker)
     try { if (fs.exists(marker)) fs.delete(marker, false): Unit }
@@ -270,7 +294,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     * marker. An append racing a rewrite can land in the snapshot the
     * rewrite is replacing — last-writer-wins, same as the marker race.
     */
-  private def append(df: DataFrame, memoryType: String): Unit =
+  private def append(df: DataFrame, memoryType: String): Unit = writing {
     currentSnapshot(memoryType) match {
       case Some((_, snap)) =>
         df.write.mode(SaveMode.Append)
@@ -278,21 +302,28 @@ final class MemoryStore(val spark: SparkSession, val root: String,
           .parquet(snap.toString)
       case None => commitSnapshot(df, memoryType, baseVersion = 0L): Unit
     }
+  }
 
   def exists(memoryType: String): Boolean = currentSnapshot(memoryType).isDefined
 
-  /** Read a table with its schema declared from the encoder rather than
+  /** Read a table — its typed empty frame when absent — resolving its
+    * snapshot once. The schema is declared from the encoder rather than
     * inferred from footers: schema inference is a Spark job per read
     * (visible as `parquet at ...` jobs), and on a 100 TB table with
     * many files it is a real listing/footer pass. Declared schemas also
     * pin column order regardless of partition-column placement.
     */
   private def readTable(memoryType: String): DataFrame =
-    currentSnapshot(memoryType) match {
-      case Some((_, snap)) =>
-        spark.read.schema(encoderOf(memoryType).schema).parquet(snap.toString)
-      case None => emptyOf(memoryType)
-    }
+    readCommitted(memoryType).getOrElse(emptyOf(memoryType))
+
+  /** A table's rows when it has a committed snapshot — for callers whose
+    * absent branch does something other than read no rows.
+    */
+  private def readCommitted(memoryType: String): Option[DataFrame] =
+    currentSnapshot(memoryType).map { case (_, snap) => readSnapshot(memoryType, snap) }
+
+  private def readSnapshot(memoryType: String, snap: HPath): DataFrame =
+    spark.read.schema(encoderOf(memoryType).schema).parquet(snap.toString)
 
   // ---- filtered scans (S2, F1/F2/F5/F8) --------------------------------
   /** Typed scan with the standard predicate set; filters push to the
@@ -303,10 +334,12 @@ final class MemoryStore(val spark: SparkSession, val root: String,
       memoryType: String,
       projectId: Option[String] = None,
       agents: Seq[String] = Nil,
-      minConfidence: Option[Double] = None): DataFrame = {
-    if (!exists(memoryType))
-      return emptyOf(memoryType)
-    var df = readTable(memoryType)
+      minConfidence: Option[Double] = None): DataFrame =
+    narrowed(readTable(memoryType), projectId, agents, minConfidence)
+
+  private def narrowed(rows: DataFrame, projectId: Option[String],
+      agents: Seq[String] = Nil, minConfidence: Option[Double] = None): DataFrame = {
+    var df = rows
     // User-keyed tables (preferences) carry no projectId/agent column;
     // a predicate on a column the schema lacks is skipped, not an error.
     val cols = df.columns.toSet
@@ -324,8 +357,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     scan(MemoryType.Outcomes, projectId, agents).as(OutcomeEncoder)
 
   def preferences(): Dataset[UserPreference] =
-    (if (exists(MemoryType.Preferences)) readTable(MemoryType.Preferences)
-     else emptyOf(MemoryType.Preferences)).as(PreferenceEncoder)
+    readTable(MemoryType.Preferences).as(PreferenceEncoder)
 
   def knowledge(projectId: Option[String] = None, agents: Seq[String] = Nil,
       minConfidence: Option[Double] = None): Dataset[DomainKnowledge] =
@@ -367,15 +399,17 @@ final class MemoryStore(val spark: SparkSession, val root: String,
   /** The checkpoint tables a read of `runId` (every run when None)
     * covers, from ONE listing of the checkpoints root: the root table
     * when a root `_CURRENT` or `snap_*` entry exists, then the run's
-    * partition (or every `runId=` partition). Candidates only — callers
-    * keep the ones that `exists`. An absent or unlistable root lists
-    * nothing.
+    * partition (or every `runId=` partition). Candidates only: a named
+    * run partition may not exist yet (it reads as empty). An absent root
+    * lists nothing; any other listing error propagates — a read must not
+    * report "no checkpoints" (no resume point) for a root it could not
+    * list.
     */
   private def ckTables(runId: Option[String]): Seq[String] = {
     val dir = tableDir(MemoryType.Checkpoints)
     val names =
       try fsOf(dir).listStatus(dir).toSeq.map(_.getPath.getName)
-      catch { case _: java.io.IOException => Nil }
+      catch { case _: java.io.FileNotFoundException => Nil }
     val rootTable =
       if (names.exists(n => n == "_CURRENT" || versionOf(n) >= 0)) Seq(MemoryType.Checkpoints)
       else Nil
@@ -410,17 +444,13 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     * (schema declared per table — no corpus-wide listing beyond the one
     * directory list). A pure read: nothing is written.
     */
-  def checkpoints(runId: Option[String] = None): Dataset[graft.workflow.Checkpoint] = {
-    val tables = ckTables(runId).filter(exists)
-    val df =
-      if (tables.isEmpty) emptyOf(MemoryType.Checkpoints)
-      else tables.map { t =>
-        val rows = readTable(t)
-        if (t == MemoryType.Checkpoints) runId.fold(rows)(r => rows.filter(col("runId") === r))
-        else rows
-      }.reduce(_.unionByName(_))
-    df.as(CheckpointEncoder)
-  }
+  def checkpoints(runId: Option[String] = None): Dataset[graft.workflow.Checkpoint] =
+    ckTables(runId).map { t =>
+      val rows = readTable(t)
+      if (t == MemoryType.Checkpoints) runId.fold(rows)(r => rows.filter(col("runId") === r))
+      else rows
+    }.reduceOption(_.unionByName(_)).getOrElse(emptyOf(MemoryType.Checkpoints))
+      .as(CheckpointEncoder)
 
   /** Drop all but the latest `keepLatest` checkpoints per branch of a
     * completed run (reference checkpoint.py cleanup): rank the run's
@@ -435,7 +465,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     * Returns the number of checkpoints deleted.
     */
   def cleanupCheckpoints(runId: String, keepLatest: Int): Long = {
-    val reads = ckTables(Some(runId)).filter(exists).map(t => t -> readTable(t))
+    val reads = ckTables(Some(runId)).flatMap(t => readCommitted(t).map(t -> _))
     if (reads.isEmpty) return 0L
     val live = reads.map { case (t, df) => df.withColumn("_table", lit(t)) }.reduce(_.unionByName(_))
     val doomed = doomedCheckpoints(live, runId, keepLatest).select("id", "_table")
@@ -476,14 +506,13 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     * it drops false ones — so its partition-column conjuncts (the
     * `projectId` of a forget) prune the scan.
     */
-  def deleteWhere(memoryType: String, cond: Column): Long = {
-    if (!exists(memoryType)) return 0L
-    val live = readTable(memoryType)
-    val matched = live.filter(cond).count()
-    if (matched > 0)
-      overwrite(live.filter(coalesce(cond, lit(false)) === false), memoryType)
-    matched
-  }
+  def deleteWhere(memoryType: String, cond: Column): Long =
+    readCommitted(memoryType).fold(0L) { live =>
+      val matched = live.filter(cond).count()
+      if (matched > 0)
+        overwrite(live.filter(coalesce(cond, lit(false)) === false), memoryType)
+      matched
+    }
 
   // ---- upsert (S4/A3) ---------------------------------------------------
   /** Distributed heuristic merge: current table merged with incoming on
@@ -554,13 +583,6 @@ final class MemoryStore(val spark: SparkSession, val root: String,
   def upsertHeuristics(incoming: Seq[Heuristic]): Unit =
     mergeHeuristics(frame(incoming, HeuristicEncoder), addCounts = true)
 
-  /** Replace heuristics by id wholesale (promotion re-emission: counts
-    * are recomputed from outcomes); createdAt survives from the
-    * original row.
-    */
-  def replaceHeuristics(incoming: Seq[Heuristic]): Unit =
-    mergeHeuristics(frame(incoming, HeuristicEncoder), addCounts = false)
-
   /** Snapshot rewrite: the merge plan reads the live snapshot while the
     * new one is written to a sibling directory, then the marker flips —
     * a failure at any step leaves the old snapshot live (the marker is
@@ -597,7 +619,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     * (An unpartitioned table's empty result lands a schema-only file;
     * it commits as an empty snapshot, rescued like any other.)
     */
-  private[storage] def overwrite(df: DataFrame, memoryType: String): Unit = {
+  private[storage] def overwrite(df: DataFrame, memoryType: String): Unit = writing {
     val cur = currentSnapshot(memoryType)
     val base = cur.map(_._1).getOrElse(0L)
     // Relative paths of the old-snapshot files the rewrite plan reads.
@@ -616,61 +638,60 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     }
     def unreadIn(oldSnap: HPath): Map[String, HPath] =
       dataFilesIn(oldSnap).filter { case (rel, _) => !readSet.contains(rel) }
-    val written = commitSnapshot(df, memoryType, base, cleanup = false)
-    if (written.isEmpty) {
-      val unread = cur.filter(_ => readSet.nonEmpty)
-        .map { case (_, snap) => unreadIn(snap) }.getOrElse(Map.empty)
-      if (unread.isEmpty) { dropTable(memoryType); return }
-      // The rewrite emptied the table but a racing append landed files
-      // it never read — those rows ARE the table; commit them as the
-      // next snapshot instead of dropping. Best-effort like the main
-      // rescue below: a failure (e.g. a concurrent committer's cleanup
-      // swept the superseded dir mid-read — Spark surfaces that as
-      // SparkException/AnalysisException, not IOException) degrades to
-      // the drop the caller asked for, loudly.
-      try {
-        val rescued = spark.read
-          .option("basePath", fsOf(cur.get._2).makeQualified(cur.get._2).toString)
-          .parquet(unread.values.map(_.toString).toSeq: _*)
-        if (commitSnapshot(rescued, memoryType, base).isEmpty) dropTable(memoryType)
-      } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[graft.MemoryStore] empty-rewrite rescue for " +
-          s"$memoryType failed ($e) — dropping; rows appended during this rewrite may be lost")
-        dropTable(memoryType)
-      }
-      return
-    }
-    val newSnap = written.get
-    if (readSet.nonEmpty) cur.foreach { case (_, oldSnap) =>
-      val unread = unreadIn(oldSnap)
-      if (unread.nonEmpty) {
-        try {
+    commitSnapshot(df, memoryType, base, cleanup = false) match {
+      case None =>
+        val unread = cur.filter(_ => readSet.nonEmpty)
+          .map { case (_, snap) => unreadIn(snap) }.getOrElse(Map.empty)
+        if (unread.isEmpty) dropTable(memoryType)
+        // The rewrite emptied the table but a racing append landed files
+        // it never read — those rows ARE the table; commit them as the
+        // next snapshot instead of dropping. Best-effort like the main
+        // rescue below: a failure (e.g. a concurrent committer's cleanup
+        // swept the superseded dir mid-read — Spark surfaces that as
+        // SparkException/AnalysisException, not IOException) degrades to
+        // the drop the caller asked for, loudly.
+        else try {
           val rescued = spark.read
-            .option("basePath", fsOf(oldSnap).makeQualified(oldSnap).toString)
+            .option("basePath", fsOf(cur.get._2).makeQualified(cur.get._2).toString)
             .parquet(unread.values.map(_.toString).toSeq: _*)
-          val committed = spark.read
-            .option("basePath", fsOf(newSnap).makeQualified(newSnap).toString)
-            .parquet(newSnap.toString)
-          val survivors =
-            if (rescued.columns.contains("id") && committed.columns.contains("id"))
-              rescued.join(committed.select("id"), Seq("id"), "left_anti")
-            else rescued
-          // Appended unprobed: no survivor, no file.
-          survivors.write.mode(SaveMode.Append)
-            .partitionBy(partitionColsOf(survivors): _*)
-            .parquet(newSnap.toString)
+          if (commitSnapshot(rescued, memoryType, base).isEmpty) dropTable(memoryType)
         } catch { case scala.util.control.NonFatal(e) =>
-          // Spark read/write failures arrive as SparkException /
-          // AnalysisException — a narrower IOException catch would let
-          // them escape AFTER the marker flip, failing a rewrite that
-          // actually committed (and skipping the retention cleanup).
-          System.err.println(s"[graft.MemoryStore] concurrent-append rescue for " +
-            s"$memoryType failed ($e) — rows appended during this rewrite may be lost")
+          System.err.println(s"[graft.MemoryStore] empty-rewrite rescue for " +
+            s"$memoryType failed ($e) — dropping; rows appended during this rewrite may be lost")
+          dropTable(memoryType)
         }
-      }
+      case Some(newSnap) =>
+        if (readSet.nonEmpty) cur.foreach { case (_, oldSnap) =>
+          val unread = unreadIn(oldSnap)
+          if (unread.nonEmpty) {
+            try {
+              val rescued = spark.read
+                .option("basePath", fsOf(oldSnap).makeQualified(oldSnap).toString)
+                .parquet(unread.values.map(_.toString).toSeq: _*)
+              val committed = spark.read
+                .option("basePath", fsOf(newSnap).makeQualified(newSnap).toString)
+                .parquet(newSnap.toString)
+              val survivors =
+                if (rescued.columns.contains("id") && committed.columns.contains("id"))
+                  rescued.join(committed.select("id"), Seq("id"), "left_anti")
+                else rescued
+              // Appended unprobed: no survivor, no file.
+              survivors.write.mode(SaveMode.Append)
+                .partitionBy(partitionColsOf(survivors): _*)
+                .parquet(newSnap.toString)
+            } catch { case scala.util.control.NonFatal(e) =>
+              // Spark read/write failures arrive as SparkException /
+              // AnalysisException — a narrower IOException catch would let
+              // them escape AFTER the marker flip, failing a rewrite that
+              // actually committed (and skipping the retention cleanup).
+              System.err.println(s"[graft.MemoryStore] concurrent-append rescue for " +
+                s"$memoryType failed ($e) — rows appended during this rewrite may be lost")
+            }
+          }
+        }
+        cleanupSnapshots(memoryType, keepFromVersion = (base + 1) - (retainSnapshots - 1),
+          protect = Some(newSnap.getName))
     }
-    cleanupSnapshots(memoryType, keepFromVersion = (base + 1) - (retainSnapshots - 1),
-      protect = Some(newSnap.getName))
   }
 
   /** Committed data files inside a snapshot dir, keyed by path relative
@@ -719,22 +740,21 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     * without collecting. The id set is materialized once; a non-empty
     * set is archived and rewritten without probing either plan first.
     */
-  def archiveIds(memoryType: String, ids: DataFrame, reason: String, asOfUs: Long): Unit = {
-    if (!exists(memoryType)) return
-    val live = readTable(memoryType)
-    // Materialize the id set once (it is often a window/overflow plan
-    // that would re-execute per join), and let AQE pick the join
-    // strategy — a forced broadcast would build the whole id set on the
-    // driver, which caps out exactly like a collect() at 100 TB.
-    val key = ids.select(col(ids.columns.head).as("id")).localCheckpoint(true)
-    if (!key.isEmpty) {
-      live.join(key, Seq("id"), "left_semi")
-        .withColumn("reason", lit(reason))
-        .withColumn("archived_at_us", BoundParam.of(asOfUs))
-        .write.mode(SaveMode.Append).parquet(s"$root/archive/$memoryType")
-      overwrite(live.join(key, Seq("id"), "left_anti"), memoryType)
+  def archiveIds(memoryType: String, ids: DataFrame, reason: String, asOfUs: Long): Unit =
+    readCommitted(memoryType).foreach { live =>
+      // Materialize the id set once (it is often a window/overflow plan
+      // that would re-execute per join), and let AQE pick the join
+      // strategy — a forced broadcast would build the whole id set on the
+      // driver, which caps out exactly like a collect() at 100 TB.
+      val key = ids.select(col(ids.columns.head).as("id")).localCheckpoint(true)
+      if (!key.isEmpty) {
+        live.join(key, Seq("id"), "left_semi")
+          .withColumn("reason", lit(reason))
+          .withColumn("archived_at_us", BoundParam.of(asOfUs))
+          .write.mode(SaveMode.Append).parquet(s"$root/archive/$memoryType")
+        overwrite(live.join(key, Seq("id"), "left_anti"), memoryType)
+      }
     }
-  }
 
   def archived(memoryType: String): DataFrame = {
     // The archive is a plain append-only log (never rewritten in place,
@@ -757,17 +777,9 @@ final class MemoryStore(val spark: SparkSession, val root: String,
       .withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_rn", "reason", "archived_at_us")
-    val live = if (exists(memoryType)) readTable(memoryType).select("id")
-      else emptyOf(memoryType).select("id")
-    val toRestore = arch.join(live, Seq("id"), "left_anti")
+    val toRestore = arch.join(readTable(memoryType).select("id"), Seq("id"), "left_anti")
     if (!toRestore.isEmpty) append(toRestore, memoryType)
   }
-
-  // Outcome-named conveniences kept for the quota/maintenance callers.
-  def archiveOutcomes(ids: Set[String], reason: String, asOfUs: Long): Unit =
-    archive(MemoryType.Outcomes, ids, reason, asOfUs)
-  def archivedOutcomes(): DataFrame = archived(MemoryType.Outcomes)
-  def restoreOutcomes(ids: Set[String]): Unit = restore(MemoryType.Outcomes, ids)
 
   // ---- retrieval feedback (R10/R11 write path) ---------------------------
   /** Append usage signals (used / ignored / thumbs_up / thumbs_down) —
@@ -822,7 +834,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
         while (it.hasNext)
           if (it.next().getPath.getName.endsWith(".parquet")) files += 1
         if (files > minFiles)
-          overwrite(readTable(memoryType).repartition(targetPartitions), memoryType)
+          overwrite(readSnapshot(memoryType, snap).repartition(targetPartitions), memoryType)
         files
     }
 
@@ -834,9 +846,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     * lookup's point form — the id predicate pushes to the scan).
     */
   def artifacts(memoryId: Option[String] = None): Dataset[ArtifactRef] = {
-    val df = if (exists(MemoryType.Artifacts))
-      readTable(MemoryType.Artifacts)
-    else emptyOf(MemoryType.Artifacts)
+    val df = readTable(MemoryType.Artifacts)
     memoryId.fold(df)(m => df.filter(col("memoryId") === m)).as(ArtifactEncoder)
   }
 
@@ -850,7 +860,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
   // ---- stats (A4) -------------------------------------------------------
   def stats(projectId: Option[String] = None): Map[String, Long] =
     MemoryType.All.map { t =>
-      t -> (if (exists(t)) scan(t, projectId).count() else 0L)
+      t -> readCommitted(t).fold(0L)(narrowed(_, projectId).count())
     }.toMap
 }
 

@@ -264,10 +264,10 @@ class AlmaSpec extends SparkSpec {
     val archived = alma.enforceQuota(maxOutcomesPerAgent = 2, asOf = ts("2024-02-01 00:00:00"))
     assert(archived == 3)
     assert(alma.store.outcomes(Some("proj1")).count() == 2)
-    val archivedIds = alma.store.archivedOutcomes()
+    val archivedIds = alma.store.archived(MemoryType.Outcomes)
       .select("id").collect().map(_.getString(0)).toSet
     assert(archivedIds.size == 3)
-    alma.store.restoreOutcomes(archivedIds)
+    alma.store.restore(MemoryType.Outcomes, archivedIds)
     assert(alma.store.outcomes(Some("proj1")).count() == 5)
   }
 
@@ -333,6 +333,24 @@ class AlmaSpec extends SparkSpec {
     }
     val third = alma.retrieve("deploy the api", "helena", ts("2024-02-01 00:00:00"), topK = 5)
     assert(third.heuristics.map(_.strategy).toSet == Set("blue green", "rolling restart"))
+  }
+
+  test("a write straight to alma.store is seen by the identical retrieve") {
+    val alma = freshAlma()
+    (1 to 3).foreach { i =>
+      alma.learn("helena", "deploy", "deploy the api", success = true,
+        strategyUsed = "blue green", asOf = ts(s"2024-01-0$i 10:00:00"))
+    }
+    val at = ts("2024-02-01 00:00:00")
+    val before = alma.retrieve("deploy the api", "helena", at, topK = 5)
+    assert(before.heuristics.map(_.strategy) == Seq("blue green"))
+    // Saved through the store, not the facade: no facade write path runs.
+    alma.store.saveHeuristics(Seq(Heuristic("h-direct", "helena", "proj1", "deploy",
+      "feature flag", 0.9, 5L, 5L, ts("2024-01-20 00:00:00"), ts("2024-01-20 00:00:00"),
+      graft.functions.HashEmbedder.embed("deploy the api"), Map.empty)))
+    val after = alma.retrieve("deploy the api", "helena", at, topK = 5)
+    assert(after.heuristics.map(_.id).contains("h-direct"),
+      s"stale cache: ${after.heuristics.map(_.strategy)}")
   }
 
   test("batch retrieval matches per-query retrieval, one pass for N queries") {

@@ -18,7 +18,7 @@ class GramsKernelSpec extends SparkSpec {
         graft.functions.expressions.WordGramsExpr(
           org.apache.spark.sql.graft.ColumnBridge.expression(col("text")), 5))))
     val hof = docs.select(col("doc_id"),
-      posexplode(QualityFilters.grams5Hof(col("text"))))
+      posexplode(TextAnalysisShared.ngramsHof(col("text"), 5)))
     assert(kernel.exceptAll(hof).count() == 0 && hof.exceptAll(kernel).count() == 0,
       "kernel and HOF gram streams must be bit-identical (position included)")
     assert(kernel.count() > 0)

@@ -249,13 +249,19 @@ class SessionMemoSpec extends SparkSpec {
     (0 until n).foreach(i => write(i, Array.tabulate[Byte](128)(b => (b + i).toByte)))
     val memo = new graft.internal.SessionMemo[String]("bound_memo_build")
     var builds = 0
-    def get(): String = memo.getOrBuild(spark, dir.toString) { builds += 1; s"build$builds" }
-    assert(get() == "build1" && get() == "build1", "unchanged table must hit")
+    // Read through `flaky://`, whose open counter shows the file opens
+    // of one fingerprint pass.
+    graft.storage.FlakyFs.register(spark.sparkContext.hadoopConfiguration)
+    def get(): String = memo.getOrBuild(spark, s"flaky://$dir") { builds += 1; s"build$builds" }
+    assert(get() == "build1", "first read builds")
     val cap = 2 * graft.internal.SessionMemo.SampleFiles
-    assert(graft.internal.SessionMemo.lastSampledFiles <= cap,
-      s"fingerprint sampled ${graft.internal.SessionMemo.lastSampledFiles} of $n files — cap is $cap")
-    assert(graft.internal.SessionMemo.lastSampledFiles == cap,
-      "with more files than the cap, exactly the cap should be sampled")
+    graft.storage.FlakyFs.locked {
+      graft.storage.FlakyFs.countOpensOf = dir.toString
+      assert(get() == "build1", "unchanged table must hit")
+      val opened = graft.storage.FlakyFs.opens.get
+      assert(opened <= cap, s"fingerprint opened $opened of $n files — cap is $cap")
+      assert(opened == cap, "with more files than the cap, exactly the cap should be sampled")
+    }
     // Content change in a SAMPLED file (first in path order), same
     // length + mtime: must miss.
     val head0 = Array.tabulate[Byte](128)(b => b.toByte); head0(3) = 0x7f

@@ -265,14 +265,13 @@ class Wave5Spec extends SparkSpec {
   test("compiled gopher stats equal the HOF fold formulation") {
     import org.apache.spark.sql.functions._
     val docs = graft.io.Tables.documents(spark, Sf)
-      .select(col("doc_id"), split(col("text"), " ").as("toks"),
-        QualityFilters.gopherStatsCol.as("st"))
-      .filter(size(col("toks")) >= 2)
+      .select(col("doc_id"), col("text"), QualityFilters.gopherStatsCol.as("st"))
+      .filter(size(split(col("text"), " ")) >= 2)
     val both = docs.select(col("doc_id"),
       element_at(col("st"), 2).as("fast_top2"),
       element_at(col("st"), 7).as("fast_dup7"),
-      QualityFilters.gramRunStats(col("toks"), 2).getField("topchars").as("hof_top2"),
-      QualityFilters.gramRunStats(col("toks"), 7).getField("dupchars").as("hof_dup7"))
+      QualityFilters.gramRunStats(col("text"), 2).getField("topchars").as("hof_top2"),
+      QualityFilters.gramRunStats(col("text"), 7).getField("dupchars").as("hof_dup7"))
       .collect()
     assert(both.nonEmpty)
     both.foreach { r =>

@@ -66,6 +66,23 @@ class ProgressiveSpec extends SparkSpec {
     assert(prog.fullItem(MemoryType.Heuristics, "missing").isEmpty)
   }
 
+  test("a cached item reflects a later store write on its id") {
+    val dir = Files.createTempDirectory("progressive-write").toString
+    val st = new MemoryStore(spark, dir)
+    val h = Heuristic("hw", "a1", "proj1", "slow join", "broadcast the small side",
+      0.7, 4L, 3L, ts("2024-01-06 00:00:00"), ts("2024-01-02 00:00:00"), Array(0.2f), Map.empty)
+    st.saveHeuristics(Seq(h))
+    val p = new Progressive(st)
+    def count(): Option[Long] =
+      p.fullItem(MemoryType.Heuristics, "hw").map(_.getAs[Long]("occurrenceCount"))
+    assert(count().contains(4L))
+    st.upsertHeuristics(Seq(h.copy(occurrenceCount = 2L, successCount = 1L)))
+    assert(count().contains(6L), "a stale cached item survived an upsert")
+    assert(p.fullItems(MemoryType.Heuristics, Seq("hw")).map(_.getAs[Long]("occurrenceCount")) == Seq(6L))
+    st.deleteWhere(MemoryType.Heuristics, org.apache.spark.sql.functions.col("id") === "hw")
+    assert(count().isEmpty, "a deleted item is still served from the cache")
+  }
+
   test("batch fetch resolves uncached ids in one scan and keeps order") {
     prog.clearCache()
     val items = prog.fullItems(MemoryType.Heuristics, Seq("h2", "h1"))

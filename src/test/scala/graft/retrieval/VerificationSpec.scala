@@ -31,19 +31,4 @@ class VerificationSpec extends AnyFunSuite {
     val (hits, misses, size) = c.stats
     assert(hits >= 2 && misses >= 2 && size <= 2)
   }
-
-  test("nsKey namespaces cannot prefix-collide across namespaces") {
-    val c = new RetrievalCache[Int]()
-    c.put(c.nsKey("a", "q1"), 1, 0)
-    c.put(c.nsKey("a:b", "q1"), 2, 0)
-    assert(c.invalidateWhere(_.startsWith(c.nsPrefix("a"))) == 1)
-    assert(c.get(c.nsKey("a:b", "q1"), 1).contains(2))
-  }
-
-  test("cache invalidation by predicate drops matching keys") {
-    val c = new RetrievalCache[Int]()
-    c.put("agent1:q1", 1, 0); c.put("agent1:q2", 2, 0); c.put("agent2:q1", 3, 0)
-    assert(c.invalidateWhere(_.startsWith("agent1")) == 2)
-    assert(c.get("agent2:q1", 1).contains(3))
-  }
 }

@@ -160,7 +160,7 @@ class CheckpointPartitionSpec extends SparkSpec {
     assert(e.getMessage.contains("runId"))
   }
 
-  test("a transient root listing failure misses the root rows for that read only") {
+  test("a transient root listing failure fails that read only") {
     FlakyFs.register(spark.sparkContext.hadoopConfiguration)
     val base = s"$suiteTempDir/flakylist"
     val root = s"flaky://$base"
@@ -170,9 +170,10 @@ class CheckpointPartitionSpec extends SparkSpec {
     val store = new MemoryStore(spark, root)
     FlakyFs.locked {
       // One listing of the checkpoints root answers which tables exist;
-      // while it fails, the read finds none.
+      // while it fails, the read fails rather than finding none (an empty
+      // read would say "no resume point").
       FlakyFs.failListOf = s"$base/${MemoryType.Checkpoints}"
-      assert(ids(store.checkpoints()).isEmpty)
+      intercept[java.io.IOException] { store.checkpoints() }
       // Nothing about the failure is remembered: the next fault-free
       // read on the same store sees every root row.
       FlakyFs.clear()

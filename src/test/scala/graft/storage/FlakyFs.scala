@@ -1,7 +1,9 @@
 package graft.storage
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path => HPath, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path => HPath, RawLocalFileSystem}
 
 /** Test-only fault-injecting local filesystem, registered under the
   * `flaky://` scheme ([[FlakyFs.register]]). Faults are driven by
@@ -11,6 +13,13 @@ import org.apache.hadoop.fs.{FileStatus, Path => HPath, RawLocalFileSystem}
   *  - [[FlakyFs.failListOf]]: `listStatus` on a matching path throws a
   *    plain (non-FileNotFound) IOException — a transient listing
   *    failure.
+  *  - [[FlakyFs.failListOnceOf]]: the same, for the first matching
+  *    listing only (the toggle clears itself) — a failure the next
+  *    listing no longer sees.
+  *  - [[FlakyFs.failOpenOf]]: `open` on a matching path throws a plain
+  *    IOException — an unreadable, not a missing, file.
+  *  - [[FlakyFs.countOpensOf]]: `open` on a matching path counts into
+  *    [[FlakyFs.opens]] — the file I/O a reader pays.
   *  - [[FlakyFs.renameFailOf]]: `rename` FROM a matching source
   *    returns false without moving anything — the legal "rename
   *    failed" signal many object-store adapters use instead of
@@ -34,7 +43,22 @@ class FlakyFs extends RawLocalFileSystem {
   override def listStatus(f: HPath): Array[FileStatus] = {
     if (matches(FlakyFs.failListOf, f))
       throw new java.io.IOException(s"injected transient listing failure: $f")
-    super.listStatus(f)
+    if (matches(FlakyFs.failListOnceOf, f)) {
+      FlakyFs.failListOnceOf = null
+      throw new java.io.IOException(s"injected one-off listing failure: $f")
+    }
+    // Plain statuses: the local ones load their permissions lazily
+    // through java.io.File, which rejects a flaky:// path (a recursive
+    // `listFiles` asks for them).
+    super.listStatus(f).map(st => new FileStatus(st.getLen, st.isDirectory,
+      st.getReplication, st.getBlockSize, st.getModificationTime, st.getPath))
+  }
+
+  override def open(f: HPath, bufferSize: Int): FSDataInputStream = {
+    if (matches(FlakyFs.failOpenOf, f))
+      throw new java.io.IOException(s"injected open failure: $f")
+    if (matches(FlakyFs.countOpensOf, f)) FlakyFs.opens.incrementAndGet(): Unit
+    super.open(f, bufferSize)
   }
 
   override def rename(src: HPath, dst: HPath): Boolean =
@@ -44,9 +68,14 @@ class FlakyFs extends RawLocalFileSystem {
 
 object FlakyFs {
   @volatile var failListOf: String = null
+  @volatile var failListOnceOf: String = null
+  @volatile var failOpenOf: String = null
+  @volatile var countOpensOf: String = null
   @volatile var renameFailOf: String = null
+  val opens = new AtomicInteger
   def clear(): Unit = {
-    failListOf = null; renameFailOf = null
+    failListOf = null; failListOnceOf = null; failOpenOf = null
+    countOpensOf = null; renameFailOf = null; opens.set(0)
   }
 
   /** Bind the `flaky://` scheme on `conf`, for both the FileSystem and
