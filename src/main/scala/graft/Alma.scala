@@ -238,15 +238,8 @@ final class Alma(
     * one agent (core.py:514-537 get_stats; preferences are user-keyed,
     * so the agent filter applies to the agent-keyed collections only).
     */
-  def getStats(agent: Option[String] = None): Map[String, Long] = agent match {
-    case None => store.stats(Some(projectId))
-    case Some(a) => Map(
-      MemoryType.Heuristics -> store.heuristics(Some(projectId), Seq(a)).count(),
-      MemoryType.Outcomes -> store.outcomes(Some(projectId), Seq(a)).count(),
-      MemoryType.Preferences -> store.preferences().count(),
-      MemoryType.Knowledge -> store.knowledge(Some(projectId), Seq(a)).count(),
-      MemoryType.AntiPatterns -> store.antiPatterns(Some(projectId), Seq(a)).count())
-  }
+  def getStats(agent: Option[String] = None): Map[String, Long] =
+    store.stats(Some(projectId), agent.toSeq)
 
   /** Link an external artifact to a memory (core.py:744-807): stored as
     * a URL + integrity metadata row, never the payload itself.
@@ -451,21 +444,13 @@ final class Alma(
       else Nil)
   }
 
-  /** R10/J4: the (small) per-memory feedback summary, broadcast-joined
-    * into every type's scoring plan when signals exist. Feedback-less
-    * rows keep their raw score (feedback.py:190-230).
-    */
-  private def feedbackSummary(): Option[DataFrame] =
-    if (store.exists(MemoryType.Feedback)) Some(store.feedbackSummary(Some(projectId)))
-    else None
-
   /** Score `df`, rows of type `t`, against the query-vector similarity
     * `sim`: the mode's 4-factor base score, the feedback blend, the
     * mode's failure and exact-match boosts, then the `minScore`
     * threshold. Adds `_sim` and `_score`.
     */
   private def scored(df: DataFrame, t: ScoredType, sim: Column, asOfUs: Long,
-      m: ModeConfig, fbSummary: Option[DataFrame]): DataFrame = {
+      m: ModeConfig, fbSummary: DataFrame): DataFrame = {
     // asOf is bound by reference, not as a literal, so every call
     // generates the same Java and reuses the compiled classes.
     val days = (BoundParam.of(asOfUs) - unix_micros(col(t.recencyCol))).cast("double") /
@@ -491,18 +476,16 @@ final class Alma(
     // engine.py:328 applies feedback to scorer output; the boost path
     // :561-571 multiplies afterwards). Blending after boosts would
     // let a boosted raw > 1 row LOSE score to perfect feedback, since
-    // the feedback term is capped at 1.
-    val blended = fbSummary match {
-      case Some(fb) =>
-        raw.join(broadcast(fb), col("id") === col("memoryId"), "left")
-          .withColumn("_fb_score",
-            when(col("feedback_score").isNotNull,
-              lit(1.0 - Alma.FeedbackWeight) * col("_base_score") +
-                lit(Alma.FeedbackWeight) * (col("feedback_score") + lit(1.0)) / lit(2.0))
-              .otherwise(col("_base_score")))
-          .drop("memoryId", "feedback_score")
-      case None => raw.withColumn("_fb_score", col("_base_score"))
-    }
+    // the feedback term is capped at 1. `fbSummary` is the (small)
+    // per-memory summary (R10/J4), empty when no feedback exists;
+    // feedback-less rows keep their raw score (feedback.py:190-230).
+    val blended = raw.join(broadcast(fbSummary), col("id") === col("memoryId"), "left")
+      .withColumn("_fb_score",
+        when(col("feedback_score").isNotNull,
+          lit(1.0 - Alma.FeedbackWeight) * col("_base_score") +
+            lit(Alma.FeedbackWeight) * (col("feedback_score") + lit(1.0)) / lit(2.0))
+          .otherwise(col("_base_score")))
+      .drop("memoryId", "feedback_score")
     blended.withColumn("_score", col("_fb_score") * failB * exactB)
       .drop("_base_score", "_fb_score")
       .filter(col("_score") >= m.minScore)
@@ -569,7 +552,7 @@ final class Alma(
     val q = HashEmbedder.embed(QuerySanitizer.sanitize(query), embedDim)
     val agents = scope(agent).readableAgents
     val asOfUs = asOf.getTime * 1000L
-    val fbSummary = feedbackSummary()
+    val fbSummary = store.feedbackSummary(Some(projectId))
 
     // The fused retrieve is ONE Spark job with no typed stage in it
     // (SURVEY §1.4 MemorySlice alternative). Every per-type branch
@@ -686,7 +669,7 @@ final class Alma(
       (i.toLong, q, HashEmbedder.embed(QuerySanitizer.sanitize(q), embedDim))
     }.toDF("query_id", "query", "q_vec"))
     val sim = VectorFunctions.cosine(col("embedding"), col("q_vec"))
-    val fbSummary = feedbackSummary()
+    val fbSummary = store.feedbackSummary(Some(projectId))
     val candidates = scoredTypes(agents, m).map { t =>
       scored(t.rows.crossJoin(qdf), t, sim, asOfUs, m, fbSummary)
         .select(col("query_id"), col("query"), lit(t.memoryType).as("memory_type"),

@@ -22,19 +22,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle partitions default to the thread count; scaling-curve runs
-    // override (SPARK_GRAFT_SHUFFLE) the way a cluster job would size
-    // partitions with the data rather than pinning them at 1× scale.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", shuffle)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
+      val s = Entrypoint.session(shuffle = Entrypoint.scaledShuffle)
       // The bounded single-partition sorts above `.limit(…)` candidate
       // cuts each emit a "No Partition Defined for Window operation"
       // WARN — hundreds per sweep, burying the result JSON in the tail.
@@ -154,19 +143,12 @@ object Bench {
     parts.zipWithIndex.foreach { case (entries, idx) =>
       println(s"""{"metric":"queries_part","i":${idx + 1},"n":${parts.size},"total":$warmTotal,"queries":${entries.mkString("{", ",", "}")}}""")
     }
-    try graft.io.ArtifactWriter.writeAtomic(outPath, json + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
-    }
+    graft.io.ArtifactWriter.publish("bench", outPath, json)
     // Run-labeled copy so a later run at a different core count (the
     // driver's 8-core scaling pass) can't clobber the canonical 32-core
     // per-query data — the judge reconstructs round-over-round from these.
-    val labeled = outPath.replaceAll("\\.json$", "") + s"_c$cpus.json"
-    if (labeled != outPath)
-      try graft.io.ArtifactWriter.writeAtomic(labeled, json + "\n")
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] could not write $labeled: ${e.getMessage}")
-      }
+    val labeled = outPath.replaceAll("\\.json$", "") + s"_c${Entrypoint.cpus}.json"
+    if (labeled != outPath) graft.io.ArtifactWriter.publish("bench", labeled, json)
     spark.stop()
   }
 }

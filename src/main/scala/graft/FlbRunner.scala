@@ -1,6 +1,8 @@
 package graft
 
-import graft.functions.{EmbeddingProvider, HashEmbeddingProvider, VectorFunctions, Word2VecEmbeddingProvider}
+import graft.functions.{EmbeddingProvider, HashEmbeddingProvider, VectorFunctions}
+import graft.io.ArtifactWriter
+import graft.io.ArtifactWriter.r6
 import graft.sources.Ingestion
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.expressions.Window
@@ -59,36 +61,21 @@ object FlbRunner {
     val weights = if (args.length > 3) args(3).split(',').map(_.toDouble).toSeq
       else Seq(0.05, 0.15, 0.30)
     val seed = 42
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val (provider: EmbeddingProvider, providerName) =
-      sys.props.get("provider").orElse(sys.env.get("SPARK_GRAFT_PROVIDER")) match {
-        case Some("w2v") =>
-          (Word2VecEmbeddingProvider.train(
-            Ingestion.loadBenchmarkJson(spark, path), "session_text"), "w2v")
-        case _ => (HashEmbeddingProvider, "hash")
-      }
+    val spark = Entrypoint.session()
+    val (provider, providerName) =
+      Entrypoint.provider(Ingestion.loadBenchmarkJson(spark, path), "session_text")
     val runs = weights.map(w =>
       w -> run(spark, path, mode = mode, rounds = rounds, weight = w,
         seed = seed, provider = provider))
     val json = jsonLine(runs, mode, seed, providerName)
     println(json)
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_FLB_OUT", "bench/latest_flb.json")
-    try graft.io.ArtifactWriter.writeAtomic(outPath, json + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[flb] could not write $outPath: ${e.getMessage}")
-    }
+    ArtifactWriter.publish("flb",
+      sys.env.getOrElse("SPARK_GRAFT_FLB_OUT", "bench/latest_flb.json"), json)
     spark.stop()
   }
 
   def jsonLine(runs: Seq[(Double, WeightRun)], mode: String, seed: Int,
       providerName: String): String = {
-    def r6(x: Double) = math.rint(x * 1e6) / 1e6
     val wr = runs.map { case (w, run) =>
       val rds = run.rounds.map(m =>
         s"""{"round":${m.round},"recall_at_5":${r6(m.r5)},"mrr":${r6(m.mrr)},"ndcg_at_5":${r6(m.ndcg5)},"n":${m.n},"time_s":${r6(m.timeS)}}""")

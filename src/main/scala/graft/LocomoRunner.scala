@@ -1,6 +1,8 @@
 package graft
 
-import graft.functions.{EmbeddingProvider, HashEmbeddingProvider, VectorFunctions, Word2VecEmbeddingProvider}
+import graft.functions.{EmbeddingProvider, HashEmbeddingProvider, VectorFunctions}
+import graft.io.ArtifactWriter
+import graft.io.ArtifactWriter.r6
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -55,34 +57,18 @@ object LocomoRunner {
     val topK = if (args.length > 1) args(1).toInt else 10
     val thresholds = if (args.length > 2) args(2).split(',').map(_.toDouble).toSeq
       else Seq(0.0, 0.2, 0.4, 0.6)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val (provider: EmbeddingProvider, providerName) =
-      sys.props.get("provider").orElse(sys.env.get("SPARK_GRAFT_PROVIDER")) match {
-        case Some("w2v") =>
-          (Word2VecEmbeddingProvider.train(
-            loadTurns(spark, path), "text"), "w2v")
-        case _ => (HashEmbeddingProvider, "hash")
-      }
+    val spark = Entrypoint.session()
+    val (provider, providerName) = Entrypoint.provider(loadTurns(spark, path), "text")
     val sweep = thresholds.map(t => run(spark, path, minScore = t, topK = topK,
       provider = provider))
     val json = sweepJson(sweep, providerName, topK)
     println(json)
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_LOCOMO_OUT", "bench/latest_locomo.json")
-    try graft.io.ArtifactWriter.writeAtomic(outPath, json + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[locomo] could not write $outPath: ${e.getMessage}")
-    }
+    ArtifactWriter.publish("locomo",
+      sys.env.getOrElse("SPARK_GRAFT_LOCOMO_OUT", "bench/latest_locomo.json"), json)
     spark.stop()
   }
 
   def sweepJson(sweep: Seq[LocomoMetrics], providerName: String, topK: Int): String = {
-    def r6(x: Double) = math.rint(x * 1e6) / 1e6
     def kmap(m: Map[Int, Double]) =
       m.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":${r6(v)}""" }.mkString("{", ",", "}")
     val entries = sweep.map { m =>

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{EmbeddingProvider, HashEmbeddingProvider, VectorFunctions, Word2VecEmbeddingProvider}
+import graft.functions.{EmbeddingProvider, HashEmbeddingProvider, VectorFunctions}
 import graft.sources.Ingestion
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
@@ -21,26 +21,11 @@ object MemEvalRunner {
   def main(args: Array[String]): Unit = {
     val path = args(0)
     val k = if (args.length > 1) args(1).toInt else 5
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Provider selection (V9): -Dprovider=w2v (or SPARK_GRAFT_PROVIDER)
-    // trains the MLlib Word2Vec provider on the haystack corpus before
-    // the sweep; default stays the deterministic hash embedder.
-    // The name is derived from the SAME match as the provider, so the
-    // emitted JSON can never label metrics with an embedder that did
-    // not run (any unrecognized value falls back to hash, and says so).
-    val (provider: EmbeddingProvider, providerName) =
-      sys.props.get("provider").orElse(sys.env.get("SPARK_GRAFT_PROVIDER")) match {
-        case Some("w2v") =>
-          (Word2VecEmbeddingProvider.train(
-            Ingestion.loadBenchmarkJson(spark, path), "session_text"), "w2v")
-        case _ => (HashEmbeddingProvider, "hash")
-      }
+    val spark = Entrypoint.session()
+    // Provider selection (V9): SPARK_GRAFT_PROVIDER=w2v trains the MLlib
+    // Word2Vec provider on the haystack corpus before the sweep.
+    val (provider, providerName) =
+      Entrypoint.provider(Ingestion.loadBenchmarkJson(spark, path), "session_text")
     val m = run(spark, path, k, provider)
     // ONE machine-readable line (overall + per-type), sorted keys, so
     // tools/bench_diff.py can diff IR metrics across rounds mechanically.

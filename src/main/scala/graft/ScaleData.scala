@@ -44,17 +44,9 @@ object ScaleData {
     val only = if (args.length > 3 && args(3) != "-")
       args(3).split(',').map(_.trim).toSet else Set.empty[String]
     val perturb = !(args.length > 4 && args(4) == "exact")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      // Load-bearing for Tables.load's TIMESTAMP_NTZ normalization: the
-      // NTZ→timestamp cast reads the session zone, so an upsample run
-      // on a non-UTC host would otherwise shift every event instant
-      // relative to the UTC-pinned Bench/Verify sessions.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // UTC-pinned like every entrypoint session (Entrypoint.session):
+    // Tables.load's TIMESTAMP_NTZ normalization reads the session zone.
+    val spark = Entrypoint.session()
     scale(spark, src, dst, factor, only, perturb)
     spark.stop()
   }

@@ -1,5 +1,7 @@
 package graft
 
+import graft.io.ArtifactWriter
+import graft.io.ArtifactWriter.r6
 import graft.workflow.TaskDag
 import org.apache.spark.sql.SparkSession
 
@@ -29,13 +31,7 @@ object TaskDepRunner {
   def main(args: Array[String]): Unit = {
     val shapes = if (args.nonEmpty) args(0).split(',').toSeq else DefaultShapes
     val sizes = if (args.length > 1) args(1).split(',').map(_.toInt).toSeq else DefaultSizes
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Entrypoint.session()
     val results = for (shape <- shapes; size <- sizes)
       yield runShape(spark, shape, size)
     val cyclicRejected =
@@ -43,17 +39,13 @@ object TaskDepRunner {
         TaskDag.toFrames(spark, TaskDag.generateDag("cyclic", 50))._1,
         TaskDag.toFrames(spark, TaskDag.generateDag("cyclic", 50))._2); false }
       catch { case _: IllegalArgumentException => true }
-    def r6(x: Double) = math.rint(x * 1e6) / 1e6
     val rows = results.map(r =>
       s"""{"shape":"${r.shape}","size":${r.size},"tasks":${r.tasks},"waves":${r.waves},"verified_waves":${r.verifiedWaves},"time_s":${r6(r.timeS)},"ok":${r.ok}}""")
       .mkString("[", ",", "]")
     val json = s"""{"metric":"task_dependency","cyclic_rejected":$cyclicRejected,"all_ok":${results.forall(_.ok)},"results":$rows}"""
     println(json)
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_TASKDEP_OUT", "bench/latest_taskdep.json")
-    try graft.io.ArtifactWriter.writeAtomic(outPath, json + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[taskdep] could not write $outPath: ${e.getMessage}")
-    }
+    ArtifactWriter.publish("taskdep",
+      sys.env.getOrElse("SPARK_GRAFT_TASKDEP_OUT", "bench/latest_taskdep.json"), json)
     spark.stop()
   }
 

@@ -14,7 +14,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   */
 object ArtifactWriter {
 
-  def writeAtomic(path: String, content: String): Unit = {
+  private def writeAtomic(path: String, content: String): Unit = {
     val p = Paths.get(path).toAbsolutePath
     Files.createDirectories(p.getParent)
     val tmp = Files.createTempFile(p.getParent, "." + p.getFileName.toString + ".", ".tmp")
@@ -26,4 +26,17 @@ object ArtifactWriter {
       Files.deleteIfExists(tmp)
     }
   }
+
+  /** [[writeAtomic]] `content` plus a newline to `path`; a failure is
+    * reported on stderr under `[tag]` instead of failing the run, which
+    * has already printed its result line.
+    */
+  def publish(tag: String, path: String, content: String): Unit =
+    try writeAtomic(path, content + "\n")
+    catch { case e: Throwable =>
+      System.err.println(s"[$tag] could not write $path: ${e.getMessage}")
+    }
+
+  /** A metric rounded to 6 decimals for the result JSON. */
+  def r6(x: Double): Double = math.rint(x * 1e6) / 1e6
 }

@@ -44,9 +44,9 @@ object Tables {
     // every downstream unix_micros()/window sees one type:
     //  - TIMESTAMP(NANOS): inferred (and declared) as raw long nanos
     //  - TIMESTAMP_NTZ (isAdjustedToUTC=false): cast via the session
-    //    time zone — every entrypoint pins spark.sql.session.timeZone
-    //    to UTC, so the wall clock maps 1:1 onto epoch micros exactly
-    //    as DuckDB reads the same naive values
+    //    time zone — every entrypoint session (graft.Entrypoint.session)
+    //    pins it to UTC, so the wall clock maps 1:1 onto epoch micros
+    //    exactly as DuckDB reads the same naive values
     //  - TIMESTAMP(MICROS): already what we want
     if (name != "events") raw
     else raw.schema("ts").dataType match {

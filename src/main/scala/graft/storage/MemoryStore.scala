@@ -858,9 +858,12 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     scan(MemoryType.WorkflowOutcomes, projectId).as(WorkflowOutcomeEncoder)
 
   // ---- stats (A4) -------------------------------------------------------
-  def stats(projectId: Option[String] = None): Map[String, Long] =
+  /** Per-type row counts, narrowed to a project and agents where the
+    * table carries those columns (preferences are user-keyed).
+    */
+  def stats(projectId: Option[String] = None, agents: Seq[String] = Nil): Map[String, Long] =
     MemoryType.All.map { t =>
-      t -> readCommitted(t).fold(0L)(narrowed(_, projectId).count())
+      t -> readCommitted(t).fold(0L)(narrowed(_, projectId, agents).count())
     }.toMap
 }
 

@@ -353,6 +353,32 @@ class AlmaSpec extends SparkSpec {
       s"stale cache: ${after.heuristics.map(_.strategy)}")
   }
 
+  test("a retrieve on a store without a feedback table ranks by the base score in no more jobs") {
+    val alma = freshAlma()
+    (1 to 3).foreach { i =>
+      alma.learn("helena", "deploy", s"deploy the api v$i", success = true,
+        strategyUsed = "blue green", asOf = ts(s"2024-01-0$i 10:00:00"))
+      alma.learn("helena", "deploy", s"deploy the api v$i", success = i != 2,
+        strategyUsed = "canary", asOf = ts(s"2024-01-0$i 11:00:00"))
+    }
+    assert(!alma.store.exists(MemoryType.Feedback))
+    val at = ts("2024-02-01 00:00:00")
+    val jobs = new JobCounter
+    spark.sparkContext.addSparkListener(jobs)
+    var bare: MemorySlice = null
+    val n = try jobs.during { bare = alma.retrieve("deploy the api", "helena", at, topK = 5) }
+      finally spark.sparkContext.removeSparkListener(jobs)
+    // One job, as when a store without feedback skipped the feedback
+    // join: the empty summary's join must plan away, not broadcast.
+    assert(n <= 1, s"$n jobs")
+    // Feedback on a memory no retrieve returns leaves every score as is.
+    alma.recordFeedback("ghost", MemoryType.Heuristics, "helena", FeedbackSignal.ThumbsUp, at)
+    val ref = alma.retrieve("deploy the api", "helena", at, topK = 5)
+    assert(bare.heuristics.map(_.strategy) == Seq("blue green", "canary"))
+    assert(bare.heuristics.map(_.id) == ref.heuristics.map(_.id))
+    assert(bare.outcomes.map(_.id) == ref.outcomes.map(_.id))
+  }
+
   test("batch retrieval matches per-query retrieval, one pass for N queries") {
     val alma = freshAlma()
     for (v <- Seq("payment", "ingest"); i <- 1 to 3) {

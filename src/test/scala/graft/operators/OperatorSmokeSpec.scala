@@ -30,16 +30,14 @@ class OperatorSmokeSpec extends SparkSpec {
     assert(noOracle.isEmpty, s"queries without oracle: $noOracle")
   }
 
-  /** Files under `root` that name the JVM temp dir property, `except`
-    * excluded.
-    */
-  private def tmpdirOffenders(root: String, except: Set[String] = Set.empty): List[String] = {
+  /** Files under `root` whose text satisfies `bad`, `except` excluded. */
+  private def offenders(root: String, except: Set[String] = Set.empty)(bad: String => Boolean): List[String] = {
     val dir = java.nio.file.Paths.get(root)
     assert(java.nio.file.Files.isDirectory(dir), s"$dir not found from ${new java.io.File(".").getAbsolutePath}")
     val walk = java.nio.file.Files.walk(dir)
     try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
       .map(_.toString).filterNot(except)
-      .filter(p => java.nio.file.Files.readString(java.nio.file.Paths.get(p)).contains("java.io.tmpdir")).toList
+      .filter(p => bad(java.nio.file.Files.readString(java.nio.file.Paths.get(p)))).toList
     finally walk.close()
   }
 
@@ -47,8 +45,8 @@ class OperatorSmokeSpec extends SparkSpec {
     // A fixed path under the JVM temp dir is shared by every process and
     // session on the host; graft.internal.Scratch scopes each writing
     // query's directory to its session and application.
-    val offenders = tmpdirOffenders("src/main/scala/graft/operators")
-    assert(offenders.isEmpty, s"fixed temp paths in: ${offenders.mkString(", ")}")
+    val found = offenders("src/main/scala/graft/operators")(_.contains("java.io.tmpdir"))
+    assert(found.isEmpty, s"fixed temp paths in: ${found.mkString(", ")}")
   }
 
   test("no spec names java.io.tmpdir — suites write under their own suiteTempDir") {
@@ -57,8 +55,18 @@ class OperatorSmokeSpec extends SparkSpec {
     // This file names the property only to search for it.
     val self = "src/test/scala/graft/operators/OperatorSmokeSpec.scala"
     assert(java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(self)), s"$self not found")
-    val offenders = tmpdirOffenders("src/test", except = Set(self))
-    assert(offenders.isEmpty, s"fixed temp paths in: ${offenders.mkString(", ")}")
+    val found = offenders("src/test", except = Set(self))(_.contains("java.io.tmpdir"))
+    assert(found.isEmpty, s"fixed temp paths in: ${found.mkString(", ")}")
+  }
+
+  test("no main builds its own SparkSession — every entrypoint takes graft.Entrypoint.session") {
+    // The one setup pins the locale, the UTC session zone Tables.load
+    // relies on, and the core count; a hand-built session drifts from it.
+    val setup = "src/main/scala/graft/Entrypoint.scala"
+    assert(java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(setup)), s"$setup not found")
+    val code = (s: String) => s.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+    val builders = offenders("src/main", except = Set(setup))(s => code(s).contains("SparkSession.builder()"))
+    assert(builders.isEmpty, s"SparkSession.builder() outside the entrypoint setup in: ${builders.mkString(", ")}")
   }
 
   test("flagship entry returns ranked rows") {
