@@ -2,11 +2,12 @@ package graft.internal
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-(session, table-state) memo of an expensive derived value —
-  * the one cache discipline in the engine. Eight instances use it: the
-  * signature state ([[graft.operators.TextAnalysisShared.DocSigs]]),
+  * the one place that decides whether a value is kept across calls.
+  * Eight instances use it: the signature state
+  * ([[graft.operators.TextAnalysisShared.DocSigs]]),
   * the LM scores and bigram counts ([[graft.operators.Curation]]), the
   * BPE merge list ([[graft.operators.Lifecycle]]), the BPE training
   * vocabulary ([[graft.operators.TokenizerTrain]]), the IVF codebook
@@ -14,18 +15,18 @@ import org.apache.spark.sql.SparkSession
   * layout of `q_ann_pruned` ([[graft.operators.VectorSearch]]) and
   * each table's Parquet schema ([[graft.io.Tables]]). Within a session
   * the first consumer of a shared chain pays the build (typically a
-  * `localCheckpoint(true)`, a collect, a [[Scratch]] write, or the
+  * [[SessionMemo.pin]], a collect, a [[Scratch]] write, or the
   * schema-inference job) and later consumers re-read the result.
   *
-  * Three properties the ad-hoc per-file WeakHashMaps did NOT have:
-  *
-  *  - '''Mutation invalidation.''' The cache key folds in a fingerprint
-  *    of the table directory's file listing (file count plus per-file
-  *    path, length, mtime AND a head/tail content sample, via the
-  *    Hadoop FileSystem, so it works on HDFS/S3 paths too). A
-  *    rewritten table misses naturally — no reliance on the opt-out
-  *    conf — and the superseded entry for the same path is evicted so
-  *    its checkpoint blocks can be unpersisted by GC/ContextCleaner.
+  *  - '''One entry per (session, table path).''' The entry holds the
+  *    fingerprint of the table directory's file listing (file count
+  *    plus per-file path, length, mtime AND a head/tail content
+  *    sample, via the Hadoop FileSystem, so it works on HDFS/S3 paths
+  *    too) beside the value. A rewritten table misses naturally — no
+  *    reliance on the opt-out conf — and its rebuild replaces the entry
+  *    in one step: two builds for one path never run at once, and the
+  *    superseded value is referenced by nothing, so Spark's
+  *    ContextCleaner frees its checkpoint blocks and broadcasts.
   *  - '''Eviction for stopped sessions.''' The memoized DataFrames
   *    strongly reference their SparkSession, so a WeakHashMap keyed on
   *    the session alone never collects (the value pins the key). Every
@@ -39,14 +40,19 @@ import org.apache.spark.sql.SparkSession
   *    whichever query happened to run first.
   *
   * One switch turns every memo off: with [[SessionMemo.EnabledConf]]
-  * `=false` a call bypasses the memo entirely — it rebuilds, unlabeled,
-  * inside the consuming query — which is what per-query
-  * standalone-cost benchmarking and the caches-off oracle run want.
+  * `=false` nothing is kept across calls. A call bypasses the memo — it
+  * rebuilds, unlabeled, inside the consuming query — and
+  * [[SessionMemo.pin]] hands back the plain plan; that is what
+  * per-query standalone-cost benchmarking and the caches-off oracle run
+  * want. A materialization that one query reads more than once (the
+  * signature vectors behind a census and a pair join, `q_ann_pruned`'s
+  * written layout) is not a pin: it stays a plain `localCheckpoint` or
+  * [[Scratch]] write in both modes.
   */
 private[graft] final class SessionMemo[V](opLabel: String) {
 
   private val cache =
-    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, V]]()
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, (String, V)]]()
 
   /** FNV-1a 64 over the recursive listing: file count, then per file
     * (path, length, mtime) PLUS a bounded content sample — the first 16
@@ -173,23 +179,14 @@ private[graft] final class SessionMemo[V](opLabel: String) {
     val perSession = cache.synchronized {
       val it = cache.entrySet().iterator()
       while (it.hasNext) if (it.next().getKey.sparkContext.isStopped) it.remove()
-      var m = cache.get(s)
-      if (m == null) { m = new ConcurrentHashMap[String, V](); cache.put(s, m) }
-      m
+      cache.computeIfAbsent(s, _ => new ConcurrentHashMap[String, (String, V)]())
     }
-    val key = tablePath + "#" + fingerprint(s, tablePath)
-    val hit = perSession.get(key)
-    if (hit != null) return hit
-    // A changed fingerprint supersedes any prior entry for this path;
-    // drop the stale key before (re)building so the map stays one
-    // entry per live table state.
-    val stale = perSession.keys()
-    while (stale.hasMoreElements) {
-      val k = stale.nextElement()
-      if (k.startsWith(tablePath + "#") && k != key) perSession.remove(k)
-    }
-    perSession.computeIfAbsent(key,
-      _ => graft.observability.Metrics.withOp(s, opLabel)(build))
+    val fp = fingerprint(s, tablePath)
+    // The build runs inside `compute`: a second caller for the same path
+    // waits for it, then reads its value.
+    perSession.compute(tablePath, (_, kept) =>
+      if (kept != null && kept._1 == fp) kept
+      else (fp, graft.observability.Metrics.withOp(s, opLabel)(build)))._2
   }
 }
 
@@ -197,7 +194,13 @@ private[graft] object SessionMemo {
   /** The one opt-out conf of every memo (default `true`). */
   val EnabledConf = "spark.graft.memo.enabled"
 
-  def enabled(s: SparkSession): Boolean = s.conf.get(EnabledConf, "true").toBoolean
+  private def enabled(s: SparkSession): Boolean = s.conf.get(EnabledConf, "true").toBoolean
+
+  /** A memo's cross-call pin: the frame checkpointed while memos keep
+    * values, the plain frame when they are off.
+    */
+  def pin(s: SparkSession)(df: DataFrame): DataFrame =
+    if (enabled(s)) df.localCheckpoint(true) else df
 
   /** Content-sample at most this many files from each end of the
     * path-sorted listing per fingerprint — the structural cap on the

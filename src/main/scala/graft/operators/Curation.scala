@@ -84,10 +84,10 @@ object Curation {
     * scores over the raw table, and each used to rebuild the model +
     * re-run the scoring pass (~2 s each at sf0.1, 5× redundant in one
     * Bench/Verify session). The first consumer computes the chain and
-    * localCheckpoints the (doc_id, n_bigrams, xent) result — narrow,
-    * linear rows — and the rest reuse it. Keyed on the table's
-    * file-listing fingerprint so a rewritten table misses naturally
-    * ([[graft.internal.SessionMemo]]); builds surface in op-metrics as
+    * pins ([[graft.internal.SessionMemo.pin]]) the (doc_id, n_bigrams,
+    * xent) result — narrow, linear rows — and the rest reuse it. Keyed
+    * on the table's file-listing fingerprint so a rewritten table misses
+    * naturally ([[graft.internal.SessionMemo]]); builds surface in op-metrics as
     * `lm_score_cache_build`; `spark.graft.memo.enabled=false` opts out.
     */
   private val lmScoreCache = new graft.internal.SessionMemo[DataFrame]("lm_score_cache_build")
@@ -106,24 +106,23 @@ object Curation {
       .orderBy(col("cb").desc, col("bigram"))
       .limit(LmVocabCap)
 
-  private def cachedBigramCounts(s: SparkSession, dir: String): DataFrame =
+  /** The bigram table of `docs`, the documents table under `dir`. */
+  private def cachedBigramCounts(s: SparkSession, dir: String, docs: DataFrame): DataFrame =
     bigcCache.getOrBuild(s, s"$dir/documents.parquet")(
-      rawBigramCounts(Tables.documents(s, dir)).localCheckpoint(true))
+      graft.internal.SessionMemo.pin(s)(rawBigramCounts(docs)))
 
-  private def lmScored(s: SparkSession, dir: String): DataFrame = {
-    if (!graft.internal.SessionMemo.enabled(s))
-      return lmScoredOn(Tables.documents(s, dir))
-    lmScoreCache.getOrBuild(s, s"$dir/documents.parquet")(
-      lmScoredOn(Tables.documents(s, dir),
-        Some(cachedBigramCounts(s, dir))).localCheckpoint(true))
-  }
+  private def lmScored(s: SparkSession, dir: String): DataFrame =
+    lmScoreCache.getOrBuild(s, s"$dir/documents.parquet") {
+      val docs = Tables.documents(s, dir)
+      graft.internal.SessionMemo.pin(s)(lmScoredOn(docs, cachedBigramCounts(s, dir, docs)))
+    }
 
-  /** LM scorer over an arbitrary (doc_id, text, lang) frame — the
+  /** LM scorer over an arbitrary (doc_id, text, lang) frame and its
+    * bigram table ([[rawBigramCounts]] of the same frame) — the
     * pipeline capstone trains on ITS stage-1 survivors, not the raw
     * table, so the model never sees documents an earlier gate dropped.
     */
-  private def lmScoredOn(docs: DataFrame,
-      bigcIn: Option[DataFrame] = None): DataFrame = {
+  private def lmScoredOn(docs: DataFrame, bigc: DataFrame): DataFrame = {
     val train = docs.filter(col("lang") === "en")
     val uni = train
       .select(explode(split(col("text"), " ")).as("w"))
@@ -131,7 +130,6 @@ object Curation {
       .orderBy(col("cu").desc, col("w"))
       .limit(LmVocabCap)
     val vocabSize = uni.agg(count(lit(1)).as("vsz"))
-    val bigc = bigcIn.getOrElse(rawBigramCounts(docs))
     docs
       .select(col("doc_id"), explode(bigrams(col("text"))).as("bigram"))
       .join(broadcast(bigc), Seq("bigram"), "left")
@@ -204,7 +202,7 @@ object Curation {
     val docs = Tables.documents(s, dir)
     // The session-memoized bigram table IS this model's base (same cap,
     // same order); the w1/w2 splits are a 64k-row projection on top.
-    val bigc = cachedBigramCounts(s, dir)
+    val bigc = cachedBigramCounts(s, dir, docs)
       .select(col("bigram"), col("cb"),
         substring_index(col("bigram"), " ", 1).as("w1"),
         substring_index(col("bigram"), " ", -1).as("w2"))
@@ -924,7 +922,7 @@ object Curation {
     // bench/r17_pipe_x30_{gatedckpt,lazy_old}.json) — it materializes
     // corpus text for consumers that each prune it to narrower
     // columns. Same calibration as the r16 batch-6 reverts.
-    val scored = lmScoredOn(gated)
+    val scored = lmScoredOn(gated, rawBigramCounts(gated))
     val thr = scored.agg(expr("percentile(xent, 0.75)").as("thr"))
     val kept = scored.crossJoin(broadcast(thr))
       .filter(col("xent") <= col("thr"))

@@ -985,6 +985,12 @@ private[graft] object TextAnalysisShared {
     *    ([[Lifecycle.minhashCcLabelsFromSigs]], a diameter-many
     *    sequence of driver-blocking rounds) shared by the three
     *    cluster-family queries. Builds labeled `cc_labels_build`.
+    *
+    * None of its checkpoints is a memo pin ([[graft.internal.SessionMemo.pin]]):
+    * one query reads each more than once (`vectors`: the census and the
+    * pair join; `shingleSets`: both sides of the pair join; an anchor
+    * frame: the candidates and the anti-join), so they stay with memos
+    * off, where each call gets a fresh state.
     */
   final class DocSigs private[TextAnalysisShared] (val vectors: DataFrame, docs: DataFrame) {
     val frame: DataFrame = explodeVectors(vectors)

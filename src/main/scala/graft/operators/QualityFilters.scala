@@ -260,12 +260,13 @@ object QualityFilters {
 
   private def decontaminateBloom(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    // Persisted: read three times (sizing count, bitmap build, confirm
-    // join) — without the persist the held explode+distinct runs
-    // thrice.
+    // Checkpointed: read three times (sizing count, bitmap build,
+    // confirm join) — without it the held explode+distinct runs thrice.
+    // Lazy, so the sizing count is the job that realizes it. Its blocks
+    // go with the frame: no later call reads them.
     val held = docs.filter(col("doc_id") % 3 === 0)
       .select(explode(grams5(col("text"))).as("gram")).distinct()
-      .persist()
+      .localCheckpoint(false)
     val words = bloomBitmap(held, "gram", bloomSize(held.count()))
     docs.filter(col("doc_id") % 3 =!= 0)
       .select(col("doc_id"), explode(grams5(col("text"))).as("gram"))

@@ -148,13 +148,17 @@ object VectorSearch {
 
   /** The cell layout is a STORED table in the real design (you write
     * the corpus partitioned by bucket once, then every probe prunes):
-    * written once per table state into a fresh scratch directory and
-    * read back, so a warm probe re-lists nothing and infers no schema.
+    * written once per table state and read back, so a warm probe
+    * re-lists nothing and infers no schema. Each table has one scratch
+    * directory, named by a digest of its path, and a rebuild (after a
+    * rewrite, or on every call with memos off) replaces the previous
+    * layout there.
     */
   private val cellLayout = new graft.internal.SessionMemo[DataFrame]("ann_layout_build")
 
   private def writeCellLayout(s: SparkSession, dir: String): DataFrame = {
-    val layout = graft.internal.Scratch.path(s, s"q_ann_pruned/${java.util.UUID.randomUUID}")
+    val digest = java.util.UUID.nameUUIDFromBytes(s"$dir/embeddings.parquet".getBytes("UTF-8"))
+    val layout = graft.internal.Scratch.dir(s, s"q_ann_pruned/$digest")
     Tables.embeddings(s, dir)
       .withColumn("bucket", signBucket(col("embedding"), 8))
       .write.partitionBy("bucket").parquet(layout)

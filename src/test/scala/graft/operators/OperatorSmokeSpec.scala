@@ -41,6 +41,10 @@ class OperatorSmokeSpec extends SparkSpec {
     finally walk.close()
   }
 
+  /** `src` without its comments. */
+  private def code(src: String): String =
+    src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+
   test("no operator names java.io.tmpdir — writing queries take their paths from Scratch") {
     // A fixed path under the JVM temp dir is shared by every process and
     // session on the host; graft.internal.Scratch scopes each writing
@@ -64,9 +68,20 @@ class OperatorSmokeSpec extends SparkSpec {
     // relies on, and the core count; a hand-built session drifts from it.
     val setup = "src/main/scala/graft/Entrypoint.scala"
     assert(java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(setup)), s"$setup not found")
-    val code = (s: String) => s.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
     val builders = offenders("src/main", except = Set(setup))(s => code(s).contains("SparkSession.builder()"))
     assert(builders.isEmpty, s"SparkSession.builder() outside the entrypoint setup in: ${builders.mkString(", ")}")
+  }
+
+  test("no operator caches outside SessionMemo — no .persist( or .cache()") {
+    // Spark's CacheManager is context-wide: a persisted frame is served
+    // to every later call in every session, memos off included, and
+    // stays until unpersisted. Values kept across calls go through
+    // graft.internal.SessionMemo; a frame one query reads more than
+    // once is a localCheckpoint, released with the frame.
+    val found = offenders("src/main/scala/graft/operators") { s =>
+      val c = code(s); c.contains(".persist(") || c.contains(".cache()")
+    }
+    assert(found.isEmpty, s"persist/cache in: ${found.mkString(", ")}")
   }
 
   test("flagship entry returns ranked rows") {

@@ -193,12 +193,23 @@ class SessionMemoSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val v2 = pruned().collect().toSeq
     assert(v2 != v1 && v2 == bucket(), s"stale layout served after a rewrite: $v2")
-    assert(layouts() == before + 1)
-    // Memos off: a fresh layout on every call.
+    assert(layouts() == before, "a rewrite's layout must replace the superseded one")
+    // Memos off: every call rebuilds the layout, in the same directory.
     withCachesOff {
       assert(pruned().collect().toSeq == v2 && pruned().collect().toSeq == v2)
     }
-    assert(layouts() == before + 3)
+    assert(layouts() == before, "memos-off calls must not grow the layouts")
+  }
+
+  test("no cache outside the memo: q_decontaminate_bloom leaves Spark's CacheManager empty") {
+    // The CacheManager is context-wide: a frame left in it is served to
+    // every later call, in every session, with memos off too. Other
+    // suites' cached frames are dropped first so the check sees this
+    // query's alone.
+    spark.catalog.clearCache()
+    SparkEntry.queries("q_decontaminate_bloom")(spark, Sf).collect(): Unit
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "q_decontaminate_bloom left a frame in Spark's CacheManager")
   }
 
   test("a same-length same-mtime byte rewrite still misses (content-sample fingerprint)") {
