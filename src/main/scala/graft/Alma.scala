@@ -10,7 +10,6 @@ import graft.functions.expressions.BoundParam
 import graft.retrieval.{ModeConfig, Modes, PostProcess, QuerySanitizer, RetrievalCache}
 import graft.storage._
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 /** The user-facing engine facade — the reference's `ALMA` core API
@@ -54,6 +53,27 @@ final class Alma(
   /** Record a task outcome; promote heuristics / anti-patterns when the
     * thresholds are met (A1: ≥3 occurrences and >0.5 success ratio;
     * A2: ≥2 similar failures — protocols.py:163-279).
+    *
+    * One decision on the driver: a single collect, before any write,
+    * returns everything the learn decides on ([[learnLegs]]) — the
+    * write guard's verdict, this task type's per-strategy stats, the
+    * agent's repeated failure classes and its stored promotion ids —
+    * each bounded by the agent's distinct strategies, error classes or
+    * promotions, never by the history's length. The driver adds the new
+    * outcome to the stats, refuses the learn (before the append) or
+    * appends the outcome, and builds the promoted rows itself, like
+    * every other facade write:
+    *  - A1: every strategy whose heuristic is stored is refreshed from
+    *    the recomputed stats, also downward, so a strategy whose success
+    *    ratio collapses is demoted in place; the threshold gates NEW
+    *    heuristics only. Counts are recomputed from the full history,
+    *    so matched rows are REPLACED (deterministic ids make this
+    *    idempotent); incrementing would double-count.
+    *  - A2 (failed learns): every repeated error class whose promotion
+    *    id is not stored is appended, insert-only — a promoted pattern
+    *    is never weakened by later successes. Stored anti-patterns are
+    *    matched by id, never by `whyBad`.
+    * Nothing is written for an empty list.
     */
   def learn(
       agent: String,
@@ -66,12 +86,6 @@ final class Alma(
       errorMessage: Option[String] = None,
       context: Option[graft.workflow.WorkflowContext] = None): Outcome = {
     context.foreach(_.validate())
-    // F10 write guard: learning a strategy that matches a stored
-    // anti-pattern is refused.
-    val clear = store.antiPatterns(Some(projectId), scope(agent).readableAgents)
-      .filter(col("pattern") === strategyUsed).isEmpty
-    require(clear, s"write guard: strategy '$strategyUsed' matches a stored anti-pattern")
-
     val o = Outcome(
       id = UUID.randomUUID().toString,
       agent = agent, projectId = projectId,
@@ -83,79 +97,105 @@ final class Alma(
       // Workflow-scoped learns stamp their coordinates so that
       // retrieveWithScope can filter on them (context.py pairing).
       metadata = context.fold(Map.empty[String, String])(_.toStamp))
+    val legs = learnLegs(o)
+    // F10 write guard: learning a strategy that matches a stored
+    // anti-pattern is refused.
+    require(legs("guard").isEmpty, s"write guard: strategy '$strategyUsed' matches a stored anti-pattern")
+
     store.saveOutcomes(Seq(o))
     events.emit(graft.events.MemoryEvent(
       graft.events.MemoryEventType.Created, agent, projectId,
       MemoryType.Outcomes, o.id, asOf.getTime * 1000L,
       Map("task_type" -> taskType, "success" -> success.toString)))
-    promoteHeuristics(agent, taskType, asOf)
-    if (!success) promoteAntiPatterns(agent, asOf)
+
+    // The tallies are the stored history's; this outcome is added here.
+    val heuristics = legs("heuristic").map(_.getString(1)).toSet
+    val stats = legs("strategy").map(r => r.getString(1) -> (r.getLong(2), r.getLong(3))).toMap
+    val (n0, succ0) = stats.getOrElse(strategyUsed, (0L, 0L))
+    val promoted = (stats + (strategyUsed -> (n0 + 1, succ0 + (if (success) 1 else 0)))).toSeq.flatMap {
+      case (strategy, (n, succ)) =>
+        val id = s"h-$projectId-$agent-$taskType-${Alma.idHash(strategy)}"
+        val confidence = succ.toDouble / n
+        if (heuristics(id) || (n >= scope(agent).minOccurrencesForHeuristic && confidence > 0.5))
+          Some(Heuristic(id, agent, projectId, taskType, strategy, confidence, n, succ, asOf, asOf,
+            HashEmbedder.embed(s"$taskType $strategy", embedDim), Map.empty))
+        else None
+    }
+    if (promoted.nonEmpty) store.mergeHeuristics(promoted, heuristics, addCounts = false)
+
+    if (!success) {
+      val antiPatterns = legs("antiPattern").map(_.getString(1)).toSet
+      val stored = legs("failure").map { r =>
+        val f = r.getStruct(4)
+        r.getString(1) -> (r.getLong(2), (f.getTimestamp(0), f.getString(1), f.getString(2)))
+      }.toMap
+      // This outcome counts one more in its class, and is the class's
+      // first failure when it sorts first by (timestamp, id).
+      val own = (asOf, o.id, strategyUsed)
+      val classes = errorMessage.fold(stored) { e =>
+        val (n, first) = stored.getOrElse(e, (0L, own))
+        val earlier = first._1.before(asOf) || (first._1 == asOf && first._2 < o.id)
+        stored + (e -> (n + 1, if (earlier) first else own))
+      }
+      val fresh = classes.toSeq.collect { case (error, (n, (_, _, strategy)))
+          if n >= 2 && !antiPatterns(s"ap-$projectId-$agent-${Alma.idHash(error)}") =>
+        AntiPattern(s"ap-$projectId-$agent-${Alma.idHash(error)}", agent, projectId, strategy, error,
+          s"avoid: $strategy", n, asOf, asOf, HashEmbedder.embed(error, embedDim), Map.empty)
+      }
+      if (fresh.nonEmpty) store.saveAntiPatterns(fresh)
+    }
     o
   }
 
-  /** A1 heuristic promotion over recent outcomes of this task type.
-    * New heuristics require the promotion threshold; existing ones are
-    * ALWAYS refreshed from the recomputed stats, so a strategy whose
-    * success ratio later collapses is demoted in place rather than
-    * frozen at its last promoted confidence.
-    *
-    * Fully distributed: the per-strategy stats aggregate projects
-    * straight into Heuristic-shaped rows (Column expressions, no typed
-    * stage) and merges into storage by id (MemoryStore.mergeHeuristics)
-    * — counts are recomputed from the full outcome history, so matched
-    * rows are REPLACED (deterministic ids make this idempotent);
-    * incrementing would double-count. The promotion threshold gates NEW
-    * rows only. Per-call values reach the generated code by reference
-    * (strings are bound that way already; `asOf` through BoundParam),
-    * so every call reuses its classes.
+  /** The one read of a learn: a single collect of five bounded legs,
+    * each a `(leg, key, n, succ, first)` row set, keyed by leg name:
+    *  - `guard`: ids of the readable agents' anti-patterns whose
+    *    `pattern` is the strategy (F10);
+    *  - `heuristic` / `antiPattern`: the agent's stored heuristic and
+    *    anti-pattern ids;
+    *  - `strategy`: this task type's stored `(n, succ)` per strategy;
+    *  - `failure`: the agent's stored failures per `errorMessage`, with
+    *    the `(timestamp, id, strategyUsed)` of the first, for the
+    *    classes with `n ≥ 2` and the class of `o`.
+    * `o` is left out and added by the caller. In the plan it would be a
+    * local relation, which the optimizer folds each leg's filter into
+    * and prunes once empty, so failed and successful learns would run
+    * different plans; and a union with it would split the tally's scan
+    * and sort into more stages. As it is, every learn runs one plan and
+    * reuses the classes generated for it.
     */
-  private def promoteHeuristics(agent: String, taskType: String, asOf: Timestamp): Unit = {
-    val at = BoundParam.of(asOf)
-    val incoming = store.outcomes(Some(projectId), Seq(agent)).toDF()
-      .filter(col("taskType") === taskType)
-      .groupBy("strategyUsed")
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("success"), 1L).otherwise(0L)).as("succ"))
-      .select(
-        concat(lit(s"h-$projectId-$agent-$taskType-"), Alma.idHash(col("strategyUsed"))).as("id"),
-        lit(agent).as("agent"), lit(projectId).as("projectId"),
-        lit(taskType).as("condition"), col("strategyUsed").as("strategy"),
-        (col("succ").cast("double") / col("n")).as("confidence"),
-        col("n").as("occurrenceCount"), col("succ").as("successCount"),
-        at.as("lastValidated"), at.as("createdAt"),
-        Alma.embed(concat(lit(taskType + " "), col("strategyUsed")), embedDim).as("embedding"),
-        Alma.NoMetadata.as("metadata"))
-    store.mergeHeuristics(incoming, addCounts = false,
-      insertFilter = Some(col("occurrenceCount") >= scope(agent).minOccurrencesForHeuristic &&
-        col("confidence") > 0.5))
-  }
-
-  /** A2 anti-pattern promotion: ≥2 failures with the same error class.
-    * Distributed like promoteHeuristics: aggregate → AntiPattern-shaped
-    * projection → anti-join against stored ids → append (insert-only;
-    * promoted patterns are never weakened by later successes). The
-    * append runs the plan once; an empty result writes nothing.
-    */
-  private def promoteAntiPatterns(agent: String, asOf: Timestamp): Unit = {
-    val at = BoundParam.of(asOf)
-    val candidates = store.outcomes(Some(projectId), Seq(agent)).toDF()
-      .filter(!col("success") && col("errorMessage").isNotNull)
-      .groupBy(col("errorMessage"))
-      .agg(count(lit(1)).as("n"),
-        min_by(col("strategyUsed"), struct(col("timestamp"), col("id"))).as("strategy"))
-      .filter(col("n") >= 2)
-      .select(
-        concat(lit(s"ap-$projectId-$agent-"), Alma.idHash(col("errorMessage"))).as("id"),
-        lit(agent).as("agent"), lit(projectId).as("projectId"),
-        col("strategy").as("pattern"), col("errorMessage").as("whyBad"),
-        concat(lit("avoid: "), col("strategy")).as("betterAlternative"),
-        col("n").as("occurrenceCount"),
-        at.as("lastSeen"), at.as("createdAt"),
-        Alma.embed(col("errorMessage"), embedDim).as("embedding"),
-        Alma.NoMetadata.as("metadata"))
-    val fresh = candidates.join(
-      store.antiPatterns(Some(projectId), Seq(agent)).select("id"), Seq("id"), "left_anti")
-    store.appendRows(fresh, MemoryType.AntiPatterns)
+  private def learnLegs(o: Outcome): Map[String, Seq[org.apache.spark.sql.Row]] = {
+    val p = Some(projectId)
+    val own = Seq(o.agent)
+    def ids(leg: Column, rows: DataFrame) = rows.select(leg.as("leg"), col("id").as("key"), lit(0L).as("n"),
+      lit(0L).as("succ"), lit(null).cast("struct<timestamp:timestamp,id:string,strategyUsed:string>").as("first"))
+    val guard = col("pattern") === o.strategyUsed
+    // One scan feeds both tallies: an outcome counts toward its strategy
+    // when it is of this task type, and toward its error class when it
+    // failed with one.
+    val (ofType, failed) = (col("taskType") === o.taskType, !col("success") && col("errorMessage").isNotNull)
+    val tallies = store.outcomes(p, own).toDF().filter(ofType || failed)
+      .select(explode(array(
+        when(ofType, struct(lit("strategy").as("leg"), col("strategyUsed").as("key"))),
+        when(failed, struct(lit("failure").as("leg"), col("errorMessage").as("key"))))).as("t"), col("*"))
+      .filter(col("t").isNotNull)
+      .groupBy(col("t.leg").as("leg"), col("t.key").as("key"))
+      .agg(count(lit(1)).as("n"), sum(when(col("success"), 1L).otherwise(0L)).as("succ"),
+        min(struct(col("timestamp"), col("id"), col("strategyUsed"))).as("first"))
+      // `o`'s class is kept at any count, so that `o` can make it two. A
+      // learn without one matches "" (a null literal would be folded
+      // into the filter and change the plan); the caller ignores it.
+      .filter(col("leg") === "strategy" || col("n") >= 2 ||
+        col("key") === o.errorMessage.filterNot(_ => o.success).getOrElse(""))
+    Seq(
+      // One anti-pattern scan serves two legs: a guard hit refuses the
+      // learn, so its row need not count as a stored id as well.
+      ids(when(guard, "guard").otherwise("antiPattern"),
+        store.antiPatterns(p, scope(o.agent).readableAgents).toDF().filter(guard || col("agent") === o.agent)),
+      ids(lit("heuristic"), store.heuristics(p, own).toDF()),
+      tallies)
+      .reduce(_ union _).collect().toSeq
+      .groupBy(_.getString(0)).withDefaultValue(Nil)
   }
 
   // ---- feedback loop (R10/R11 end-to-end) --------------------------------
@@ -762,27 +802,11 @@ object Alma {
 
   /** Deterministic collision-resistant id fragment (String.hashCode
     * collides trivially — e.g. "Aa"/"BB" — which would silently merge
-    * distinct strategies or error classes). Lives on the companion so
-    * executor-side row builders don't capture the facade.
+    * distinct strategies or error classes).
     */
   def idHash(text: String): String =
     MessageDigest.getInstance("SHA-256")
       .digest(text.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-
-  /** [[idHash]] as a Column: the same 16 hex digits (SHA-256 of the
-    * UTF-8 text), so rows promoted in a plan keep the ids promoted
-    * before, and re-promotion stays an idempotent replace.
-    */
-  def idHash(text: Column): Column = substring(sha2(text, 256), 1, 16)
-
-  private val embedUdf: UserDefinedFunction =
-    udf((text: String, dim: Int) => HashEmbedder.embed(text, dim))
-
-  /** `HashEmbedder.embed` as a Column, for rows built in a plan. */
-  private def embed(text: Column, dim: Int): Column = embedUdf(text, lit(dim))
-
-  /** The empty `metadata` map of a promoted row. */
-  private val NoMetadata: Column = typedLit(Map.empty[String, String])
 
   def apply(spark: SparkSession, root: String, projectId: String,
       scopes: Map[String, MemoryScope] = Map.empty): Alma =

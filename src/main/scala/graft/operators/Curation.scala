@@ -574,8 +574,8 @@ object Curation {
     // quadratic in duplicate-family size like every LSH pair contract
     // (measured: the join, not the sig build, was 50 of the 57 s at
     // ×100 — the sig+census floor is ~6 s in the sibling queries). Same
-    // [[PairGuard]] discipline: price Σ_bucket (b·i + b·(b−1)/2) off
-    // the checkpointed frame; past the cap, dedupe through ≤2
+    // [[PairGuard]] discipline: price Σ_bucket (b·i + b·(b−1)/2) once
+    // per signature state; past the cap, dedupe through ≤2
     // SIDE-STRATIFIED representatives per complete-signature family
     // ([[Dedup.familyRepsStratified]]: top-ranked batch member + top-
     // ranked index member, or top two of a one-sided family) — pairs
@@ -592,17 +592,10 @@ object Curation {
     // count is threaded). Left None under mode=exact, where the guard
     // never evaluates the census — the candidate join then counts for
     // itself, as before.
-    var censusBatchSigRows: Option[Long] = None
+    var censused = false
     val exact = PairGuard.allowExact(s, "q_dedup_incremental") {
-      val row = docSigs.frame.withColumn("isb", (col("doc_id") % 5 === 0).cast("long"))
-        .groupBy("band", "sig")
-        .agg(sum(col("isb")).as("b"), sum(lit(1L) - col("isb")).as("i"))
-        .agg(coalesce(sum(col("b") * col("i") +
-          expr("b * (b - 1) DIV 2")), lit(0L)),
-          coalesce(sum(col("b")), lit(0L)))
-        .head()
-      censusBatchSigRows = Some(row.getLong(1))
-      row.getLong(0)
+      censused = true
+      docSigs.incrementalCensus._1
     }
     val src = if (exact) docSigs.vectors
       else Dedup.familyRepsStratified(docSigs.vectors, col("doc_id") % 5 === 0)
@@ -617,7 +610,7 @@ object Curation {
     // of the censused batch, so the census sum stays a sound upper
     // bound for the broadcast decision.
     incrementalCandidates(batch, index,
-      knownBatchSigRows = censusBatchSigRows)
+      knownBatchSigRows = Option.when(censused)(docSigs.incrementalCensus._2))
       .orderBy("doc_new", "doc_other")
   }
 

@@ -995,6 +995,17 @@ private[graft] object TextAnalysisShared {
   final class DocSigs private[TextAnalysisShared] (val vectors: DataFrame, docs: DataFrame) {
     val frame: DataFrame = explodeVectors(vectors)
     lazy val census: Long = lshPairCensus(frame)
+    /** `q_dedup_incremental`'s census over its batch/index split (batch:
+      * `doc_id % 5 = 0`), one aggregate: the Σ_bucket (b·i + b·(b−1)/2)
+      * candidate-pair volume and the batch side's sig rows.
+      */
+    lazy val incrementalCensus: (Long, Long) = {
+      val row = frame.withColumn("isb", (col("doc_id") % 5 === 0).cast("long"))
+        .groupBy("band", "sig").agg(sum(col("isb")).as("b"), sum(lit(1L) - col("isb")).as("i"))
+        .agg(coalesce(sum(col("b") * col("i") + expr("b * (b - 1) DIV 2")), lit(0L)),
+          coalesce(sum(col("b")), lit(0L))).head()
+      (row.getLong(0), row.getLong(1))
+    }
 
     private def built(op: String)(df: => DataFrame): DataFrame =
       graft.observability.Metrics.withOp(vectors.sparkSession, op)(df)

@@ -2,7 +2,7 @@ package graft.storage
 
 import graft.functions.expressions.BoundParam
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -274,11 +274,13 @@ final class MemoryStore(val spark: SparkSession, val root: String,
   def saveKnowledge(rows: Seq[DomainKnowledge]): Unit = append(frame(rows, KnowledgeEncoder), MemoryType.Knowledge)
   def saveAntiPatterns(rows: Seq[AntiPattern]): Unit = append(frame(rows, AntiPatternEncoder), MemoryType.AntiPatterns)
 
-  /** Distributed batch append — the path promotions use so emitted rows
-    * never round-trip through the driver. Checkpoint rows route into
-    * their per-run partitions. An empty `df` is not probed for: its
-    * write lands no file (and, on a table with no snapshot yet, commits
-    * none).
+  /** Distributed batch append of rows a plan computes — for writers
+    * whose rows are a table's worth, not a few driver-held ones (the
+    * `q_store_roundtrip` and `q_checkpoint_cleanup` queries; the facade
+    * builds its rows on the driver and writes through the `save*`
+    * methods). Checkpoint rows route into their per-run partitions. An
+    * empty `df` is not probed for: its write lands no file (and, on a
+    * table with no snapshot yet, commits none).
     */
   def appendRows(df: DataFrame, memoryType: String): Unit =
     if (memoryType == MemoryType.Checkpoints) appendCheckpoints(df)
@@ -518,70 +520,58 @@ final class MemoryStore(val spark: SparkSession, val root: String,
   /** Distributed heuristic merge: current table merged with incoming on
     * id, column-level merge, snapshot swap (reference increment
     * semantics base.py:238-253 re-expressed as the q_occurrence_upsert
-    * join shape — never a driver read-modify-write).
+    * join shape — never a driver read-modify-write of the table).
     *
-    *  - matched rows: attributes take the incoming value; `createdAt`
-    *    survives from the original row; counts ADD when `addCounts`
-    *    (A3 increments) or are REPLACED otherwise (promotion re-emission,
-    *    where counts were recomputed from the full outcome history).
+    *  - matched rows (incoming ids in `stored`): attributes take the
+    *    incoming value; `createdAt` survives from the original row;
+    *    counts ADD when `addCounts` (A3 increments) or are REPLACED
+    *    otherwise (promotion re-emission, where counts were recomputed
+    *    from the full outcome history).
     *  - current-only rows: untouched.
-    *  - incoming-only rows: inserted — gated by `insertFilter` when
-    *    given (promotion thresholds apply to NEW heuristics only;
-    *    existing ones always refresh, including downward).
+    *  - incoming rows whose id is not in `stored`: inserted.
     *
-    * One existence probe of the incoming ids against the current ones
-    * (`id IN cur`) marks each incoming row as an update or an insert.
-    * The merge is then every current row LEFT OUTER JOIN the incoming
-    * rows, broadcast — they are few (a promotion's per-strategy rows,
-    * an upsert batch), and the table streams through the join with no
-    * shuffle — plus the incoming inserts that pass the gate.
+    * The caller says which incoming ids the table holds: a learn read
+    * them in its one decision collect, an upsert looks them up. The
+    * merge is every current row LEFT OUTER JOIN the incoming rows,
+    * broadcast — they are few, and the table streams through the join
+    * with no shuffle — plus the inserts, in one snapshot rewrite. Callers
+    * with nothing to merge do not call: the rewrite always commits.
     *
     * Incoming must be unique by id (callers aggregate before merging).
-    * Each plan executes once: the probed input is materialized by the
-    * gate's check, and the merge by the snapshot write itself, unprobed.
     */
-  def mergeHeuristics(
-      incoming: DataFrame,
-      addCounts: Boolean,
-      insertFilter: Option[Column] = None): Unit = {
-    val cur = heuristics().toDF()
-    // Materialized by its first use (the gate below) and read from there
-    // on: the incoming plan (an aggregate + per-row hash/embed work)
-    // would otherwise re-execute for every action of the overwrite.
-    val probed = incoming.withColumn("_cur", col("id").isin(cur.select("id")))
-      .localCheckpoint(false)
-    val inserts = insertFilter.fold(!col("_cur"))(f => !col("_cur") && f)
-    // When nothing updates or inserts, skip the snapshot rewrite
-    // entirely (every learn() call lands here, most with no promotable
-    // change).
-    if (probed.filter(col("_cur") || inserts).isEmpty) return
-    // Incoming rows that are not updates match no current id: the
-    // join needs no filter on them.
-    val inc = probed.columns.foldLeft(probed)((d, n) => d.withColumnRenamed(n, "_i_" + n))
-    val joined = cur.join(broadcast(inc), col("id") === col("_i_id"), "left_outer")
+  def mergeHeuristics(incoming: Seq[Heuristic], stored: Set[String], addCounts: Boolean): Unit = {
+    // One plan shape whichever rows update and insert, so every merge
+    // reuses the classes generated for it: the driver rows enter as
+    // RDD-backed frames, which the optimizer cannot prune when empty (a
+    // local relation it can), and the join broadcasts all incoming rows,
+    // never an empty side AQE would drop (an insert's id matches no
+    // current row).
+    def rows(hs: Seq[Heuristic]): DataFrame = spark.createDataFrame(
+      spark.sparkContext.parallelize(hs.map(Row.fromTuple), 1), HeuristicEncoder.schema)
+    val inc = rows(incoming).toDF(HeuristicEncoder.schema.fieldNames.toSeq.map("_i_" + _): _*)
+    val joined = heuristics().toDF().join(broadcast(inc), col("id") === col("_i_id"), "left_outer")
     def take(n: String) = coalesce(col("_i_" + n), col(n)).as(n)
-    val counts =
-      if (addCounts) Seq(
-        (coalesce(col("occurrenceCount"), lit(0L)) + coalesce(col("_i_occurrenceCount"), lit(0L))).as("occurrenceCount"),
-        (coalesce(col("successCount"), lit(0L)) + coalesce(col("_i_successCount"), lit(0L))).as("successCount"))
-      else Seq(take("occurrenceCount"), take("successCount"))
-    val updated = joined.select(
-      Seq(col("id"),
-        take("agent"), take("projectId"), take("condition"),
-        take("strategy"), take("confidence"))
-        ++ counts ++
-        Seq(take("lastValidated"),
-          coalesce(col("createdAt"), col("_i_createdAt")).as("createdAt"),
-          take("embedding"), take("metadata")): _*)
-    val inserted = probed.filter(inserts).drop("_cur")
-    overwrite(updated.unionByName(inserted), MemoryType.Heuristics)
+    def tally(n: String) =
+      if (addCounts) (coalesce(col(n), lit(0L)) + coalesce(col("_i_" + n), lit(0L))).as(n) else take(n)
+    val updated = joined.select(col("id"),
+      take("agent"), take("projectId"), take("condition"),
+      take("strategy"), take("confidence"),
+      tally("occurrenceCount"), tally("successCount"),
+      take("lastValidated"),
+      coalesce(col("createdAt"), col("_i_createdAt")).as("createdAt"),
+      take("embedding"), take("metadata"))
+    overwrite(updated.unionByName(rows(incoming.filterNot(h => stored(h.id)))), MemoryType.Heuristics)
   }
 
   /** Upsert heuristics by id: counts add, attributes take the incoming
-    * value, createdAt survives (A3).
+    * value, createdAt survives (A3). Which incoming ids are stored is
+    * one point lookup, bounded by the batch.
     */
-  def upsertHeuristics(incoming: Seq[Heuristic]): Unit =
-    mergeHeuristics(frame(incoming, HeuristicEncoder), addCounts = true)
+  def upsertHeuristics(incoming: Seq[Heuristic]): Unit = if (incoming.nonEmpty) {
+    val stored = heuristics().toDF().filter(col("id").isin(incoming.map(_.id): _*))
+      .select("id").collect().map(_.getString(0)).toSet
+    mergeHeuristics(incoming, stored, addCounts = true)
+  }
 
   /** Snapshot rewrite: the merge plan reads the live snapshot while the
     * new one is written to a sibling directory, then the marker flips —

@@ -89,6 +89,58 @@ class AlmaSpec extends SparkSpec {
     assert(err.getMessage.contains("write guard"))
   }
 
+  test("a learn the write guard refuses writes nothing") {
+    val alma = freshAlma()
+    (1 to 2).foreach { i =>
+      alma.learn("victor", "migrate", s"migrate shard $i", success = false,
+        strategyUsed = "drop and recreate", asOf = ts(s"2024-01-0$i 09:00:00"),
+        errorMessage = Some("data loss"))
+    }
+    val outcomes = alma.store.outcomes(Some("proj1")).count()
+    val generation = alma.store.writeGeneration
+    intercept[IllegalArgumentException] {
+      alma.learn("victor", "migrate", "migrate again", success = false,
+        strategyUsed = "drop and recreate", asOf = ts("2024-01-03 09:00:00"),
+        errorMessage = Some("data loss"))
+    }
+    // The guard runs before the append: no outcome, no write of any kind.
+    assert(alma.store.outcomes(Some("proj1")).count() == outcomes)
+    assert(alma.store.writeGeneration == generation)
+  }
+
+  test("a failing learn promotes every repeated error class by id, not by whyBad") {
+    val alma = freshAlma()
+    def failure(i: Int, strategy: String) = Outcome(s"o$i", "victor", "proj1", "migrate",
+      s"migrate shard $i", success = false, strategy, 0L, Some("E"),
+      ts(s"2024-01-0$i 09:00:00"), Array.fill(4)(0.5f), Map.empty)
+    alma.store.saveOutcomes(Seq(failure(1, "drop and recreate"), failure(2, "copy in place")))
+    // A stored anti-pattern under another id whose whyBad is the same
+    // error class does not count as E's promotion.
+    val t0 = ts("2024-01-01 00:00:00")
+    alma.store.saveAntiPatterns(Seq(AntiPattern("pre-a-0", "victor", "proj1", "rebuild index",
+      "E", "avoid: rebuild index", 2L, t0, t0, Array.fill(4)(0.5f), Map.empty)))
+    alma.learn("victor", "migrate", "migrate shard 3", success = false,
+      strategyUsed = "online ddl", asOf = ts("2024-01-03 09:00:00"),
+      errorMessage = Some("F"))
+    val aps = alma.store.antiPatterns(Some("proj1"), Seq("victor")).collect().sortBy(_.id)
+    val e = s"ap-proj1-victor-${Alma.idHash("E")}"
+    assert(aps.map(_.id).toSeq == Seq(e, "pre-a-0").sorted, aps.map(_.id).toSeq)
+    val a = aps.find(_.id == e).get
+    assert(a.whyBad == "E" && a.pattern == "drop and recreate" && a.occurrenceCount == 2L)
+  }
+
+  test("a back-dated failure is its error class's first: its strategy becomes the pattern") {
+    val alma = freshAlma()
+    alma.store.saveOutcomes(Seq(Outcome("o1", "victor", "proj1", "migrate", "migrate shard 1",
+      success = false, "copy in place", 0L, Some("E"), ts("2024-01-05 09:00:00"),
+      Array.fill(4)(0.5f), Map.empty)))
+    alma.learn("victor", "migrate", "migrate shard 0", success = false,
+      strategyUsed = "drop and recreate", asOf = ts("2024-01-02 09:00:00"),
+      errorMessage = Some("E"))
+    val a = alma.store.antiPatterns(Some("proj1"), Seq("victor")).collect().head
+    assert(a.pattern == "drop and recreate" && a.occurrenceCount == 2L)
+  }
+
   test("retrieve ranks the semantically-matching heuristic first and renders a prompt") {
     val alma = freshAlma()
     (1 to 3).foreach { i =>
@@ -713,18 +765,17 @@ class AlmaSpec extends SparkSpec {
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
 
-  test("Alma.idHash as a Column equals the string form (sha2, first 16 hex digits)") {
+  test("Alma.idHash is Spark's sha2 prefix (first 16 hex digits); re-promotion replaces by id") {
     import org.apache.spark.sql.functions.{col, sha2, substring}
     import spark.implicits._
     // ASCII, the String.hashCode collision pair, non-ASCII, and empty.
     val texts = Seq("canary rollout", "Aa", "BB", "déploiement canari — 金丝雀 🚀", "")
     val rows = texts.toDF("s")
-      .select(col("s"), substring(sha2(col("s"), 256), 1, 16), Alma.idHash(col("s")))
+      .select(col("s"), substring(sha2(col("s"), 256), 1, 16))
       .collect()
     rows.foreach { r =>
       val want = Alma.idHash(r.getString(0))
       assert(r.getString(1) == want, s"sha2 prefix of '${r.getString(0)}'")
-      assert(r.getString(2) == want, s"Alma.idHash column of '${r.getString(0)}'")
     }
     assert(Alma.idHash("Aa") != Alma.idHash("BB"))
     // A heuristic stored under the string-derived id is the one a later
@@ -800,12 +851,11 @@ class AlmaSpec extends SparkSpec {
     assert(typed.isEmpty, s"typed stages in the learn plans: $typed")
 
     // Job count of a successful learn on a store that holds a heuristic:
-    // the write guard's probe, the outcome append, the gate's check
-    // (which materializes the promotion input) and the broadcast of the
-    // current ids it probes, and the merge's snapshot write and the
-    // broadcast of the rows it merges. With AQE off one action is one
-    // job (plus its broadcasts), so the count does not depend on AQE's
-    // stage split.
+    // the one decision collect (guard verdict, strategy stats, failure
+    // classes and stored ids), the outcome append, and the merge's
+    // snapshot write and the broadcast of the rows it merges. With
+    // AQE off one action is one job (plus its broadcasts), so the count
+    // does not depend on AQE's stage split.
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -855,5 +905,5 @@ class AlmaSpec extends SparkSpec {
   }
 
   /** Spark jobs of one successful learn with AQE off (see the spec). */
-  private val LearnJobs = 6
+  private val LearnJobs = 4
 }

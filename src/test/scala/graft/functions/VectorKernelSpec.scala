@@ -200,27 +200,29 @@ class VectorKernelSpec extends SparkSpec {
     // query, this pins it directly, including the probes >= k clamp.
     import org.apache.spark.sql.expressions.Window
     val e = graft.io.Tables.embeddings(spark, Sf).limit(200).cache()
-    val cb = e.filter(col("vec_id") < 7)
-      .select(col("vec_id"), col("embedding")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray))
-      .sortBy(_._1)
-    val cbDf = e.sparkSession.createDataFrame(
-      cb.toSeq.map { case (id, v) => (id, v) }).toDF("cl", "cvec")
-    val declared = e.crossJoin(broadcast(cbDf))
-      .select(col("vec_id"), col("cl"),
-        round(VectorFunctions.cosineHof(col("embedding"), col("cvec")), 4).as("csim"))
-      .withColumn("rn", org.apache.spark.sql.functions.row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cl"))))
-    for (p <- Seq(1, 3, 7, 99)) {
-      val kernel = e.select(col("vec_id"),
-          posexplode(VectorFunctions.topCells(col("embedding"),
-            VectorFunctions.bcCodebook(cb.map(_._1), cb.map(_._2)), p)))
-        .select(col("vec_id"), (col("pos") + 1).as("rn"), col("col").as("cl"))
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-      val want = declared.filter(col("rn") <= math.min(p, 7))
-        .select(col("vec_id"), col("rn"), col("cl"))
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-      assert(kernel == want, s"probe depth $p diverged from the declarative rank")
-    }
+    try {
+      val cb = e.filter(col("vec_id") < 7)
+        .select(col("vec_id"), col("embedding")).collect()
+        .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray))
+        .sortBy(_._1)
+      val cbDf = e.sparkSession.createDataFrame(
+        cb.toSeq.map { case (id, v) => (id, v) }).toDF("cl", "cvec")
+      val declared = e.crossJoin(broadcast(cbDf))
+        .select(col("vec_id"), col("cl"),
+          round(VectorFunctions.cosineHof(col("embedding"), col("cvec")), 4).as("csim"))
+        .withColumn("rn", org.apache.spark.sql.functions.row_number().over(
+          Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cl"))))
+      for (p <- Seq(1, 3, 7, 99)) {
+        val kernel = e.select(col("vec_id"),
+            posexplode(VectorFunctions.topCells(col("embedding"),
+              VectorFunctions.bcCodebook(cb.map(_._1), cb.map(_._2)), p)))
+          .select(col("vec_id"), (col("pos") + 1).as("rn"), col("col").as("cl"))
+          .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+        val want = declared.filter(col("rn") <= math.min(p, 7))
+          .select(col("vec_id"), col("rn"), col("cl"))
+          .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+        assert(kernel == want, s"probe depth $p diverged from the declarative rank")
+      }
+    } finally e.unpersist()
   }
 }

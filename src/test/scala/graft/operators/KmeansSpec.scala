@@ -8,17 +8,18 @@ class KmeansSpec extends SparkSpec {
 
   test("every vector is assigned; sizes sum to the corpus; k centroids of full dim") {
     val out = SparkEntry.queries("q_kmeans_train")(spark, Sf).cache()
-    val n = graft.io.Tables.embeddings(spark, Sf).count()
-    val k = out.select("cid").distinct().count()
-    assert(k <= 10 && k > 1, s"expected up to 10 non-empty cells, got $k")
-    // One (pos, c) row per dimension per surviving centroid.
-    val dims = out.groupBy("cid").agg(countDistinct("pos").as("d"))
-      .filter(col("d") =!= 64).count()
-    assert(dims == 0, "a centroid lost dimensions")
-    val total = out.select("cid", "size").distinct()
-      .agg(sum("size")).head().getLong(0)
-    assert(total == n, s"sizes sum $total != corpus $n")
-    out.unpersist()
+    try {
+      val n = graft.io.Tables.embeddings(spark, Sf).count()
+      val k = out.select("cid").distinct().count()
+      assert(k <= 10 && k > 1, s"expected up to 10 non-empty cells, got $k")
+      // One (pos, c) row per dimension per surviving centroid.
+      val dims = out.groupBy("cid").agg(countDistinct("pos").as("d"))
+        .filter(col("d") =!= 64).count()
+      assert(dims == 0, "a centroid lost dimensions")
+      val total = out.select("cid", "size").distinct()
+        .agg(sum("size")).head().getLong(0)
+      assert(total == n, s"sizes sum $total != corpus $n")
+    } finally out.unpersist()
   }
 
   test("assign-step inertia is non-increasing across Lloyd iterations") {

@@ -12,19 +12,20 @@ class SelectionSpec extends SparkSpec {
 
   test("dsir: every document is scored, exactly the top quartile is selected") {
     val out = run("q_dsir_select").cache()
-    val docs = graft.io.Tables.documents(spark, Sf).count()
-    assert(out.count() == docs, "every doc must receive a weight")
-    val sel = out.filter(col("selected") === 1).count()
-    // p75 cut: at least a quarter selected (ties at the threshold can
-    // only ADD members, never remove them).
-    assert(sel >= docs / 4, s"expected >= ${docs / 4} selected, got $sel")
-    assert(sel < docs, "a selection that keeps everything selects nothing")
-    // The selected set is exactly the weight-threshold upper set: no
-    // selected doc may score below an unselected one.
-    val minSel = out.filter(col("selected") === 1).agg(min("logw")).head().getDouble(0)
-    val maxUnsel = out.filter(col("selected") === 0).agg(max("logw")).head().getDouble(0)
-    assert(minSel >= maxUnsel, s"selection not an upper set: $minSel < $maxUnsel")
-    out.unpersist()
+    try {
+      val docs = graft.io.Tables.documents(spark, Sf).count()
+      assert(out.count() == docs, "every doc must receive a weight")
+      val sel = out.filter(col("selected") === 1).count()
+      // p75 cut: at least a quarter selected (ties at the threshold can
+      // only ADD members, never remove them).
+      assert(sel >= docs / 4, s"expected >= ${docs / 4} selected, got $sel")
+      assert(sel < docs, "a selection that keeps everything selects nothing")
+      // The selected set is exactly the weight-threshold upper set: no
+      // selected doc may score below an unselected one.
+      val minSel = out.filter(col("selected") === 1).agg(min("logw")).head().getDouble(0)
+      val maxUnsel = out.filter(col("selected") === 0).agg(max("logw")).head().getDouble(0)
+      assert(minSel >= maxUnsel, s"selection not an upper set: $minSel < $maxUnsel")
+    } finally out.unpersist()
   }
 
   test("dsir: importance weights follow the target slice") {
@@ -60,16 +61,17 @@ class SelectionSpec extends SparkSpec {
 
   test("semantic dedup: output partitions the corpus; kept set is cluster-locally maximal") {
     val out = run("q_semantic_dedup").cache()
-    val n = graft.io.Tables.embeddings(spark, Sf).count()
-    assert(out.count() == n, "every vector gets a kept/dropped verdict")
-    val kept = out.filter(col("kept") === 1).count()
-    assert(kept > 0 && kept < n, s"degenerate kept set: $kept of $n")
-    // Every cluster retains at least one member — dedup never empties
-    // a cluster.
-    val emptied = out.groupBy("cluster")
-      .agg(sum("kept").as("k")).filter(col("k") === 0).count()
-    assert(emptied == 0, "a cluster lost all members")
-    out.unpersist()
+    try {
+      val n = graft.io.Tables.embeddings(spark, Sf).count()
+      assert(out.count() == n, "every vector gets a kept/dropped verdict")
+      val kept = out.filter(col("kept") === 1).count()
+      assert(kept > 0 && kept < n, s"degenerate kept set: $kept of $n")
+      // Every cluster retains at least one member — dedup never empties
+      // a cluster.
+      val emptied = out.groupBy("cluster")
+        .agg(sum("kept").as("k")).filter(col("k") === 0).count()
+      assert(emptied == 0, "a cluster lost all members")
+    } finally out.unpersist()
   }
 
   test("semantic dedup: a planted within-cluster near-identical pair keeps the far-from-centroid member") {
@@ -120,20 +122,21 @@ class SelectionSpec extends SparkSpec {
   test("canonical pick: same clusters as consolidate-merge, canonical is the longest member") {
     val canon = run("q_dedup_canonical").cache()
     val merge = run("q_consolidate_merge").cache()
-    // Identical cluster structure (same comp ids and sizes).
-    val a = canon.select("comp", "group_size")
-    val b = merge.select("comp", "group_size")
-    assert(a.except(b).count() == 0 && b.except(a).count() == 0,
-      "canonical pick must reuse the consolidate-merge components")
-    // The canonical member is a real member and no member is longer.
-    val docs = graft.io.Tables.documents(spark, Sf)
-    val labeled = Lifecycle.minhashCcLabels(docs)
-      .join(docs, col("node") === col("doc_id"))
-    val maxLen = labeled.groupBy("comp").agg(max("n_chars").as("mx"))
-    val bad = canon.join(maxLen, Seq("comp"))
-      .filter(col("canon_chars") =!= col("mx")).count()
-    assert(bad == 0, "canonical doc is not the longest member of its cluster")
-    canon.unpersist(); merge.unpersist()
+    try {
+      // Identical cluster structure (same comp ids and sizes).
+      val a = canon.select("comp", "group_size")
+      val b = merge.select("comp", "group_size")
+      assert(a.except(b).count() == 0 && b.except(a).count() == 0,
+        "canonical pick must reuse the consolidate-merge components")
+      // The canonical member is a real member and no member is longer.
+      val docs = graft.io.Tables.documents(spark, Sf)
+      val labeled = Lifecycle.minhashCcLabels(docs)
+        .join(docs, col("node") === col("doc_id"))
+      val maxLen = labeled.groupBy("comp").agg(max("n_chars").as("mx"))
+      val bad = canon.join(maxLen, Seq("comp"))
+        .filter(col("canon_chars") =!= col("mx")).count()
+      assert(bad == 0, "canonical doc is not the longest member of its cluster")
+    } finally { canon.unpersist(); merge.unpersist() }
   }
 
   test("plan shapes: dsir models broadcast; semantic dedup pairs stay cluster-local") {
