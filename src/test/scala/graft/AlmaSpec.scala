@@ -765,7 +765,7 @@ class AlmaSpec extends SparkSpec {
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
 
-  test("Alma.idHash is Spark's sha2 prefix (first 16 hex digits); re-promotion replaces by id") {
+  test("Alma.idHash is sha2's first 16 hex digits; re-promotion replaces by id") {
     import org.apache.spark.sql.functions.{col, sha2, substring}
     import spark.implicits._
     // ASCII, the String.hashCode collision pair, non-ASCII, and empty.
