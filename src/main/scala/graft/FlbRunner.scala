@@ -3,6 +3,7 @@ package graft
 import graft.functions.{EmbeddingProvider, HashEmbeddingProvider, VectorFunctions}
 import graft.io.ArtifactWriter
 import graft.io.ArtifactWriter.r6
+import graft.retrieval.FirstHit
 import graft.sources.Ingestion
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.expressions.Window
@@ -86,13 +87,10 @@ object FlbRunner {
   }
 
   /** Deterministic hash-uniform in (0, 1) keyed by (salt, question,
-    * session) — the Efraimidis–Spirakis-style RNG replacement used
-    * across this engine (15 hex chars of md5 = 60 bits).
+    * session) — the engine's one hash-uniform draw.
     */
-  private def hashU(salt: String): Column = expr(
-    s"(cast(conv(substring(md5(cast(concat('$salt', cast(question_id as string), '_', " +
-      "cast(session_id as string)) as binary)), 1, 15), 16, 10) as bigint) + 0.5) " +
-      "/ 1152921504606846976.0")
+  private def hashU(salt: String): Column = operators.TextAnalysisShared.hashUniform(
+    concat(lit(salt), col("question_id").cast("string"), lit("_"), col("session_id").cast("string")))
 
   /** USED/IGNORED draw for one (question, session) at one round —
     * simulator.py:77-129's three modes on hash-uniforms.
@@ -111,27 +109,15 @@ object FlbRunner {
   def run(spark: SparkSession, path: String, mode: String, rounds: Int,
       weight: Double, seed: Int, provider: EmbeddingProvider = HashEmbeddingProvider,
       topK: Int = 50, k: Int = 5): WeightRun = {
-    import spark.implicits._
     require(rounds >= 2, "FLB needs a baseline round plus at least one feedback round")
     val corpus = Ingestion.loadBenchmarkJson(spark, path)
     // One shared store: every distinct session, embedded once.
-    val sessions = corpus.select(col("session_id"), col("session_text"))
-      .distinct()
-      .as[(Long, String)]
-      .mapPartitions(_.grouped(256).flatMap { batch =>
-        val vecs = provider.encodeBatch(batch.iterator.map(_._2)).toArray
-        batch.iterator.zipWithIndex.map { case ((sid, _), i) => (sid, vecs(i)) }
-      })
-      .toDF("session_id", "s_vec")
-    val questions = corpus
-      .select(col("question_id"), col("question"), col("answer_session_id"))
-      .distinct()
-      .as[(Long, String, Long)]
-      .mapPartitions(_.grouped(256).flatMap { batch =>
-        val vecs = provider.encodeBatch(batch.iterator.map(_._2)).toArray
-        batch.iterator.zipWithIndex.map { case ((q, _, a), i) => (q, a, vecs(i)) }
-      })
-      .toDF("question_id", "answer_session_id", "q_vec")
+    val sessions = EmbeddingProvider.embedColumn(
+      corpus.select(col("session_id"), col("session_text")).distinct(),
+      "session_text", "s_vec", provider).drop("session_text")
+    val questions = EmbeddingProvider.embedColumn(
+      corpus.select(col("question_id"), col("question"), col("answer_session_id")).distinct(),
+      "question", "q_vec", provider).drop("question")
     // corpus × questions similarity: computed ONCE, reused every round.
     val sims = sessions.crossJoin(broadcast(questions))
       .select(col("question_id"), col("session_id"),
@@ -166,13 +152,11 @@ object FlbRunner {
       // full-haystack LongMemEval MRR (runner.py:415-431).
       val m = ranked
         .groupBy("question_id")
-        .agg(min(when(col("rel") === 1L, col("rnk"))).as("first_hit"))
+        .agg(FirstHit.of(col("rel"), col("rnk")).as("first_hit"))
         .agg(
-          avg(when(col("first_hit") <= k, 1.0).otherwise(0.0)).as("r5"),
-          avg(coalesce(lit(1.0) / col("first_hit"), lit(0.0))).as("mrr"),
-          avg(when(col("first_hit") <= k,
-            lit(1.0) / log2(col("first_hit").cast("double") + lit(1.0)))
-            .otherwise(lit(0.0))).as("ndcg5"),
+          avg(FirstHit.hitAt(col("first_hit"), k)).as("r5"),
+          avg(FirstHit.reciprocalRank(col("first_hit"))).as("mrr"),
+          avg(FirstHit.ndcgAt(col("first_hit"), k)).as("ndcg5"),
           count(lit(1)).as("n"))
         .head()
       out += RoundMetrics(round, m.getDouble(0), m.getDouble(1), m.getDouble(2),

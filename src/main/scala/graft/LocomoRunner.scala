@@ -3,6 +3,7 @@ package graft
 import graft.functions.{EmbeddingProvider, HashEmbeddingProvider, VectorFunctions}
 import graft.io.ArtifactWriter
 import graft.io.ArtifactWriter.r6
+import graft.retrieval.FirstHit
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -109,25 +110,12 @@ object LocomoRunner {
 
   def run(spark: SparkSession, path: String, minScore: Double = 0.0,
       topK: Int = 10, provider: EmbeddingProvider = HashEmbeddingProvider): LocomoMetrics = {
-    import spark.implicits._
     val t0 = System.nanoTime()
-    val turns = loadTurns(spark, path)
-      .select(col("conv_id"), col("turn_id"), col("text"))
-      .as[(String, String, String)]
-      .mapPartitions(_.grouped(256).flatMap { batch =>
-        val vecs = provider.encodeBatch(batch.iterator.map(_._3)).toArray
-        batch.iterator.zipWithIndex.map { case ((c, t, _), i) => (c, t, vecs(i)) }
-      })
-      .toDF("conv_id", "turn_id", "t_vec")
-    val qa = loadQa(spark, path)
-      .as[(String, String, String, String, Seq[String])]
-      .mapPartitions(_.grouped(256).flatMap { batch =>
-        val vecs = provider.encodeBatch(batch.iterator.map(_._3)).toArray
-        batch.iterator.zipWithIndex.map { case ((c, id, _, cat, ev), i) =>
-          (c, id, cat, ev, vecs(i))
-        }
-      })
-      .toDF("conv_id", "qa_id", "category", "evidence", "q_vec")
+    val turns = EmbeddingProvider.embedColumn(
+      loadTurns(spark, path).select(col("conv_id"), col("turn_id"), col("text")),
+      "text", "t_vec", provider).drop("text")
+    val qa = EmbeddingProvider.embedColumn(loadQa(spark, path), "question", "q_vec", provider)
+      .drop("question")
 
     // Retrieval: same-conversation candidates only (equi-join on
     // conv_id), thresholded, top-K by (sim desc, turn_id) per QA.
@@ -151,7 +139,7 @@ object LocomoRunner {
         .otherwise(0.0)).as(s"dcg_$k"))
     }
     val aggExprs = Seq(count(lit(1)).as("n_retrieved"),
-      min(when(col("rel") === 1L, col("rnk"))).as("first_hit")) ++ hitCols
+      FirstHit.of(col("rel"), col("rnk")).as("first_hit")) ++ hitCols
     val perQaAgg = retrieved.groupBy("qa_id")
       .agg(aggExprs.head, aggExprs.tail: _*)
     val idcgLit = lit(idcg)
@@ -165,7 +153,7 @@ object LocomoRunner {
     val aggCols = Seq(
       count(lit(1)).as("n"),
       sum(when(col("n_retrieved") === 0L, 1.0).otherwise(0.0)).as("refusals"),
-      sum(coalesce(lit(1.0) / col("first_hit"), lit(0.0))).as("mrr_sum")) ++
+      sum(FirstHit.reciprocalRank(col("first_hit"))).as("mrr_sum")) ++
       Ks.flatMap { k => Seq(
         sum(when(col(s"hits_$k") > 0L, 1.0).otherwise(0.0)).as(s"r${k}_sum"),
         // element_at is 1-based: idcg(h) lives at index h+1

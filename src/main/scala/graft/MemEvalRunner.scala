@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.{EmbeddingProvider, HashEmbeddingProvider, VectorFunctions}
+import graft.retrieval.FirstHit
 import graft.sources.Ingestion
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
@@ -53,28 +54,20 @@ object MemEvalRunner {
 
   def run(spark: SparkSession, path: String, k: Int,
       provider: EmbeddingProvider = HashEmbeddingProvider): Metrics = {
-    import spark.implicits._
-    val corpus = Ingestion.loadBenchmarkJson(spark, path).cache()
+    // Read three times below; a lazy local checkpoint scans the JSON
+    // once and leaves nothing to release if the collect fails.
+    val corpus = Ingestion.loadBenchmarkJson(spark, path).localCheckpoint(false)
     // Executor-side batch embedding through the provider seam (V9): a
     // real model impl amortizes its setup across each batch.
-    val embedded = corpus
-      .select(col("question_id"), col("answer_session_id"), col("session_id"), col("session_text"))
-      .as[(Long, Long, Long, String)]
-      .mapPartitions(_.grouped(256).flatMap { batch =>
-        val vecs = provider.encodeBatch(batch.iterator.map(_._4)).toArray
-        batch.iterator.zipWithIndex.map { case ((qid, ans, sid, _), i) => (qid, ans, sid, vecs(i)) }
-      })
-      .toDF("question_id", "answer_session_id", "session_id", "embedding")
-    val questions = corpus.select(col("question_id"), col("question")).distinct()
-      .as[(Long, String)]
-      .mapPartitions(_.grouped(256).flatMap { batch =>
-        val vecs = provider.encodeBatch(batch.iterator.map(_._2)).toArray
-        batch.iterator.zipWithIndex.map { case ((qid, _), i) => (qid, vecs(i)) }
-      })
-      .toDF("q_id", "q_vec")
+    val embedded = EmbeddingProvider.embedColumn(
+      corpus.select(col("question_id"), col("answer_session_id"), col("session_id"), col("session_text")),
+      "session_text", "embedding", provider).drop("session_text")
+    val questions = EmbeddingProvider.embedColumn(
+      corpus.select(col("question_id").as("q_id"), col("question")).distinct(),
+      "question", "q_vec", provider).drop("question")
     val qtypes = corpus.select(col("question_id").as("t_id"), col("question_type")).distinct()
     val w = Window.partitionBy("question_id").orderBy(col("sim").desc, col("session_id"))
-    // ONE job: per-question hit/first-hit, rolled up per question_type as
+    // ONE job: per-question first hit, rolled up per question_type as
     // SUMS (not averages) — the driver derives both the per-type and the
     // exact overall averages from the handful of per-type rows, so the
     // breakdown costs no extra Spark job and no float drift.
@@ -84,28 +77,19 @@ object MemEvalRunner {
       .withColumn("rnk", row_number().over(w))
       .withColumn("rel", when(col("session_id") === col("answer_session_id"), 1L).otherwise(0L))
       .groupBy("question_id")
-      .agg(
-        // hit indicator (capped at 1 so duplicate relevant rows cannot
-        // push recall past 1.0); a never-retrieved answer scores MRR 0.
-        least(sum(when(col("rnk") <= k, col("rel")).otherwise(0L)), lit(1L)).as("hit"),
-        // first_hit is NOT cut at k on purpose: the reference's MRR is
-        // full reciprocal rank over the whole ranked list
-        // (metrics.py:165-184), while recall/NDCG are @k — parity with
-        // the published baseline beats internal consistency here.
-        min(when(col("rel") === 1L, col("rnk"))).as("first_hit"))
+      // first_hit is NOT cut at k on purpose: the reference's MRR is
+      // full reciprocal rank over the whole ranked list
+      // (metrics.py:165-184), while recall/NDCG are @k — parity with
+      // the published baseline beats internal consistency here.
+      .agg(FirstHit.of(col("rel"), col("rnk")).as("first_hit"))
       .join(broadcast(qtypes), col("question_id") === col("t_id"))
       .groupBy("question_type")
       .agg(
-        sum(col("hit").cast("double")).as("hit_sum"),
-        sum(coalesce(lit(1.0) / col("first_hit"), lit(0.0))).as("mrr_sum"),
-        // NDCG@k, single relevant session per question: ideal DCG is
-        // 1/log2(2) = 1, so ndcg = 1/log2(first_hit+1) when the answer
-        // lands inside the cutoff, else 0 (metrics.py:46-55).
-        sum(when(col("first_hit") <= k,
-          lit(1.0) / log2(col("first_hit").cast("double") + lit(1.0))).otherwise(lit(0.0))).as("ndcg_sum"),
+        sum(FirstHit.hitAt(col("first_hit"), k)).as("hit_sum"),
+        sum(FirstHit.reciprocalRank(col("first_hit"))).as("mrr_sum"),
+        sum(FirstHit.ndcgAt(col("first_hit"), k)).as("ndcg_sum"),
         count(lit(1)).as("n"))
       .collect()
-    corpus.unpersist()
     val perType = perTypeRows.map { r =>
       val n = r.getLong(4)
       r.getString(0) -> Metrics(r.getDouble(1) / n, r.getDouble(2) / n, r.getDouble(3) / n, n)

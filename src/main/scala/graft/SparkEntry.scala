@@ -23,11 +23,32 @@ object SparkEntry {
     * The reference's read path (filter → kNN → score → threshold → top-k)
     * as one Spark plan.
     */
-  def entry(spark: SparkSession): DataFrame =
+  def entry(spark: SparkSession): DataFrame = {
+    requireAsciiDigits()
     Retrieval.pipeline(spark, "/root/testdata/sf0.001")
+  }
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Q.pack(packs)
+  def queries: Map[String, (SparkSession, String) => DataFrame] = {
+    requireAsciiDigits()
+    Q.pack(packs)
+  }
+
+  /** Spark names Parquet part files (`part-%05d`) in the JVM's default
+    * format locale, so under one with native digits (th-TH-u-nu-thai,
+    * ar-EG, …) the first write fails on a path like `part-๐๐๐๐๐-…` and
+    * leaves the JVM unable to write Parquet even after the locale is
+    * restored. `SparkEntry` runs in its caller's JVM, so it cannot pin
+    * the locale the way `Entrypoint` does; it refuses before any work.
+    */
+  private def requireAsciiDigits(): Unit = {
+    val locale = java.util.Locale.getDefault(java.util.Locale.Category.FORMAT)
+    val zero = java.text.DecimalFormatSymbols.getInstance(locale).getZeroDigit
+    if (zero != '0') throw new IllegalStateException(
+      s"default locale ${locale.toLanguageTag} formats digits natively (zero '$zero'); " +
+        "Spark would fail every Parquet write — set an ASCII-digit default locale, " +
+        "such as java.util.Locale.ROOT, before calling graft.SparkEntry")
+  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */

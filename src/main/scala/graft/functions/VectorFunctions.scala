@@ -150,23 +150,6 @@ object VectorFunctions {
       ExpressionUtils.expression(a), ExpressionUtils.expression(cid),
       bcCodebook(cellIds, cells)))
 
-  /** Reference HOF formulation of dot — CodegenFallback; kept for
-    * kernel-parity tests only.
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, v) => acc + v)
-
-  /** Reference HOF formulation of cosine — kept for parity tests.
-    * Zero-norm sides yield 0.0 like the kernel (never NaN).
-    */
-  def cosineHof(a: Column, b: Column): Column = {
-    val denom = norm2(a) * norm2(b)
-    when(denom === 0.0, lit(0.0)).otherwise(dotHof(a, b) / denom)
-  }
-
   /** L2 norm, in double. */
   def norm2(a: Column): Column =
     sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")),

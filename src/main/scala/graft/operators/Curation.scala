@@ -336,8 +336,7 @@ object Curation {
   private def doremiResample(s: SparkSession, dir: String): DataFrame = {
     val w = doremiWeights(s, dir).select(col("source"), col("n_docs"), col("weight"))
     val total = Tables.documents(s, dir).agg(count(lit(1)).as("n_total"))
-    val bucket = expr(
-      "cast(conv(substring(md5(cast(concat('dmx', cast(doc_id as string)) as binary)), 1, 15), 16, 10) as bigint) % 100")
+    val bucket = TextAnalysisShared.hash64(concat(lit("dmx"), col("doc_id").cast("string"))) % 100
     Tables.documents(s, dir).select("doc_id", "source")
       .join(broadcast(w), Seq("source"))
       .crossJoin(broadcast(total))

@@ -762,11 +762,6 @@ object Dedup {
 private[graft] object TextAnalysisShared {
   import org.apache.spark.sql.Column
 
-  /** n-token grams of the whitespace tokenization. Documents with fewer
-    * than n tokens yield an empty array (matching the oracles'
-    * generate_series(1, len-n+1), which is empty for len < n — Spark's
-    * sequence() would instead count DOWN and make slice() throw).
-    */
   /** Winnowing fingerprint set (Schleimer et al. 2003, the MOSS
     * algorithm): hash every shingle, slide a window of `w` hashes,
     * keep each window's minimum — guaranteed to share fingerprints
@@ -799,14 +794,6 @@ private[graft] object TextAnalysisShared {
     org.apache.spark.sql.graft.ColumnBridge.column(
       graft.functions.expressions.WordGramsExpr(
         org.apache.spark.sql.graft.ColumnBridge.expression(textCol), n))
-
-  /** The pre-kernel HOF formulation — parity reference for specs. */
-  private[graft] def ngramsHof(textCol: Column, n: Int): Column = {
-    val toks = split(textCol, " ")
-    val idx = when(size(toks) >= n, sequence(lit(1), size(toks) - (n - 1)))
-      .otherwise(array().cast("array<int>"))
-    transform(idx, i => concat_ws(" ", slice(toks, i, lit(n))))
-  }
 
   /** 3-token shingles — the MinHash unit. */
   def shingles(textCol: Column): Column = ngrams(textCol, 3)
@@ -889,11 +876,23 @@ private[graft] object TextAnalysisShared {
 
   /** 60-bit hash of a string column: the first 15 hex chars of its md5,
     * as a non-negative long — the one string→int64 hash every keyed
-    * operator (MinHash mixes, span hashing, shard assignment) derives
-    * from, matching the oracles' ('0x' || substr(md5(x),1,15))::BIGINT.
+    * operator (MinHash mixes, span hashing, salted sample buckets)
+    * derives from, matching the oracles'
+    * ('0x' || substr(md5(x),1,15))::BIGINT. `OperatorSmokeSpec` fails
+    * on an inline copy of the formula anywhere else in `src/main`.
     */
   def hash64(c: Column): Column =
     conv(substring(md5(c.cast("binary")), 1, 15), 16, 10).cast("long")
+
+  /** Uniform draw in (0, 1) keyed by a string column: (hash64 + 0.5) /
+    * 2^60 — the reproducible RNG replacement of the weighted and Pareto
+    * samplers and the FLB simulator, matching the oracles' `(… + 0.5) /
+    * 1152921504606846976.0`. Both constants are DECIMAL literals, the
+    * types Spark SQL gives the same text, so the arithmetic (decimal,
+    * then double) and every draw are those of the SQL form.
+    */
+  def hashUniform(c: Column): Column =
+    (hash64(c) + lit(BigDecimal("0.5"))) / lit(BigDecimal("1152921504606846976.0"))
 
   /** The sign-bucket id as oracle SQL — the DuckDB twin of
     * `VectorFunctions.signBucket`, shared by every oracle that probes
@@ -1046,21 +1045,4 @@ private[graft] object TextAnalysisShared {
       val docs = Tables.documents(s, dir)
       new DocSigs(minhashVectors(docs, 4).localCheckpoint(true), docs)
     }
-
-  /** The pre-kernel explode + multi-min-groupBy formulation, kept as
-    * the parity twin the spec checks the kernel against.
-    */
-  private[operators] def bandedMinhashSigsExploded(docs: DataFrame, nBands: Int): DataFrame = {
-    require(nBands <= MinhashA.size, s"at most ${MinhashA.size} bands")
-    val hashed = Tables.spread(docs)
-      .select(col("doc_id"), explode(shingles(col("text"))).as("shingle"))
-      .select(col("doc_id"), (hash64(col("shingle")) % MinhashP).as("x"))
-    val aggs = (0 until nBands)
-      .map(b => min((col("x") * MinhashA(b) + b) % MinhashP).as(s"_sig$b"))
-    val stacked = (0 until nBands)
-      .map(b => s"cast($b as bigint), _sig$b")
-      .mkString(s"stack($nBands, ", ", ", ") as (band, sig)")
-    hashed.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-      .selectExpr("doc_id", stacked)
-  }
 }

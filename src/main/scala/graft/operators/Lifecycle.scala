@@ -123,16 +123,10 @@ object Lifecycle {
     * materializes the (quadratic-in-bucket) pair set: each round is two
     * map-side-combined groupBys. Restricted to buckets with ≥ 2 members
     * so the node set matches the pair formulation (singleton docs are
-    * not duplicate candidates). Shared by the consolidation merge here
-    * and Selection's canonical-doc pick.
-    */
-  private[operators] def minhashCcLabels(docs: DataFrame): DataFrame =
-    minhashCcLabelsFromSigs(TextAnalysisShared.bandedMinhashSigs(docs, 4))
-
-  /** Same, over a pre-built (doc_id, band, sig) frame — the three
-    * cluster-family queries read the labels of the raw table's
-    * session signature state ([[TextAnalysisShared.DocSigs]]), so the
-    * signature chain AND the label loop run once per table state
+    * not duplicate candidates). Takes a pre-built (doc_id, band, sig)
+    * frame: the three cluster-family queries read the labels of the raw
+    * table's session signature state ([[TextAnalysisShared.DocSigs]]),
+    * so the signature chain AND the label loop run once per table state
     * instead of once per query.
     */
   private[operators] def minhashCcLabelsFromSigs(sigs: DataFrame): DataFrame = {
@@ -182,7 +176,7 @@ object Lifecycle {
 
   /** Oracle CTE chain computing the CC labels (`comp(node, comp)`) of
     * the MinHash-LSH candidate graph — the DuckDB twin of
-    * [[minhashCcLabels]], shared so the label formula exists in one
+    * [[minhashCcLabelsFromSigs]], shared so the label formula exists in one
     * copy. Prepend `WITH RECURSIVE` and chain further CTEs after it.
     */
   private[operators] val minhashCcCteSql =

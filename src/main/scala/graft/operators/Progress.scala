@@ -206,31 +206,6 @@ object Progress {
       .orderBy("project", "strategy")
   }
 
-  /** The pre-aggregation window formulation of [[nextAction]], kept as
-    * the parity twin the spec checks the argmax picks against (and the
-    * shape the oracle SQL replays).
-    */
-  private[operators] def nextActionWindowed(s: SparkSession, dir: String): DataFrame = {
-    val act = itemLedger(s, dir).filter(col("actionable") === 1)
-    def rk(order: org.apache.spark.sql.Column*) =
-      row_number().over(Window.partitionBy("project").orderBy(order: _*))
-    val ranked = act
-      .withColumn("rk_priority", rk(col("priority").desc, col("item_id")))
-      .withColumn("rk_blocked_unblock", rk(col("unblocks").desc, col("item_id")))
-      .withColumn("rk_quick_win", rk(col("n_criteria").asc, col("item_id")))
-      .withColumn("rk_fifo", rk(col("created_at").asc, col("item_id")))
-    ranked.select(col("project"), col("item_id"), col("priority"),
-        col("unblocks"), col("n_criteria"),
-        expr("""stack(4,
-          'priority', rk_priority,
-          'blocked_unblock', rk_blocked_unblock,
-          'quick_win', rk_quick_win,
-          'fifo', rk_fifo) AS (strategy, rk)"""))
-      .filter(col("rk") === 1)
-      .select("project", "strategy", "item_id", "priority", "unblocks", "n_criteria")
-      .orderBy("project", "strategy")
-  }
-
   private val nextActionSql =
     s"""WITH $ledgerSql,
        |act AS (SELECT * FROM ledger WHERE actionable = 1),

@@ -131,8 +131,7 @@ object QualityFilters {
   // sample() changes membership with partitioning). Pure projection +
   // filter: one scan, no shuffle but the final sort.
   private def stratifiedSample(s: SparkSession, dir: String): DataFrame = {
-    val bucket =
-      expr("cast(conv(substring(md5(cast(cast(doc_id as string) as binary)), 1, 15), 16, 10) as bigint) % 100")
+    val bucket = TextAnalysisShared.hash64(col("doc_id").cast("string")) % 100
     val rate = when(col("lang") === "en", 40L)
       .when(col("lang") === "zh", 60L)
       .when(col("lang") === "es", 80L)
@@ -496,7 +495,7 @@ object QualityFilters {
   private def weightedSample(s: SparkSession, dir: String): DataFrame = {
     val k = 25
     val salts = 16
-    val u = expr("(cast(conv(substring(md5(cast(concat('es', cast(doc_id as string)) as binary)), 1, 15), 16, 10) as bigint) + 0.5) / 1152921504606846976.0")
+    val u = TextAnalysisShared.hashUniform(concat(lit("es"), col("doc_id").cast("string")))
     val scored = Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"),
         u.as("u"), expr("ln(1.0 + n_chars)").as("w"))
@@ -591,53 +590,6 @@ object QualityFilters {
   private val GopherDupNs = Seq(5, 6, 7)
   private val GopherCuts = Map(2 -> 0.20, 3 -> 0.18, 4 -> 0.16,
     5 -> 0.15, 6 -> 0.14, 7 -> 0.13)
-
-  /** Fold the run lengths of the sorted word n-grams of `text` into
-    * struct(topchars, dupchars): chars of the single most frequent
-    * gram's occurrences (ties by larger gram string, matching the
-    * oracle's ORDER BY c DESC, g DESC) and chars of all grams occurring
-    * ≥ 2×. Equal grams are adjacent after array_sort, so one
-    * left-to-right pass sees every run; the finish lambda closes the
-    * last run.
-    *
-    * This HOF formulation is the READABLE twin: the shipped query uses
-    * the compiled [[graft.functions.expressions.GopherRepStats]] (the
-    * interpreted per-element lambda cost dominated the ×100 decade);
-    * `Wave5Spec` pins the two to identical values on the real corpus.
-    */
-  private[operators] def gramRunStats(text: Column, n: Int): Column = {
-    val sorted = array_sort(TextAnalysisShared.ngramsHof(text, n))
-    val init = struct(lit("").as("prev"), lit(0L).as("run"),
-      lit(0L).as("topc"), lit("").as("topg"), lit(0L).as("dup"))
-    // (topc, topg, dup) with the pending (prev, run) run folded in.
-    def closeRun(acc: Column): Column = {
-      val (prev, run) = (acc.getField("prev"), acc.getField("run"))
-      val (topc, topg, dup) =
-        (acc.getField("topc"), acc.getField("topg"), acc.getField("dup"))
-      val better = (run > topc) || (run === topc && prev > topg)
-      struct(
-        when(better, run).otherwise(topc).as("topc"),
-        when(better, prev).otherwise(topg).as("topg"),
-        (dup + when(run >= 2, run * length(prev).cast("long"))
-          .otherwise(lit(0L))).as("dup"))
-    }
-    aggregate(sorted, init,
-      (acc, g) => {
-        val same = acc.getField("prev") === g
-        val c = closeRun(acc)
-        struct(g.as("prev"),
-          when(same, acc.getField("run") + 1).otherwise(lit(1L)).as("run"),
-          when(same, acc.getField("topc")).otherwise(c.getField("topc")).as("topc"),
-          when(same, acc.getField("topg")).otherwise(c.getField("topg")).as("topg"),
-          when(same, acc.getField("dup")).otherwise(c.getField("dup")).as("dup"))
-      },
-      acc => {
-        val c = closeRun(acc)
-        struct(
-          (c.getField("topc") * length(c.getField("topg")).cast("long")).as("topchars"),
-          c.getField("dup").as("dupchars"))
-      })
-  }
 
   /** All six signals from one compiled expression call per document —
     * [n_tokens, top2c, top3c, top4c, dup5c, dup6c, dup7c].
@@ -852,8 +804,7 @@ object QualityFilters {
       .otherwise(100L)
     // Salted ('mix') so the fractional-copy choice is independent of
     // the stratified-sample bucket over the same ids.
-    val bucket = expr(
-      "cast(conv(substring(md5(cast(concat('mix', cast(doc_id as string)) as binary)), 1, 15), 16, 10) as bigint) % 100")
+    val bucket = TextAnalysisShared.hash64(concat(lit("mix"), col("doc_id").cast("string"))) % 100
     docs.join(broadcast(counts), "lang")
       .crossJoin(broadcast(total))
       .withColumn("w_pm", weightPm)
@@ -1036,8 +987,7 @@ object QualityFilters {
   // token mass — the table a mixture audit actually reads. One scan +
   // one small agg.
   private def trainSplit(s: SparkSession, dir: String): DataFrame = {
-    val bucket = expr(
-      "cast(conv(substring(md5(cast(concat('split', cast(doc_id as string)) as binary)), 1, 15), 16, 10) as bigint) % 1000")
+    val bucket = TextAnalysisShared.hash64(concat(lit("split"), col("doc_id").cast("string"))) % 1000
     Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"),
         size(split(col("text"), " ")).cast("long").as("toks"),

@@ -169,12 +169,8 @@ object ScalePatterns {
   // decimals each iteration so both engines iterate from bit-identical
   // codebooks. Output: the final codebook exploded to
   // (cid, size, pos, c) rows — fully value-pinned by the oracle.
-  private val KmeansK = 10
+  private[operators] val KmeansK = 10
   private val KmeansIters = 2
-
-  private def sqDist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => pow(x.cast("double") - y, lit(2))),
-      lit(0.0), (acc, x) => acc + x)
 
   /** Per-key mean vectors of a float-embedding frame, elements rounded
     * to 6 decimals — THE centroid formula, shared by the Lloyd update
@@ -207,8 +203,9 @@ object ScalePatterns {
     * pattern — bounded by construction) and re-broadcasts them into
     * the next assign kernel; the returned codebook frame is rebuilt
     * from those SAME rounded values as a local relation, so consuming
-    * it never replays the training chain. Declarative twin
-    * [[kmeansFitDeclarative]] is parity-pinned by KmeansSpec.
+    * it never replays the training chain. The declarative twin
+    * (`ParityTwins.kmeansFitDeclarative`, in the specs) is parity-pinned
+    * by CentroidKernelSpec.
     */
   private[operators] def kmeansFit(s: SparkSession, dir: String,
       iters: Int): (DataFrame, DataFrame) = {
@@ -238,30 +235,6 @@ object ScalePatterns {
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.DoubleType, containsNull = false),
           nullable = false))))
-    (cent, asg)
-  }
-
-  /** The pre-kernel declarative Lloyd loop — the parity reference
-    * KmeansSpec pins the kernel form against (same seeds, same round6
-    * argmin tie-broken by cid, same mean update).
-    */
-  private[operators] def kmeansFitDeclarative(s: SparkSession, dir: String,
-      iters: Int): (DataFrame, DataFrame) = {
-    val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    var cent = e.filter(col("vec_id") < KmeansK)
-      .select(col("vec_id").as("cid"),
-        transform(col("embedding"), _.cast("double")).as("cvec"))
-    var asg: DataFrame = e // placeholder; overwritten by the first iteration
-    for (_ <- 1 to iters) {
-      val dist = e.crossJoin(broadcast(cent))
-        .select(col("vec_id"),
-          struct(round(sqDist(col("embedding"), col("cvec")), 6).as("dist2"),
-            col("cid"), col("embedding")).as("cand"))
-      asg = dist.groupBy("vec_id").agg(min("cand").as("m"))
-        .select(col("vec_id"), col("m.cid").as("cid"),
-          col("m.embedding").as("embedding"), col("m.dist2").as("dist2"))
-      cent = meanCentroids(asg, col("cid"), col("embedding"), "cid")
-    }
     (cent, asg)
   }
 

@@ -291,7 +291,7 @@ object Selection {
   private val ParetoAlpha = 9.0
 
   private def paretoSelect(s: SparkSession, dir: String): DataFrame = {
-    val u = expr("(cast(conv(substring(md5(cast(concat('pareto', cast(doc_id as string)) as binary)), 1, 15), 16, 10) as bigint) + 0.5) / 1152921504606846976.0")
+    val u = TextAnalysisShared.hashUniform(concat(lit("pareto"), col("doc_id").cast("string")))
     nbScored(s, dir)
       .withColumn("u", u)
       .withColumn("score", lit(1.0) / (lit(1.0) + exp(-col("logit"))))
@@ -331,7 +331,7 @@ object Selection {
     * is the trainer); its SIZE is k — always broadcast — regardless of
     * corpus size.
     */
-  private def codebook(e: DataFrame): DataFrame =
+  private[operators] def codebook(e: DataFrame): DataFrame =
     ScalePatterns.meanCentroids(e, col("label"), col("embedding"), "cl")
       .select(col("cl"), col("cvec").as("centroid"))
 
@@ -344,8 +344,9 @@ object Selection {
     * combined `max(struct(csim, -cl, …))` argmax still scored n·k
     * interpreted HOF cosines per pass even though its exchange was one
     * row per vector. The codebook collect is k rows (bounded by label
-    * cardinality; at 100 TB by the trained k). Declarative twin
-    * [[assignedDeclarative]] is parity-pinned by CentroidKernelSpec.
+    * cardinality; at 100 TB by the trained k). The declarative twin
+    * (`ParityTwins.assignedDeclarative`, in the specs) is parity-pinned
+    * by CentroidKernelSpec.
     */
   private[operators] def assigned(e: DataFrame): DataFrame = {
     val cb = codebook(e).collect()
@@ -359,19 +360,6 @@ object Selection {
       nc.getField("cl").cast(e.schema("label").dataType).as("cluster"),
       nc.getField("csim").as("csim"), col("embedding"))
   }
-
-  /** The pre-kernel declarative assign — the parity reference
-    * CentroidKernelSpec pins the kernel form against.
-    */
-  private[operators] def assignedDeclarative(e: DataFrame): DataFrame =
-    e.crossJoin(broadcast(codebook(e)))
-      .select(col("vec_id"),
-        struct(
-          round(VectorFunctions.cosineHof(col("embedding"), col("centroid")), 4).as("csim"),
-          (-col("cl")).as("ncl"), col("embedding")).as("cand"))
-      .groupBy("vec_id").agg(max("cand").as("m"))
-      .select(col("vec_id"), (-col("m.ncl")).as("cluster"),
-        col("m.csim").as("csim"), col("m.embedding").as("embedding"))
 
   private def semanticDedup(s: SparkSession, dir: String): DataFrame = {
     val asg = assigned(Tables.embeddings(s, dir))

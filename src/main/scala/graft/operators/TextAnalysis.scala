@@ -50,7 +50,7 @@ object TextAnalysis {
 
   private def bpeTokens(s: SparkSession, dir: String): DataFrame = {
     // Compiled single-scan pretokenizer ([[BpeTokenClassCounts]]): the
-    // regex formulation (kept below as the parity twin) paid four regex
+    // regex formulation (a parity twin in the specs) paid four regex
     // passes per document — 17.5 s isolated at the ×100 decade, all
     // per-row CPU. Values are bit-identical (`TextAnalysisProps` pins
     // kernel == regex on the real corpus + adversarial strings), so the
@@ -67,25 +67,6 @@ object TextAnalysis {
         col("cnt").getItem(1).as("n_word"),
         col("cnt").getItem(2).as("n_num"),
         col("cnt").getItem(3).as("n_other"),
-        size(split(col("raw"), " ")).cast("long").as("n_ws"),
-        expr("length(raw) div 4").cast("long").as("est_tokens"))
-      .orderBy("doc_id")
-  }
-
-  /** The pre-kernel regex formulation of [[bpeTokens]], kept as the
-    * parity twin the property spec checks the compiled scan against.
-    */
-  private[operators] def bpeTokensRegex(docs: DataFrame): DataFrame = {
-    val raw = concat(col("text"), lit(" doc"), col("doc_id"), lit(" v2.5 end!!"))
-    val toks = regexp_extract_all(col("raw"), lit(BpeRe), lit(0))
-    docs
-      .select(col("doc_id"), raw.as("raw"))
-      .select(
-        col("doc_id"),
-        size(toks).cast("long").as("n_bpe"),
-        size(filter(toks, t => t.rlike("^ ?[a-z]"))).cast("long").as("n_word"),
-        size(filter(toks, t => t.rlike("^ ?[0-9]"))).cast("long").as("n_num"),
-        size(filter(toks, t => t.rlike("^ ?[^a-z0-9 ]"))).cast("long").as("n_other"),
         size(split(col("raw"), " ")).cast("long").as("n_ws"),
         expr("length(raw) div 4").cast("long").as("est_tokens"))
       .orderBy("doc_id")
@@ -211,26 +192,6 @@ object TextAnalysis {
         ExpressionUtils.column(graft.functions.expressions.SimhashBits(
           ExpressionUtils.expression(col("text")))).as("simhash"))
       .orderBy("doc_id")
-
-  /** The explode→groupBy SimHash twin, kept for the spec's
-    * kernel-equality pin.
-    */
-  private[operators] def simhashExplodeTwin(s: SparkSession, dir: String): DataFrame = {
-    val tok = Tables.documents(s, dir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
-      .withColumn("h", md5(col("t").cast("binary")))
-    val sums = (1 to 16).map { p =>
-      sum(when(expr(s"conv(substring(h, $p, 1), 16, 10)").cast("int") >= 8, 1)
-        .otherwise(-1)).as(s"s$p")
-    }
-    val bits = (1 to 16).map { p =>
-      when(col(s"s$p") >= 0, lit("1")).otherwise(lit("0"))
-    }
-    tok.groupBy("doc_id")
-      .agg(sums.head, sums.tail: _*)
-      .select(col("doc_id"), concat(bits: _*).as("simhash"))
-      .orderBy("doc_id")
-  }
 
   private val simhashSql = {
     val sums = (1 to 16).map { p =>

@@ -628,6 +628,11 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     }
     def unreadIn(oldSnap: HPath): Map[String, HPath] =
       dataFilesIn(oldSnap).filter { case (rel, _) => !readSet.contains(rel) }
+    // The superseded snapshot's unread files, partition columns kept.
+    def readUnread(oldSnap: HPath, unread: Map[String, HPath]): DataFrame =
+      spark.read
+        .option("basePath", fsOf(oldSnap).makeQualified(oldSnap).toString)
+        .parquet(unread.values.map(_.toString).toSeq: _*)
     commitSnapshot(df, memoryType, base, cleanup = false) match {
       case None =>
         val unread = cur.filter(_ => readSet.nonEmpty)
@@ -641,10 +646,8 @@ final class MemoryStore(val spark: SparkSession, val root: String,
         // SparkException/AnalysisException, not IOException) degrades to
         // the drop the caller asked for, loudly.
         else try {
-          val rescued = spark.read
-            .option("basePath", fsOf(cur.get._2).makeQualified(cur.get._2).toString)
-            .parquet(unread.values.map(_.toString).toSeq: _*)
-          if (commitSnapshot(rescued, memoryType, base).isEmpty) dropTable(memoryType)
+          if (commitSnapshot(readUnread(cur.get._2, unread), memoryType, base).isEmpty)
+            dropTable(memoryType)
         } catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"[graft.MemoryStore] empty-rewrite rescue for " +
             s"$memoryType failed ($e) — dropping; rows appended during this rewrite may be lost")
@@ -655,9 +658,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
           val unread = unreadIn(oldSnap)
           if (unread.nonEmpty) {
             try {
-              val rescued = spark.read
-                .option("basePath", fsOf(oldSnap).makeQualified(oldSnap).toString)
-                .parquet(unread.values.map(_.toString).toSeq: _*)
+              val rescued = readUnread(oldSnap, unread)
               val committed = spark.read
                 .option("basePath", fsOf(newSnap).makeQualified(newSnap).toString)
                 .parquet(newSnap.toString)
@@ -819,10 +820,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     currentSnapshot(memoryType) match {
       case None => 0L
       case Some((_, snap)) =>
-        var files = 0L
-        val it = fsOf(snap).listFiles(snap, true)
-        while (it.hasNext)
-          if (it.next().getPath.getName.endsWith(".parquet")) files += 1
+        val files = listDataFiles(snap).size.toLong
         if (files > minFiles)
           overwrite(readSnapshot(memoryType, snap).repartition(targetPartitions), memoryType)
         files

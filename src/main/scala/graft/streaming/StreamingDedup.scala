@@ -158,9 +158,10 @@ object StreamingDedup {
       require(t > 0.0 && t <= 1.0, s"verifyJaccard $t outside (0, 1]"))
     val spark = b.sparkSession
     // Referenced by the self-join (both sides), the index probe, and
-    // the novel-signature append — persist so the shingle+minhash pass
-    // runs once per batch, not once per reference.
-    val sigs = TextAnalysisShared.bandedMinhashSigs(b, 4).persist()
+    // the novel-signature append — a lazy local checkpoint, so the
+    // shingle+minhash pass runs once per batch, not once per reference,
+    // and a failure anywhere below leaves nothing cached to release.
+    val sigs = TextAnalysisShared.bandedMinhashSigs(b, 4).localCheckpoint(false)
     val batchCand = sigs
       .join(broadcast(sigs.select(col("doc_id").as("other"), col("band"), col("sig"))),
         Seq("band", "sig"))
@@ -207,16 +208,11 @@ object StreamingDedup {
           .filter(TextAnalysisShared.jaccardSets(col("toks_new"), col("toks_other")) >= tau)
           .select("doc_id").distinct()
     }
-    val novel = b.join(dup, Seq("doc_id"), "left_anti")
-      .persist() // two writes below; don't re-scan the index per write
-    try {
-      novel.write.mode("overwrite").parquet(s"$novelPath/batch_id=$batchId")
-      val novelSigs = sigs.join(novel.select("doc_id"), Seq("doc_id"))
-      novelSigs.write.mode("overwrite").parquet(s"$indexPath/batch_id=$batchId")
-    } finally {
-      novel.unpersist()
-      sigs.unpersist()
-      ()
-    }
+    // Two writes below; the first materializes it, so the index is
+    // not re-scanned per write.
+    val novel = b.join(dup, Seq("doc_id"), "left_anti").localCheckpoint(false)
+    novel.write.mode("overwrite").parquet(s"$novelPath/batch_id=$batchId")
+    val novelSigs = sigs.join(novel.select("doc_id"), Seq("doc_id"))
+    novelSigs.write.mode("overwrite").parquet(s"$indexPath/batch_id=$batchId")
   }
 }

@@ -27,6 +27,31 @@ class EntrypointSpec extends SparkSpec {
     }
   }
 
+  test("SparkEntry refuses a native-digit default locale before any work; de-DE and en-US pass") {
+    // No Parquet write runs under these locales: one such write leaves
+    // the JVM unable to write Parquet for the rest of the suite.
+    val saved = Seq(Locale.Category.FORMAT, Locale.Category.DISPLAY).map(c => c -> Locale.getDefault(c))
+    val savedDefault = Locale.getDefault
+    def under[T](tag: String)(body: => T): T =
+      try {
+        Locale.setDefault(Locale.forLanguageTag(tag))
+        body
+      } finally {
+        Locale.setDefault(savedDefault)
+        saved.foreach { case (c, l) => Locale.setDefault(c, l) }
+      }
+    for (tag <- Seq("th-TH-u-nu-thai", "ar-EG", "fa-IR", "hi-IN-u-nu-deva")) {
+      val q = under(tag)(intercept[IllegalStateException](SparkEntry.queries))
+      assert(q.getMessage.contains(tag), q.getMessage)
+      val e = under(tag)(intercept[IllegalStateException](SparkEntry.entry(spark)))
+      assert(e.getMessage.contains(tag), e.getMessage)
+    }
+    for (tag <- Seq("de-DE", "en-US")) under(tag) {
+      assert(SparkEntry.queries.nonEmpty, tag)
+      assert(SparkEntry.entry(spark).columns.contains("score"), tag)
+    }
+  }
+
   test("the provider selector picks w2v by name and hash otherwise, without reading the corpus") {
     def unread: DataFrame = throw new AssertionError("the hash provider evaluated its corpus")
     for (choice <- Seq(None, Some("hash"), Some("bert")))

@@ -14,7 +14,7 @@ class VectorKernelSpec extends SparkSpec {
     val diff = emb.as("a").crossJoin(emb.as("b")).limit(500)
       .select(
         VectorFunctions.dotD(col("a.embedding"), col("b.embedding")).as("k"),
-        VectorFunctions.dotHof(col("a.embedding"), col("b.embedding")).as("h"))
+        VectorHofTwins.dotHof(col("a.embedding"), col("b.embedding")).as("h"))
       .filter(col("k") =!= col("h"))
       .count()
     assert(diff == 0)
@@ -30,7 +30,7 @@ class VectorKernelSpec extends SparkSpec {
     val q = Array(0.6f, 0.8f, 0f)
     val out = rows.select(col("id"),
         VectorFunctions.cosineConst(col("v"), q).as("k"),
-        VectorFunctions.cosineHof(col("v"), lit(q)).as("h"))
+        VectorHofTwins.cosineHof(col("v"), lit(q)).as("h"))
       .orderBy(col("k").desc).collect()
     assert(!out.exists(r => r.getDouble(1).isNaN || r.getDouble(2).isNaN))
     assert(out.head.getLong(0) == 2L, "zero vector outranked a real match")
@@ -45,7 +45,7 @@ class VectorKernelSpec extends SparkSpec {
     val diff = emb.as("a").crossJoin(emb.as("b")).limit(500)
       .select(
         VectorFunctions.cosine(col("a.embedding"), col("b.embedding")).as("k"),
-        VectorFunctions.cosineHof(col("a.embedding"), col("b.embedding")).as("h"))
+        VectorHofTwins.cosineHof(col("a.embedding"), col("b.embedding")).as("h"))
       .filter(col("k") =!= col("h"))
       .count()
     assert(diff == 0)
@@ -178,7 +178,7 @@ class VectorKernelSpec extends SparkSpec {
       VectorFunctions.dotD(col("a"), col("b")).as("d"),
       VectorFunctions.cosine(col("a"), col("b")).as("c")).head()
     assert(kernel.isNullAt(0) && kernel.isNullAt(1))
-    val hof = df.select(VectorFunctions.dotHof(col("a"), col("b")).as("d")).head()
+    val hof = df.select(VectorHofTwins.dotHof(col("a"), col("b")).as("d")).head()
     assert(hof.isNullAt(0))
   }
 
@@ -209,7 +209,7 @@ class VectorKernelSpec extends SparkSpec {
         cb.toSeq.map { case (id, v) => (id, v) }).toDF("cl", "cvec")
       val declared = e.crossJoin(broadcast(cbDf))
         .select(col("vec_id"), col("cl"),
-          round(VectorFunctions.cosineHof(col("embedding"), col("cvec")), 4).as("csim"))
+          round(VectorHofTwins.cosineHof(col("embedding"), col("cvec")), 4).as("csim"))
         .withColumn("rn", org.apache.spark.sql.functions.row_number().over(
           Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cl"))))
       for (p <- Seq(1, 3, 7, 99)) {

@@ -12,7 +12,7 @@ class BpeKernelSpec extends SparkSpec {
 
   test("compiled bpe token counts == regex formulation on the real corpus") {
     val kernel = SparkEntry.queries("q_bpe_tokens")(spark, Sf)
-    val regex = TextAnalysis.bpeTokensRegex(graft.io.Tables.documents(spark, Sf))
+    val regex = ParityTwins.bpeTokensRegex(graft.io.Tables.documents(spark, Sf))
     assert(kernel.columns.toSeq == regex.columns.toSeq)
     assert(kernel.exceptAll(regex).count() == 0 && regex.exceptAll(kernel).count() == 0,
       "kernel and regex pretokenizer counts must be bit-identical")

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.functions.VectorFunctions
+import graft.functions.{VectorFunctions, VectorHofTwins}
 import graft.io.Tables
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -25,7 +25,7 @@ class CentroidKernelSpec extends SparkSpec {
   test("kernel kmeansFit == declarative kmeansFit, codebook and assignment, 1 and 2 iters") {
     for (iters <- 1 to 2) {
       val (ck, ak) = ScalePatterns.kmeansFit(spark, Sf, iters)
-      val (cd, ad) = ScalePatterns.kmeansFitDeclarative(spark, Sf, iters)
+      val (cd, ad) = ParityTwins.kmeansFitDeclarative(spark, Sf, iters)
       def cents(df: DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toList)).sortBy(_._1).toList
       assert(cents(ck) == cents(cd), s"codebooks diverge at iters=$iters")
@@ -130,7 +130,7 @@ class CentroidKernelSpec extends SparkSpec {
     def rows(df: DataFrame) = df.select("vec_id", "cluster", "csim").collect()
       .map(r => (r.getLong(0), r.getAs[Number](1).longValue(), r.getDouble(2)))
       .sortBy(_._1).toList
-    assert(rows(Selection.assigned(e)) == rows(Selection.assignedDeclarative(e)),
+    assert(rows(Selection.assigned(e)) == rows(ParityTwins.assignedDeclarative(e)),
       "assign kernel diverges from the declarative argmax")
   }
 
@@ -142,9 +142,9 @@ class CentroidKernelSpec extends SparkSpec {
       lit(Array(0.0, 0.0, 0.0)).as("zero"))
     val r = df.select(
       VectorFunctions.cosine(col("ad"), col("bd")).as("dd"),
-      VectorFunctions.cosineHof(col("ad"), col("bd")).as("dd_hof"),
+      VectorHofTwins.cosineHof(col("ad"), col("bd")).as("dd_hof"),
       VectorFunctions.cosine(col("ad"), col("bf")).as("df"),
-      VectorFunctions.cosineHof(col("ad"), col("bf")).as("df_hof"),
+      VectorHofTwins.cosineHof(col("ad"), col("bf")).as("df_hof"),
       VectorFunctions.cosine(col("ad"), col("zero")).as("z")).head()
     assert(r.getDouble(0) == r.getDouble(1), "double/double kernel != HOF")
     assert(r.getDouble(2) == r.getDouble(3), "double/float kernel != HOF")

@@ -72,7 +72,7 @@ class DedupSemanticsSpec extends SparkSpec {
     def sigSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val kernel = sigSet(TextAnalysisShared.bandedMinhashSigs(docs, 4))
-    val exploded = sigSet(TextAnalysisShared.bandedMinhashSigsExploded(docs, 4))
+    val exploded = sigSet(ParityTwins.bandedMinhashSigsExploded(docs, 4))
     assert(kernel == exploded,
       s"kernel diverged: ${(kernel diff exploded).take(3)} vs ${(exploded diff kernel).take(3)}")
     assert(kernel.nonEmpty)

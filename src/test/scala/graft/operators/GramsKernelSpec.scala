@@ -18,7 +18,7 @@ class GramsKernelSpec extends SparkSpec {
         graft.functions.expressions.WordGramsExpr(
           org.apache.spark.sql.graft.ColumnBridge.expression(col("text")), 5))))
     val hof = docs.select(col("doc_id"),
-      posexplode(TextAnalysisShared.ngramsHof(col("text"), 5)))
+      posexplode(ParityTwins.ngramsHof(col("text"), 5)))
     assert(kernel.exceptAll(hof).count() == 0 && hof.exceptAll(kernel).count() == 0,
       "kernel and HOF gram streams must be bit-identical (position included)")
     assert(kernel.count() > 0)
@@ -30,7 +30,7 @@ class GramsKernelSpec extends SparkSpec {
       val kernel = docs.select(col("doc_id"),
         posexplode(TextAnalysisShared.ngrams(col("text"), n)))
       val hof = docs.select(col("doc_id"),
-        posexplode(TextAnalysisShared.ngramsHof(col("text"), n)))
+        posexplode(ParityTwins.ngramsHof(col("text"), n)))
       assert(kernel.exceptAll(hof).count() == 0 && hof.exceptAll(kernel).count() == 0,
         s"ngrams($n) kernel and HOF streams must be bit-identical")
     }

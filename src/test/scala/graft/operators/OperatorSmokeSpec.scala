@@ -72,16 +72,29 @@ class OperatorSmokeSpec extends SparkSpec {
     assert(builders.isEmpty, s"SparkSession.builder() outside the entrypoint setup in: ${builders.mkString(", ")}")
   }
 
-  test("no operator caches outside SessionMemo — no .persist( or .cache()") {
+  test("no .persist( or .cache() anywhere in src/main") {
     // Spark's CacheManager is context-wide: a persisted frame is served
     // to every later call in every session, memos off included, and
-    // stays until unpersisted. Values kept across calls go through
-    // graft.internal.SessionMemo; a frame one query reads more than
+    // stays until unpersisted — also when a failure skips the
+    // unpersist. Values kept across calls go through
+    // graft.internal.SessionMemo; a frame one call reads more than
     // once is a localCheckpoint, released with the frame.
-    val found = offenders("src/main/scala/graft/operators") { s =>
+    val found = offenders("src/main") { s =>
       val c = code(s); c.contains(".persist(") || c.contains(".cache()")
     }
     assert(found.isEmpty, s"persist/cache in: ${found.mkString(", ")}")
+  }
+
+  test("no inline md5-prefix hash in src/main outside hash64") {
+    // Matched without whitespace, so a re-spaced copy is caught too.
+    val home = "src/main/scala/graft/operators/Dedup.scala"
+    val definition = "defhash64(c:Column):Column=conv(substring(md5("
+    val inline = "conv(substring(md5("
+    def squeezed(s: String) = s.replaceAll("\\s+", "")
+    val homeText = squeezed(java.nio.file.Files.readString(java.nio.file.Paths.get(home)))
+    assert(homeText.contains(definition), s"hash64's definition not found in $home")
+    val found = offenders("src/main")(s => squeezed(s).replace(definition, "").contains(inline))
+    assert(found.isEmpty, s"inline md5-prefix hash in: ${found.mkString(", ")}")
   }
 
   test("flagship entry returns ranked rows") {

@@ -64,7 +64,7 @@ class ProgressSpec extends SparkSpec {
 
   test("q_next_action argmax picks == the windowed formulation, bit for bit") {
     val agg = run("q_next_action")
-    val win = Progress.nextActionWindowed(spark, Sf)
+    val win = ParityTwins.nextActionWindowed(spark, Sf)
     assert(agg.columns.toSeq == win.columns.toSeq)
     assert(agg.exceptAll(win).count() == 0 && win.exceptAll(agg).count() == 0,
       "the one-groupBy argmax picks must equal the four-window ranking exactly")

@@ -130,7 +130,7 @@ class SelectionSpec extends SparkSpec {
         "canonical pick must reuse the consolidate-merge components")
       // The canonical member is a real member and no member is longer.
       val docs = graft.io.Tables.documents(spark, Sf)
-      val labeled = Lifecycle.minhashCcLabels(docs)
+      val labeled = ParityTwins.minhashCcLabels(docs)
         .join(docs, col("node") === col("doc_id"))
       val maxLen = labeled.groupBy("comp").agg(max("n_chars").as("mx"))
       val bad = canon.join(maxLen, Seq("comp"))

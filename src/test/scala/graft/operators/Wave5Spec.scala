@@ -248,7 +248,7 @@ class Wave5Spec extends SparkSpec {
   test("compiled simhash equals the explode formulation; fingerprint equals the HOF twin") {
     import org.apache.spark.sql.functions._
     val fast = run("q_simhash").map(r => r.getLong(0) -> r.getString(1)).toMap
-    val slow = TextAnalysis.simhashExplodeTwin(spark, Sf)
+    val slow = ParityTwins.simhashExplodeTwin(spark, Sf)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(fast == slow, "compiled simhash diverges from the explode form")
     val fp = run("q_fingerprint")
@@ -270,8 +270,8 @@ class Wave5Spec extends SparkSpec {
     val both = docs.select(col("doc_id"),
       element_at(col("st"), 2).as("fast_top2"),
       element_at(col("st"), 7).as("fast_dup7"),
-      QualityFilters.gramRunStats(col("text"), 2).getField("topchars").as("hof_top2"),
-      QualityFilters.gramRunStats(col("text"), 7).getField("dupchars").as("hof_dup7"))
+      ParityTwins.gramRunStats(col("text"), 2).getField("topchars").as("hof_top2"),
+      ParityTwins.gramRunStats(col("text"), 7).getField("dupchars").as("hof_dup7"))
       .collect()
     assert(both.nonEmpty)
     both.foreach { r =>
