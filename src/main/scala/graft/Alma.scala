@@ -6,7 +6,8 @@ import java.util.UUID
 import java.security.MessageDigest
 
 import graft.functions.{HashEmbedder, VectorFunctions}
-import graft.functions.expressions.BoundParam
+import graft.functions.expressions.{BoundParam, FeedbackLookup, ParamSlot}
+import graft.internal.PreparedPlan
 import graft.retrieval.{ModeConfig, Modes, PostProcess, QuerySanitizer, RetrievalCache}
 import graft.storage._
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
@@ -315,8 +316,9 @@ final class Alma(
     val pruned = forget(asOf, agent, olderThanDays, belowConfidence)
     val archived = enforceQuota(maxOutcomesPerAgent, asOf)
     // Side tables included: the feedback log is the highest-append
-    // table in the system (and feedbackSummary is scanned on every
-    // retrieve), so it fragments fastest. An append racing the rewrite
+    // table in the system (and the retrieve's feedback scores are
+    // recounted from it after each change), so it fragments fastest.
+    // An append racing the rewrite
     // (a concurrent recordUsage) is covered by the overwrite rescue —
     // files landing in the superseded snapshot after the rewrite's
     // read are moved into the committed one, not silently dropped.
@@ -461,39 +463,36 @@ final class Alma(
     * on. The single per-type definition `retrieve` and `retrieveBatch`
     * both score with ([[scored]]).
     */
-  private case class ScoredType(memoryType: String, slot: String, rows: DataFrame,
+  private case class ScoredType(memoryType: String, slot: String,
       recencyCol: String, succ: Column, conf: Column, failureFlag: Option[Column] = None)
 
-  private def scoredTypes(agents: Seq[String], m: ModeConfig): Seq[ScoredType] = {
-    val p = Some(projectId)
+  private def scoredTypes(m: ModeConfig): Seq[ScoredType] =
     Seq(
-      ScoredType(MemoryType.Heuristics, "h", store.heuristics(p, agents).toDF(), "lastValidated",
+      ScoredType(MemoryType.Heuristics, "h", "lastValidated",
         succ = col("successCount").cast("double") /
           when(col("occurrenceCount") === 0, 1L).otherwise(col("occurrenceCount")),
         conf = col("confidence")),
-      ScoredType(MemoryType.Outcomes, "o", store.outcomes(p, agents).toDF(), "timestamp",
+      ScoredType(MemoryType.Outcomes, "o", "timestamp",
         succ = when(col("success"), 1.0).otherwise(0.3),
         conf = lit(1.0),
         failureFlag = Some(!col("success"))),
-      ScoredType(MemoryType.Knowledge, "dk", store.knowledge(p, agents).toDF(), "lastVerified",
+      ScoredType(MemoryType.Knowledge, "dk", "lastVerified",
         succ = lit(1.0), conf = col("confidence"))) ++
       (if (m.includeAntiPatterns)
-        Seq(ScoredType(MemoryType.AntiPatterns, "ap", store.antiPatterns(p, agents).toDF(), "lastSeen",
+        Seq(ScoredType(MemoryType.AntiPatterns, "ap", "lastSeen",
           succ = least(col("occurrenceCount").cast("double") / lit(10.0), lit(1.0)),
           conf = lit(1.0)))
       else Nil)
-  }
 
   /** Score `df`, rows of type `t`, against the query-vector similarity
-    * `sim`: the mode's 4-factor base score, the feedback blend, the
-    * mode's failure and exact-match boosts, then the `minScore`
-    * threshold. Adds `_sim` and `_score`.
+    * `sim` at `asOfUs` (epoch micros): the mode's 4-factor base score,
+    * the feedback blend over the row's score `feedback` (null without
+    * feedback), the mode's failure and exact-match boosts, then the
+    * `minScore` threshold. Adds `_sim` and `_score`.
     */
-  private def scored(df: DataFrame, t: ScoredType, sim: Column, asOfUs: Long,
-      m: ModeConfig, fbSummary: DataFrame): DataFrame = {
-    // asOf is bound by reference, not as a literal, so every call
-    // generates the same Java and reuses the compiled classes.
-    val days = (BoundParam.of(asOfUs) - unix_micros(col(t.recencyCol))).cast("double") /
+  private def scored(df: DataFrame, t: ScoredType, sim: Column, asOfUs: Column,
+      m: ModeConfig, feedback: Column): DataFrame = {
+    val days = (asOfUs - unix_micros(col(t.recencyCol))).cast("double") /
       lit(86400000000.0)
     val rec = pow(lit(0.5), days / lit(30.0))
     val base = lit(m.wSim) * sim + lit(m.wRecency) * rec +
@@ -509,25 +508,21 @@ final class Alma(
       else when(sim > 0.9, lit(m.exactMatchBoost))
         .when(sim > 0.8, lit(1.0 + (m.exactMatchBoost - 1.0) / 2.0))
         .otherwise(lit(1.0))
-    val raw = df
-      .withColumn("_sim", sim)
-      .withColumn("_base_score", base)
     // Feedback blends into the BASE score (reference order:
     // engine.py:328 applies feedback to scorer output; the boost path
     // :561-571 multiplies afterwards). Blending after boosts would
     // let a boosted raw > 1 row LOSE score to perfect feedback, since
-    // the feedback term is capped at 1. `fbSummary` is the (small)
-    // per-memory summary (R10/J4), empty when no feedback exists;
-    // feedback-less rows keep their raw score (feedback.py:190-230).
-    val blended = raw.join(broadcast(fbSummary), col("id") === col("memoryId"), "left")
-      .withColumn("_fb_score",
-        when(col("feedback_score").isNotNull,
-          lit(1.0 - Alma.FeedbackWeight) * col("_base_score") +
-            lit(Alma.FeedbackWeight) * (col("feedback_score") + lit(1.0)) / lit(2.0))
-          .otherwise(col("_base_score")))
-      .drop("memoryId", "feedback_score")
-    blended.withColumn("_score", col("_fb_score") * failB * exactB)
-      .drop("_base_score", "_fb_score")
+    // the feedback term is capped at 1. Feedback-less rows (a null
+    // score makes the blend null) keep their raw score
+    // (feedback.py:190-230).
+    val blended = coalesce(
+      lit(1.0 - Alma.FeedbackWeight) * col("_base_score") +
+        lit(Alma.FeedbackWeight) * (feedback + lit(1.0)) / lit(2.0),
+      col("_base_score"))
+    df.withColumn("_sim", sim)
+      .withColumn("_base_score", base)
+      .withColumn("_score", blended * failB * exactB)
+      .drop("_base_score")
       .filter(col("_score") >= m.minScore)
   }
 
@@ -536,6 +531,15 @@ final class Alma(
     * MemorySlice. One declarative plan per type; per-type score rules
     * follow scoring.py:77-269, boost/diversity semantics
     * engine.py:639-802.
+    *
+    * A repeated call (same query, agent, asOf, k, mode and scope, no
+    * store write since) is served from the retrieval cache and runs no
+    * job. A miss binds its values into the facade's prepared plan for
+    * its shape (analysed on the shape's first miss) and runs one job,
+    * the fused collect. The feedback blend reads the store's feedback
+    * scores ([[MemoryStore.feedbackScores]]): the first miss after a
+    * change to the feedback table runs one more job, which recounts
+    * them.
     *
     * `topK <= 0` uses the mode's preset top-k.
     */
@@ -567,6 +571,26 @@ final class Alma(
     retrieveImpl(task, agent, asOf, topK, mode, context.scopeFilter(scope))
   }
 
+  /** What a prepared retrieve plan is built for: everything that shapes
+    * the plan, and none of the values a call binds into it (the query,
+    * asOf, the agent ids, the workflow values, the feedback scores) —
+    * an agent loop asks for another agent on nearly every miss. `leaves`
+    * holds each read table's columns: a committed table is read from
+    * its snapshot, an absent one is its typed empty relation, and the
+    * two differ in their columns.
+    */
+  private case class RetrieveShape(mode: ModeConfig, k: Int, scopeKeys: Seq[String],
+      agents: Int, leaves: Map[String, org.apache.spark.sql.types.StructType])
+
+  // Prepared retrieve plans, one per shape. They hold plan structure and
+  // no data (like Spark's codegen cache), so no store write can make one
+  // stale and they live outside SessionMemo; every call binds its own
+  // fresh table reads and values.
+  private val prepared = new java.util.concurrent.ConcurrentHashMap[RetrieveShape, PreparedPlan]()
+
+  /** Prepared retrieve plans built by this facade (a spec counter). */
+  private[graft] val preparedBuilds = new java.util.concurrent.atomic.AtomicInteger
+
   private def retrieveImpl(
       query: String,
       agent: String,
@@ -589,63 +613,29 @@ final class Alma(
       case Some(hit) => return hit
       case None =>
     }
-    val q = HashEmbedder.embed(QuerySanitizer.sanitize(query), embedDim)
     val agents = scope(agent).readableAgents
-    val asOfUs = asOf.getTime * 1000L
-    val fbSummary = store.feedbackSummary(Some(projectId))
-
-    // The fused retrieve is ONE Spark job with no typed stage in it
-    // (SURVEY §1.4 MemorySlice alternative). Every per-type branch
-    // projects the same envelope — memoryType, the whole source row as
-    // one struct named after its Alma.Fused slot, score, sim — the
-    // branches union by name (a slot a branch lacks is null), and the
-    // single collect of ≤ 5×3k bounded rows decodes Alma.Fused on the
-    // driver, which splits, re-sorts per type, and applies MMR where
-    // the mode asks for it. Decoding there, not per branch, keeps
-    // deserialize/map/serialize stages and their generated classes out
-    // of the plan.
-    def envelope(rows: DataFrame, payload: Array[String], memoryType: String,
-        slot: String, score: Column, sim: Column): DataFrame =
-      rows.select(lit(memoryType).as("memoryType"),
-        struct(payload.toIndexedSeq.map(col): _*).as(slot),
-        score.as("score"), sim.as("sim"))
+    val scopeKeys = wfFilter.keys.toSeq.sorted
+    val types = scoredTypes(m)
+    // This call's read of every table the plan scans, each resolving its
+    // committed snapshot and listing its files now.
+    val tables = (types.map(_.memoryType) :+ MemoryType.Preferences)
+      .map(t => t -> store.readTable(t)).toMap
+    val shape = RetrieveShape(m, k, scopeKeys, agents.size, tables.map { case (t, df) => t -> df.schema })
+    val plan = prepared.computeIfAbsent(shape, _ =>
+      graft.observability.Metrics.withOp(spark, "retrieve_prepare")(prepareRetrieve(shape, types, tables)))
+    val params = Map[String, Any](
+      "query" -> HashEmbedder.embed(QuerySanitizer.sanitize(query), embedDim),
+      "asOf" -> asOf.getTime * 1000L,
+      "feedback" -> store.feedbackScores(projectId)) ++
+      agents.zipWithIndex.map { case (a, i) => s"agent$i" -> a } ++
+      scopeKeys.zipWithIndex.map { case (key, i) => s"scope$i" -> wfFilter(key) }
+    val collected = plan.bind(spark, tables, params).as(Alma.FusedEncoder).collect().toSeq
 
     // R13 provenance: memories read from an inherited agent are tagged
     // with their origin (engine.py:804-827 metadata.shared_from) — on
     // every memory type.
     def tagShared(meta: Map[String, String], owner: String): Map[String, String] =
       if (owner != agent) meta + ("shared_from" -> owner) else meta
-
-    // Workflow scope: each set coordinate must match when the row is
-    // tagged with it; a missing metadata key passes (getItem → null →
-    // coalesce true). Applied at the scan, before scoring.
-    def scoped(df: DataFrame): DataFrame =
-      wfFilter.foldLeft(df) { case (d, (key, value)) =>
-        d.filter(coalesce(col("metadata").getItem(key) === lit(value), lit(true)))
-      }
-    val sim = VectorFunctions.cosineConst(col("embedding"), q)
-    val pdf = store.preferences().toDF()
-    val branches = scoredTypes(agents, m).map { t =>
-      val df = scoped(t.rows)
-      val capped = scored(df, t, sim, asOfUs, m, fbSummary)
-        .orderBy(col("_score").desc, col("id"))
-        // Diversity modes over-fetch 3×k candidates for the driver-side
-        // greedy MMR (R7, applied after the single collect below);
-        // plain modes cap at k. Either way the per-type plan ends in a
-        // TakeOrderedAndProject — bounded output at any corpus size.
-        .limit(if (m.diversity <= 0.0) k else 3 * k)
-      envelope(capped, df.columns, t.memoryType, t.slot, col("_score"), col("_sim"))
-    } :+
-      // Preferences are unscored (engine.py:347-350).
-      envelope(pdf.orderBy(col("id")).limit(k), pdf.columns,
-        MemoryType.Preferences, "up", lit(0.0), lit(0.0))
-    val unioned = branches.reduce(_.unionByName(_, allowMissingColumns = true))
-    // A slot no branch fills (ap, when the mode leaves anti-patterns
-    // out) is added as a typed null, so the Fused decoder resolves.
-    val collected = Alma.FusedEncoder.schema
-      .filterNot(f => unioned.columns.contains(f.name))
-      .foldLeft(unioned)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
-      .as(Alma.FusedEncoder).collect().toSeq
 
     // Driver-side per-type finish over the bounded envelope rows:
     // deterministic (score desc, id) order, then greedy MMR (R7) when
@@ -683,6 +673,72 @@ final class Alma(
     slice
   }
 
+  /** The fused retrieve plan of one shape, over the leaves of `tables`,
+    * with a parameter slot for each value a call binds: `query` (the
+    * query vector), `asOf` (epoch micros), `agent<i>` (the readable
+    * agents), `scope<i>` (the workflow values, by sorted key) and
+    * `feedback` (the score table of the feedback blend).
+    *
+    * The fused retrieve is ONE Spark job with no typed stage in it
+    * (SURVEY §1.4 MemorySlice alternative). Every per-type branch
+    * projects the same envelope — memoryType, the whole source row as
+    * one struct named after its Alma.Fused slot, score, sim — the
+    * branches union by name (a slot a branch lacks is null), and the
+    * single collect of ≤ 5×3k bounded rows decodes Alma.Fused on the
+    * driver, which splits, re-sorts per type, and applies MMR where
+    * the mode asks for it. Decoding there, not per branch, keeps
+    * deserialize/map/serialize stages and their generated classes out
+    * of the plan.
+    *
+    * The agent predicate compares with bound values, which Parquet
+    * cannot push down (its filters take literals); the `projectId`
+    * predicate stays a literal and still prunes partitions.
+    */
+  private def prepareRetrieve(shape: RetrieveShape, types: Seq[ScoredType],
+      tables: Map[String, DataFrame]): PreparedPlan = PreparedPlan(spark, tables) { leaf =>
+    preparedBuilds.incrementAndGet()
+    val m = shape.mode
+    val agents = (0 until shape.agents).map(i => ParamSlot.like(s"agent$i", ""))
+    def envelope(rows: DataFrame, payload: Array[String], memoryType: String,
+        slot: String, score: Column, sim: Column): DataFrame =
+      rows.select(lit(memoryType).as("memoryType"),
+        struct(payload.toIndexedSeq.map(col): _*).as(slot),
+        score.as("score"), sim.as("sim"))
+    // Workflow scope: each set coordinate must match when the row is
+    // tagged with it; a missing metadata key passes (getItem → null →
+    // coalesce true). Applied at the scan, before scoring.
+    def scoped(df: DataFrame): DataFrame =
+      shape.scopeKeys.zipWithIndex.foldLeft(df) { case (d, (key, i)) =>
+        d.filter(coalesce(col("metadata").getItem(key) === ParamSlot.like(s"scope$i", ""), lit(true)))
+      }
+    val sim = VectorFunctions.cosine(col("embedding"), ParamSlot.like("query", Array.emptyFloatArray))
+    val feedback = FeedbackLookup.of(col("id"),
+      ParamSlot.typed("feedback", FeedbackLookup.TableType))
+    val pdf = leaf(MemoryType.Preferences)
+    val branches = types.map { t =>
+      val df = scoped(leaf(t.memoryType)
+        .filter(col("projectId") === projectId)
+        .filter(col("agent").isin(agents: _*)))
+      val capped = scored(df, t, sim, ParamSlot.like("asOf", 0L), m, feedback)
+        .orderBy(col("_score").desc, col("id"))
+        // Diversity modes over-fetch 3×k candidates for the driver-side
+        // greedy MMR (R7, applied after the single collect); plain modes
+        // cap at k. Either way the per-type plan ends in a
+        // TakeOrderedAndProject — bounded output at any corpus size.
+        .limit(if (m.diversity <= 0.0) shape.k else 3 * shape.k)
+      envelope(capped, df.columns, t.memoryType, t.slot, col("_score"), col("_sim"))
+    } :+
+      // Preferences are unscored (engine.py:347-350).
+      envelope(pdf.orderBy(col("id")).limit(shape.k), pdf.columns,
+        MemoryType.Preferences, "up", lit(0.0), lit(0.0))
+    val unioned = branches.reduce(_.unionByName(_, allowMissingColumns = true))
+    // A slot no branch fills (ap, when the mode leaves anti-patterns
+    // out) is added as a typed null, so the Fused decoder resolves.
+    Alma.FusedEncoder.schema
+      .filterNot(f => unioned.columns.contains(f.name))
+      .foldLeft(unioned)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
+  }
+
   /** Batch retrieval: many queries against every scored memory type in
     * ONE pass — the benchmark-runner shape (SURVEY §3.3: broadcast the
     * query vectors, scan each memory table once, Window top-k per
@@ -704,14 +760,16 @@ final class Alma(
     val m = mode.normalized
     val k = if (topK > 0) topK else m.topK
     val agents = scope(agent).readableAgents
-    val asOfUs = asOf.getTime * 1000L
     val qdf = broadcast(queries.zipWithIndex.map { case (q, i) =>
       (i.toLong, q, HashEmbedder.embed(QuerySanitizer.sanitize(q), embedDim))
     }.toDF("query_id", "query", "q_vec"))
     val sim = VectorFunctions.cosine(col("embedding"), col("q_vec"))
-    val fbSummary = store.feedbackSummary(Some(projectId))
-    val candidates = scoredTypes(agents, m).map { t =>
-      scored(t.rows.crossJoin(qdf), t, sim, asOfUs, m, fbSummary)
+    // asOf is bound by reference, not as a literal, so every call
+    // generates the same Java and reuses the compiled classes.
+    val asOfUs = BoundParam.of(asOf.getTime * 1000L)
+    val feedback = FeedbackLookup.of(col("id"), store.feedbackScores(projectId))
+    val candidates = scoredTypes(m).map { t =>
+      scored(store.scan(t.memoryType, Some(projectId), agents).crossJoin(qdf), t, sim, asOfUs, m, feedback)
         .select(col("query_id"), col("query"), lit(t.memoryType).as("memory_type"),
           col("id"), col("_score"))
     }.reduce(_ unionByName _)

@@ -1,9 +1,10 @@
 package graft.functions.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{LeafExpression, Literal}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{LeafExpression, Literal, Unevaluable}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, JavaCode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.DataType
 
@@ -48,4 +49,30 @@ object BoundParam {
     val l = Literal(v)
     ColumnBridge.column(BoundParam(l.value, l.dataType))
   }
+}
+
+/** A named parameter of a plan analysed once and run many times
+  * ([[graft.internal.PreparedPlan]]): a typed hole that each run fills
+  * with its own value, bound by reference as a [[BoundParam]] before the
+  * plan reaches the optimizer. It cannot be evaluated, so a slot left
+  * unbound fails the run instead of reading a stale value.
+  */
+case class ParamSlot(name: String, dataType: DataType) extends LeafExpression with Unevaluable {
+  override def nullable: Boolean = false
+  override def prettyName: String = "param_slot"
+}
+
+object ParamSlot {
+  /** A slot typed like `functions.lit(sample)`. */
+  def like(name: String, sample: Any): Column =
+    ColumnBridge.column(ParamSlot(name, Literal(sample).dataType))
+
+  /** A slot of an explicit type (an object handle such as a broadcast). */
+  def typed(name: String, dataType: DataType): Column = ColumnBridge.column(ParamSlot(name, dataType))
+
+  /** `plan` with each slot bound to its value in `values`. */
+  def bind(plan: LogicalPlan, values: Map[String, Any]): LogicalPlan =
+    plan.transformAllExpressions { case ParamSlot(name, dataType) =>
+      BoundParam(CatalystTypeConverters.convertToCatalyst(values(name)), dataType)
+    }
 }

@@ -6,17 +6,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-(session, table-state) memo of an expensive derived value —
   * the one place that decides whether a value is kept across calls.
-  * Eight instances use it: the signature state
+  * Nine instances use it: the signature state
   * ([[graft.operators.TextAnalysisShared.DocSigs]]),
   * the LM scores and bigram counts ([[graft.operators.Curation]]), the
   * BPE merge list ([[graft.operators.Lifecycle]]), the BPE training
   * vocabulary ([[graft.operators.TokenizerTrain]]), the IVF codebook
   * broadcast ([[graft.operators.QualityFilters]]), the sign-bucket cell
-  * layout of `q_ann_pruned` ([[graft.operators.VectorSearch]]) and
-  * each table's Parquet schema ([[graft.io.Tables]]). Within a session
-  * the first consumer of a shared chain pays the build (typically a
-  * [[SessionMemo.pin]], a collect, a [[Scratch]] write, or the
-  * schema-inference job) and later consumers re-read the result.
+  * layout of `q_ann_pruned` ([[graft.operators.VectorSearch]]), each
+  * table's Parquet schema ([[graft.io.Tables]]) and the retrieve's
+  * feedback scores ([[graft.storage.MemoryStore.feedbackScores]]).
+  * `Alma`'s prepared retrieve plans are not memos: they hold plan
+  * structure and no data, like Spark's codegen cache, so no table state
+  * can make one stale and no memo conf needs to turn them off. Within a
+  * session the first consumer of a shared chain pays the build
+  * (typically a [[SessionMemo.pin]], a collect, a [[Scratch]] write, or
+  * the schema-inference job) and later consumers re-read the result.
   *
   *  - '''One entry per (session, table path).''' The entry holds the
   *    fingerprint of the table directory's file listing (file count

@@ -3,7 +3,7 @@ package graft.operators
 import graft.Q
 import graft.functions.VectorFunctions
 import graft.io.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Product quantization (Jégou et al. 2011) — the compression half of
@@ -37,9 +37,9 @@ import org.apache.spark.sql.functions._
   */
 object Pq {
 
-  private val PqM = 8 // subspaces
-  private val PqD = 8 // dims per subspace (m · d = 64)
-  private val PqKs = 8 // centroids per subspace
+  private[operators] val PqM = 8 // subspaces
+  private[operators] val PqD = 8 // dims per subspace (m · d = 64)
+  private[operators] val PqKs = 8 // centroids per subspace
   private val PqTopK = 10
   private val PqShortlist = 50 // ADC survivors that get exact re-rank
 
@@ -121,63 +121,6 @@ object Pq {
     }
     lut
   }
-
-  /** Declarative squared L2 — parity twin of
-    * [[graft.functions.VectorFunctions.sqDistVec]], kept for specs.
-    */
-  private[operators] def sqDist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => pow(x.cast("double") - y, lit(2))),
-      lit(0.0), (acc, x) => acc + x)
-
-  /** (vec_id, sub, svec): the m contiguous subvector slices, cast to
-    * double once so every later distance is double-exact. Parity twin
-    * for specs; the query paths assign/encode via the
-    * [[VectorFunctions.pqAssign]] kernel without ever exploding
-    * subvector rows.
-    */
-  private[operators] def subvectors(e: DataFrame): DataFrame =
-    e.select(col("vec_id"),
-      explode(sequence(lit(0), lit(PqM - 1))).as("sub"), col("embedding"))
-      .select(col("vec_id"), col("sub"),
-        transform(slice(col("embedding"), col("sub") * PqD + 1, lit(PqD)),
-          _.cast("double")).as("svec"))
-
-  /** One Lloyd round per subspace from the fixed seeds (vec_id < ks),
-    * returning the updated (sub, cid, cvec) codebook — elements rounded
-    * to 6 decimals so both engines encode from bit-identical codebooks.
-    * The assign argmin is the map-side-combined min(struct(dist2, cid,
-    * svec)) — one row per (vector, subspace) reaches the exchange, and
-    * the struct comparison never passes (dist2, cid), which is unique
-    * per group by construction.
-    */
-  private[operators] def trainCodebook(subv: DataFrame): DataFrame = {
-    val c0 = subv.filter(col("vec_id") < PqKs)
-      .select(col("sub"), col("vec_id").as("cid"), col("svec").as("cvec"))
-    val asg = subv.join(broadcast(c0), Seq("sub"))
-      .select(col("vec_id"), col("sub"),
-        struct(round(sqDist(col("svec"), col("cvec")), 6).as("dist2"),
-          col("cid"), col("svec")).as("cand"))
-      .groupBy("vec_id", "sub").agg(min("cand").as("m"))
-      .select(col("vec_id"), col("sub"), col("m.cid").as("cid"),
-        col("m.svec").as("svec"))
-    asg.select(col("sub"), col("cid"), posexplode(col("svec")))
-      .groupBy("sub", "cid", "pos")
-      .agg(round(avg(col("col")), 6).as("c"))
-      .groupBy("sub", "cid")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-        x => x.getField("c")).as("cvec"))
-  }
-
-  /** Encode: each (vector, subspace) takes its nearest updated
-    * centroid's id. This is the persistent PQ code table.
-    */
-  private[operators] def encode(subv: DataFrame, cent: DataFrame): DataFrame =
-    subv.join(broadcast(cent), Seq("sub"))
-      .select(col("vec_id"), col("sub"),
-        struct(round(sqDist(col("svec"), col("cvec")), 6).as("dist2"),
-          col("cid")).as("cand"))
-      .groupBy("vec_id", "sub").agg(min("cand").as("m"))
-      .select(col("vec_id"), col("sub"), col("m.cid").as("cid"))
 
   private def annPq(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir).select("vec_id", "embedding")

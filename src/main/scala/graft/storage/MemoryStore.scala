@@ -1,10 +1,12 @@
 package graft.storage
 
-import graft.functions.expressions.BoundParam
+import graft.functions.expressions.{BoundParam, FeedbackLookup}
+import graft.internal.SessionMemo
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Parquet-backed storage layer — the single unified backend that
   * replaces the reference's per-database plurality (reference contract:
@@ -315,7 +317,7 @@ final class MemoryStore(val spark: SparkSession, val root: String,
     * many files it is a real listing/footer pass. Declared schemas also
     * pin column order regardless of partition-column placement.
     */
-  private def readTable(memoryType: String): DataFrame =
+  private[graft] def readTable(memoryType: String): DataFrame =
     readCommitted(memoryType).getOrElse(emptyOf(memoryType))
 
   /** A table's rows when it has a committed snapshot — for callers whose
@@ -783,21 +785,37 @@ final class MemoryStore(val spark: SparkSession, val root: String,
   def feedback(projectId: Option[String] = None): Dataset[RetrievalFeedback] =
     scan(MemoryType.Feedback, projectId).as(FeedbackEncoder)
 
-  /** Per-memory feedback score `(used+up-ignored-down)/total` ∈ [-1, 1]
-    * (types.py:382-420) — one conditional-sum aggregate, broadcastable
-    * into the retrieve plan.
+  /** Per-memory feedback score ∈ [-1, 1] (types.py:382-420;
+    * [[MemoryStore.feedbackScore]]) — one conditional-sum aggregate.
     */
   def feedbackSummary(projectId: Option[String] = None): DataFrame = {
     val n = (s: String) => sum(when(col("signal") === s, 1L).otherwise(0L))
-    val total = col("n_used") + col("n_up") + col("n_ignored") + col("n_down")
     feedback(projectId).groupBy("memoryId")
-      .agg(n("used").as("n_used"), n("thumbs_up").as("n_up"),
-        n("ignored").as("n_ignored"), n("thumbs_down").as("n_down"))
+      .agg(n(FeedbackSignal.Used).as("n_used"), n(FeedbackSignal.ThumbsUp).as("n_up"),
+        n(FeedbackSignal.Ignored).as("n_ignored"), n(FeedbackSignal.ThumbsDown).as("n_down"))
       .select(col("memoryId"),
-        when(total === 0, lit(0.0))
-          .otherwise((col("n_used") + col("n_up") - col("n_ignored") - col("n_down")).cast("double") / total)
-          .as("feedback_score"))
+        FeedbackScoreUdf(col("n_used"), col("n_up"), col("n_ignored"), col("n_down")).as("feedback_score"))
   }
+
+  /** A project's feedback scores as a broadcast driver table, for the
+    * retrieve's feedback blend ([[FeedbackLookup]]): the scores of
+    * [[feedbackSummary]], from the same counts and formula.
+    *
+    * The counts of every project are read once per state of the
+    * feedback table's file listing (a [[SessionMemo]], so a write
+    * through another store on the same root is seen too), in one job:
+    * each partition counts its rows per memory and the driver adds the
+    * partial counts, bounded by the memories with feedback, never by the
+    * log's length. The listing, not [[writeGeneration]], keys them: in
+    * an agent loop some write comes before nearly every retrieve miss,
+    * and most writes leave the feedback log alone.
+    */
+  private[graft] def feedbackScores(projectId: String): FeedbackLookup.Table =
+    FeedbackScoresMemo.getOrBuild(spark, tableDir(MemoryType.Feedback).toString) {
+      new FeedbackScores(spark, readCommitted(MemoryType.Feedback).fold(Seq.empty[MemoryFeedback])(
+        _.select("projectId", "memoryId", "signal").as(FeedbackRowEncoder)
+          .mapPartitions(countSignals)(MemoryFeedbackEncoder).collect().toSeq))
+    }.of(projectId)
 
   // ---- compaction (small-file maintenance) ------------------------------
   /** Rewrite a memory type's directory into few large files. Append
@@ -856,6 +874,63 @@ final class MemoryStore(val spark: SparkSession, val root: String,
 }
 
 object MemoryStore {
+  /** A memory's feedback score from its signal counts:
+    * `(used + up - ignored - down) / total` ∈ [-1, 1], 0.0 with no
+    * counted signal (types.py:382-420). The one definition of the score,
+    * behind the summary frame and the retrieve's lookup.
+    */
+  private def feedbackScore(used: Long, up: Long, ignored: Long, down: Long): Double = {
+    val total = used + up + ignored + down
+    if (total == 0) 0.0 else (used + up - ignored - down).toDouble / total
+  }
+
+  private val FeedbackScoreUdf = udf(feedbackScore _)
+
+  private val FeedbackRowEncoder = Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.STRING)
+  private val MemoryFeedbackEncoder = Encoders.product[MemoryFeedback]
+  private val CountedSignals = Seq(FeedbackSignal.Used, FeedbackSignal.ThumbsUp,
+    FeedbackSignal.Ignored, FeedbackSignal.ThumbsDown)
+
+  /** One partition's `(projectId, memoryId, signal)` rows, counted per
+    * memory. A memory whose signals are all unknown still counts (with
+    * score 0.0), as it has a row in the summary frame.
+    */
+  private def countSignals(rows: Iterator[(String, String, String)]): Iterator[MemoryFeedback] = {
+    val counts = scala.collection.mutable.HashMap[(String, String), Array[Long]]()
+    rows.foreach { case (p, m, signal) =>
+      if (p != null && m != null) {
+        val c = counts.getOrElseUpdate((p, m), new Array[Long](CountedSignals.size))
+        val i = CountedSignals.indexOf(signal)
+        if (i >= 0) c(i) += 1
+      }
+    }
+    counts.iterator.map { case ((p, m), c) => MemoryFeedback(p, m, c(0), c(1), c(2), c(3)) }
+  }
+
+  /** The feedback scores of every project, per state of a store's
+    * feedback table (see [[MemoryStore.feedbackScores]]).
+    */
+  private val FeedbackScoresMemo = new SessionMemo[FeedbackScores]("feedback_scores_build")
+
+  /** Scores of partial counts, held on the driver and broadcast on a
+    * project's first lookup.
+    */
+  private final class FeedbackScores(s: SparkSession, partials: Seq[MemoryFeedback]) {
+    private val byProject = partials.groupBy(_.projectId).map { case (p, rows) =>
+      val t = new java.util.HashMap[UTF8String, java.lang.Double]()
+      rows.groupBy(_.memoryId).foreach { case (m, cs) =>
+        t.put(UTF8String.fromString(m),
+          feedbackScore(cs.map(_.used).sum, cs.map(_.up).sum, cs.map(_.ignored).sum, cs.map(_.down).sum))
+      }
+      p -> t
+    }
+    private val broadcasts = new java.util.concurrent.ConcurrentHashMap[String, FeedbackLookup.Table]()
+
+    def of(projectId: String): FeedbackLookup.Table =
+      broadcasts.computeIfAbsent(projectId, p => s.sparkContext.broadcast(
+        byProject.getOrElse(p, new java.util.HashMap[UTF8String, java.lang.Double]())))
+  }
+
   private val SnapName = "snap_([0-9]+)_[0-9a-f]+".r
   private[storage] def versionOf(name: String): Long = name match {
     case SnapName(v) => v.toLong
@@ -901,3 +976,9 @@ object MemoryStore {
     case MemoryType.Checkpoints => CheckpointEncoder
   }
 }
+
+/** One memory's signal counts in one project, as
+  * [[MemoryStore.feedbackScore]] takes them.
+  */
+private[storage] final case class MemoryFeedback(projectId: String, memoryId: String,
+    used: Long, up: Long, ignored: Long, down: Long)

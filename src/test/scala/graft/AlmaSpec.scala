@@ -429,6 +429,118 @@ class AlmaSpec extends SparkSpec {
     assert(bare.heuristics.map(_.strategy) == Seq("blue green", "canary"))
     assert(bare.heuristics.map(_.id) == ref.heuristics.map(_.id))
     assert(bare.outcomes.map(_.id) == ref.outcomes.map(_.id))
+    // The feedback table now exists, unchanged since `ref` read its
+    // scores: a warm miss runs the fused job alone (AQE off, so one
+    // action is one job).
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.sparkContext.addSparkListener(jobs)
+    val warm = try jobs.during { alma.retrieve("roll out the api", "helena", at, topK = 5) }
+      finally {
+        spark.sparkContext.removeSparkListener(jobs)
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+      }
+    assert(warm == 1, s"a warm miss with unchanged feedback ran $warm jobs")
+  }
+
+  test("a prepared retrieve plan sees rows appended to the snapshot it was prepared over") {
+    val alma = freshAlma()
+    (1 to 3).foreach { i =>
+      alma.learn("helena", "deploy", s"deploy the api v$i", success = true,
+        strategyUsed = "blue green", asOf = ts(s"2024-01-0$i 10:00:00"))
+    }
+    val at = ts("2024-02-01 00:00:00")
+    assert(alma.retrieve("deploy the api", "helena", at, topK = 10).outcomes.size == 3)
+    assert(alma.preparedBuilds.get == 1)
+    // The learn appends into the outcome snapshot the plan was prepared
+    // over: the same directory, with one more file.
+    val o = alma.learn("helena", "index", "rebuild the search index shards", success = true,
+      strategyUsed = "rolling reindex", asOf = ts("2024-01-05 10:00:00"))
+    val after = alma.retrieve("rebuild the search index shards", "helena", at, topK = 10)
+    assert(alma.preparedBuilds.get == 1, "the second miss prepared a new plan")
+    assert(after.outcomes.map(_.id).contains(o.id),
+      s"stale listing: ${after.outcomes.map(_.taskDescription)}")
+  }
+
+  /** Two near-identical heuristics for helena, in their retrieve order. */
+  private def twoHeuristics(alma: Alma): Seq[String] = {
+    for (v <- Seq("alpha", "beta"); i <- 1 to 3) {
+      alma.learn("helena", "deploy", s"deploy service $v", success = true,
+        strategyUsed = s"$v strategy", asOf = ts(s"2024-01-0$i 10:00:00"))
+    }
+    val ranked = alma.retrieve("deploy service", "helena", ts("2024-02-01 00:00:00"), topK = 2)
+      .heuristics.map(_.id)
+    assert(ranked.size == 2)
+    ranked
+  }
+
+  test("the next miss after recordFeedback, and after recordUsage, shows the re-ranked blend") {
+    val alma = freshAlma()
+    val Seq(top, bottom) = twoHeuristics(alma)
+    (1 to 4).foreach { _ =>
+      alma.recordFeedback(bottom, MemoryType.Heuristics, "helena",
+        FeedbackSignal.ThumbsUp, ts("2024-02-01 01:00:00"))
+      alma.recordFeedback(top, MemoryType.Heuristics, "helena",
+        FeedbackSignal.ThumbsDown, ts("2024-02-01 01:00:00"))
+    }
+    val flipped = alma.retrieve("deploy service", "helena", ts("2024-02-01 02:00:00"), topK = 2)
+    assert(flipped.heuristics.map(_.id) == Seq(bottom, top), "stale feedback scores after recordFeedback")
+    // Usage signals move the blend back: top used, bottom ignored.
+    (1 to 8).foreach { _ =>
+      alma.recordUsage(Seq(top, bottom), usedIds = Set(top), MemoryType.Heuristics, "helena",
+        ts("2024-02-01 02:30:00"))
+    }
+    val back = alma.retrieve("deploy service", "helena", ts("2024-02-01 03:00:00"), topK = 2)
+    assert(back.heuristics.map(_.id) == Seq(top, bottom), "stale feedback scores after recordUsage")
+  }
+
+  test("feedback appended through a second store on the same root reaches the next miss") {
+    val alma = freshAlma()
+    val Seq(top, bottom) = twoHeuristics(alma)
+    val other = new MemoryStore(spark, alma.store.root)
+    other.saveFeedback((1 to 4).flatMap { i =>
+      Seq(RetrievalFeedback(s"up-$i", bottom, MemoryType.Heuristics, "helena", "proj1",
+          FeedbackSignal.ThumbsUp, ts("2024-02-01 01:00:00")),
+        RetrievalFeedback(s"down-$i", top, MemoryType.Heuristics, "helena", "proj1",
+          FeedbackSignal.ThumbsDown, ts("2024-02-01 01:00:00")))
+    })
+    // This facade's store saw no write, so its cache keys do not move: a
+    // new asOf makes the miss. Its feedback scores key on the table's
+    // file listing.
+    val after = alma.retrieve("deploy service", "helena", ts("2024-02-01 02:00:00"), topK = 2)
+    assert(after.heuristics.map(_.id) == Seq(bottom, top),
+      s"feedback written through another store unseen: ${after.heuristics.map(_.id)}")
+  }
+
+  test("misses for different agents reuse one prepared plan and bind each agent's rows") {
+    val alma = freshAlma()
+    for (a <- Seq("helena", "victor"); i <- 1 to 2) {
+      alma.learn(a, "deploy", s"deploy the api as $a $i", success = true,
+        strategyUsed = "blue green", asOf = ts(s"2024-01-0$i 10:00:00"))
+    }
+    val at = ts("2024-02-01 00:00:00")
+    val h = alma.retrieve("deploy the api", "helena", at, topK = 10)
+    val v = alma.retrieve("deploy the api", "victor", at, topK = 10)
+    assert(alma.preparedBuilds.get == 1, s"${alma.preparedBuilds.get} prepared plans for one shape")
+    assert(h.outcomes.size == 2 && h.outcomes.forall(_.agent == "helena"))
+    assert(v.outcomes.size == 2 && v.outcomes.forall(_.agent == "victor"))
+  }
+
+  test("a retrieve with memos off returns what it returns with memos on") {
+    val alma = freshAlma()
+    val Seq(top, bottom) = twoHeuristics(alma)
+    (1 to 4).foreach { _ =>
+      alma.recordFeedback(bottom, MemoryType.Heuristics, "helena",
+        FeedbackSignal.ThumbsUp, ts("2024-02-01 01:00:00"))
+    }
+    def summary(s: MemorySlice) =
+      (s.heuristics.map(_.id), s.outcomes.map(_.id), s.knowledge.map(_.id), s.antiPatterns.map(_.id))
+    val at = ts("2024-02-01 02:00:00")
+    val on = alma.retrieve("deploy service", "helena", at, topK = 5)
+    spark.conf.set(graft.internal.SessionMemo.EnabledConf, "false")
+    val off = try Alma(spark, alma.store.root, "proj1").retrieve("deploy service", "helena", at, topK = 5)
+      finally spark.conf.set(graft.internal.SessionMemo.EnabledConf, "true")
+    assert(on.heuristics.head.id == bottom)
+    assert(summary(off) == summary(on))
   }
 
   test("batch retrieval matches per-query retrieval, one pass for N queries") {

@@ -41,7 +41,7 @@ class CentroidKernelSpec extends SparkSpec {
       e.select(col("vec_id"), col("embedding").as("v")))
     val stride = graft.functions.expressions.PqCodebook.Stride
     val kernelBook = tk.zip(tc.map(_.toList)).toList
-    val declBook = Pq.trainCodebook(Pq.subvectors(e)).collect()
+    val declBook = ParityTwins.pqTrainCodebook(ParityTwins.pqSubvectors(e)).collect()
       .map(r => (r.getInt(0).toLong * stride + r.getLong(1), r.getSeq[Double](2).toList))
       .sortBy(_._1).toList
     assert(kernelBook == declBook, "trained PQ codebooks diverge")
@@ -49,14 +49,14 @@ class CentroidKernelSpec extends SparkSpec {
 
   test("pqAssign codes == declarative encode on the corpus") {
     val e = Tables.embeddings(spark, Sf).select("vec_id", "embedding")
-    val subv = Pq.subvectors(e)
-    val cent = Pq.trainCodebook(subv)
+    val subv = ParityTwins.pqSubvectors(e)
+    val cent = ParityTwins.pqTrainCodebook(subv)
     val (tk, tc) = Pq.trainCodebookArrays(
       e.select(col("vec_id"), col("embedding").as("v")))
     val kernelCodes = e.select(col("vec_id"),
         VectorFunctions.pqAssign(col("embedding"), tk, tc).as("codes"))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toList)).sortBy(_._1).toList
-    val declCodes = Pq.encode(subv, cent)
+    val declCodes = ParityTwins.pqEncode(subv, cent)
       .groupBy("vec_id")
       .agg(transform(array_sort(collect_list(struct(col("sub"), col("cid")))),
         x => x.getField("cid")).as("codes"))
@@ -72,9 +72,9 @@ class CentroidKernelSpec extends SparkSpec {
       lit(Array(0.5f, 4f)).as("short"))
     val r = df.select(
       VectorFunctions.sqDistVec(col("af"), col("bf")).as("ff"),
-      Pq.sqDist(col("af"), col("bf")).as("ff_hof"),
+      ParityTwins.sqDist(col("af"), col("bf")).as("ff_hof"),
       VectorFunctions.sqDistVec(col("ad"), col("bf")).as("df"),
-      Pq.sqDist(col("ad"), col("bf")).as("df_hof"),
+      ParityTwins.sqDist(col("ad"), col("bf")).as("df_hof"),
       VectorFunctions.sqDistVec(col("af"), col("short")).as("mismatch")).head()
     assert(r.getDouble(0) == r.getDouble(1), "float/float kernel != HOF")
     assert(r.getDouble(2) == r.getDouble(3), "double/float kernel != HOF")
@@ -112,9 +112,9 @@ class CentroidKernelSpec extends SparkSpec {
     val codes = df.select(col("vec_id"),
       VectorFunctions.pqAssign(col("v"), tk, tc).as("codes")).collect()
     assert(codes.length == base.length)
-    val declCodes = Pq.encode(
-        Pq.subvectors(df.select(col("vec_id"), col("v").as("embedding"))),
-        Pq.trainCodebook(Pq.subvectors(df.select(col("vec_id"), col("v").as("embedding")))))
+    val declCodes = ParityTwins.pqEncode(
+        ParityTwins.pqSubvectors(df.select(col("vec_id"), col("v").as("embedding"))),
+        ParityTwins.pqTrainCodebook(ParityTwins.pqSubvectors(df.select(col("vec_id"), col("v").as("embedding")))))
       .groupBy("vec_id")
       .agg(transform(array_sort(collect_list(struct(col("sub"), col("cid")))),
         x => x.getField("cid")).as("codes"))

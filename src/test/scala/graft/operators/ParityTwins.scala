@@ -18,10 +18,66 @@ object ParityTwins {
   import TextAnalysis.BpeRe
   import TextAnalysisShared.{MinhashA, MinhashP, hash64, shingles}
 
-  /** Squared L2 as an interpreted fold, in double. */
-  private def sqDist(a: Column, b: Column): Column =
+  import Pq.{PqD, PqKs, PqM}
+
+  /** Squared L2 as an interpreted fold, in double — parity twin of
+    * [[graft.functions.VectorFunctions.sqDistVec]].
+    */
+  def sqDist(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => pow(x.cast("double") - y, lit(2))),
       lit(0.0), (acc, x) => acc + x)
+
+  /** (vec_id, sub, svec): the m contiguous subvector slices, cast to
+    * double once so every later distance is double-exact. The query
+    * paths assign and encode through the
+    * [[graft.functions.VectorFunctions.pqAssign]] kernel without ever
+    * exploding subvector rows.
+    */
+  def pqSubvectors(e: DataFrame): DataFrame =
+    e.select(col("vec_id"),
+      explode(sequence(lit(0), lit(PqM - 1))).as("sub"), col("embedding"))
+      .select(col("vec_id"), col("sub"),
+        transform(slice(col("embedding"), col("sub") * PqD + 1, lit(PqD)),
+          _.cast("double")).as("svec"))
+
+  /** One Lloyd round per subspace from the fixed seeds (vec_id < ks),
+    * returning the updated (sub, cid, cvec) codebook — elements rounded
+    * to 6 decimals so both engines encode from bit-identical codebooks
+    * (the reference for `Pq.trainCodebookArrays`). The assign argmin is
+    * the map-side-combined min(struct(dist2, cid, svec)) — one row per
+    * (vector, subspace) reaches the exchange, and the struct comparison
+    * never passes (dist2, cid), which is unique per group by
+    * construction.
+    */
+  def pqTrainCodebook(subv: DataFrame): DataFrame = {
+    val c0 = subv.filter(col("vec_id") < PqKs)
+      .select(col("sub"), col("vec_id").as("cid"), col("svec").as("cvec"))
+    val asg = subv.join(broadcast(c0), Seq("sub"))
+      .select(col("vec_id"), col("sub"),
+        struct(round(sqDist(col("svec"), col("cvec")), 6).as("dist2"),
+          col("cid"), col("svec")).as("cand"))
+      .groupBy("vec_id", "sub").agg(min("cand").as("m"))
+      .select(col("vec_id"), col("sub"), col("m.cid").as("cid"),
+        col("m.svec").as("svec"))
+    asg.select(col("sub"), col("cid"), posexplode(col("svec")))
+      .groupBy("sub", "cid", "pos")
+      .agg(round(avg(col("col")), 6).as("c"))
+      .groupBy("sub", "cid")
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
+        x => x.getField("c")).as("cvec"))
+  }
+
+  /** Encode: each (vector, subspace) takes its nearest updated
+    * centroid's id — the declarative PQ code table the `pqAssign`
+    * kernel reproduces.
+    */
+  def pqEncode(subv: DataFrame, cent: DataFrame): DataFrame =
+    subv.join(broadcast(cent), Seq("sub"))
+      .select(col("vec_id"), col("sub"),
+        struct(round(sqDist(col("svec"), col("cvec")), 6).as("dist2"),
+          col("cid")).as("cand"))
+      .groupBy("vec_id", "sub").agg(min("cand").as("m"))
+      .select(col("vec_id"), col("sub"), col("m.cid").as("cid"))
 
   /** The pre-kernel declarative Lloyd loop — the parity reference
     * CentroidKernelSpec pins the kernel form against (same seeds, same round6
