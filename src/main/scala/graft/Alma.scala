@@ -12,6 +12,7 @@ import graft.retrieval.{ModeConfig, Modes, PostProcess, QuerySanitizer, Retrieva
 import graft.storage._
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The user-facing engine facade — the reference's `ALMA` core API
   * re-expressed Spark-first (reference: alma/core.py:246-380:
@@ -318,10 +319,10 @@ final class Alma(
     // Side tables included: the feedback log is the highest-append
     // table in the system (and the retrieve's feedback scores are
     // recounted from it after each change), so it fragments fastest.
-    // An append racing the rewrite
-    // (a concurrent recordUsage) is covered by the overwrite rescue —
-    // files landing in the superseded snapshot after the rewrite's
-    // read are moved into the committed one, not silently dropped.
+    // An append racing the rewrite (a concurrent recordUsage) is
+    // covered by the overwrite rescue — files landing in the superseded
+    // snapshot after the rewrite's read are moved into the committed
+    // one, not silently dropped.
     // Checkpoints stay EXCLUDED anyway: their natural compaction point
     // is cleanupCheckpoints, which already rewrites the table when a
     // run completes, so maintenance never touches live-run state at
@@ -580,7 +581,7 @@ final class Alma(
     * two differ in their columns.
     */
   private case class RetrieveShape(mode: ModeConfig, k: Int, scopeKeys: Seq[String],
-      agents: Int, leaves: Map[String, org.apache.spark.sql.types.StructType])
+      agents: Int, leaves: Map[String, StructType])
 
   // Prepared retrieve plans, one per shape. They hold plan structure and
   // no data (like Spark's codegen cache), so no store write can make one
